@@ -2,8 +2,9 @@
 
 DataFrame-native realization of the reference's ``HealthcareETLManager``
 (``src/etl/etl_manager.py:127-629``). Control crosses the driver/executor
-boundary only at Spark actions: the fused quality aggregation, the two
-writes, and the row counts — everything else is lazy plan construction.
+boundary only at Spark actions: the fused quality aggregation and the two
+writes, whose row counts are observations on the frames they compute —
+everything else is lazy plan construction.
 
 Semantics preserved from the reference (SURVEY.md §2.6):
 * transform chain applied in config order, unknown names silently skipped
@@ -25,7 +26,7 @@ from datetime import datetime, timezone
 from enum import Enum
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from healthcare_data_lakehouse_spark.lineage import LineageTracker, TransformationType
@@ -177,14 +178,21 @@ class HealthcareETLManager:
             end_time=None,
         )
 
+        # Row counts are observations on the frames this job already
+        # computes (the validation scan, the quarantine write, the zone
+        # write), never separate count jobs; each is read only after an
+        # action over its frame has run.
+        read_obs, written_obs = Observation(), Observation()
+        rows = F.count(F.lit(1)).alias("rows")
+        cached: list[DataFrame] = []
         try:
             # Stamp ingestion order once; cache the transformed frame since
-            # validation, the split, the write, and counts all branch off it.
-            source_df = with_ingest_order(source_df)
+            # validation, the split and the write all branch off it.
+            source_df = with_ingest_order(source_df).observe(read_obs, rows)
             transformed = self.transformations.apply(
                 source_df, config.transformations
             ).persist()
-            result.records_read = source_df.count()
+            cached.append(transformed)
 
             # Quality gate: one fused aggregation pass (quality.py).
             result.status = ETLStatus.QUALITY_CHECK
@@ -199,15 +207,18 @@ class HealthcareETLManager:
                 required_fields=config.required_fields,
             )
             result.quality_report = report
+            result.records_read = read_obs.get["rows"]
 
             if not report.promotion_eligible:
                 if config.enable_quarantine:
                     # Split: quarantined rows out, remainder promoted
-                    # WITHOUT re-validation (reference :281-309).
+                    # WITHOUT re-validation (reference :281-309). A row
+                    # whose condition is NULL lands in neither branch.
                     if report.quarantine_condition is not None:
                         # Exact predicate split (scalable path, no driver ids).
                         cond = report.quarantine_condition
                         marked = transformed.withColumn("__q", cond).persist()
+                        cached.append(marked)
                         quarantined = marked.filter(F.col("__q")).drop("__q")
                         passed = marked.filter(~F.col("__q")).drop("__q")
                     else:
@@ -223,7 +234,7 @@ class HealthcareETLManager:
                         quality_score=report.overall_score,
                         batch_ts=batch_ts,
                     )
-                    transformed = passed.persist()
+                    transformed = passed
                 else:
                     result.status = ETLStatus.FAILED
                     result.end_time = _utcnow()
@@ -233,27 +244,32 @@ class HealthcareETLManager:
                     return result
 
             result.status = ETLStatus.PROMOTING
-
-            if config.enable_lineage:
-                result.lineage_node_id = self._track_lineage(
-                    config, result.records_read, transformed, report
-                )
+            promoted = transformed.observe(written_obs, rows)
 
             # Bounded OCC retry: if a concurrent writer claims the commit
             # slot during our (long) Spark write, re-read and re-attempt
             # instead of failing the whole job run.
-            written = self.store.with_retry(
+            self.store.with_retry(
                 lambda: self.store.write(
                     config.target_zone,
                     config.source_name,
-                    transformed,
+                    promoted,
                     load_type=config.load_type,
                     partition_columns=config.partition_columns or None,
                 )
             )
             # records_written reports the promoted row count (reference
             # :330 counts the post-split batch, not the table delta).
-            result.records_written = transformed.count()
+            result.records_written = written_obs.get["rows"]
+
+            if config.enable_lineage:
+                result.lineage_node_id = self._track_lineage(
+                    config,
+                    result.records_read,
+                    result.records_written,
+                    len(transformed.columns),
+                    report,
+                )
             result.status = ETLStatus.COMPLETED
             result.end_time = _utcnow()
 
@@ -261,6 +277,9 @@ class HealthcareETLManager:
             result.status = ETLStatus.FAILED
             result.end_time = _utcnow()
             result.error_message = str(e)
+        finally:
+            for df in cached:
+                df.unpersist()
 
         return result
 
@@ -281,14 +300,14 @@ class HealthcareETLManager:
         self,
         config: ETLJobConfig,
         records_read: int,
-        output_df: DataFrame,
+        n_out: int,
+        n_columns: int,
         report: QualityReport,
     ) -> str:
         """Source asset + output asset + one transformation edge
         (intent of reference ``etl_manager.py:395-439``, realized through
-        the tracker's actual API)."""
+        the tracker's actual API), recorded once the output is written."""
         source_zone = self._get_source_zone(config.target_zone)
-        n_out = output_df.count()
         source_asset = self.lineage_tracker.register_asset(
             name=f"{config.source_name}_{config.target_zone.value}_source",
             zone=source_zone,
@@ -300,7 +319,7 @@ class HealthcareETLManager:
             zone=config.target_zone,
             location=self.store.dataset_path(config.target_zone, config.source_name),
             row_count=n_out,
-            column_count=len(output_df.columns),
+            column_count=n_columns,
             tags={"quality_score": f"{report.overall_score:.4f}"},
         )
         self.lineage_tracker.record_transformation(

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -770,9 +770,15 @@ def stream_neardup_admission(
     )
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.select(id_col, text_col).persist()
+        # n_in is observed by the first action over the batch (at the
+        # latest, the admission write)
+        seen = Observation()
+        batch = (
+            batch_df.select(id_col, text_col)
+            .observe(seen, F.count(F.lit(1)).alias("rows"))
+            .persist()
+        )
         try:
-            n_in = batch.count()
             corpus = store.read(zone, dataset)
             if corpus is None:
                 admitted = batch
@@ -791,6 +797,7 @@ def stream_neardup_admission(
             n_adm = store.write(
                 zone, dataset, admitted, LoadType.APPEND, id_field=id_col
             )
+            n_in = seen.get["rows"]
             audit = spark.createDataFrame(
                 [(int(batch_id), int(n_in), int(n_adm), int(n_in - n_adm))],
                 "batch_id long, n_in long, n_admitted long, n_rejected long",
@@ -874,9 +881,15 @@ def stream_quality_admission(
     fail = quality_admission_condition()
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.withColumn("__fail", fail).persist()
+        # n_in is observed by the quarantine write, the first action over
+        # the batch
+        seen = Observation()
+        batch = (
+            batch_df.withColumn("__fail", fail)
+            .observe(seen, F.count(F.lit(1)).alias("rows"))
+            .persist()
+        )
         try:
-            n_in = batch.count()
             quarantined = batch.filter(F.col("__fail")).drop("__fail")
             passed = batch.filter(~F.col("__fail")).drop("__fail")
             n_q = store.write_quarantine(
@@ -887,6 +900,7 @@ def stream_quality_admission(
                 batch_ts=str(batch_id),
             )
             n_adm = store.write(zone, dataset, passed, LoadType.APPEND)
+            n_in = seen.get["rows"]
             audit = spark.createDataFrame(
                 [(int(batch_id), int(n_in), int(n_adm), int(n_q))],
                 "batch_id long, n_in long, n_admitted long, n_quarantined long",

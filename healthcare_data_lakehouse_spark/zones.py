@@ -10,9 +10,22 @@ JSON manifest — the same transaction-log idea Delta Lake uses, minimal
 edition (delta-spark is not available in this environment):
 
     <root>/<zone>/<dataset>/
-        _manifest.json          # {"version": N, "commits": ["c000001", ...]}
+        _manifest.json          # the table's log, below
         c000001/*.parquet       # immutable commit directory
         c000002/*.parquet
+
+    _manifest.json
+        version      N, bumped by every commit
+        commits      live commit dirs, e.g. ["c000001", "c000002"]
+        history      {version: commits live at that version} (time travel)
+        schemas      {commit: read schema} — the Spark StructType JSON a
+                     parquet read of that commit returns (every field
+                     nullable); a partitioned commit also lists its
+                     "partitionColumns"
+        metrics      {version: {numOutputRows, numFiles, numOutputBytes}}
+                     for each version that wrote files
+        constraints, txns, cloned_from, and the deletion-vector keys of
+                     zones_dv, when used
 
 * ``FULL``        → write one commit, manifest lists only it.
 * ``APPEND``      → write one commit, manifest appends it (no data rewrite —
@@ -26,8 +39,11 @@ edition (delta-spark is not available in this environment):
                     table on a merge-prunable key (``partition_columns``) so
                     only touched partitions rewrite.
 
-Readers load ``spark.read.parquet(*commit_dirs)`` — column pruning and
-predicate pushdown reach the Parquet scan unchanged.
+A commit costs one Spark write action. Its row count is an observation on
+the written frame, read once the write has succeeded, and readers load
+``spark.read.schema(merged).parquet(*commit_dirs)`` with the schemas the
+manifest recorded, so no read pays a footer-merging inference job. Column
+pruning and predicate pushdown reach the Parquet scan unchanged.
 """
 
 from __future__ import annotations
@@ -37,8 +53,15 @@ import os
 import shutil
 from enum import Enum
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 __all__ = ["DataZone", "LoadType", "ZoneStore", "ZONE_ORDER"]
 
@@ -49,8 +72,21 @@ __all__ = ["DataZone", "LoadType", "ZoneStore", "ZONE_ORDER"]
 TARGET_COMMIT_FILE_BYTES = 128 * 1024 * 1024
 
 
+def plan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` (no CBO: an inner join
+    estimates the product of its inputs), None when unavailable."""
+    try:
+        return int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:  # noqa: BLE001
+        return None
+
+
 def right_size_for_write(
-    df: DataFrame, partition_columns: list[str] | None = None
+    df: DataFrame,
+    partition_columns: list[str] | None = None,
+    est_bytes: int | None = None,
 ) -> DataFrame:
     """Size a commit's output files (guide §6) without paying an AQE
     rebalance stage on small commits (r14, VERDICT r13 ask #5): a df
@@ -62,18 +98,116 @@ def right_size_for_write(
     big-looking commits to the rebalance arm. Large commits (or no
     usable estimate) take the REBALANCE hint, keyed by the partition
     columns when present so a partitioned write doesn't fan every task
-    across every directory."""
-    try:
-        est_bytes = int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # noqa: BLE001
-        est_bytes = None
+    across every directory. A caller that knows a tighter bound than the
+    plan's estimate passes it as ``est_bytes``."""
+    if est_bytes is None:
+        est_bytes = plan_bytes(df)
     if est_bytes is not None and est_bytes <= TARGET_COMMIT_FILE_BYTES:
         return df.coalesce(1)
     if partition_columns:
         return df.hint("rebalance", *partition_columns)
     return df.hint("rebalance")
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: a parquet
+    read returns this whatever nullability the writer had."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+def _merge_types(left: DataType, right: DataType) -> DataType:
+    """Spark's schema merge (``StructType.merge``) for nullable types:
+    left's fields in order, merged by name, then right's new fields.
+    Raises ValueError where Spark might not agree — different types, or
+    names that differ only in case."""
+    if isinstance(left, StructType) and isinstance(right, StructType):
+        rmap = {f.name: f for f in right.fields}
+        lower = {f.name.lower(): f.name for f in left.fields}
+        for f in right.fields:
+            if lower.get(f.name.lower(), f.name) != f.name:
+                raise ValueError(f"case-only name clash on {f.name!r}")
+        fields = [
+            StructField(
+                f.name,
+                _merge_types(f.dataType, rmap[f.name].dataType),
+                True,
+                f.metadata,
+            )
+            if f.name in rmap
+            else f
+            for f in left.fields
+        ]
+        fields += [f for f in right.fields if f.name.lower() not in lower]
+        return StructType(fields)
+    if isinstance(left, ArrayType) and isinstance(right, ArrayType):
+        return ArrayType(
+            _merge_types(left.elementType, right.elementType), True
+        )
+    if isinstance(left, MapType) and isinstance(right, MapType):
+        return MapType(
+            _merge_types(left.keyType, right.keyType),
+            _merge_types(left.valueType, right.valueType),
+            True,
+        )
+    if left != right:
+        raise ValueError(f"cannot merge {left} and {right}")
+    return left
+
+
+def _merged_schema(
+    entries: dict, commits: list[str], dirs: list[str]
+) -> StructType | None:
+    """Merge the recorded read schemas of ``commits`` the way Spark's
+    schema-merging parquet inference does: footers fold in path order (for a
+    table's own commits, commit order), data fields first and partition
+    columns last. None when a commit has no recorded schema, when the
+    commits disagree on partition columns, or when a merge could differ
+    from Spark's; the caller then infers."""
+    if not all(c in entries for c in commits):
+        return None
+    layouts = {tuple(entries[c].get("partitionColumns", [])) for c in commits}
+    if len(layouts) != 1:
+        return None
+    (part_cols,) = layouts
+    data = part = None
+    order = sorted(
+        range(len(commits)), key=lambda i: os.path.abspath(dirs[i]) + os.sep
+    )
+    try:
+        for i in order:
+            full = StructType.fromJson(entries[commits[i]])
+            d = StructType([f for f in full.fields if f.name not in part_cols])
+            p = StructType([f for f in full.fields if f.name in part_cols])
+            data = d if data is None else _merge_types(data, d)
+            part = p if part is None else _merge_types(part, p)
+    except ValueError:
+        return None
+    return StructType(data.fields + part.fields)
+
+
+def _tree_stats(dirs: list[str]) -> tuple[int, int]:
+    """Parquet files and bytes under ``dirs`` (driver-side metadata)."""
+    files = total = 0
+    for d in dirs:
+        for root_, _, fs in os.walk(d):
+            for f in fs:
+                if f.endswith(".parquet"):
+                    files += 1
+                    total += os.path.getsize(os.path.join(root_, f))
+    return files, total
 
 
 class DataZone(str, Enum):
@@ -246,17 +380,100 @@ class ZoneStore:
                 f"{op} (writer read {expected_version}) — re-read and retry"
             )
 
-    def _new_commit(
+    def _stage_counted(
         self,
         path: str,
         df: DataFrame,
-        partition_columns: list[str] | None,
-        version: int | None = None,
+        partition_columns: list[str] | None = None,
+        **stage_kw,
+    ) -> tuple[str, int, dict | None]:
+        """Stage ``df`` and count its rows in the same Spark job: the count
+        is an observation on the written frame, read only once the write
+        has succeeded. Returns (staging dir, rows, read schema). The read
+        schema is the frame's schema made nullable; a partitioned commit's
+        partition columns are typed by directory inference, so its schema
+        is inferred from the staged files instead (None when it wrote no
+        rows, leaving reads to infer as before)."""
+        obs = Observation()
+        staging = self._stage_commit(
+            path,
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            partition_columns,
+            **stage_kw,
+        )
+        rows = obs.get["rows"]
+        if not partition_columns:
+            schema = _as_nullable(df.schema).jsonValue()
+        elif rows:
+            schema = self.spark.read.parquet(staging).schema.jsonValue()
+            schema["partitionColumns"] = list(partition_columns)
+        else:
+            schema = None
+        return staging, rows, schema
+
+    def _publish_staged(
+        self,
+        path: str,
+        manifest: dict,
+        staging: str,
+        schema: dict | None,
+        op: str,
     ) -> str:
-        if version is None:
-            version = self._read_manifest(path)["version"] + 1
-        staging = self._stage_commit(path, df, partition_columns)
-        return self._publish_commit(path, staging, version)
+        """Revalidate the manifest, claim commit slot V+1 for ``staging``
+        and record the commit's read schema. A conflict discards the
+        staging dir. The caller bumps the version."""
+        try:
+            self._check_unchanged(path, manifest["version"], op)
+        except ConcurrentModificationError:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        commit = self._publish_commit(path, staging, manifest["version"] + 1)
+        if schema is not None:
+            manifest.setdefault("schemas", {})[commit] = schema
+        return commit
+
+    @staticmethod
+    def _record_version(manifest: dict, commits: list[str]) -> None:
+        """Bump the version to one whose live commits are ``commits``.
+        Every version's membership is recorded and superseded commit dirs
+        are RETAINED until vacuum() — the same contract as Delta's
+        transaction log + VACUUM."""
+        manifest["version"] += 1
+        manifest["commits"] = list(commits)
+        manifest.setdefault("history", {})[str(manifest["version"])] = list(
+            commits
+        )
+
+    @staticmethod
+    def _record_metrics(manifest: dict, rows: int, written: list[str]) -> None:
+        """Delta-style operationMetrics of the current version: rows from
+        the write's observation, files and bytes of the dirs it wrote."""
+        files, size = _tree_stats(written)
+        manifest.setdefault("metrics", {})[str(manifest["version"])] = {
+            "numOutputRows": rows,
+            "numFiles": files,
+            "numOutputBytes": size,
+        }
+
+    def _read_commits(
+        self, path: str, manifest: dict, commits: list[str]
+    ) -> DataFrame:
+        """Scan ``commits`` with the merge of their recorded read schemas:
+        no footer-merging inference job. Falls back to that inference when
+        a commit has no recorded schema (written before schemas were
+        recorded, or by another writer) or the recorded schemas do not
+        merge cleanly, so a real conflict is reported by Spark exactly as
+        before."""
+        dirs = [os.path.join(path, c) for c in commits]
+        schema = _merged_schema(manifest.get("schemas", {}), commits, dirs)
+        if schema is None:
+            return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return self.spark.read.schema(schema).parquet(*dirs)
+
+    def _live(self, path: str, manifest: dict, commits: list[str]) -> DataFrame:
+        """The rows of ``commits`` that are live at the manifest's current
+        version (zones_dv applies deletion vectors here)."""
+        return self._read_commits(path, manifest, commits)
 
     def with_retry(self, op, max_attempts: int = 3):
         """Bounded OCC retry loop (Delta parity: conflicting txns re-read
@@ -292,8 +509,7 @@ class ZoneStore:
         manifest = self._read_manifest(path)
         if not manifest["commits"]:
             return None
-        dirs = [os.path.join(path, c) for c in manifest["commits"]]
-        return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return self._live(path, manifest, manifest["commits"])
 
     def list_datasets(self, zone: DataZone) -> list[str]:
         zdir = os.path.join(self.root, zone.value)
@@ -343,26 +559,9 @@ class ZoneStore:
         if txn_id is not None and txn_id in manifest.get("txns", []):
             return 0
 
-        # CHECK constraints gate every write path (Delta parity: the txn
-        # fails atomically; no partial commit). One fused audit scan.
-        bad = [
-            a
-            for a in self.check_constraints(zone, dataset, df)
-            if a["n_violations"] > 0
-        ]
-        if bad:
-            detail = "; ".join(
-                f"{a['name']} ({a['expr']}): {a['n_violations']} rows"
-                for a in bad
-            )
-            raise ConstraintViolationError(
-                f"write to {zone.value}/{dataset} violates CHECK "
-                f"constraints: {detail}"
-            )
+        self._enforce_constraints(zone, dataset, df, "write to")
 
-        existing = self.read(zone, dataset)
-
-        if load_type == LoadType.FULL or existing is None:
+        if load_type == LoadType.FULL or not manifest["commits"]:
             out, replace = df, True
         elif load_type == LoadType.APPEND:
             out, replace = df, False
@@ -371,6 +570,7 @@ class ZoneStore:
             # (reference :468-476). Anti join streams map-side when the id
             # set is broadcastable; otherwise a shuffled hash join — either
             # way no rewrite of existing data.
+            existing = self._live(path, manifest, manifest["commits"])
             out = df.join(
                 existing.select(id_field).distinct(), on=id_field, how="left_anti"
             )
@@ -379,6 +579,7 @@ class ZoneStore:
             # Upsert (reference :456-467): matched rows replaced, new rows
             # appended. Parquet has no in-place update → keep the untouched
             # remainder + all incoming rows as a fresh FULL commit.
+            existing = self._live(path, manifest, manifest["commits"])
             keep = existing.join(
                 df.select(id_field).distinct(), on=id_field, how="left_anti"
             )
@@ -387,47 +588,58 @@ class ZoneStore:
         else:  # pragma: no cover
             raise ValueError(f"unknown load type: {load_type}")
 
-        out = out.persist()
-        try:
-            n = out.count()
-            if n == 0 and not replace:
-                return 0
-            # Stage to a unique dir, revalidate the manifest, THEN claim
-            # the commit slot by atomic rename. The entry check above is
-            # check-then-act; a writer that committed while our Spark
-            # write was in flight would otherwise be silently overwritten
-            # by the stale manifest below. The rename itself is
-            # create-if-absent (see _publish_commit), so even two writers
-            # that both pass this revalidation cannot clobber each
-            # other's data — at most one publishes c{V+1}.
-            staging = self._stage_commit(path, out, partition_columns)
+        return self._commit_frame(
+            path, manifest, out, [] if replace else manifest["commits"],
+            f"write {zone.value}/{dataset}", skip_empty=not replace,
+            partition_columns=partition_columns, txn_id=txn_id,
+        )
+
+    def _commit_frame(
+        self,
+        path: str,
+        manifest: dict,
+        out: DataFrame,
+        keep: list[str],
+        op: str,
+        skip_empty: bool = False,
+        partition_columns: list[str] | None = None,
+        txn_id: str | None = None,
+        before_publish=None,
+        **stage_kw,
+    ) -> int:
+        """Commit ``out`` as version V+1, whose live commits are ``keep``
+        plus the new one. Returns rows written; with ``skip_empty``, a
+        frame of no rows publishes nothing and returns 0.
+        ``before_publish`` runs after the write job, and an exception from
+        it discards the staged commit.
+
+        Stage to a unique dir, revalidate the manifest, THEN claim the
+        commit slot by atomic rename. The caller's entry check is
+        check-then-act; a writer that committed while our Spark write was
+        in flight would otherwise be silently overwritten by the stale
+        manifest below. The rename itself is create-if-absent (see
+        _publish_commit), so even two writers that both pass this
+        revalidation cannot clobber each other's data — at most one
+        publishes c{V+1}."""
+        staging, n, schema = self._stage_counted(
+            path, out, partition_columns, **stage_kw
+        )
+        if n == 0 and skip_empty:
+            shutil.rmtree(staging, ignore_errors=True)
+            return 0
+        if before_publish is not None:
             try:
-                self._check_unchanged(
-                    path, manifest["version"], f"write {zone.value}/{dataset}"
-                )
-            except ConcurrentModificationError:
+                before_publish()
+            except BaseException:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
-            commit = self._publish_commit(
-                path, staging, manifest["version"] + 1
-            )
-            manifest["version"] += 1
-            if replace:
-                manifest["commits"] = [commit]
-            else:
-                manifest["commits"].append(commit)
-            # Time travel: every version's commit membership is recorded and
-            # superseded commit dirs are RETAINED until vacuum() — the same
-            # contract as Delta's transaction log + VACUUM.
-            manifest.setdefault("history", {})[str(manifest["version"])] = list(
-                manifest["commits"]
-            )
-            if txn_id is not None:
-                manifest.setdefault("txns", []).append(txn_id)
-            self._write_manifest(path, manifest)
-            return n
-        finally:
-            out.unpersist()
+        commit = self._publish_staged(path, manifest, staging, schema, op)
+        self._record_version(manifest, keep + [commit])
+        self._record_metrics(manifest, n, [os.path.join(path, commit)])
+        if txn_id is not None:
+            manifest.setdefault("txns", []).append(txn_id)
+        self._write_manifest(path, manifest)
+        return n
 
     # ------------------------------------------------------------ time travel
     def read_version(
@@ -450,7 +662,7 @@ class ZoneStore:
             raise ValueError(
                 f"version {version} of {zone.value}/{dataset} was vacuumed"
             )
-        return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return self._read_commits(path, manifest, membership)
 
     def read_changes(
         self,
@@ -486,7 +698,7 @@ class ZoneStore:
                 f"changes {from_version}->{to_version} of "
                 f"{zone.value}/{dataset} were vacuumed"
             )
-        return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+        return self._read_commits(path, manifest, added)
 
     # ------------------------------------------------- stats-based pruning
     def commit_stats(
@@ -638,11 +850,10 @@ class ZoneStore:
             "commits_scanned": len(keep),
             "commits_skipped": len(idx["commits"]) - len(keep),
         }
+        manifest = self._read_manifest(path)
+        df = self._live(path, manifest, keep or manifest["commits"])
         if not keep:
-            df = self.read(zone, dataset).filter(F.lit(False))
-        else:
-            dirs = [os.path.join(path, c) for c in keep]
-            df = self.spark.read.option("mergeSchema", "true").parquet(*dirs)
+            df = df.filter(F.lit(False))
         return df.filter(F.col(column) == F.lit(value)), report
 
     def read_pruned(
@@ -664,6 +875,7 @@ class ZoneStore:
         changes how much data is opened. Returns (DataFrame, report) where
         the report records scanned vs skipped commit counts."""
         path = self.dataset_path(zone, dataset)
+        manifest = self._read_manifest(path)
         stats = self.commit_stats(zone, dataset, column)
         keep: list[str] = []
         for s in stats:
@@ -679,12 +891,9 @@ class ZoneStore:
             "commits_scanned": len(keep),
             "commits_skipped": len(stats) - len(keep),
         }
+        df = self._live(path, manifest, keep or manifest["commits"])
         if not keep:
-            df = self.read(zone, dataset)
             df = df.filter(F.lit(False))
-        else:
-            dirs = [os.path.join(path, c) for c in keep]
-            df = self.spark.read.option("mergeSchema", "true").parquet(*dirs)
         cond = F.lit(True)
         if lo is not None:
             cond = cond & (F.col(column) >= F.lit(lo))
@@ -771,6 +980,13 @@ class ZoneStore:
                 shutil.rmtree(full, ignore_errors=True)
                 removed += 1
         manifest["history"] = {str(v): history[str(v)] for v in keep_versions}
+        metrics = manifest.get("metrics", {})
+        manifest["metrics"] = {
+            str(v): metrics[str(v)] for v in keep_versions if str(v) in metrics
+        }
+        manifest["schemas"] = {
+            c: e for c, e in manifest.get("schemas", {}).items() if c in live
+        }
         self._write_manifest(path, manifest)
         return {
             "removed_commits": removed,
@@ -798,10 +1014,10 @@ class ZoneStore:
         commits = list(history[str(version)])
         # Metadata-only, but still a rewrite of the commit list — a commit
         # landing between the entry read and this publish would be lost.
+        # The restored commits are live in retained history, so vacuum()
+        # has kept their schema entries.
         self._check_unchanged(path, manifest["version"], "RESTORE")
-        manifest["version"] += 1
-        manifest["commits"] = commits
-        history[str(manifest["version"])] = list(commits)
+        self._record_version(manifest, commits)
         self._write_manifest(path, manifest)
         return len(commits)
 
@@ -831,44 +1047,55 @@ class ZoneStore:
         join/anti-join on the merge key, so at 100 TB the whole MERGE is
         key-partitioned joins + one rewrite — the same shape Delta executes.
         """
-        tgt = self.read(zone, dataset)
-        src_pref = source.select(
-            [F.col(c).alias(f"src_{c}") for c in source.columns]
-        )
-        if tgt is None:
-            out = source if insert_not_matched else None
-            n = self.write(zone, dataset, out, LoadType.FULL) if out is not None else 0
+        path = self.dataset_path(zone, dataset)
+        manifest = self._read_manifest(path)
+        if not manifest["commits"]:
+            n = (
+                self.write(zone, dataset, source, LoadType.FULL)
+                if insert_not_matched
+                else 0
+            )
             return {"updated": 0, "deleted_matched": 0,
                     "inserted": n, "deleted_by_source": 0}
+        tgt = self._live(path, manifest, manifest["commits"])
 
         # Delta MERGE raises when multiple source rows match one target row
         # (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW); without this the
         # inner join below would silently duplicate the matched target row.
-        # Cheap check: duplicate keys in the source that also exist in the
-        # target. One agg + semi-join, no data rewrite.
-        dup_keys = (
-            source.groupBy(id_field)
-            .count()
-            .filter(F.col("count") > 1)
-            .join(tgt.select(id_field).distinct(), id_field, "left_semi")
+        # Each source row carries its key's multiplicity, and the write job
+        # observes the largest one among matched rows; above 1, the staged
+        # commit is discarded before it is published.
+        src_rows = "__merge_src_rows"
+        src_pref = source.select(
+            [F.col(c).alias(f"src_{c}") for c in source.columns]
+            + [
+                F.count(F.lit(1))
+                .over(Window.partitionBy(id_field))
+                .alias(src_rows)
+            ]
         )
-        n_dup = dup_keys.limit(1).count()
-        if n_dup:
-            sample = [r[id_field] for r in dup_keys.limit(5).collect()]
-            raise ValueError(
-                "MERGE source has multiple rows matching the same target "
-                f"row on {id_field!r} (e.g. {sample}); Delta MERGE rejects "
-                "this — dedupe the source first"
+        key = F.col(id_field) == F.col(f"src_{id_field}")
+        # Clause counts are observations on the union's branches, filled
+        # in by the write job itself.
+        observations: list[Observation] = []
+
+        def observe(df: DataFrame, **metrics) -> DataFrame:
+            observations.append(Observation())
+            return df.observe(
+                observations[-1], *[m.alias(k) for k, m in metrics.items()]
             )
 
-        key = F.col(id_field) == F.col(f"src_{id_field}")
-        matched = tgt.join(src_pref, key, "inner")
-        if matched_delete:
-            fire = F.coalesce(F.expr(matched_delete), F.lit(False))
-            n_del_matched = matched.filter(fire).count()
-            matched = matched.filter(~fire)
-        else:
-            n_del_matched = 0
+        fire = (
+            F.coalesce(F.expr(matched_delete), F.lit(False))
+            if matched_delete
+            else F.lit(False)
+        )
+        matched = observe(
+            tgt.join(src_pref, key, "inner"),
+            max_src_rows=F.max(src_rows),
+            deleted_matched=F.count_if(fire),
+        ).filter(~fire)
+        matched_obs = observations[-1]
         if matched_update:
             matched = matched.withColumns(
                 {
@@ -877,36 +1104,62 @@ class ZoneStore:
                 }
             )
         matched_out = matched.select(tgt.columns)
-        n_updated = matched_out.count() if matched_update else 0
+        if matched_update:
+            matched_out = observe(matched_out, updated=F.count(F.lit(1)))
 
         unmatched_t = tgt.join(src_pref, key, "left_anti")
         if not_matched_by_source_delete:
             fire = F.coalesce(
                 F.expr(not_matched_by_source_delete), F.lit(False)
             )
-            n_del_src = unmatched_t.filter(fire).count()
-            unmatched_t = unmatched_t.filter(~fire)
-        else:
-            n_del_src = 0
+            unmatched_t = observe(
+                unmatched_t, deleted_by_source=F.count_if(fire)
+            ).filter(~fire)
 
         pieces = [matched_out, unmatched_t]
-        n_ins = 0
         if insert_not_matched:
             inserts = source.join(
                 tgt.select(id_field).distinct(), on=id_field, how="left_anti"
             )
-            n_ins = inserts.count()
-            pieces.append(inserts)
+            pieces.append(observe(inserts, inserted=F.count(F.lit(1))))
         out = pieces[0]
         for p in pieces[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        self.write(zone, dataset, out, LoadType.FULL)
-        return {
-            "updated": n_updated,
-            "deleted_matched": n_del_matched,
-            "inserted": n_ins,
-            "deleted_by_source": n_del_src,
-        }
+
+        def reject_duplicate_matches() -> None:
+            if (matched_obs.get["max_src_rows"] or 0) <= 1:
+                return
+            dup_keys = (
+                source.groupBy(id_field)
+                .count()
+                .filter(F.col("count") > 1)
+                .join(tgt.select(id_field).distinct(), id_field, "left_semi")
+            )
+            sample = [r[id_field] for r in dup_keys.limit(5).collect()]
+            raise ValueError(
+                "MERGE source has multiple rows matching the same target "
+                f"row on {id_field!r} (e.g. {sample}); Delta MERGE rejects "
+                "this — dedupe the source first"
+            )
+
+        self._enforce_constraints(zone, dataset, out, "write to")
+        # The matched branch's inner join estimates the product of its
+        # inputs, but each target row meets at most one source row, so
+        # the output is bounded by target plus source.
+        sizes = [plan_bytes(tgt), plan_bytes(source)]
+        sized = None not in sizes
+        if sized:
+            out = right_size_for_write(out, est_bytes=sum(sizes))
+        self._commit_frame(
+            path, manifest, out, [], f"MERGE {zone.value}/{dataset}",
+            before_publish=reject_duplicate_matches, rebalance=not sized,
+        )
+        counts = {"updated": 0, "deleted_matched": 0,
+                  "inserted": 0, "deleted_by_source": 0}
+        for obs in observations:
+            counts.update(obs.get)
+        del counts["max_src_rows"]
+        return counts
 
     def clone(
         self,
@@ -929,16 +1182,19 @@ class ZoneStore:
             raise ValueError(f"nothing to clone: {zone.value}/{dataset}")
         dst_path = self.dataset_path(dst_zone, dst_dataset)
         os.makedirs(dst_path, exist_ok=True)
-        abs_commits = [
-            c if os.path.isabs(c) else os.path.join(src_path, c)
-            for c in src["commits"]
-        ]
+        abs_commits = [os.path.join(src_path, c) for c in src["commits"]]
+        schemas = src.get("schemas", {})
         self._write_manifest(
             dst_path,
             {
                 "version": 1,
                 "commits": abs_commits,
                 "history": {"1": list(abs_commits)},
+                "schemas": {
+                    a: schemas[c]
+                    for c, a in zip(src["commits"], abs_commits)
+                    if c in schemas
+                },
                 "cloned_from": src_path,
                 "constraints": dict(src.get("constraints", {})),
             },
@@ -990,6 +1246,27 @@ class ZoneStore:
             for n in sorted(cons)
         ]
 
+    def _enforce_constraints(
+        self, zone: DataZone, dataset: str, df: DataFrame, what: str
+    ) -> None:
+        """CHECK constraints gate every write path (Delta parity: the txn
+        fails atomically; no partial commit). One fused audit scan, and
+        none when the table has no constraints."""
+        bad = [
+            a
+            for a in self.check_constraints(zone, dataset, df)
+            if a["n_violations"] > 0
+        ]
+        if bad:
+            detail = "; ".join(
+                f"{a['name']} ({a['expr']}): {a['n_violations']} rows"
+                for a in bad
+            )
+            raise ConstraintViolationError(
+                f"{what} {zone.value}/{dataset} violates CHECK "
+                f"constraints: {detail}"
+            )
+
     def delete_where(
         self,
         zone: DataZone,
@@ -1035,44 +1312,32 @@ class ZoneStore:
                     skip_by_stats.add(st["commit"])
 
         untouched: list[str] = []
-        changed_dirs: list[str] = []
+        changed: list[str] = []
         deleted = 0
         for c in manifest["commits"]:
             if c in skip_by_stats:
                 untouched.append(c)
                 continue
-            cdf = self.spark.read.parquet(os.path.join(path, c))
-            n = cdf.filter(match).count()
+            n = self._read_commits(path, manifest, [c]).filter(match).count()
             if n == 0:
                 untouched.append(c)
             else:
-                changed_dirs.append(os.path.join(path, c))
+                changed.append(c)
                 deleted += n
-        if not changed_dirs:
+        if not changed:
             return 0
-        kept = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*changed_dirs)
-            .filter(~match)
-        )
-        new_commits = list(untouched)
-        if kept.count() > 0:
-            staging = self._stage_commit(path, kept, None)
-            try:
-                self._check_unchanged(path, manifest["version"], "DELETE")
-            except ConcurrentModificationError:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            new_commits.append(
-                self._publish_commit(path, staging, manifest["version"] + 1)
+        kept = self._read_commits(path, manifest, changed).filter(~match)
+        staging, n_kept, schema = self._stage_counted(path, kept)
+        if n_kept:
+            commit = self._publish_staged(
+                path, manifest, staging, schema, "DELETE"
             )
+            self._record_version(manifest, untouched + [commit])
+            self._record_metrics(manifest, n_kept, [os.path.join(path, commit)])
         else:
+            shutil.rmtree(staging, ignore_errors=True)
             self._check_unchanged(path, manifest["version"], "DELETE")
-        manifest["version"] += 1
-        manifest["commits"] = new_commits
-        manifest.setdefault("history", {})[str(manifest["version"])] = list(
-            new_commits
-        )
+            self._record_version(manifest, untouched)
         self._write_manifest(path, manifest)
         return deleted
 
@@ -1099,21 +1364,18 @@ class ZoneStore:
         match = F.coalesce(F.expr(predicate), F.lit(False))
 
         untouched: list[str] = []
-        changed_dirs: list[str] = []
+        changed: list[str] = []
         updated = 0
         for c in manifest["commits"]:
-            cdf = self.spark.read.parquet(os.path.join(path, c))
-            n = cdf.filter(match).count()
+            n = self._read_commits(path, manifest, [c]).filter(match).count()
             if n == 0:
                 untouched.append(c)
             else:
-                changed_dirs.append(os.path.join(path, c))
+                changed.append(c)
                 updated += n
-        if not changed_dirs:
+        if not changed:
             return 0
-        base = self.spark.read.option("mergeSchema", "true").parquet(
-            *changed_dirs
-        )
+        base = self._read_commits(path, manifest, changed)
         out = base.withColumns(
             {
                 col: F.when(match, F.expr(expr)).otherwise(F.col(col))
@@ -1124,36 +1386,8 @@ class ZoneStore:
         # enforces CHECK on UPDATE): audit the rewritten commit before any
         # file or manifest is touched. Untouched commits already passed at
         # their own write time.
-        bad = [
-            a
-            for a in self.check_constraints(zone, dataset, out)
-            if a["n_violations"] > 0
-        ]
-        if bad:
-            detail = "; ".join(
-                f"{a['name']} ({a['expr']}): {a['n_violations']} rows"
-                for a in bad
-            )
-            raise ConstraintViolationError(
-                f"UPDATE on {zone.value}/{dataset} violates CHECK "
-                f"constraints: {detail}"
-            )
-        new_commits = list(untouched)
-        staging = self._stage_commit(path, out, None)
-        try:
-            self._check_unchanged(path, manifest["version"], "UPDATE")
-        except ConcurrentModificationError:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        new_commits.append(
-            self._publish_commit(path, staging, manifest["version"] + 1)
-        )
-        manifest["version"] += 1
-        manifest["commits"] = new_commits
-        manifest.setdefault("history", {})[str(manifest["version"])] = list(
-            new_commits
-        )
-        self._write_manifest(path, manifest)
+        self._enforce_constraints(zone, dataset, out, "UPDATE on")
+        self._commit_frame(path, manifest, out, untouched, "UPDATE")
         return updated
 
     def compact(
@@ -1183,39 +1417,21 @@ class ZoneStore:
         if not manifest["commits"]:
             raise ValueError(f"no data to compact: {zone.value}/{dataset}")
 
-        def _stats(commits: list[str]) -> tuple[int, int]:
-            files = total = 0
-            for c in commits:
-                for root_, _, fs in os.walk(os.path.join(path, c)):
-                    for f in fs:
-                        if f.endswith(".parquet"):
-                            files += 1
-                            total += os.path.getsize(os.path.join(root_, f))
-            return files, total
-
-        files_before, bytes_before = _stats(manifest["commits"])
-        n_files = max(1, math.ceil(bytes_before / target_file_bytes))
-        df = self.read(zone, dataset).repartition(n_files)
-        staging = self._stage_commit(path, df, None, rebalance=False)
-        try:
-            self._check_unchanged(path, manifest["version"], "OPTIMIZE")
-        except ConcurrentModificationError:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        commit = self._publish_commit(path, staging, manifest["version"] + 1)
-        manifest["version"] += 1
         stale = list(manifest["commits"])
-        manifest["commits"] = [commit]
+        files_before, bytes_before = _tree_stats(
+            [os.path.join(path, c) for c in stale]
+        )
+        n_files = max(1, math.ceil(bytes_before / target_file_bytes))
+        df = self._live(path, manifest, stale).repartition(n_files)
         # like Delta OPTIMIZE: the rewrite is a new version; superseded
         # commits stay readable via read_version until vacuum()
-        manifest.setdefault("history", {})[str(manifest["version"])] = [commit]
-        self._write_manifest(path, manifest)
-        files_after, bytes_after = _stats([commit])
+        self._commit_frame(path, manifest, df, [], "OPTIMIZE", rebalance=False)
+        after = manifest["metrics"][str(manifest["version"])]
         return {
             "files_before": files_before,
-            "files_after": files_after,
+            "files_after": after["numFiles"],
             "bytes_before": bytes_before,
-            "bytes_after": bytes_after,
+            "bytes_after": after["numOutputBytes"],
             "commits_before": len(stale),
         }
 
@@ -1239,10 +1455,12 @@ class ZoneStore:
             .withColumn("_quarantine_reason", F.lit(reason))
             .withColumn("_quality_score", F.lit(float(quality_score)))
         )
-        n = stamped.count()
-        commit = self._new_commit(path, stamped, None)
+        staging, n, schema = self._stage_counted(path, stamped)
+        commit = self._publish_commit(path, staging, manifest["version"] + 1)
+        manifest.setdefault("schemas", {})[commit] = schema
         manifest["version"] += 1
         manifest["commits"].append(commit)
+        self._record_metrics(manifest, n, [os.path.join(path, commit)])
         self._write_manifest(path, manifest)
         return n
 
@@ -1252,6 +1470,4 @@ class ZoneStore:
         manifest = self._read_manifest(path)
         if not manifest["commits"]:
             return None
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, c) for c in manifest["commits"]]
-        )
+        return self._read_commits(path, manifest, manifest["commits"])

@@ -112,14 +112,11 @@ class BranchingZoneStore(ZoneStore):
                 f"{zone.value}/{dataset} advanced since branch {branch!r} "
                 "was cut — re-branch and replay to merge"
             )
-        new_commits = [
-            c if os.path.isabs(c) else os.path.join(br_path, c)
-            for c in br["commits"]
-        ]
-        src["version"] += 1
-        src["commits"] = new_commits
-        src.setdefault("history", {})[str(src["version"])] = list(
-            new_commits
-        )
+        new_commits = [os.path.join(br_path, c) for c in br["commits"]]
+        schemas = src.setdefault("schemas", {})
+        for c, a in zip(br["commits"], new_commits):
+            if c in br.get("schemas", {}):
+                schemas[a] = br["schemas"][c]
+        self._record_version(src, new_commits)
         self._write_manifest(src_path, src)
         return len(new_commits)

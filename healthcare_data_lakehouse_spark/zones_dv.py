@@ -28,12 +28,17 @@ surface byte-stable; nothing here changes base-class behavior.
 from __future__ import annotations
 
 import os
-import uuid
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from healthcare_data_lakehouse_spark.zones import DataZone, ZoneStore
+from healthcare_data_lakehouse_spark.zones import (
+    ConcurrentModificationError,
+    DataZone,
+    ZoneStore,
+)
 
 
 class DVZoneStore(ZoneStore):
@@ -45,31 +50,40 @@ class DVZoneStore(ZoneStore):
     def _dv_dirs(self, path: str, names: list[str]) -> list[str]:
         return [os.path.join(path, self.DV_DIR, n) for n in names]
 
-    def _dv_keys(self, path: str, names: list[str]) -> DataFrame | None:
-        if not names:
-            return None
-        return self.spark.read.parquet(*self._dv_dirs(path, names)).distinct()
+    def _dv_keys(
+        self, path: str, names: list[str], key: StructField
+    ) -> DataFrame:
+        """The distinct keys of vectors ``names``, read with the key
+        column's known type (a vector holds just that column)."""
+        return (
+            self.spark.read.schema(StructType([key]))
+            .parquet(*self._dv_dirs(path, names))
+            .distinct()
+        )
 
     def _apply_dv(
-        self, df: DataFrame | None, path: str, names: list[str], key_col: str
-    ) -> DataFrame | None:
+        self, df: DataFrame, path: str, names: list[str], key_col: str
+    ) -> DataFrame:
         """Anti-join the DV key set onto a scan. The join side is the
         DISTINCT deleted-key set — typically small enough that Catalyst
         broadcasts it; when a long un-compacted delete history grows past
         the broadcast threshold it degrades to a shuffled hash join, which
         is the documented MoR read tax that purge_dv() resets."""
-        keys = self._dv_keys(path, names)
-        if df is None or keys is None:
+        if not names:
             return df
+        keys = self._dv_keys(path, names, df.schema[key_col])
         return df.join(keys, on=key_col, how="left_anti")
 
     # ----------------------------------------------------------------- reads
-    def read(self, zone: DataZone, dataset: str) -> DataFrame | None:
-        path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        df = super().read(zone, dataset)
+    def _live(self, path: str, manifest: dict, commits: list[str]) -> DataFrame:
+        """Every scan of live rows (read, read_pruned, read_bloom_pruned,
+        compact, and the key sets of new vectors) applies the outstanding
+        vectors."""
         return self._apply_dv(
-            df, path, manifest.get("dvs", []), manifest.get("dv_key", "id")
+            super()._live(path, manifest, commits),
+            path,
+            manifest.get("dvs", []),
+            manifest.get("dv_key", "id"),
         )
 
     def read_version(
@@ -108,7 +122,7 @@ class DVZoneStore(ZoneStore):
                 f"deletion vectors for {zone.value}/{dataset} are keyed on "
                 f"{manifest['dv_key']!r}; cannot mix with {key_col!r}"
             )
-        live = self.read(zone, dataset)
+        live = self._live(path, manifest, manifest["commits"])
         doomed = live.filter(predicate).select(key_col).distinct()
         return self._commit_dv(zone, dataset, path, manifest, doomed,
                                key_col)
@@ -138,7 +152,7 @@ class DVZoneStore(ZoneStore):
                 f"deletion vectors for {zone.value}/{dataset} are keyed on "
                 f"{manifest['dv_key']!r}; cannot mix with {key_col!r}"
             )
-        live = self.read(zone, dataset)
+        live = self._live(path, manifest, manifest["commits"])
         doomed = (
             live.join(
                 keys.select(F.col(key_col)).distinct(), key_col, "left_semi"
@@ -158,47 +172,38 @@ class DVZoneStore(ZoneStore):
         doomed: DataFrame,
         key_col: str,
     ) -> int:
-        doomed = doomed.persist()
+        # size the vector artifact's files (guide §6): doomed comes off a
+        # distinct (one tiny file per shuffle partition otherwise — 32
+        # sub-KB files per vector at sf0.1, paid back on EVERY subsequent
+        # read's DV scan)
+        staging, n, _ = self._stage_counted(path, doomed)
+        if n == 0:
+            shutil.rmtree(staging, ignore_errors=True)
+            return 0
         try:
-            n = doomed.count()
-            if n == 0:
-                return 0
-            staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
-            # size the vector artifact's files (guide §6): doomed comes
-            # off a distinct (one tiny file per shuffle partition
-            # otherwise — 32 sub-KB files per vector at sf0.1, paid back
-            # on EVERY subsequent read's DV scan). doomed is persisted
-            # and counted above, so the size estimate is exact.
-            from healthcare_data_lakehouse_spark.zones import (
-                right_size_for_write,
-            )
-
-            right_size_for_write(doomed).write.mode("overwrite").parquet(
-                staging
-            )
             self._check_unchanged(
                 path,
                 manifest["version"],
                 f"dv delete {zone.value}/{dataset}",
             )
-            os.makedirs(os.path.join(path, self.DV_DIR), exist_ok=True)
-            dv_name = f"dv{manifest['version'] + 1:06d}"
-            os.rename(staging, os.path.join(path, self.DV_DIR, dv_name))
-            manifest["version"] += 1
-            manifest.setdefault("dvs", []).append(dv_name)
-            manifest["dv_key"] = key_col
-            # data membership is UNCHANGED at this version — that is the
-            # whole point; both histories are recorded for time travel
-            manifest.setdefault("history", {})[
-                str(manifest["version"])
-            ] = list(manifest["commits"])
-            manifest.setdefault("dv_history", {})[
-                str(manifest["version"])
-            ] = list(manifest["dvs"])
-            self._write_manifest(path, manifest)
-            return n
-        finally:
-            doomed.unpersist()
+        except ConcurrentModificationError:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        os.makedirs(os.path.join(path, self.DV_DIR), exist_ok=True)
+        dv_name = f"dv{manifest['version'] + 1:06d}"
+        dv_dir = os.path.join(path, self.DV_DIR, dv_name)
+        os.rename(staging, dv_dir)
+        # data membership is UNCHANGED at this version — that is the whole
+        # point; both histories are recorded for time travel
+        self._record_version(manifest, manifest["commits"])
+        self._record_metrics(manifest, n, [dv_dir])
+        manifest.setdefault("dvs", []).append(dv_name)
+        manifest["dv_key"] = key_col
+        manifest.setdefault("dv_history", {})[
+            str(manifest["version"])
+        ] = list(manifest["dvs"])
+        self._write_manifest(path, manifest)
+        return n
 
     # ------------------------------------------------------------ compaction
     def purge_dv(self, zone: DataZone, dataset: str) -> int:
@@ -213,43 +218,19 @@ class DVZoneStore(ZoneStore):
         manifest = self._read_manifest(path)
         if not manifest.get("dvs"):
             return 0
-        live = self.read(zone, dataset).persist()
-        try:
-            n = live.count()
-            staging = self._stage_commit(path, live, None)
-            try:
-                self._check_unchanged(
-                    path,
-                    manifest["version"],
-                    f"purge_dv {zone.value}/{dataset}",
-                )
-            except Exception:
-                import shutil
-
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
-            commit = self._publish_commit(
-                path, staging, manifest["version"] + 1
-            )
-            manifest["version"] += 1
-            manifest["commits"] = [commit]
-            manifest["dvs"] = []
-            manifest.setdefault("history", {})[
-                str(manifest["version"])
-            ] = [commit]
-            manifest.setdefault("dv_history", {})[
-                str(manifest["version"])
-            ] = []
-            self._write_manifest(path, manifest)
-            return n
-        finally:
-            live.unpersist()
+        live = self._live(path, manifest, manifest["commits"])
+        # the rewritten version holds no vectors (written with its commit)
+        manifest["dvs"] = []
+        manifest.setdefault("dv_history", {})[str(manifest["version"] + 1)] = []
+        return self._commit_frame(
+            path, manifest, live, [], f"purge_dv {zone.value}/{dataset}"
+        )
 
     # ----------------- copy-on-write interop: fold vectors first
     #
-    # The base class's rewrite paths (FULL/MERGE write, delete_where,
-    # update_set, compact) reason about data FILES and the plain
-    # `history` map; run over a table with outstanding vectors they
+    # The base class's rewrite paths (FULL/MERGE write, merge_into,
+    # delete_where, update_set, compact) reason about data FILES and the
+    # plain `history` map; run over a table with outstanding vectors they
     # would (a) leave stale vectors that wrongly re-delete a key a
     # MERGE just re-inserted, and (b) record new versions with no
     # dv_history entry, so time travel at those versions would replay
@@ -284,6 +265,10 @@ class DVZoneStore(ZoneStore):
         self._fold_outstanding(zone, dataset)
         return super().compact(zone, dataset, *args, **kwargs)
 
+    def merge_into(self, zone, dataset, source, *args, **kwargs):
+        self._fold_outstanding(zone, dataset)
+        return super().merge_into(zone, dataset, source, *args, **kwargs)
+
     # ----------------------------------------------------------------- audit
     def dv_stats(self, zone: DataZone, dataset: str) -> dict:
         """MoR bookkeeping: commit/vector counts and the deleted-key
@@ -291,11 +276,15 @@ class DVZoneStore(ZoneStore):
         path = self.dataset_path(zone, dataset)
         manifest = self._read_manifest(path)
         dvs = manifest.get("dvs", [])
-        keys = self._dv_keys(path, dvs)
+        n_keys = 0
+        if dvs:
+            table = self._read_commits(path, manifest, manifest["commits"])
+            key = table.schema[manifest["dv_key"]]
+            n_keys = self._dv_keys(path, dvs, key).count()
         return {
             "version": manifest["version"],
             "n_commits": len(manifest["commits"]),
             "n_dvs": len(dvs),
-            "n_deleted_keys": 0 if keys is None else keys.count(),
+            "n_deleted_keys": n_keys,
             "dv_key": manifest.get("dv_key"),
         }
