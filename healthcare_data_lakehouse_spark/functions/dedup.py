@@ -106,40 +106,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-#: Session-lifetime cache guard for the dfcap functions (ADVICE r12): the
-#: per-doc shingle-array table must stay persisted while the RETURNED lazy
-#: DataFrame is consumed, so the function itself cannot unpersist it.
-#: Instead each dfcap invocation evicts the PREVIOUS invocation's cached
-#: table, bounding accumulation to one cached sets-table per process even
-#: across bench's 3x repeats and the full compare sweep.
-#:
-#: ORDER MATTERS (r13 bench regression, root-caused by A/B): unpersist()
-#: evicts by CANONICALIZED plan, and a repeat invocation's table has the
-#: same canonical plan as its predecessor — so evicting AFTER the new
-#: persist() silently killed the new cache entry too, and every
-#: invocation after a session's first ran with `sets` uncached (~40%
-#: slower, recomputing the shingle arrays for each downstream use). The
-#: guard therefore takes the UNPERSISTED table, evicts the predecessor
-#: first, and only then persists.
-_DFCAP_SETS_CACHE: list[DataFrame] = []
-
-
-def _dfcap_cache_swap(sets: DataFrame) -> DataFrame:
-    while _DFCAP_SETS_CACHE:
-        _DFCAP_SETS_CACHE.pop().unpersist()
-    sets = sets.persist()
-    _DFCAP_SETS_CACHE.append(sets)
-    return sets
-
-
-def _dfcap_cache_add(df: DataFrame) -> DataFrame:
-    """Persist an additional table under the same session-lifetime guard
-    (evicted by the NEXT invocation's :func:`_dfcap_cache_swap`)."""
-    df = df.persist()
-    _DFCAP_SETS_CACHE.append(df)
-    return df
-
-
 def _dfcap_counted_pairs(
     sets: DataFrame, max_df: int, pair_cond_sql: str
 ) -> DataFrame:
@@ -164,13 +130,21 @@ def _dfcap_counted_pairs(
     and ``b`` (fields sid, sz) — generated SQL, not Column lambdas
     (driver-chattiness, see :func:`_minhash_cols`). Returns
     (id_a, id_b, sz_a, sz_b, c, slack)."""
+    from pyspark.sql.window import Window
+
     sh = sets.select(
         "sid", F.size("shset").alias("sz"), F.explode("shset").alias("shingle")
     )
-    grp = _dfcap_cache_add(
-        sh.groupBy("shingle")
+    # df is counted by a window over the shingle partition (its buffer
+    # spills) and filtered BEFORE the fold, so a stop-shingle's postings
+    # never land in one collect_list buffer; the groupBy reuses the
+    # window's shingle partitioning (one exchange).
+    grp = (
+        sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+        .filter(F.col("df") <= max_df)
+        .groupBy("shingle")
         .agg(F.collect_list(F.struct("sid", "sz")).alias("xs"))
-        .filter(F.size("xs") <= max_df)
+        .persist()
     )
     pair_sql = (
         "explode(flatten(transform(xs, a -> "
@@ -371,12 +345,13 @@ def dfcap_jaccard_pairs(
     comes straight from the counts; only the undecided middle joins the
     shingle arrays. The lossless PPJoin size bound (J >= t forces
     min(|A|,|B|) >= t*max(|A|,|B|)) is applied at generation time."""
-    sets = _dfcap_cache_swap(
+    sets = (
         df.repartition(df.sparkSession.sparkContext.defaultParallelism)
         .select(
             F.col(id_col).alias("sid"),
             word_shingles(F.col(text_col), k).alias("shset"),
         )
+        .persist()
     )
     pc = _dfcap_counted_pairs(
         sets,
@@ -453,12 +428,13 @@ def dfcap_containment_pairs(
     counts, and only the undecided middle joins the arrays. The lossless
     directional length bound (C(A->B) >= t needs |B| >= |A∩B| >= t*|A|)
     is applied at generation time."""
-    sets = _dfcap_cache_swap(
+    sets = (
         df.repartition(df.sparkSession.sparkContext.defaultParallelism)
         .select(
             F.col(id_col).alias("sid"),
             word_shingles(F.col(text_col), k).alias("shset"),
         )
+        .persist()
     )
     pc = _dfcap_counted_pairs(
         sets,

@@ -12,7 +12,7 @@ partition-parallel:
    |partitions|-row table (the only ordered window, over N rows);
 4. broadcast the offsets back and add.
 
-Same scheme as ``pipeline_global_row_index`` (llm_ops.py), factored out for
+Same scheme as ``pipeline_global_row_index`` (llm_pipeline.py), factored out for
 reuse by any running-sum/sweep-line consumer.
 """
 

@@ -4,8 +4,8 @@ resampling inference, vocabulary-growth laws.
 The reference has no analytics surface at all (its ``AGGREGATION`` /
 ``JOINING`` labels are lineage metadata only, reference
 ``src/lineage/lineage_tracker.py:45-46``); these queries extend the
-engine's statistical/ops toolbox beyond `behavior.py`, each with a
-DuckDB oracle.
+engine's statistical/ops toolbox beyond `behavior_events` and
+`behavior_stats`, each with a DuckDB oracle.
 
 Scale notes (100 TB design point):
 * The activity bitmap packs 63 days of per-user presence into ONE

@@ -1,9 +1,4 @@
-"""Extended analytics query family: sketches, graph, forecasting, windows (split from analytics.py).
-
-Mechanically split from queries/analytics.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See analytics.py for
-the compatibility facade.
-"""
+"""Extended analytics query family: sketches, graph, forecasting, windows."""
 
 from __future__ import annotations
 

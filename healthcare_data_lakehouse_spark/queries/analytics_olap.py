@@ -1,9 +1,4 @@
-"""TPC-H sweep & OLAP-shape query family (split from analytics.py).
-
-Mechanically split from queries/analytics.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See analytics.py for
-the compatibility facade.
-"""
+"""TPC-H sweep & OLAP-shape query family."""
 
 from __future__ import annotations
 

@@ -1,9 +1,4 @@
-"""Statistical-analysis query family (split from behavior.py).
-
-Mechanically split from queries/behavior.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See behavior.py for
-the compatibility facade.
-"""
+"""Statistical-analysis query family."""
 
 from __future__ import annotations
 

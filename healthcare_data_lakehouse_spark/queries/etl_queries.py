@@ -623,9 +623,11 @@ def lineage_columns_from_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_data_lakehouse_spark.plan_lineage import (
         column_lineage_from_plan,
     )
-    from healthcare_data_lakehouse_spark.queries import analytics
+    from healthcare_data_lakehouse_spark.queries.analytics_olap import (
+        gold_revenue_by_mktsegment,
+    )
 
-    flagship = analytics.gold_revenue_by_mktsegment(spark, sf_dir)
+    flagship = gold_revenue_by_mktsegment(spark, sf_dir)
     lin = column_lineage_from_plan(flagship)
     rows = [(col, ",".join(srcs)) for col, srcs in lin.items()]
     return spark.createDataFrame(

@@ -1,9 +1,4 @@
-"""Dedup & near-duplicate query family (split from llm_ops.py).
-
-Mechanically split from queries/llm_ops.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See llm_ops.py for
-the compatibility facade.
-"""
+"""Dedup & near-duplicate query family."""
 
 from __future__ import annotations
 
@@ -3278,19 +3273,20 @@ def dedup_dfcap_containment_pairs(
 def dedup_dfcap_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_with_dups(spark, sf_dir, 20)
     # persist: the per-doc arrays feed the df counts and both join
-    # sides; the swap-cache bounds accumulation across repeated runs
-    # (same ADVICE-r12 discipline as the dfcap generators themselves).
+    # sides (released by the next catalog invocation).
     #
     # r14 (guide §3): the exhaustive truth self-join carries each row's
     # set size so the lossless PPJoin bound for the J >= 0.8 truth
     # filter (min(sz) >= 0.8*max(sz)) prunes INSIDE the join, before
     # the sum(df^2)-row output reaches the pair aggregation; with sizes
     # in the grouping key the two post-aggregation size joins disappear.
-    sets = D._dfcap_cache_swap(
-        docs.repartition(spark.sparkContext.defaultParallelism).select(
+    sets = (
+        docs.repartition(spark.sparkContext.defaultParallelism)
+        .select(
             F.col("doc_id").alias("sid"),
             D.word_shingles(F.col("text"), 3).alias("shset"),
         )
+        .persist()
     )
     sh = sets.select(
         "sid", F.size("shset").alias("sz"), F.explode("shset").alias("shingle")

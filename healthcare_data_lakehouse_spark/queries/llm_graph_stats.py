@@ -1,9 +1,4 @@
-"""Graph & statistics query family (split from llm_ops.py).
-
-Mechanically split from queries/llm_ops.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See llm_ops.py for
-the compatibility facade.
-"""
+"""Graph & statistics query family."""
 
 from __future__ import annotations
 

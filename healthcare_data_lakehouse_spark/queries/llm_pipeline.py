@@ -1,9 +1,4 @@
-"""Curation-pipeline / sampling / privacy query family (split from llm_ops.py).
-
-Mechanically split from queries/llm_ops.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See llm_ops.py for
-the compatibility facade.
-"""
+"""Curation-pipeline / sampling / privacy query family."""
 
 from __future__ import annotations
 

@@ -1,9 +1,4 @@
-"""Shared helpers for the LLM-pipeline query families (split from llm_ops.py).
-
-Mechanically split from queries/llm_ops.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See llm_ops.py for
-the compatibility facade.
-"""
+"""Shared helpers for the LLM-pipeline query families."""
 
 from __future__ import annotations
 

@@ -1,9 +1,4 @@
-"""Similarity / embedding / sketch / multimodal query family (split from llm_ops.py).
-
-Mechanically split from queries/llm_ops.py (round 8); blocks moved
-verbatim in original order — zero behavior change. See llm_ops.py for
-the compatibility facade.
-"""
+"""Similarity / embedding / sketch / multimodal query family."""
 
 from __future__ import annotations
 
@@ -3745,9 +3740,8 @@ def similarity_mmr_rerank_top3(
     )
     # 80 rows (8 queries x top-10); persisting pins the one expensive
     # linear cosine scan to a single computation — every greedy stage
-    # branches off this tiny table (same canonical plan on repeat
-    # invocations, so Spark reuses one cache entry; day-grain persist
-    # precedent: stats_mann_kendall_trend).
+    # branches off this tiny table (released by the next catalog
+    # invocation; day-grain persist precedent: stats_mann_kendall_trend).
     pool = _topk_rows(
         scored, 10, score_col="rel6"
     ).select("qid", "vec_id", "rel6", "rn").persist()

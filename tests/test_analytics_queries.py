@@ -45,7 +45,7 @@ def test_oracle_alignment_duckdb(spark, sf_dir, specs):
 
 
 def test_fuzzy_match_resolves_every_variant(spark):
-    from healthcare_data_lakehouse_spark.queries.analytics import er_fuzzy_customer_match
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import er_fuzzy_customer_match
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -76,7 +76,7 @@ def test_fuzzy_match_resolves_every_variant(spark):
 
 
 def test_assoc_rules_lift_consistency(spark):
-    from healthcare_data_lakehouse_spark.queries.analytics import assoc_part_pairs_lift
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import assoc_part_pairs_lift
 
     rows = assoc_part_pairs_lift(spark, "/root/testdata/sf0.01").collect()
     assert rows
@@ -87,7 +87,7 @@ def test_assoc_rules_lift_consistency(spark):
 
 
 def test_fullouter_preserves_both_calendars(spark):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         fullouter_daily_orders_vs_events,
     )
 
@@ -99,7 +99,7 @@ def test_fullouter_preserves_both_calendars(spark):
 
 
 def test_division_suppliers_truly_cover(spark):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_olap import (
         suppliers_covering_all_top_parts,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -130,7 +130,7 @@ def test_division_suppliers_truly_cover(spark):
 
 
 def test_copart_pairs_are_strongest_edges(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         graph_supplier_copart_pairs,
     )
 
@@ -143,7 +143,7 @@ def test_copart_pairs_are_strongest_edges(spark, sf_dir):
 
 
 def test_locf_fills_only_gaps_and_carries_last(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         events_locf_daily_user_value,
     )
 
@@ -240,7 +240,7 @@ def test_histogram_quantile_sketch_within_bin_error(spark, sf_dir):
 def test_holt_fold_matches_reference_recurrence(spark, sf_dir):
     # the Spark-side F.aggregate fold must reproduce the Holt recurrence
     # computed independently from the same monthly inputs
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         forecast_holt_monthly_revenue,
     )
 
@@ -261,7 +261,7 @@ def test_holt_fold_matches_reference_recurrence(spark, sf_dir):
 
 
 def test_stl_decomposition_identity(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         forecast_stl_decompose_monthly,
     )
 
@@ -275,7 +275,7 @@ def test_stl_decomposition_identity(spark, sf_dir):
 
 
 def test_markov_stationary_is_fixed_point(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         events_markov_stationary,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -306,7 +306,7 @@ def test_markov_stationary_is_fixed_point(spark, sf_dir):
 
 
 def test_backlog_sweepline_conserves_mass(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         orders_open_backlog_daily,
     )
 
@@ -320,7 +320,7 @@ def test_backlog_sweepline_conserves_mass(spark, sf_dir):
 
 
 def test_abc_classes_partition_revenue(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         orders_abc_classification,
     )
 
@@ -335,7 +335,7 @@ def test_abc_classes_partition_revenue(spark, sf_dir):
 
 
 def test_runs_test_counts_are_consistent(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         stats_runs_test_randomness,
     )
 
@@ -348,7 +348,7 @@ def test_runs_test_counts_are_consistent(spark, sf_dir):
 
 
 def test_fano_factor_definition(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         events_burstiness_fano,
     )
 
@@ -361,7 +361,7 @@ def test_fano_factor_definition(spark, sf_dir):
 
 
 def test_holt_winters_matches_reference_recurrence(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         forecast_holt_winters_monthly,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -399,7 +399,7 @@ def test_holt_winters_matches_reference_recurrence(spark, sf_dir):
 
 
 def test_kcore_is_subset_with_min_degree(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         graph_kcore_supplier_coorder,
     )
 
@@ -411,7 +411,7 @@ def test_kcore_is_subset_with_min_degree(spark, sf_dir):
 
 
 def test_littles_law_holds_approximately(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         orders_littles_law_check,
     )
 
@@ -424,7 +424,7 @@ def test_littles_law_holds_approximately(spark, sf_dir):
 
 
 def test_autocorr_in_bounds_all_lags(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         events_periodicity_autocorr,
     )
 
@@ -439,7 +439,7 @@ def test_autocorr_in_bounds_all_lags(spark, sf_dir):
 
 
 def test_partition_advisor_tradeoffs(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         storage_partition_advisor,
     )
 
@@ -457,7 +457,7 @@ def test_forecast_backtest_folds_and_method_sanity(spark, sf_dir):
     """Exactly 12 rolling-origin folds per method; MAPE/MAE are positive
     and finite; naive and seasonal-naive both produce errors (the series
     is neither constant nor perfectly seasonal)."""
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         forecast_backtest_mape,
     )
 
@@ -470,7 +470,7 @@ def test_forecast_backtest_folds_and_method_sanity(spark, sf_dir):
 
 
 def test_modularity_contributions_sum_to_total(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         graph_modularity_supplier_nations,
     )
 
@@ -490,7 +490,7 @@ def test_modularity_contributions_sum_to_total(spark, sf_dir):
 def test_hits_matches_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         graph_hits_hubs_authorities,
     )
 
@@ -535,7 +535,7 @@ def test_ams_f2_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.analytics import (
+    from healthcare_data_lakehouse_spark.queries.analytics_ext import (
         sketch_ams_f2_user_moment,
     )
 

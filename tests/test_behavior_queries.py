@@ -10,12 +10,12 @@ from __future__ import annotations
 
 import pytest
 
-from healthcare_data_lakehouse_spark.queries import behavior
+from healthcare_data_lakehouse_spark.queries import behavior_events, behavior_stats
 from healthcare_data_lakehouse_spark.tables import table
 
 
 def test_retention_offset_zero_is_cohort_size(spark, sf_dir):
-    rows = behavior.events_retention_cohorts(spark, sf_dir).collect()
+    rows = behavior_events.events_retention_cohorts(spark, sf_dir).collect()
     by_cohort: dict = {}
     for r in rows:
         by_cohort.setdefault(r.cohort_week, {})[r.week_offset] = r.active_users
@@ -27,7 +27,7 @@ def test_retention_offset_zero_is_cohort_size(spark, sf_dir):
 
 
 def test_transition_matrix_rows_are_distributions(spark, sf_dir):
-    rows = behavior.events_type_transition_matrix(spark, sf_dir).collect()
+    rows = behavior_events.events_type_transition_matrix(spark, sf_dir).collect()
     assert rows
     by_prev: dict = {}
     for r in rows:
@@ -38,7 +38,7 @@ def test_transition_matrix_rows_are_distributions(spark, sf_dir):
 
 
 def test_wau_dominates_dau(spark, sf_dir):
-    rows = behavior.events_dau_wau(spark, sf_dir).collect()
+    rows = behavior_events.events_dau_wau(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.wau >= r.dau, r.day
@@ -47,7 +47,7 @@ def test_wau_dominates_dau(spark, sf_dir):
 
 
 def test_pareto_share_monotone_and_bounded(spark, sf_dir):
-    rows = behavior.orders_pareto_top_customers(spark, sf_dir).collect()
+    rows = behavior_events.orders_pareto_top_customers(spark, sf_dir).collect()
     assert [r.revenue_rank for r in rows] == sorted(r.revenue_rank for r in rows) or True
     rows = sorted(rows, key=lambda r: r.revenue_rank)
     assert len(rows) == 20
@@ -59,7 +59,7 @@ def test_pareto_share_monotone_and_bounded(spark, sf_dir):
 
 
 def test_above_avg_rows_actually_exceed_threshold(spark, sf_dir):
-    rows = behavior.orders_above_customer_avg(spark, sf_dir).collect()
+    rows = behavior_events.orders_above_customer_avg(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.o_totalprice > 1.5 * r.cust_avg
@@ -68,7 +68,7 @@ def test_above_avg_rows_actually_exceed_threshold(spark, sf_dir):
 def test_dim_stats_cover_all_vectors(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     n_vec = emb.count()
-    rows = behavior.embedding_dim_stats(spark, sf_dir).collect()
+    rows = behavior_stats.embedding_dim_stats(spark, sf_dir).collect()
     assert len(rows) == 64
     for r in rows:
         assert r.n == n_vec
@@ -77,7 +77,7 @@ def test_dim_stats_cover_all_vectors(spark, sf_dir):
 
 
 def test_top_tokens_rank_dense_per_lang(spark, sf_dir):
-    rows = behavior.text_top_tokens_per_lang(spark, sf_dir).collect()
+    rows = behavior_stats.text_top_tokens_per_lang(spark, sf_dir).collect()
     by_lang: dict = {}
     for r in rows:
         by_lang.setdefault(r.lang, []).append((r.rnk, r.cnt))
@@ -89,7 +89,7 @@ def test_top_tokens_rank_dense_per_lang(spark, sf_dir):
 
 
 def test_stratified_sample_rates_near_targets(spark, sf_dir):
-    rows = behavior.sample_stratified_by_segment(spark, sf_dir).collect()
+    rows = behavior_stats.sample_stratified_by_segment(spark, sf_dir).collect()
     rates = {r.mktsegment: r.n_sampled / r.n_total for r in rows}
     assert 0.1 < rates["BUILDING"] < 0.3
     assert 0.04 < rates["AUTOMOBILE"] < 0.18
@@ -100,7 +100,7 @@ def test_stratified_sample_rates_near_targets(spark, sf_dir):
 
 
 def test_percentile_rank_bounds(spark, sf_dir):
-    df = behavior.window_order_percentile_rank(spark, sf_dir)
+    df = behavior_events.window_order_percentile_rank(spark, sf_dir)
     import pyspark.sql.functions as F
 
     agg = df.groupBy("mktsegment").agg(
@@ -117,7 +117,7 @@ def test_percentile_rank_bounds(spark, sf_dir):
 def test_kmeans_partitions_all_points(spark, sf_dir):
     from healthcare_data_lakehouse_spark.tables import table
 
-    rows = behavior.kmeans_embeddings_lloyd(spark, sf_dir).collect()
+    rows = behavior_stats.kmeans_embeddings_lloyd(spark, sf_dir).collect()
     n_vec = table(spark, sf_dir, "embeddings").count()
     assert sum(r.n_points for r in rows) == n_vec
     assert len(rows) <= 4
@@ -129,7 +129,7 @@ def test_twap_within_value_range(spark, sf_dir):
 
     from healthcare_data_lakehouse_spark.tables import table
 
-    twap = behavior.events_value_twap_per_user(spark, sf_dir)
+    twap = behavior_events.events_value_twap_per_user(spark, sf_dir)
     bounds = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -142,13 +142,13 @@ def test_twap_within_value_range(spark, sf_dir):
 
 
 def test_zipf_slope_negative(spark, sf_dir):
-    row = behavior.text_zipf_slope(spark, sf_dir).collect()[0]
+    row = behavior_stats.text_zipf_slope(spark, sf_dir).collect()[0]
     assert row.zipf_slope < 0  # frequency decreases with rank, always
     assert row.n_tokens > 0 and row.top_freq >= 1
 
 
 def test_regression_consistency(spark, sf_dir):
-    rows = behavior.stats_price_quantity_regression(spark, sf_dir).collect()
+    rows = behavior_stats.stats_price_quantity_regression(spark, sf_dir).collect()
     assert rows
     for r in rows:
         # the synthetic fixture draws price independently of quantity, so
@@ -160,7 +160,7 @@ def test_regression_consistency(spark, sf_dir):
 
 
 def test_jackknife_se_positive_and_mean_sane(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import stats_jackknife_mean_ci
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import stats_jackknife_mean_ci
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -183,7 +183,7 @@ def test_jackknife_se_positive_and_mean_sane(spark):
 
 
 def test_range_frame_subsumes_row_at_boundary(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         window_range_7day_user_value,
     )
 
@@ -194,7 +194,7 @@ def test_range_frame_subsumes_row_at_boundary(spark):
 
 
 def test_winsorized_mean_bounded_by_raw_extremes(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_winsorized_mean_by_segment,
     )
 
@@ -207,7 +207,7 @@ def test_winsorized_mean_bounded_by_raw_extremes(spark):
 
 
 def test_anomalies_are_true_outliers(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import events_value_anomalies
+    from healthcare_data_lakehouse_spark.queries.behavior_events import events_value_anomalies
 
     rows = events_value_anomalies(spark, "/root/testdata/sf0.01").collect()
     assert rows  # fixture has heavy-tailed values
@@ -215,7 +215,7 @@ def test_anomalies_are_true_outliers(spark):
 
 
 def test_mad_robust_to_extremes(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_mad_outliers_by_segment,
     )
 
@@ -227,7 +227,7 @@ def test_mad_robust_to_extremes(spark):
 
 
 def test_cumulative_users_monotone(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_cumulative_unique_users,
     )
 
@@ -243,7 +243,7 @@ def test_cumulative_users_monotone(spark):
 
 
 def test_top_paths_are_valid_triples(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import events_top_paths_3step
+    from healthcare_data_lakehouse_spark.queries.behavior_events import events_top_paths_3step
 
     rows = events_top_paths_3step(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 5
@@ -253,7 +253,7 @@ def test_top_paths_are_valid_triples(spark):
 
 
 def test_hour_of_week_shares_sum_to_one(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_hour_of_week_profile,
     )
 
@@ -263,7 +263,7 @@ def test_hour_of_week_shares_sum_to_one(spark):
 
 
 def test_user_type_sets_sorted_and_bounded(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import events_user_type_sets
+    from healthcare_data_lakehouse_spark.queries.behavior_events import events_user_type_sets
 
     rows = events_user_type_sets(spark, "/root/testdata/sf0.001").collect()
     assert rows
@@ -273,7 +273,7 @@ def test_user_type_sets_sorted_and_bounded(spark):
 
 
 def test_peak_minute_is_max(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_peak_minute_users_per_day,
     )
 
@@ -284,7 +284,7 @@ def test_peak_minute_is_max(spark):
 
 
 def test_corr_matrix_bounds(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import stats_lineitem_corr_matrix
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import stats_lineitem_corr_matrix
 
     rows = stats_lineitem_corr_matrix(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 3
@@ -295,7 +295,7 @@ def test_corr_matrix_bounds(spark):
 
 
 def test_ewma_tracks_level_and_is_bounded(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import events_ewma_user_value
+    from healthcare_data_lakehouse_spark.queries.behavior_events import events_ewma_user_value
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -312,7 +312,7 @@ def test_ewma_tracks_level_and_is_bounded(spark):
 def test_welch_ttest_moments_match_numpy(spark):
     import math
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_welch_ttest_purchase_click,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -335,7 +335,7 @@ def test_welch_ttest_moments_match_numpy(spark):
 
 
 def test_benford_shares_partition_unity(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         quality_benford_first_digit,
     )
 
@@ -347,7 +347,7 @@ def test_benford_shares_partition_unity(spark):
 
 
 def test_ks_drift_stat_bounded_and_self_zero(spark):
-    from healthcare_data_lakehouse_spark.queries.behavior import stats_ks_value_drift
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import stats_ks_value_drift
 
     r = stats_ks_value_drift(spark, "/root/testdata/sf0.001").head()
     assert 0.0 <= r.ks_stat <= 1.0
@@ -359,7 +359,7 @@ def test_ks_drift_stat_bounded_and_self_zero(spark):
 
 
 def test_type_runs_conserve_events(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import events_type_runs
+    from healthcare_data_lakehouse_spark.queries.behavior_events import events_type_runs
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = events_type_runs(spark, sf_dir).collect()
@@ -370,7 +370,7 @@ def test_type_runs_conserve_events(spark, sf_dir):
 
 
 def test_qq_quantiles_monotone(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_qq_purchase_click,
     )
 
@@ -386,7 +386,7 @@ def test_qq_quantiles_monotone(spark, sf_dir):
 
 
 def test_gini_matches_direct_computation(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_gini_customer_revenue,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -408,7 +408,7 @@ def test_gini_matches_direct_computation(spark, sf_dir):
 
 
 def test_neyman_allocation_sums_to_budget_share(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         sample_neyman_allocation,
     )
 
@@ -422,7 +422,7 @@ def test_neyman_allocation_sums_to_budget_share(spark, sf_dir):
 
 
 def test_control_chart_limits_bracket_center(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         quality_error_rate_control_chart,
     )
 
@@ -439,7 +439,7 @@ def test_control_chart_limits_bracket_center(spark, sf_dir):
 
 
 def test_bot_heuristic_features_sane(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_bot_detection_heuristic,
     )
 
@@ -455,7 +455,7 @@ def test_bot_heuristic_features_sane(spark, sf_dir):
 
 
 def test_fd_discovery_verdicts(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         quality_fd_discovery,
     )
 
@@ -469,7 +469,7 @@ def test_fd_discovery_verdicts(spark, sf_dir):
 
 
 def test_bh_stepup_monotone(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_benjamini_hochberg,
     )
 
@@ -491,7 +491,7 @@ def test_bh_stepup_monotone(spark, sf_dir):
 
 
 def test_cuped_reduces_variance_and_preserves_means(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_ab_experiment_cuped,
     )
 
@@ -532,7 +532,7 @@ def test_cuped_reduces_variance_and_preserves_means(spark, sf_dir):
 
 
 def test_mann_whitney_matches_scipy_free_reference(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_mann_whitney_u,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -567,7 +567,7 @@ def test_mann_whitney_matches_scipy_free_reference(spark, sf_dir):
 
 
 def test_removal_attribution_invariants(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_markov_removal_attribution,
     )
 
@@ -583,7 +583,7 @@ def test_removal_attribution_invariants(spark, sf_dir):
 
 
 def test_conversion_window_monotone(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_conversion_window_sensitivity,
     )
 
@@ -600,7 +600,7 @@ def test_conversion_window_monotone(spark, sf_dir):
 
 
 def test_mde_shrinks_with_sample_size(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_power_analysis_mde,
     )
 
@@ -616,7 +616,7 @@ def test_mde_shrinks_with_sample_size(spark, sf_dir):
 
 
 def test_spearman_matches_pandas_reference(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_spearman_rank_corr,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -634,7 +634,7 @@ def test_spearman_matches_pandas_reference(spark, sf_dir):
 
 
 def test_uplift_quintiles_partition_users(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_uplift_qini_deciles,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -656,7 +656,7 @@ def test_segment_migration_matrix_partitions_users(spark, sf_dir):
     """Matrix cells partition the user base; segments come from the
     fixed tier set; at this fixture scale every user is active in both
     halves, so 'absent' appears only if a user is truly one-sided."""
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_segment_migration_matrix,
     )
     from healthcare_data_lakehouse_spark.tables import table
@@ -672,7 +672,7 @@ def test_segment_migration_matrix_partitions_users(spark, sf_dir):
 
 
 def test_permutation_test_identities(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_permutation_test_purchase_click,
     )
 
@@ -685,7 +685,7 @@ def test_permutation_test_identities(spark, sf_dir):
 
 
 def test_brown_forsythe_statistic_identities(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_brown_forsythe_variance,
     )
 
@@ -697,7 +697,7 @@ def test_brown_forsythe_statistic_identities(spark, sf_dir):
 
 
 def test_kendall_tau_identities(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_kendall_tau_daily,
     )
 
@@ -713,7 +713,7 @@ def test_kendall_tau_identities(spark, sf_dir):
 def test_kruskal_wallis_matches_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_kruskal_wallis_value_by_type,
     )
 
@@ -738,7 +738,7 @@ def test_kruskal_wallis_matches_bruteforce(spark, sf_dir):
 def test_kruskal_wallis_reduces_to_zero_on_identical_groups(spark, sf_dir):
     # all groups drawn from the same pooled sample => H >= 0 always; the
     # tie-corrected value can only grow |H|
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_kruskal_wallis_value_by_type,
     )
 
@@ -750,7 +750,7 @@ def test_kruskal_wallis_reduces_to_zero_on_identical_groups(spark, sf_dir):
 def test_ljung_box_matches_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_ljung_box_daily_volume,
     )
 
@@ -781,7 +781,7 @@ def test_ljung_box_matches_bruteforce(spark, sf_dir):
 def test_cmh_matches_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_cmh_purchase_by_variant_daystrata,
     )
 
@@ -819,7 +819,7 @@ def test_markov_entropy_rate_bounds(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_markov_entropy_rate,
     )
 
@@ -852,7 +852,7 @@ def test_hill_alpha_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_hill_tail_index_orders,
     )
 
@@ -874,7 +874,7 @@ def test_breusch_pagan_matches_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_breusch_pagan_price_quantity,
     )
 
@@ -898,7 +898,7 @@ def test_durbin_watson_matches_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_durbin_watson_daily_revenue,
     )
 
@@ -925,7 +925,7 @@ def test_ks_exponential_matches_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_ks_exponential_interarrival,
     )
 
@@ -958,7 +958,7 @@ def test_gumbel_fit_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_gumbel_daily_max_value,
     )
 
@@ -982,7 +982,7 @@ def test_pacf_matches_statsmodels_free_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_pacf_daily_volume,
     )
 
@@ -1025,7 +1025,7 @@ def test_cooks_distance_matches_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_cooks_distance_price_quantity,
     )
 
@@ -1056,7 +1056,7 @@ def test_cooks_distance_matches_bruteforce(spark, sf_dir):
 def test_longest_streaks_match_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_longest_daily_streaks,
     )
 
@@ -1090,7 +1090,7 @@ def test_tost_matches_bruteforce_and_welch_consistency(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_tost_equivalence_purchase_click,
     )
 
@@ -1117,7 +1117,7 @@ def test_fisher_combined_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_fisher_combined_pvalue,
     )
 
@@ -1167,7 +1167,7 @@ def test_bartlett_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_bartlett_variance_homogeneity,
     )
 
@@ -1195,7 +1195,7 @@ def test_periodogram_parseval_and_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_periodogram_daily,
     )
 
@@ -1221,7 +1221,7 @@ def test_periodogram_parseval_and_bruteforce(spark, sf_dir):
 def test_xyz_classes_partition_all_parts(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         orders_xyz_classification,
     )
 
@@ -1242,7 +1242,7 @@ def test_ccf_symmetric_construction_and_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_cross_correlation_purchase_click,
     )
 
@@ -1275,7 +1275,7 @@ def test_ccf_symmetric_construction_and_bruteforce(spark, sf_dir):
 def test_growth_accounting_identities(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_growth_accounting_weekly,
     )
 
@@ -1319,7 +1319,7 @@ def test_growth_accounting_identities(spark, sf_dir):
 def test_negbin_fit_matches_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_stats import (
         stats_negbin_fit_user_counts,
     )
 
@@ -1338,7 +1338,7 @@ def test_negbin_fit_matches_bruteforce(spark, sf_dir):
 
 
 def test_retention_powerlaw_fit_sanity(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_retention_powerlaw_fit,
     )
 
@@ -1358,7 +1358,7 @@ def test_seasonal_strength_matches_bruteforce(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.behavior import (
+    from healthcare_data_lakehouse_spark.queries.behavior_events import (
         events_seasonal_strength_daily,
     )
 

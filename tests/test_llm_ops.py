@@ -14,6 +14,122 @@ from healthcare_data_lakehouse_spark.functions.multimodal import (
     decode_stub,
     extract_binary_features,
 )
+from healthcare_data_lakehouse_spark.queries.llm_dedup import (
+    dedup_bcubed_cluster_eval,
+    dedup_bloom_prefilter_probe,
+    dedup_candidate_selectivity_compare,
+    dedup_canonical_selection,
+    dedup_content_defined_chunks,
+    dedup_cross_source_overlap,
+    dedup_ground_truth_eval,
+    dedup_minhash_band_planner,
+    dedup_multisignal_pairs,
+    dedup_semdedup_clusters,
+    dedup_span_duplication,
+    dedup_threshold_sweep_pr,
+    dedup_winnowing_fingerprints,
+)
+from healthcare_data_lakehouse_spark.queries.llm_graph_stats import (
+    graph_adamic_adar_link_prediction,
+    graph_clustering_coefficient_neardup,
+    graph_label_propagation_communities,
+    graph_pagerank_neardup,
+    graph_triangle_count_neardup,
+    stats_cohens_kappa_quality_raters,
+    stats_fleiss_kappa_quality_raters,
+    stats_isotonic_calibration_pav,
+    stats_mcnemar_quality_raters,
+    stats_platt_scaling_newton,
+    stats_quantile_normalize_sources,
+    stats_ridge_regression_normal_eq,
+    stats_roc_auc_quality_vs_gopher,
+)
+from healthcare_data_lakehouse_spark.queries.llm_pipeline import (
+    pipeline_curriculum_phases,
+    pipeline_dataset_cards,
+    pipeline_decontaminate_train,
+    pipeline_doremi_mixture_step,
+    pipeline_embedding_decontamination,
+    pipeline_global_row_index,
+    pipeline_llm_corpus_curation,
+    pipeline_packing_efficiency_curve,
+    pipeline_rag_chunks,
+    pipeline_sequence_packing,
+    pipeline_shard_assignment_rendezvous,
+    pipeline_shard_dup_leakage,
+    pipeline_shard_manifest,
+    pipeline_token_budget_mix,
+    pipeline_tokenizer_vocab_coverage,
+    quality_calibration_ece_brier,
+    quality_dup_cluster_size_distribution,
+    quality_label_balance_embeddings,
+    sample_dsir_importance,
+    sample_horvitz_thompson_chars,
+    sample_language_balanced,
+    sample_leakage_free_split,
+    sample_pps_systematic_suppliers,
+    sample_reservoir_per_lang,
+    sample_temperature_lang,
+    sample_train_test_split,
+    sample_unimax_language_budget,
+    sample_weighted_reservoir_per_lang,
+)
+from healthcare_data_lakehouse_spark.queries.llm_shared import (
+    _PQ_K,
+    _docs_with_dups,
+    _quality_vs_gopher,
+)
+from healthcare_data_lakehouse_spark.queries.llm_similarity import (
+    _IVFPQ_CENTROID_IDS,
+    _IVF_CENTROID_IDS,
+    embedding_centroid_drift,
+    embedding_label_pca,
+    embedding_matryoshka_fidelity,
+    multimodal_audio_vad_energy,
+    multimodal_tile_manifest,
+    similarity_ivf_list_balance,
+    similarity_ivfpq_top5,
+    similarity_lsh_multiprobe_top5,
+    similarity_lsh_top5,
+    similarity_minhash_jaccard_error,
+    similarity_recall_ivf_at5,
+    similarity_recall_lsh_at5,
+    similarity_recall_multiprobe_at5,
+    sketch_bloom_filter_fpr,
+    sketch_cms_heavy_hitters,
+    sketch_join_cardinality_estimate,
+    sketch_kmv_distinct_users,
+)
+from healthcare_data_lakehouse_spark.queries.llm_text import (
+    text_bigram_lm_score,
+    text_bigram_pmi_topk,
+    text_bm25_topk,
+    text_bpe_encode_token_counts,
+    text_bpe_pair_counts,
+    text_burrows_delta_sources,
+    text_chao1_vocab_richness,
+    text_chunk_boilerplate,
+    text_good_turing_trigrams,
+    text_gopher_quality_filter,
+    text_inverted_index_sample,
+    text_js_divergence_lang_pairs,
+    text_langid_confusion,
+    text_mattr_lexical_diversity,
+    text_ngram_novelty_rate,
+    text_perplexity_buckets_ccnet,
+    text_rake_keywords,
+    text_readability_flesch,
+    text_repetition_ratio,
+    text_script_mix_audit,
+    text_token_entropy_by_lang,
+    text_tokenizer_fertility_by_lang,
+    text_unigram_kl_by_source,
+    text_vocab_jaccard_sources,
+)
+from healthcare_data_lakehouse_spark.queries.quality_queries import (
+    privacy_k_anonymity_audit,
+    privacy_l_diversity_audit,
+)
 
 
 @pytest.fixture(scope="module")
@@ -271,8 +387,6 @@ def test_scd2_merge_lifecycle(spark):
 
 # ----------------------------------------------------- round-current additions
 def test_span_duplication_flags_shared_spans(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import dedup_span_duplication
-
     out = {r.doc_id: r for r in dedup_span_duplication(spark, "/root/testdata/sf0.001").collect()}
     # injected exact copies (doc_id % 15 == 0 shifted by 1e6) must have
     # dup_span_ratio == 1.0 on both sides of the copy
@@ -286,8 +400,6 @@ def test_span_duplication_flags_shared_spans(spark):
 
 
 def test_cms_estimate_upper_bounds_truth(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import sketch_cms_heavy_hitters
-
     rows = sketch_cms_heavy_hitters(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 10
     # CMS never underestimates; at this width it should be near-exact
@@ -297,8 +409,6 @@ def test_cms_estimate_upper_bounds_truth(spark):
 
 
 def test_language_balanced_rates(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import sample_language_balanced
-
     rows = sample_language_balanced(spark, "/root/testdata/sf0.001").collect()
     by_lang = {r.lang: r for r in rows}
     assert all(0.0 < r.sample_rate <= 1.0 for r in rows)
@@ -311,8 +421,6 @@ def test_language_balanced_rates(spark):
 
 
 def test_bigram_lm_scores_are_negative_logprobs(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_bigram_lm_score
-
     rows = text_bigram_lm_score(spark, "/root/testdata/sf0.001").collect()
     assert rows
     # smoothed probabilities are < 1 -> log2 < 0; n_bigrams = n_tokens - 1
@@ -321,8 +429,6 @@ def test_bigram_lm_scores_are_negative_logprobs(spark):
 
 
 def test_recall_panel_is_complete_and_bounded(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import similarity_recall_lsh_at5
-
     rows = similarity_recall_lsh_at5(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 10  # one row per query in the panel
     for r in rows:
@@ -332,8 +438,6 @@ def test_recall_panel_is_complete_and_bounded(spark):
 
 
 def test_reservoir_caps_per_lang(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import sample_reservoir_per_lang
-
     rows = sample_reservoir_per_lang(spark, "/root/testdata/sf0.001").collect()
     from collections import Counter
 
@@ -347,8 +451,6 @@ def test_reservoir_caps_per_lang(spark):
 
 
 def test_pagerank_mass_conserved_and_dups_rank_high(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import graph_pagerank_neardup
-
     rows = graph_pagerank_neardup(spark, "/root/testdata/sf0.001").collect()
     assert rows
     total = sum(r.pagerank for r in rows)
@@ -358,8 +460,6 @@ def test_pagerank_mass_conserved_and_dups_rank_high(spark):
 
 
 def test_label_pca_spectral_invariants(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import embedding_label_pca
-
     rows = embedding_label_pca(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -371,8 +471,6 @@ def test_label_pca_spectral_invariants(spark):
 
 
 def test_bpe_pairs_are_two_chars_weighted(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_bpe_pair_counts
-
     rows = text_bpe_pair_counts(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 15
     assert all(len(r.pair) == 2 for r in rows)
@@ -381,10 +479,6 @@ def test_bpe_pairs_are_two_chars_weighted(spark):
 
 
 def test_curation_funnel_is_monotone(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_llm_corpus_curation,
-    )
-
     rows = pipeline_llm_corpus_curation(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -394,7 +488,6 @@ def test_curation_funnel_is_monotone(spark):
 
 
 def test_train_test_split_is_stable_under_growth(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import sample_train_test_split
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -421,8 +514,6 @@ def test_train_test_split_is_stable_under_growth(spark):
 
 
 def test_sequence_packing_respects_capacity_per_shard(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import pipeline_sequence_packing
-
     rows = pipeline_sequence_packing(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -449,10 +540,6 @@ def test_sequence_packing_respects_capacity_per_shard(spark):
 
 
 def test_decontamination_flags_injected_overlap(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_decontaminate_train,
-    )
-
     row = pipeline_decontaminate_train(spark, "/root/testdata/sf0.001").collect()[0]
     assert row.n_train > 0 and row.n_eval > 0
     assert 0.0 <= row.contamination_rate <= 1.0
@@ -460,8 +547,6 @@ def test_decontamination_flags_injected_overlap(spark):
 
 
 def test_repetition_ratio_bounds(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_repetition_ratio
-
     rows = text_repetition_ratio(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -470,10 +555,6 @@ def test_repetition_ratio_bounds(spark):
 
 
 def test_matryoshka_ratio_bounds(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        embedding_matryoshka_fidelity,
-    )
-
     rows = embedding_matryoshka_fidelity(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -482,8 +563,6 @@ def test_matryoshka_ratio_bounds(spark):
 
 
 def test_canonical_selection_prefers_quality(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import dedup_canonical_selection
-
     rows = dedup_canonical_selection(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -493,8 +572,6 @@ def test_canonical_selection_prefers_quality(spark):
 
 
 def test_multisignal_confirms_injected_dups(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import dedup_multisignal_pairs
-
     rows = dedup_multisignal_pairs(spark, "/root/testdata/sf0.001").collect()
     assert rows
     injected = [r for r in rows if r.id_b == r.id_a + 1_000_000]
@@ -505,9 +582,6 @@ def test_multisignal_confirms_injected_dups(spark):
 
 
 def test_weighted_reservoir_favors_long_docs(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_weighted_reservoir_per_lang,
-    )
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -527,8 +601,6 @@ def test_weighted_reservoir_favors_long_docs(spark):
 
 
 def test_inverted_index_postings_sorted(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_inverted_index_sample
-
     rows = text_inverted_index_sample(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 20
     for r in rows:
@@ -538,10 +610,6 @@ def test_inverted_index_postings_sorted(spark):
 
 
 def test_weighted_reservoir_deterministic(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_weighted_reservoir_per_lang,
-    )
-
     a = sorted(
         (r.lang, r.doc_id)
         for r in sample_weighted_reservoir_per_lang(spark, "/root/testdata/sf0.001").collect()
@@ -554,8 +622,6 @@ def test_weighted_reservoir_deterministic(spark):
 
 
 def test_centroid_drift_halves_agree_on_iid_fixture(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import embedding_centroid_drift
-
     rows = embedding_centroid_drift(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -586,8 +652,6 @@ def test_lsh_probe_finds_exact_copy_in_corpus(spark):
 
 
 def test_chunk_boilerplate_flags_injected_copies(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_chunk_boilerplate
-
     rows = {r.doc_id: r for r in text_chunk_boilerplate(spark, "/root/testdata/sf0.01").collect()}
     assert rows
     for r in rows.values():
@@ -602,10 +666,6 @@ def test_chunk_boilerplate_flags_injected_copies(spark):
 
 
 def test_triangle_counts_close_injected_triples(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        graph_triangle_count_neardup,
-    )
-
     rows = graph_triangle_count_neardup(spark, "/root/testdata/sf0.001").collect()
     assert rows
     by_node = {r.vec_id: r.n_triangles for r in rows}
@@ -621,10 +681,6 @@ def test_triangle_counts_close_injected_triples(spark):
 
 
 def test_minhash_estimate_exact_on_identical_pairs(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        similarity_minhash_jaccard_error,
-    )
-
     rows = similarity_minhash_jaccard_error(spark, "/root/testdata/sf0.001").collect()
     assert rows
     for r in rows:
@@ -636,10 +692,6 @@ def test_minhash_estimate_exact_on_identical_pairs(spark):
 
 
 def test_bloom_prefilter_one_sided(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_bloom_prefilter_probe,
-    )
-
     rows = dedup_bloom_prefilter_probe(spark, "/root/testdata/sf0.001").collect()
     assert rows
     # no false negatives, ever: every exact member must bloom-hit
@@ -654,7 +706,6 @@ def test_bloom_prefilter_one_sided(spark):
 
 
 def test_shard_manifest_conserves_mass(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import pipeline_shard_manifest
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -670,7 +721,6 @@ def test_shard_manifest_conserves_mass(spark):
 
 
 def test_langid_confusion_rows_partition_each_lang(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_langid_confusion
     from healthcare_data_lakehouse_spark.tables import table
 
     sf = "/root/testdata/sf0.001"
@@ -690,7 +740,6 @@ def test_langid_confusion_rows_partition_each_lang(spark):
 
 
 def test_rag_chunks_cover_and_bound(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import pipeline_rag_chunks
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -722,10 +771,6 @@ def test_rag_chunks_cover_and_bound(spark):
 
 
 def test_global_row_index_is_dense_rank_order(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_global_row_index,
-    )
-
     rows = pipeline_global_row_index(spark, "/root/testdata/sf0.001").collect()
     assert rows
     got = sorted((r.doc_id, r.row_idx) for r in rows)
@@ -733,9 +778,6 @@ def test_global_row_index_is_dense_rank_order(spark):
 
 
 def test_semdedup_prunes_exactly_injected_copies(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_semdedup_clusters,
-    )
     from healthcare_data_lakehouse_spark.tables import table
     from pyspark.sql import functions as F
 
@@ -753,9 +795,6 @@ def test_semdedup_prunes_exactly_injected_copies(spark):
 
 
 def test_dsir_separates_target_from_rest(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_dsir_importance,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     sf = "/root/testdata/sf0.001"
@@ -776,10 +815,6 @@ def test_dsir_separates_target_from_rest(spark):
 
 
 def test_quantile_normalize_map_is_consistent(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_quantile_normalize_sources,
-    )
-
     rows = stats_quantile_normalize_sources(spark, "/root/testdata/sf0.001").collect()
     assert rows
     by_src: dict = {}
@@ -795,8 +830,6 @@ def test_quantile_normalize_map_is_consistent(spark):
 
 
 def test_prefix_filter_lossless_and_smaller(spark):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import _docs_with_dups
-
     sf = "/root/testdata/sf0.001"
     docs = _docs_with_dups(spark, sf, 20)
     exact = {
@@ -869,11 +902,6 @@ def test_ivfpq_top5_invariants(spark):
     lists, codes are in range, ADC distances are non-decreasing, and each
     returned row's ADC distance matches the driver-recomputed lookup-table
     sum for its codes."""
-    from healthcare_data_lakehouse_spark.queries.llm_similarity import (
-        _IVFPQ_CENTROID_IDS,
-        similarity_ivfpq_top5,
-    )
-    from healthcare_data_lakehouse_spark.queries.llm_shared import _PQ_K
     from healthcare_data_lakehouse_spark.tables import table as _table
 
     sf = "/root/testdata/sf0.001"
@@ -945,10 +973,6 @@ def test_kcenter_greedy_picks_extremes(spark):
 
 
 def test_token_budget_mix_invariants(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_token_budget_mix,
-    )
-
     rows = pipeline_token_budget_mix(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -964,10 +988,6 @@ def test_token_budget_mix_invariants(spark, sf_dir):
 
 
 def test_gopher_filter_rules_fire(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_gopher_quality_filter,
-    )
-
     rows = text_gopher_quality_filter(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -989,10 +1009,6 @@ def test_gopher_filter_rules_fire(spark, sf_dir):
 
 
 def test_temperature_sampling_flattens_mix(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_temperature_lang,
-    )
-
     rows = sample_temperature_lang(spark, sf_dir).collect()
     assert rows
     total = sum(r.n_docs for r in rows)
@@ -1009,10 +1025,6 @@ def test_temperature_sampling_flattens_mix(spark, sf_dir):
 
 
 def test_token_entropy_bounds(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_token_entropy_by_lang,
-    )
-
     rows = text_token_entropy_by_lang(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -1023,9 +1035,6 @@ def test_token_entropy_bounds(spark, sf_dir):
 
 
 def test_dataset_cards_consistent(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_dataset_cards,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = pipeline_dataset_cards(spark, sf_dir).collect()
@@ -1039,10 +1048,6 @@ def test_dataset_cards_consistent(spark, sf_dir):
 
 
 def test_rake_keywords_scoring(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_rake_keywords,
-    )
-
     rows = text_rake_keywords(spark, sf_dir).collect()
     assert len(rows) == 20
     for r in rows:
@@ -1057,9 +1062,6 @@ def test_rake_keywords_scoring(spark, sf_dir):
 
 
 def test_ridge_shrinks_towards_zero(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_ridge_regression_normal_eq,
-    )
     import numpy as np
     from healthcare_data_lakehouse_spark.tables import table
 
@@ -1084,10 +1086,6 @@ def test_ridge_shrinks_towards_zero(spark, sf_dir):
 
 
 def test_novelty_first_doc_is_fully_novel(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_ngram_novelty_rate,
-    )
-
     rows = text_ngram_novelty_rate(spark, sf_dir).collect()
     assert rows
     by_id = sorted(rows, key=lambda r: r.doc_id)
@@ -1099,10 +1097,6 @@ def test_novelty_first_doc_is_fully_novel(spark, sf_dir):
 
 
 def test_ivf_recall_bounds_and_panel(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        similarity_recall_ivf_at5,
-    )
-
     rows = similarity_recall_ivf_at5(spark, sf_dir).collect()
     assert len(rows) == 10
     for r in rows:
@@ -1114,10 +1108,6 @@ def test_ivf_recall_bounds_and_panel(spark, sf_dir):
 
 
 def test_vocab_coverage_bounds(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_tokenizer_vocab_coverage,
-    )
-
     rows = pipeline_tokenizer_vocab_coverage(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -1131,10 +1121,6 @@ def test_vocab_coverage_bounds(spark, sf_dir):
 
 
 def test_label_balance_chisq_and_shares(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        quality_label_balance_embeddings,
-    )
-
     rows = quality_label_balance_embeddings(spark, sf_dir).collect()
     assert rows
     assert abs(sum(r.share for r in rows) - 1.0) < 1e-4
@@ -1144,10 +1130,6 @@ def test_label_balance_chisq_and_shares(spark, sf_dir):
 
 
 def test_ground_truth_eval_perfect_recall_on_exact_copies(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_ground_truth_eval,
-    )
-
     r = dedup_ground_truth_eval(spark, sf_dir).collect()[0]
     assert r.n_truth > 0
     # exact copies share every band: candidate AND verified recall are 1.0
@@ -1158,10 +1140,6 @@ def test_ground_truth_eval_perfect_recall_on_exact_copies(spark, sf_dir):
 
 
 def test_perplexity_buckets_are_thirds(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_perplexity_buckets_ccnet,
-    )
-
     rows = text_perplexity_buckets_ccnet(spark, sf_dir).collect()
     by_lang = {}
     for r in rows:
@@ -1175,10 +1153,6 @@ def test_perplexity_buckets_are_thirds(spark, sf_dir):
 
 
 def test_pmi_topk_support_and_order(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_bigram_pmi_topk,
-    )
-
     rows = text_bigram_pmi_topk(spark, sf_dir).collect()
     assert 0 < len(rows) <= 20
     pmis = [r.pmi for r in rows]
@@ -1188,9 +1162,6 @@ def test_pmi_topk_support_and_order(spark, sf_dir):
 
 def test_unigram_kl_nonnegative_and_totals(spark, sf_dir):
     from pyspark.sql import functions as F
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_unigram_kl_by_source,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = text_unigram_kl_by_source(spark, sf_dir).collect()
@@ -1204,11 +1175,6 @@ def test_unigram_kl_nonnegative_and_totals(spark, sf_dir):
 
 
 def test_dup_cluster_distribution_accounts_for_every_doc(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        _docs_with_dups,
-        quality_dup_cluster_size_distribution,
-    )
-
     rows = quality_dup_cluster_size_distribution(spark, sf_dir).collect()
     n_docs = _docs_with_dups(spark, sf_dir, 10).count()
     assert sum(r.n_docs for r in rows) == n_docs
@@ -1222,9 +1188,6 @@ def test_dup_cluster_distribution_accounts_for_every_doc(spark, sf_dir):
 def test_cross_source_overlap_is_upper_triangle_with_valid_jaccard(
     spark, sf_dir
 ):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_cross_source_overlap,
-    )
 
     rows = dedup_cross_source_overlap(spark, sf_dir).collect()
     assert len(rows) > 0
@@ -1236,9 +1199,6 @@ def test_cross_source_overlap_is_upper_triangle_with_valid_jaccard(
 
 
 def test_k_anonymity_audit_partitions_all_customers(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.quality_queries import (
-        privacy_k_anonymity_audit,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = privacy_k_anonymity_audit(spark, sf_dir).collect()
@@ -1256,10 +1216,6 @@ def test_k_anonymity_audit_partitions_all_customers(spark, sf_dir):
 
 
 def test_tokenizer_fertility_by_lang_bounds(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_tokenizer_fertility_by_lang,
-    )
-
     rows = text_tokenizer_fertility_by_lang(spark, sf_dir).collect()
     assert len(rows) > 0
     for r in rows:
@@ -1271,10 +1227,6 @@ def test_tokenizer_fertility_by_lang_bounds(spark, sf_dir):
 
 
 def test_packing_curve_waste_monotone_in_buckets(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_packing_efficiency_curve,
-    )
-
     rows = {
         r.n_buckets: r
         for r in pipeline_packing_efficiency_curve(spark, sf_dir).collect()
@@ -1304,9 +1256,6 @@ def test_bpe_encode_fertility_and_compression_invariants(spark):
     count from the char-level start (bpe_tokens <= n_chars exactly
     captures that, since char-level tokenization has one token per
     char)."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_bpe_encode_token_counts,
-    )
 
     rows = text_bpe_encode_token_counts(
         spark, "/root/testdata/sf0.001"
@@ -1328,9 +1277,6 @@ def test_winnowing_planted_dups_fully_overlap(spark):
     pair (d, d+1e6) must surface with overlap == 1.0; winnowing never
     reports more shared fingerprints than either doc has (overlap <= 1)
     and the >= 2 shared floor holds for every emitted pair."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_winnowing_fingerprints,
-    )
 
     rows = dedup_winnowing_fingerprints(spark, SF001).collect()
     assert rows
@@ -1349,9 +1295,6 @@ def test_threshold_sweep_monotone_and_exact_dups_survive(spark):
     """Raising the Jaccard threshold can only shrink the surviving pair
     set (n_pairs, n_truth_hit, recall all non-increasing), and planted
     EXACT copies have j = 1.0, so recall at the top threshold is 1.0."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_threshold_sweep_pr,
-    )
 
     rows = sorted(
         dedup_threshold_sweep_pr(spark, SF001).collect(),
@@ -1373,10 +1316,6 @@ def test_shard_leakage_partitions_all_pairs(spark):
     per-cell counts sum to the total, orientation is normalized
     (shard_a <= shard_b), and cross_shard is derived consistently."""
     import healthcare_data_lakehouse_spark.functions.dedup as D
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        _docs_with_dups,
-        pipeline_shard_dup_leakage,
-    )
 
     rows = pipeline_shard_dup_leakage(spark, SF001).collect()
     total = D.lsh_candidate_pairs(
@@ -1395,9 +1334,6 @@ def test_script_mix_covers_corpus_and_classifies_consistently(spark):
     synthetic fixture is Latin-script for every declared lang — the
     audit exists precisely to surface that declared lang and script
     disagree, so a CJK classifier is exercised separately below."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_script_mix_audit,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = text_script_mix_audit(spark, SF001).collect()
@@ -1442,9 +1378,6 @@ def test_doremi_step_normalizes_and_orders_by_excess(spark):
     """New weights are a distribution (sum 1, all positive) and the
     reweighting ratio new_weight/token_share is monotone in excess —
     exactly the exponentiated-gradient direction."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_doremi_mixture_step,
-    )
 
     rows = pipeline_doremi_mixture_step(spark, SF001).collect()
     assert abs(sum(r.new_weight for r in rows) - 1.0) < 1e-4
@@ -1458,9 +1391,6 @@ def test_doremi_step_normalizes_and_orders_by_excess(spark):
 def test_l_diversity_bounds(spark):
     """l never exceeds the band cardinality (4) nor the class size, the
     below_l3 flag matches l, and class sizes sum to the table size."""
-    from healthcare_data_lakehouse_spark.queries.quality_queries import (
-        privacy_l_diversity_audit,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = privacy_l_diversity_audit(spark, SF001).collect()
@@ -1477,9 +1407,6 @@ def test_band_planner_s_curve_tradeoffs(spark):
     are both monotone non-decreasing in n_bands across the b*r=12 grid;
     every probability-derived column stays in-range; planted exact
     copies (j=1) are detected by EVERY config, so recall never hits 0."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_minhash_band_planner,
-    )
 
     rows = sorted(
         dedup_minhash_band_planner(spark, SF001).collect(),
@@ -1502,9 +1429,6 @@ def test_embedding_decontamination_eval_neighbors_flagged(spark):
     neighbor; cosines live in [-1, 1]; the contaminated flag matches the
     0.9 threshold; and eval vectors themselves never appear as corpus
     rows (the eval set is held out by construction)."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_embedding_decontamination,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = pipeline_embedding_decontamination(spark, SF001).collect()
@@ -1528,10 +1452,6 @@ def test_leakage_free_split_evicts_test_neighbors(spark):
     planted copy of a TEST doc is evicted from train when the hash split
     assigned it to train."""
     import healthcare_data_lakehouse_spark.functions.dedup as D
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        _docs_with_dups,
-        sample_leakage_free_split,
-    )
 
     rows = {r.bucket: r for r in sample_leakage_free_split(spark, SF001).collect()}
     assert set(rows) <= {"train", "test", "train_removed"}
@@ -1611,9 +1531,6 @@ def test_curriculum_phases_quality_monotone_and_partition(spark):
     """Phases partition the corpus (doc counts differ by at most 1 per
     NTILE contract, token sums partition the total), mean quality is
     strictly ordered easy-to-hard, and cumulative share ends at 1.0."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_curriculum_phases,
-    )
     from healthcare_data_lakehouse_spark.tables import table
 
     rows = sorted(
@@ -1635,10 +1552,6 @@ def test_multiprobe_dominates_single_probe(spark):
     """Multi-probe's candidate set is a superset of single-probe's, so at
     every rank its score is >= the single-probe score; both return at
     most k rows sorted descending."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        similarity_lsh_multiprobe_top5,
-        similarity_lsh_top5,
-    )
 
     multi = similarity_lsh_multiprobe_top5(spark, SF001).collect()
     single = similarity_lsh_top5(spark, SF001).collect()
@@ -1654,10 +1567,6 @@ def test_bcubed_recall_perfect_on_exact_copies(spark):
     """Planted EXACT copies always survive banding+verification, so every
     truth cluster is contained in a found cluster: B-cubed recall is
     exactly 1.0 and only over-merging can pull precision below 1.0."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        _docs_with_dups,
-        dedup_bcubed_cluster_eval,
-    )
 
     r = dedup_bcubed_cluster_eval(spark, SF001).collect()[0]
     assert r.n_docs == _docs_with_dups(spark, SF001, 20).count()
@@ -1670,10 +1579,6 @@ def test_bcubed_recall_perfect_on_exact_copies(spark):
 def test_multiprobe_recall_dominates_single_probe_recall(spark):
     """Per query, the multi-probe candidate set contains the single-probe
     set, so recall@5 can only rise; the panel covers all 10 queries."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        similarity_recall_lsh_at5,
-        similarity_recall_multiprobe_at5,
-    )
 
     single = {
         r.query_id: r.recall_at_5
@@ -1693,9 +1598,6 @@ def test_kmv_estimate_bounds_and_small_day_exactness(spark):
     (rel_error 0); estimates stay positive; relative error is bounded
     well inside the k=64 theoretical ~1/sqrt(k-1) envelope x a safety
     factor."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sketch_kmv_distinct_users,
-    )
 
     rows = sketch_kmv_distinct_users(spark, SF001).collect()
     assert rows
@@ -1713,10 +1615,6 @@ def test_clustering_coefficient_bands_partition_nodes(spark):
     copies form 2-cliques (degree>=1); avg_lcc stays within [0, 1]."""
     import healthcare_data_lakehouse_spark.functions.dedup as D
     from pyspark.sql import functions as F
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        _docs_with_dups,
-        graph_clustering_coefficient_neardup,
-    )
 
     rows = graph_clustering_coefficient_neardup(spark, SF001).collect()
     pairs = D.lsh_candidate_pairs(
@@ -1738,9 +1636,6 @@ def test_selectivity_compare_method_frontier(spark):
     """exact_hash is perfect precision (verified == candidates); every
     verified count never exceeds its candidate count; LSH finds at least
     the planted copies exact hashing finds; precision stays in (0, 1]."""
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_candidate_selectivity_compare,
-    )
 
     rows = {
         r.method: r
@@ -1762,10 +1657,6 @@ def test_selectivity_compare_method_frontier(spark):
 
 
 def test_roc_auc_bounds_and_signal(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_roc_auc_quality_vs_gopher,
-    )
-
     row = stats_roc_auc_quality_vs_gopher(spark, sf_dir).collect()[0]
     assert row.n_pos > 0 and row.n_neg > 0
     assert 0.0 <= row.auc <= 1.0
@@ -1778,10 +1669,6 @@ def test_roc_auc_bounds_and_signal(spark, sf_dir):
 
 
 def test_calibration_ece_brier_invariants(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        quality_calibration_ece_brier,
-    )
-
     rows = quality_calibration_ece_brier(spark, sf_dir).collect()
     assert rows, "at least one populated bin"
     assert all(0 <= r.bin <= 9 for r in rows)
@@ -1797,10 +1684,6 @@ def test_calibration_ece_brier_invariants(spark, sf_dir):
 
 
 def test_isotonic_pav_fit_is_monotone_and_mean_preserving(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_isotonic_calibration_pav,
-    )
-
     rows = sorted(
         stats_isotonic_calibration_pav(spark, sf_dir).collect(),
         key=lambda r: r.bin,
@@ -1822,10 +1705,6 @@ def test_isotonic_pav_fit_is_monotone_and_mean_preserving(spark, sf_dir):
 
 
 def test_cohens_kappa_identities(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_cohens_kappa_quality_raters,
-    )
-
     r = stats_cohens_kappa_quality_raters(spark, sf_dir).collect()[0]
     assert r.n == r.n11 + r.n10 + r.n01 + r.n00
     assert abs(r.po - (r.n11 + r.n00) / r.n) < 1e-6
@@ -1835,10 +1714,6 @@ def test_cohens_kappa_identities(spark, sf_dir):
 
 
 def test_unimax_waterfill_budget_and_caps(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_unimax_language_budget,
-    )
-
     rows = sample_unimax_language_budget(spark, sf_dir).collect()
     assert rows, "every corpus has at least one language"
     total_mass = sum(r.lang_tokens for r in rows)
@@ -1859,8 +1734,6 @@ def test_unimax_waterfill_budget_and_caps(spark, sf_dir):
 
 
 def test_bm25_topk_ranking_contract(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import text_bm25_topk
-
     rows = text_bm25_topk(spark, sf_dir).collect()
     by_q = {}
     for r in rows:
@@ -1876,10 +1749,6 @@ def test_bm25_topk_ranking_contract(spark, sf_dir):
 
 
 def test_bloom_fpr_matches_occupancy_model(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sketch_bloom_filter_fpr,
-    )
-
     r = sketch_bloom_filter_fpr(spark, sf_dir).collect()[0]
     assert r.n_nonmembers > 0, "held-out shard is 1/3 of the keyspace"
     assert r.n_members > 0 and r.false_positives is not None
@@ -1891,10 +1760,6 @@ def test_bloom_fpr_matches_occupancy_model(spark, sf_dir):
 
 
 def test_good_turing_mass_identities(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_good_turing_trigrams,
-    )
-
     rows = text_good_turing_trigrams(spark, sf_dir).collect()
     assert rows
     total = rows[0].total_trigrams
@@ -1907,10 +1772,6 @@ def test_good_turing_mass_identities(spark, sf_dir):
 
 
 def test_mattr_bounds_and_window_math(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_mattr_lexical_diversity,
-    )
-
     rows = text_mattr_lexical_diversity(spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -1924,10 +1785,6 @@ def test_mattr_bounds_and_window_math(spark, sf_dir):
 
 
 def test_pps_systematic_draw_count_and_weights(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_pps_systematic_suppliers,
-    )
-
     rows = sample_pps_systematic_suppliers(spark, sf_dir).collect()
     assert sum(r.n_hits for r in rows) == 20, "exactly n draws land"
     for r in rows:
@@ -1938,10 +1795,6 @@ def test_pps_systematic_draw_count_and_weights(spark, sf_dir):
 
 
 def test_lpa_communities_partition_the_neardup_nodes(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        graph_label_propagation_communities,
-        _docs_with_dups,
-    )
     from healthcare_data_lakehouse_spark.functions import dedup as D
 
     rows = graph_label_propagation_communities(spark, sf_dir).collect()
@@ -1963,10 +1816,6 @@ def test_lpa_communities_partition_the_neardup_nodes(spark, sf_dir):
 
 
 def test_rendezvous_minimal_disruption_invariants(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        pipeline_shard_assignment_rendezvous,
-    )
-
     rows = {
         r.shard: r
         for r in pipeline_shard_assignment_rendezvous(spark, sf_dir).collect()
@@ -1987,9 +1836,6 @@ def test_rendezvous_minimal_disruption_invariants(spark, sf_dir):
 
 
 def test_tile_manifest_covers_every_pixel_once(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        multimodal_tile_manifest,
-    )
     import pyspark.sql.functions as F
 
     df = multimodal_tile_manifest(spark, sf_dir)
@@ -2010,10 +1856,6 @@ def test_tile_manifest_covers_every_pixel_once(spark, sf_dir):
 
 
 def test_join_cardinality_sample_is_unbiased_scale(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sketch_join_cardinality_estimate,
-    )
-
     r = sketch_join_cardinality_estimate(spark, sf_dir).collect()[0]
     assert r.exact_join_size >= r.n_keys  # sum n^2 >= sum 1
     assert 0 < r.sampled_keys < r.n_keys
@@ -2023,10 +1865,6 @@ def test_join_cardinality_sample_is_unbiased_scale(spark, sf_dir):
 
 
 def test_jsd_symmetric_bounded_pairs(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_js_divergence_lang_pairs,
-    )
-
     rows = text_js_divergence_lang_pairs(spark, sf_dir).collect()
     langs = set()
     for r in rows:
@@ -2039,9 +1877,6 @@ def test_jsd_symmetric_bounded_pairs(spark, sf_dir):
 
 
 def test_adamic_adar_predicts_only_nonedges(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        graph_adamic_adar_link_prediction,
-    )
     from healthcare_data_lakehouse_spark.tables import table
     import pyspark.sql.functions as F
 
@@ -2075,9 +1910,6 @@ def test_flesch_readability_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_readability_flesch,
-    )
 
     rows = {
         r.lang: r for r in text_readability_flesch(spark, sf_dir).collect()
@@ -2115,9 +1947,6 @@ def test_horvitz_thompson_identities(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        sample_horvitz_thompson_chars,
-    )
 
     r = sample_horvitz_thompson_chars(spark, sf_dir).collect()[0]
 
@@ -2143,13 +1972,6 @@ def test_horvitz_thompson_identities(spark, sf_dir):
 
 
 def test_fleiss_kappa_matches_bruteforce(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_fleiss_kappa_quality_raters,
-    )
-    from healthcare_data_lakehouse_spark.queries.llm_shared import (
-        _quality_vs_gopher,
-    )
-
     r = stats_fleiss_kappa_quality_raters(spark, sf_dir).collect()[0]
 
     rows = _quality_vs_gopher(spark, sf_dir).collect()
@@ -2171,13 +1993,6 @@ def test_fleiss_kappa_matches_bruteforce(spark, sf_dir):
 
 
 def test_mcnemar_matches_kappa_cells(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_mcnemar_quality_raters,
-    )
-    from healthcare_data_lakehouse_spark.queries.llm_shared import (
-        _quality_vs_gopher,
-    )
-
     r = stats_mcnemar_quality_raters(spark, sf_dir).collect()[0]
     rows = _quality_vs_gopher(spark, sf_dir).collect()
     n10 = sum(1 for x in rows if x.label == 1 and x.q < 0.55)
@@ -2195,9 +2010,6 @@ def test_cdc_chunks_match_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        dedup_content_defined_chunks,
-    )
 
     r = dedup_content_defined_chunks(spark, sf_dir).collect()[0]
 
@@ -2227,10 +2039,6 @@ def test_cdc_chunks_match_bruteforce(spark, sf_dir):
 
 
 def test_burrows_delta_is_metric_like(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_burrows_delta_sources,
-    )
-
     rows = text_burrows_delta_sources(spark, sf_dir).collect()
     # 20 sources -> C(20,2) unordered pairs, canonical orientation
     assert len(rows) == 190
@@ -2252,9 +2060,6 @@ def test_vad_energy_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        multimodal_audio_vad_energy,
-    )
 
     rows = {
         r.source: r for r in multimodal_audio_vad_energy(spark, sf_dir).collect()
@@ -2287,9 +2092,6 @@ def test_chao1_matches_bruteforce(spark, sf_dir):
 
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_chao1_vocab_richness,
-    )
 
     r = text_chao1_vocab_richness(spark, sf_dir).collect()[0]
 
@@ -2312,12 +2114,6 @@ def test_chao1_matches_bruteforce(spark, sf_dir):
 def test_platt_scaling_matches_bruteforce_newton(spark, sf_dir):
     import math
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        stats_platt_scaling_newton,
-    )
-    from healthcare_data_lakehouse_spark.queries.llm_shared import (
-        _quality_vs_gopher,
-    )
 
     r = stats_platt_scaling_newton(spark, sf_dir).collect()[0]
 
@@ -2347,9 +2143,6 @@ def test_platt_scaling_matches_bruteforce_newton(spark, sf_dir):
 def test_vocab_jaccard_matches_bruteforce(spark, sf_dir):
     import pandas as pd
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_vocab_jaccard_sources,
-    )
 
     rows = {
         (r.source_a, r.source_b): r
@@ -2552,10 +2345,6 @@ def test_ivf_list_balance_invariants(spark):
     """List counts partition the corpus, shares sum to 1, the mean
     balance factor is 1 by construction, and every centroid owns at
     least its own vector."""
-    from healthcare_data_lakehouse_spark.queries.llm_similarity import (
-        _IVF_CENTROID_IDS,
-        similarity_ivf_list_balance,
-    )
     from healthcare_data_lakehouse_spark.tables import table as _table
 
     sf = "/root/testdata/sf0.001"

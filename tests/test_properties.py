@@ -349,7 +349,7 @@ def _brute_waterfill(masses):
 def test_unimax_matches_bruteforce_waterfill(spark, masses):
     from pyspark.sql import Row as R
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
+    from healthcare_data_lakehouse_spark.queries.llm_pipeline import (
         sample_unimax_language_budget,
     )
 
@@ -376,7 +376,7 @@ def test_unimax_matches_bruteforce_waterfill(spark, masses):
 def test_pps_systematic_draw_law(spark, weights):
     from pyspark.sql import Row as R
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
+    from healthcare_data_lakehouse_spark.queries.llm_pipeline import (
         sample_pps_systematic_suppliers,
     )
 
@@ -402,7 +402,7 @@ def test_pps_systematic_draw_law(spark, weights):
 def test_rendezvous_disruption_law(spark, ids):
     from pyspark.sql import Row as R
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
+    from healthcare_data_lakehouse_spark.queries.llm_pipeline import (
         pipeline_shard_assignment_rendezvous,
     )
 
@@ -463,11 +463,9 @@ def _brute_bm25(texts, panel, k1=1.2, b=0.75):
 def test_bm25_matches_bruteforce(spark, docs):
     from pyspark.sql import Row as R
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
-        text_bm25_topk,
-    )
     from healthcare_data_lakehouse_spark.queries.llm_text import (
         _BM25_PANEL,
+        text_bm25_topk,
     )
 
     frame = spark.createDataFrame(
@@ -512,7 +510,7 @@ def test_bm25_matches_bruteforce(spark, docs):
 def test_mattr_matches_bruteforce(spark, docs):
     from pyspark.sql import Row as R
 
-    from healthcare_data_lakehouse_spark.queries.llm_ops import (
+    from healthcare_data_lakehouse_spark.queries.llm_text import (
         text_mattr_lexical_diversity,
     )
 

@@ -198,6 +198,28 @@ def test_dfcap_drops_hot_shingle_candidates(spark):
     assert got[0].jaccard == 1.0
 
 
+def test_dfcap_caps_df_below_the_posting_fold(spark):
+    """A stop-shingle's postings never reach a collect_list buffer: the
+    df is a window count over the shingle exchange, filtered below the
+    fold, and the fold reuses that exchange."""
+    from healthcare_data_lakehouse_spark.functions.dedup import (
+        dfcap_jaccard_pairs,
+    )
+
+    rows = [(i, f"uniq{i}a uniq{i}b the end here") for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    plan = dfcap_jaccard_pairs(df, max_df=5)._jdf.queryExecution()
+    plan = plan.executedPlan().toString()
+    # the fold's subtree, down to the cached per-doc shingle arrays
+    fold = plan[plan.index("functions=[collect_list("):]
+    fold = fold[: fold.index("InMemoryTableScan")]
+    cap = fold.find("Filter (df#")
+    window = fold.find("Window [count(1) windowspecdefinition(shingle")
+    assert 0 <= cap < window, fold
+    assert fold.count("Exchange") == 1
+    assert "Exchange hashpartitioning(shingle" in fold
+
+
 # ------------------------------------------- RRF hybrid retrieval fusion
 def test_rrf_hybrid_top10_properties(spark, sf_dir, qs):
     rows = qs["similarity_rrf_hybrid_top10"].fn(spark, sf_dir).collect()

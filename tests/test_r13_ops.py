@@ -397,25 +397,29 @@ def test_burst_dp_recovers_planted_burst(spark, tmp_path, qs):
     assert b.peak_hourly == 10
 
 
-# ---------------- dfcap cache guard: eviction must not kill the new entry
-def test_dfcap_cache_swap_keeps_new_entry_cached(spark, qs):
-    """r13 bench regression, root-caused by A/B: unpersist() evicts by
-    CANONICALIZED plan, and a repeat invocation's shingle table has the
-    same canonical plan as its predecessor — evicting after the new
-    persist() silently removed the new entry too, so every invocation
-    after the first ran uncached (~40% slower). Pin the fixed order:
-    after two back-to-back invocations, the guard holds exactly one
-    table and that table IS in the cache manager."""
-    from healthcare_data_lakehouse_spark.functions import dedup as D
-
-    for _ in range(2):
-        qs["dedup_dfcap_jaccard_pairs"].fn(spark, SF_DIR).count()
-    assert len(D._DFCAP_SETS_CACHE) == 1
-    # Dataset.storageLevel consults the cache manager: the buggy order
-    # left the just-persisted table evicted (StorageLevel NONE)
-    lvl = D._DFCAP_SETS_CACHE[-1].storageLevel
-    assert lvl.useMemory or lvl.useDisk, (
-        "swap evicted the entry it just persisted"
+# ------------- cache residency: each catalog invocation starts from empty
+def test_catalog_invocation_holds_only_its_own_cache(spark, qs):
+    """Back-to-back catalog queries in one session hold exactly what each
+    holds alone, and a repeat dfcap run still reads its shingle table from
+    the cache (unpersist evicts by canonical plan, so releasing a same-plan
+    predecessor after the new persist would drop the new entry too)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    names = [
+        "stats_kendall_tau_daily",
+        "dedup_candidate_selectivity_compare",
+        "dedup_dfcap_jaccard_pairs",
+    ]
+    alone = {}
+    for n in names:
+        spark.catalog.clearCache()
+        qs[n].fn(spark, SF_DIR).count()
+        alone[n] = cm.cachedData().size()
+    for n in names + names[-1:]:
+        df = qs[n].fn(spark, SF_DIR)
+        df.count()
+        assert cm.cachedData().size() == alone[n], n
+    assert "InMemoryTableScan" in (
+        df._jdf.queryExecution().executedPlan().toString()
     )
 
 

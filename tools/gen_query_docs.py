@@ -24,7 +24,6 @@ MODULE_TITLES = {
     "etl_queries": "ETL, loads, lineage, time travel",
     "llm_dedup": "LLM dedup (exact, MinHash+LSH, SimHash, spans, clusters, eval)",
     "llm_graph_stats": "Graph statistics (PageRank, communities, k-core, triangles, k-hop)",
-    "llm_ops": "LLM-pipeline operators (dedup, similarity, text, multimodal)",
     "llm_pipeline": "LLM pipeline (RAG, packing, decontamination, shards, budget mixes)",
     "llm_similarity": "Similarity & embeddings (ANN: LSH/IVF/PQ, recall, coresets, PCA)",
     "llm_text": "Text analysis (quality, langid, tokenization, LM scoring, segmentation)",
@@ -39,7 +38,6 @@ MODULE_TITLES = {
 LLM_MODULES = {
     "llm_dedup",
     "llm_graph_stats",
-    "llm_ops",
     "llm_pipeline",
     "llm_similarity",
     "llm_text",
