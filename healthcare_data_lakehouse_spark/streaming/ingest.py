@@ -993,8 +993,9 @@ def stream_forget_to_zone(
     stream shape. Deletes never rewrite data commits (O(|keys|) per
     batch); checkpointed batch ids plus the key-delete's idempotence
     (already-deleted keys add an empty vector -> no-op) make replays
-    exactly-once in effect. Compaction (`purge_dv`) runs on the
-    maintenance schedule, not in the hot erasure path."""
+    exactly-once in effect. Compaction (``compact``, whose one rewrite
+    retires the vectors, or ``purge_dv``) runs on the maintenance
+    schedule, not in the hot erasure path."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(source_parquet).schema
     stream = (

@@ -24,8 +24,18 @@ edition (delta-spark is not available in this environment):
                      "partitionColumns"
         metrics      {version: {numOutputRows, numFiles, numOutputBytes}}
                      for each version that wrote files
-        constraints, txns, cloned_from, and the deletion-vector keys of
-                     zones_dv, when used
+        dvs          live deletion vectors (zones_dv), e.g. ["dv000003"]
+                     under _dv/; absent when none
+        dv_history   {version: vectors live at that version}, for each
+                     version that had any
+        dv_key, constraints, txns, cloned_from, when used
+
+A version owns its commits and its vectors together: every read of it
+anti-joins its vectors on ``dv_key``. A new version that keeps none of
+the previous version's commits retires the vectors (each of its rows was
+read through them or is new data); any other version carries them over,
+so APPEND, INCREMENTAL and an UPDATE of ``dv_key`` fold them first
+(``purge_dv``): a vector would hide a newer row with its key.
 
 * ``FULL``        → write one commit, manifest lists only it.
 * ``APPEND``      → write one commit, manifest appends it (no data rewrite —
@@ -266,6 +276,7 @@ class ZoneStore:
     """Parquet-backed zone storage with atomic manifest commits."""
 
     MANIFEST = "_manifest.json"
+    DV_DIR = "_dv"
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -433,16 +444,27 @@ class ZoneStore:
         return commit
 
     @staticmethod
-    def _record_version(manifest: dict, commits: list[str]) -> None:
-        """Bump the version to one whose live commits are ``commits``.
-        Every version's membership is recorded and superseded commit dirs
-        are RETAINED until vacuum() — the same contract as Delta's
-        transaction log + VACUUM."""
+    def _record_version(
+        manifest: dict, commits: list[str], dvs: list[str] | None = None
+    ) -> None:
+        """Bump the version to one whose live commits are ``commits`` and
+        whose deletion vectors are ``dvs``. Without ``dvs``, a version that
+        keeps none of the previous live commits retires the vectors and
+        any other carries them over. Every version's membership is
+        recorded and superseded commit dirs and vectors are RETAINED until
+        vacuum() — the same contract as Delta's transaction log + VACUUM."""
+        if dvs is None:
+            kept = set(commits) & set(manifest["commits"])
+            dvs = manifest.get("dvs", []) if kept else []
         manifest["version"] += 1
+        version = str(manifest["version"])
         manifest["commits"] = list(commits)
-        manifest.setdefault("history", {})[str(manifest["version"])] = list(
-            commits
-        )
+        manifest.setdefault("history", {})[version] = list(commits)
+        if dvs:
+            manifest["dvs"] = list(dvs)
+            manifest.setdefault("dv_history", {})[version] = list(dvs)
+        else:
+            manifest.pop("dvs", None)
 
     @staticmethod
     def _record_metrics(manifest: dict, rows: int, written: list[str]) -> None:
@@ -470,10 +492,42 @@ class ZoneStore:
             return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
         return self.spark.read.schema(schema).parquet(*dirs)
 
+    def _dv_dirs(self, path: str, names: list[str]) -> list[str]:
+        """Vector dirs; a cloned table's vectors are absolute already."""
+        return [os.path.join(path, self.DV_DIR, n) for n in names]
+
+    def _dv_keys(
+        self, path: str, names: list[str], key: StructField
+    ) -> DataFrame:
+        """The distinct keys of vectors ``names``, read with the key
+        column's known type (a vector holds just that column)."""
+        return (
+            self.spark.read.schema(StructType([key]))
+            .parquet(*self._dv_dirs(path, names))
+            .distinct()
+        )
+
+    def _apply_dv(
+        self, df: DataFrame, path: str, manifest: dict, names: list[str]
+    ) -> DataFrame:
+        """Anti-join the keys of vectors ``names`` onto a scan. The join
+        side is the DISTINCT deleted-key set — typically small enough that
+        Catalyst broadcasts it; a long delete history past the broadcast
+        threshold degrades to a shuffled hash join, the merge-on-read tax
+        that a rewrite retiring the vectors resets."""
+        if not names:
+            return df
+        key_col = manifest.get("dv_key", "id")
+        keys = self._dv_keys(path, names, df.schema[key_col])
+        return df.join(keys, on=key_col, how="left_anti")
+
     def _live(self, path: str, manifest: dict, commits: list[str]) -> DataFrame:
         """The rows of ``commits`` that are live at the manifest's current
-        version (zones_dv applies deletion vectors here)."""
-        return self._read_commits(path, manifest, commits)
+        version: every scan of live rows applies its deletion vectors."""
+        return self._apply_dv(
+            self._read_commits(path, manifest, commits),
+            path, manifest, manifest.get("dvs", []),
+        )
 
     def with_retry(self, op, max_attempts: int = 3):
         """Bounded OCC retry loop (Delta parity: conflicting txns re-read
@@ -560,6 +614,13 @@ class ZoneStore:
             return 0
 
         self._enforce_constraints(zone, dataset, df, "write to")
+        # A vector hides every row with its key, newer ones too: the writes
+        # that keep the old commits and add rows fold the vectors first.
+        if manifest.get("dvs") and load_type in (
+            LoadType.APPEND, LoadType.INCREMENTAL
+        ):
+            self.purge_dv(zone, dataset)
+            manifest = self._read_manifest(path)
 
         if load_type == LoadType.FULL or not manifest["commits"]:
             out, replace = df, True
@@ -646,9 +707,10 @@ class ZoneStore:
         self, zone: DataZone, dataset: str, version: int
     ) -> DataFrame:
         """Read the dataset exactly as it stood after commit ``version``
-        (1-based). Raises if the version never existed or its files were
-        reclaimed by :meth:`vacuum` — the Delta/Iceberg time-travel
-        contract on the parquet ZoneStore."""
+        (1-based), with the deletion vectors live at that version. Raises
+        if the version never existed or its files were reclaimed by
+        :meth:`vacuum` — the Delta/Iceberg time-travel contract on the
+        parquet ZoneStore."""
         path = self.dataset_path(zone, dataset)
         manifest = self._read_manifest(path)
         membership = manifest.get("history", {}).get(str(version))
@@ -657,12 +719,15 @@ class ZoneStore:
                 f"version {version} not available for {zone.value}/{dataset} "
                 f"(current: {manifest['version']}; vacuumed or never written)"
             )
+        dvs = manifest.get("dv_history", {}).get(str(version), [])
         dirs = [os.path.join(path, c) for c in membership]
-        if not all(os.path.isdir(d) for d in dirs):
+        if not all(os.path.isdir(d) for d in dirs + self._dv_dirs(path, dvs)):
             raise ValueError(
                 f"version {version} of {zone.value}/{dataset} was vacuumed"
             )
-        return self._read_commits(path, manifest, membership)
+        return self._apply_dv(
+            self._read_commits(path, manifest, membership), path, manifest, dvs
+        )
 
     def read_changes(
         self,
@@ -856,6 +921,24 @@ class ZoneStore:
             df = df.filter(F.lit(False))
         return df.filter(F.col(column) == F.lit(value)), report
 
+    def _zone_map_skips(
+        self, zone: DataZone, dataset: str, column: str | None, lo, hi
+    ) -> set[str]:
+        """Commits whose footer [min, max] of ``column`` cannot meet
+        [lo, hi]. A commit without the column or its stats, or with no
+        row group (has_stats but min None), is never skipped."""
+        if column is None:
+            return set()
+        return {
+            s["commit"]
+            for s in self.commit_stats(zone, dataset, column)
+            if s["present"] and s["has_stats"] and s["min"] is not None
+            and (
+                (lo is not None and s["max"] < lo)
+                or (hi is not None and s["min"] > hi)
+            )
+        }
+
     def read_pruned(
         self,
         zone: DataZone,
@@ -876,20 +959,12 @@ class ZoneStore:
         the report records scanned vs skipped commit counts."""
         path = self.dataset_path(zone, dataset)
         manifest = self._read_manifest(path)
-        stats = self.commit_stats(zone, dataset, column)
-        keep: list[str] = []
-        for s in stats:
-            prunable = s["present"] and s["has_stats"] and s["min"] is not None
-            if prunable and (
-                (lo is not None and s["max"] < lo)
-                or (hi is not None and s["min"] > hi)
-            ):
-                continue
-            keep.append(s["commit"])
+        skip = self._zone_map_skips(zone, dataset, column, lo, hi)
+        keep = [c for c in manifest["commits"] if c not in skip]
         report = {
-            "commits_total": len(stats),
+            "commits_total": len(manifest["commits"]),
             "commits_scanned": len(keep),
-            "commits_skipped": len(stats) - len(keep),
+            "commits_skipped": len(manifest["commits"]) - len(keep),
         }
         df = self._live(path, manifest, keep or manifest["commits"])
         if not keep:
@@ -935,9 +1010,10 @@ class ZoneStore:
         retain_last: int = 2,
         staging_retention_sec: float = 3600.0,
     ) -> dict:
-        """Reclaim commit directories referenced only by versions older
-        than the newest ``retain_last`` — bounding time-travel storage the
-        way Delta's ``VACUUM`` bounds tombstoned files. Returns stats.
+        """Reclaim commit directories and deletion vectors referenced only
+        by versions older than the newest ``retain_last`` — bounding
+        time-travel storage the way Delta's ``VACUUM`` bounds tombstoned
+        files. Returns stats.
 
         Staging dirs (``_staging_*``) are live for the full duration of a
         concurrent writer's Spark parquet write, so only those older than
@@ -956,8 +1032,16 @@ class ZoneStore:
         versions = sorted(int(v) for v in history)
         keep_versions = versions[-retain_last:] if retain_last > 0 else []
         live: set[str] = set(manifest["commits"])
+        live_dvs: set[str] = set(manifest.get("dvs", []))
         for v in keep_versions:
             live.update(history[str(v)])
+            live_dvs.update(manifest.get("dv_history", {}).get(str(v), []))
+        dv_root = os.path.join(path, self.DV_DIR)
+        dead_dvs = [
+            os.path.join(dv_root, n)
+            for n in (os.listdir(dv_root) if os.path.isdir(dv_root) else [])
+            if n not in live_dvs
+        ]
         removed = 0
         for entry in list(os.listdir(path)):
             full = os.path.join(path, entry)
@@ -979,15 +1063,19 @@ class ZoneStore:
             elif entry.startswith("c") and entry not in live:
                 shutil.rmtree(full, ignore_errors=True)
                 removed += 1
-        manifest["history"] = {str(v): history[str(v)] for v in keep_versions}
-        metrics = manifest.get("metrics", {})
-        manifest["metrics"] = {
-            str(v): metrics[str(v)] for v in keep_versions if str(v) in metrics
-        }
+        for key in ("history", "metrics", "dv_history"):
+            per_version = manifest.get(key, {})
+            manifest[key] = {
+                str(v): per_version[str(v)]
+                for v in keep_versions
+                if str(v) in per_version
+            }
         manifest["schemas"] = {
             c: e for c, e in manifest.get("schemas", {}).items() if c in live
         }
         self._write_manifest(path, manifest)
+        for d in dead_dvs:
+            shutil.rmtree(d, ignore_errors=True)
         return {
             "removed_commits": removed,
             "retained_versions": len(keep_versions),
@@ -1014,10 +1102,13 @@ class ZoneStore:
         commits = list(history[str(version)])
         # Metadata-only, but still a rewrite of the commit list — a commit
         # landing between the entry read and this publish would be lost.
-        # The restored commits are live in retained history, so vacuum()
-        # has kept their schema entries.
+        # The restored commits and vectors are live in retained history,
+        # so vacuum() has kept them and their schema entries.
         self._check_unchanged(path, manifest["version"], "RESTORE")
-        self._record_version(manifest, commits)
+        self._record_version(
+            manifest, commits,
+            manifest.get("dv_history", {}).get(str(version), []),
+        )
         self._write_manifest(path, manifest)
         return len(commits)
 
@@ -1169,7 +1260,8 @@ class ZoneStore:
         dst_dataset: str,
     ) -> int:
         """SHALLOW CLONE (Delta parity): the clone's manifest references the
-        source's commit directories by absolute path — zero data copied.
+        source's commit directories and deletion vectors by absolute path
+        — zero data copied.
         Subsequent writes/DELETEs on the clone create commits in the
         clone's own directory (copy-on-write), so the source is never
         mutated through the clone. Faithful to Delta's contract, including
@@ -1184,21 +1276,22 @@ class ZoneStore:
         os.makedirs(dst_path, exist_ok=True)
         abs_commits = [os.path.join(src_path, c) for c in src["commits"]]
         schemas = src.get("schemas", {})
-        self._write_manifest(
-            dst_path,
-            {
-                "version": 1,
-                "commits": abs_commits,
-                "history": {"1": list(abs_commits)},
-                "schemas": {
-                    a: schemas[c]
-                    for c, a in zip(src["commits"], abs_commits)
-                    if c in schemas
-                },
-                "cloned_from": src_path,
-                "constraints": dict(src.get("constraints", {})),
+        manifest = {
+            "version": 0,
+            "commits": [],
+            "schemas": {
+                a: schemas[c]
+                for c, a in zip(src["commits"], abs_commits)
+                if c in schemas
             },
+            "cloned_from": src_path,
+            "constraints": dict(src.get("constraints", {})),
+            "dv_key": src.get("dv_key", "id"),
+        }
+        self._record_version(
+            manifest, abs_commits, self._dv_dirs(src_path, src.get("dvs", []))
         )
+        self._write_manifest(dst_path, manifest)
         return len(abs_commits)
 
     def set_constraint(
@@ -1267,6 +1360,23 @@ class ZoneStore:
                 f"constraints: {detail}"
             )
 
+    def _split_touched(
+        self, path: str, manifest: dict, match, skip: set[str] = frozenset()
+    ) -> tuple[list[str], list[str], int]:
+        """Copy-on-write scan: split the live commits into those with no
+        live row matching ``match`` (``skip`` ones unscanned) and those
+        with some. Returns (untouched, touched, matching live rows)."""
+        untouched: list[str] = []
+        touched: list[str] = []
+        hits = 0
+        for c in manifest["commits"]:
+            n = 0
+            if c not in skip:
+                n = self._live(path, manifest, [c]).filter(match).count()
+            (touched if n else untouched).append(c)
+            hits += n
+        return untouched, touched, hits
+
     def delete_where(
         self,
         zone: DataZone,
@@ -1286,7 +1396,11 @@ class ZoneStore:
         ``prune_column``/``prune_lo``/``prune_hi`` given, commits whose
         parquet-footer [min, max] range cannot intersect the bound are
         skipped without opening a data page — the same file-statistics
-        gate Delta applies from its transaction log. Returns rows deleted.
+        gate Delta applies from its transaction log. Only live rows count:
+        touched commits are read through the deletion vectors, which stay
+        on for the untouched ones. A DELETE of every row leaves one empty
+        commit, so the table and each version keep their schema. Returns
+        rows deleted.
 
         Old commit dirs stay on disk for time travel until :meth:`vacuum`,
         exactly like :meth:`write`.
@@ -1296,49 +1410,16 @@ class ZoneStore:
         if not manifest["commits"]:
             return 0
         match = F.coalesce(F.expr(predicate), F.lit(False))
-
-        skip_by_stats: set[str] = set()
-        if prune_column is not None:
-            for st in self.commit_stats(zone, dataset, prune_column):
-                # mirror read_pruned: a zero-row-group commit reports
-                # has_stats=True with min/max None — scan conservatively
-                if not (
-                    st["present"] and st["has_stats"] and st["min"] is not None
-                ):
-                    continue  # conservative: scan it
-                if (prune_hi is not None and st["min"] > prune_hi) or (
-                    prune_lo is not None and st["max"] < prune_lo
-                ):
-                    skip_by_stats.add(st["commit"])
-
-        untouched: list[str] = []
-        changed: list[str] = []
-        deleted = 0
-        for c in manifest["commits"]:
-            if c in skip_by_stats:
-                untouched.append(c)
-                continue
-            n = self._read_commits(path, manifest, [c]).filter(match).count()
-            if n == 0:
-                untouched.append(c)
-            else:
-                changed.append(c)
-                deleted += n
+        skip = self._zone_map_skips(
+            zone, dataset, prune_column, prune_lo, prune_hi
+        )
+        untouched, changed, deleted = self._split_touched(
+            path, manifest, match, skip
+        )
         if not changed:
             return 0
-        kept = self._read_commits(path, manifest, changed).filter(~match)
-        staging, n_kept, schema = self._stage_counted(path, kept)
-        if n_kept:
-            commit = self._publish_staged(
-                path, manifest, staging, schema, "DELETE"
-            )
-            self._record_version(manifest, untouched + [commit])
-            self._record_metrics(manifest, n_kept, [os.path.join(path, commit)])
-        else:
-            shutil.rmtree(staging, ignore_errors=True)
-            self._check_unchanged(path, manifest["version"], "DELETE")
-            self._record_version(manifest, untouched)
-        self._write_manifest(path, manifest)
+        kept = self._live(path, manifest, changed).filter(~match)
+        self._commit_frame(path, manifest, kept, untouched, "DELETE")
         return deleted
 
     def update_set(
@@ -1354,29 +1435,22 @@ class ZoneStore:
         ``column -> SQL expression`` assignment applied; FALSE/NULL rows
         are byte-preserved. Commits containing no matching row ride into
         the new version untouched; matching commits are rewritten (all
-        their rows, updated or not) as one fresh commit. Returns rows
+        their live rows, updated or not) as one fresh commit. Returns rows
         updated.
         """
         path = self.dataset_path(zone, dataset)
         manifest = self._read_manifest(path)
         if not manifest["commits"]:
             return 0
+        if manifest.get("dvs") and manifest.get("dv_key", "id") in assignments:
+            # a row moved onto a deleted key must stay live: fold first
+            self.purge_dv(zone, dataset)
+            manifest = self._read_manifest(path)
         match = F.coalesce(F.expr(predicate), F.lit(False))
-
-        untouched: list[str] = []
-        changed: list[str] = []
-        updated = 0
-        for c in manifest["commits"]:
-            n = self._read_commits(path, manifest, [c]).filter(match).count()
-            if n == 0:
-                untouched.append(c)
-            else:
-                changed.append(c)
-                updated += n
+        untouched, changed, updated = self._split_touched(path, manifest, match)
         if not changed:
             return 0
-        base = self._read_commits(path, manifest, changed)
-        out = base.withColumns(
+        out = self._live(path, manifest, changed).withColumns(
             {
                 col: F.when(match, F.expr(expr)).otherwise(F.col(col))
                 for col, expr in assignments.items()
@@ -1435,6 +1509,23 @@ class ZoneStore:
             "commits_before": len(stale),
         }
 
+    def purge_dv(self, zone: DataZone, dataset: str) -> int:
+        """Fold outstanding deletion vectors into the data (MoR -> CoW
+        compaction): rewrite the live rows as ONE fresh commit, a version
+        that retires the vectors. Read results are identical before and
+        after; the read-time anti-join disappears. Returns live rows
+        written; no-op (0, no version bump) when no vectors are
+        outstanding. Old commit dirs and vectors stay on disk for time
+        travel until :meth:`vacuum`."""
+        path = self.dataset_path(zone, dataset)
+        manifest = self._read_manifest(path)
+        if not manifest.get("dvs"):
+            return 0
+        live = self._live(path, manifest, manifest["commits"])
+        return self._commit_frame(
+            path, manifest, live, [], f"purge_dv {zone.value}/{dataset}"
+        )
+
     # -------------------------------------------------------------- quarantine
     def write_quarantine(
         self,
@@ -1455,14 +1546,9 @@ class ZoneStore:
             .withColumn("_quarantine_reason", F.lit(reason))
             .withColumn("_quality_score", F.lit(float(quality_score)))
         )
-        staging, n, schema = self._stage_counted(path, stamped)
-        commit = self._publish_commit(path, staging, manifest["version"] + 1)
-        manifest.setdefault("schemas", {})[commit] = schema
-        manifest["version"] += 1
-        manifest["commits"].append(commit)
-        self._record_metrics(manifest, n, [os.path.join(path, commit)])
-        self._write_manifest(path, manifest)
-        return n
+        return self._commit_frame(
+            path, manifest, stamped, manifest["commits"], f"quarantine {job_id}"
+        )
 
     def read_quarantine(self, job_id: str) -> DataFrame | None:
         """L7 quarantine read (reference ``src/etl/etl_manager.py:590-595``)."""

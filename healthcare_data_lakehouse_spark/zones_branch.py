@@ -64,19 +64,28 @@ class BranchingZoneStore(ZoneStore):
         br_path = self.dataset_path(
             zone, self._branch_dataset(dataset, branch)
         )
-        src = self._read_manifest(src_path)
         br = self._read_manifest(br_path)
         base = br.get("history", {}).get("1", [])
         return {
             "base_commits": len(base),
             "branch_version": br.get("version", 0),
             "branch_ahead": br.get("commits", []) != base,
-            "source_diverged": [
-                c if os.path.isabs(c) else os.path.join(src_path, c)
-                for c in src.get("commits", [])
-            ]
-            != base,
+            "source_diverged": self._diverged(
+                src_path, self._read_manifest(src_path), br
+            ),
         }
+
+    def _diverged(self, src_path: str, src: dict, br: dict) -> bool:
+        """True when the source's commits or deletion vectors are no
+        longer the ones the branch was cut at (its version 1)."""
+        now = (
+            [os.path.join(src_path, c) for c in src["commits"]],
+            self._dv_dirs(src_path, src.get("dvs", [])),
+        )
+        return now != (
+            br.get("history", {}).get("1", []),
+            br.get("dv_history", {}).get("1", []),
+        )
 
     # ----------------------------------------------------------------- merge
     def merge_branch(
@@ -84,14 +93,16 @@ class BranchingZoneStore(ZoneStore):
     ) -> int:
         """Fast-forward the source to the branch's commit list.
 
-        Precondition: the source's commits are still exactly the branch's
-        recorded base — otherwise the histories diverged and the merge
-        raises (re-branch and replay to resolve; with_retry applies the
-        same way it does to writes). Adoption is by REFERENCE: the
+        Precondition: the source's commits and vectors are still exactly
+        the branch's recorded base — otherwise the histories diverged and
+        the merge raises (re-branch and replay to resolve; with_retry
+        applies the same way it does to writes). Adoption is by REFERENCE: the
         branch's commit dirs (living under the branch's directory) enter
         the source manifest as absolute paths, the same zero-copy
-        mechanism clone uses in the other direction. Returns the number
-        of commits the source now references."""
+        mechanism clone uses in the other direction, and so do its
+        deletion vectors. The source's own dirs keep their plain names,
+        so its vacuum still sees them as live. Returns the number of
+        commits the source now references."""
         src_path = self.dataset_path(zone, dataset)
         br_path = self.dataset_path(
             zone, self._branch_dataset(dataset, branch)
@@ -101,22 +112,33 @@ class BranchingZoneStore(ZoneStore):
             raise ValueError(
                 f"branch {branch!r} of {zone.value}/{dataset} does not exist"
             )
-        base = br.get("history", {}).get("1", [])
         src = self._read_manifest(src_path)
-        src_abs = [
-            c if os.path.isabs(c) else os.path.join(src_path, c)
-            for c in src["commits"]
-        ]
-        if src_abs != base:
+        if self._diverged(src_path, src, br):
             raise ConcurrentModificationError(
                 f"{zone.value}/{dataset} advanced since branch {branch!r} "
                 "was cut — re-branch and replay to merge"
             )
-        new_commits = [os.path.join(br_path, c) for c in br["commits"]]
+
+        def adopt(dirs: list[str], own: str) -> list[str]:
+            return [
+                os.path.relpath(d, own) if d.startswith(own + os.sep) else d
+                for d in dirs
+            ]
+
+        new_commits = adopt(
+            [os.path.join(br_path, c) for c in br["commits"]], src_path
+        )
         schemas = src.setdefault("schemas", {})
         for c, a in zip(br["commits"], new_commits):
             if c in br.get("schemas", {}):
                 schemas[a] = br["schemas"][c]
-        self._record_version(src, new_commits)
+        src["dv_key"] = br.get("dv_key", "id")
+        self._record_version(
+            src, new_commits,
+            adopt(
+                self._dv_dirs(br_path, br.get("dvs", [])),
+                os.path.join(src_path, self.DV_DIR),
+            ),
+        )
         self._write_manifest(src_path, src)
         return len(new_commits)

@@ -8,9 +8,10 @@ deleted row KEYS as a side artifact, data commits are never rewritten,
 and readers apply the vector as an anti-join at scan time
 (merge-on-read). At 100 TB the difference is a delete costing
 O(|deleted keys|) instead of O(|touched commits|) of write
-amplification; the price is one extra join per read until a compaction
-(:meth:`DVZoneStore.purge_dv`) folds the vectors back into the data —
-exactly the MoR/CoW trade every production lakehouse tunes.
+amplification; the price is one extra join per read until a rewrite of
+the whole table (``purge_dv``, ``compact``, a FULL or MERGE write,
+``merge_into``) retires the vectors — exactly the MoR/CoW
+trade every production lakehouse tunes.
 
 This emulation uses EQUALITY deletes on a declared key column (Iceberg
 v2 equality-delete semantics; per-file positional bitmaps à la Delta
@@ -18,11 +19,9 @@ need file-physical row indexes parquet alone does not expose — the
 manifest/anti-join plumbing would be identical). Everything rides the
 existing ZoneStore commit protocol: DV artifacts stage to a unique dir
 and publish by atomic rename, the manifest version advances under the
-same OCC revalidation as data writes, and per-version DV membership is
-recorded so time travel replays reads exactly as they stood.
-
-Subclass (rather than editing zones.py) keeps the reference-parity
-surface byte-stable; nothing here changes base-class behavior.
+same OCC revalidation as data writes, and each version records its
+vectors next to its commits, so every ZoneStore reads, time-travels,
+restores, clones, vacuums and folds them. This subclass only writes them.
 """
 
 from __future__ import annotations
@@ -32,7 +31,6 @@ import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from healthcare_data_lakehouse_spark.zones import (
     ConcurrentModificationError,
@@ -43,60 +41,6 @@ from healthcare_data_lakehouse_spark.zones import (
 
 class DVZoneStore(ZoneStore):
     """ZoneStore with merge-on-read deletion vectors (equality deletes)."""
-
-    DV_DIR = "_dv"
-
-    # ------------------------------------------------------------ internals
-    def _dv_dirs(self, path: str, names: list[str]) -> list[str]:
-        return [os.path.join(path, self.DV_DIR, n) for n in names]
-
-    def _dv_keys(
-        self, path: str, names: list[str], key: StructField
-    ) -> DataFrame:
-        """The distinct keys of vectors ``names``, read with the key
-        column's known type (a vector holds just that column)."""
-        return (
-            self.spark.read.schema(StructType([key]))
-            .parquet(*self._dv_dirs(path, names))
-            .distinct()
-        )
-
-    def _apply_dv(
-        self, df: DataFrame, path: str, names: list[str], key_col: str
-    ) -> DataFrame:
-        """Anti-join the DV key set onto a scan. The join side is the
-        DISTINCT deleted-key set — typically small enough that Catalyst
-        broadcasts it; when a long un-compacted delete history grows past
-        the broadcast threshold it degrades to a shuffled hash join, which
-        is the documented MoR read tax that purge_dv() resets."""
-        if not names:
-            return df
-        keys = self._dv_keys(path, names, df.schema[key_col])
-        return df.join(keys, on=key_col, how="left_anti")
-
-    # ----------------------------------------------------------------- reads
-    def _live(self, path: str, manifest: dict, commits: list[str]) -> DataFrame:
-        """Every scan of live rows (read, read_pruned, read_bloom_pruned,
-        compact, and the key sets of new vectors) applies the outstanding
-        vectors."""
-        return self._apply_dv(
-            super()._live(path, manifest, commits),
-            path,
-            manifest.get("dvs", []),
-            manifest.get("dv_key", "id"),
-        )
-
-    def read_version(
-        self, zone: DataZone, dataset: str, version: int
-    ) -> DataFrame:
-        """Time travel with DV replay: versions committed before the first
-        DV delete read with no vector applied; later versions apply
-        exactly the vectors live at that version."""
-        path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        df = super().read_version(zone, dataset, version)
-        names = manifest.get("dv_history", {}).get(str(version), [])
-        return self._apply_dv(df, path, names, manifest.get("dv_key", "id"))
 
     # --------------------------------------------------------------- deletes
     def delete_where_dv(
@@ -111,21 +55,9 @@ class DVZoneStore(ZoneStore):
         is touched. Returns the number of keys added (0 = no-op, no
         version bump — deleting already-deleted rows is idempotent
         because the predicate evaluates over the DV-applied scan)."""
-        path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        if not manifest["commits"]:
-            raise ValueError(
-                f"{zone.value}/{dataset} does not exist or is empty"
-            )
-        if manifest.get("dvs") and manifest.get("dv_key", key_col) != key_col:
-            raise ValueError(
-                f"deletion vectors for {zone.value}/{dataset} are keyed on "
-                f"{manifest['dv_key']!r}; cannot mix with {key_col!r}"
-            )
-        live = self._live(path, manifest, manifest["commits"])
-        doomed = live.filter(predicate).select(key_col).distinct()
-        return self._commit_dv(zone, dataset, path, manifest, doomed,
-                               key_col)
+        return self._delete_dv(
+            zone, dataset, key_col, lambda live: live.filter(predicate)
+        )
 
     def delete_keys_dv(
         self,
@@ -141,6 +73,16 @@ class DVZoneStore(ZoneStore):
         with no live rows contribute nothing (idempotent replays add
         empty vectors -> no-op, no version bump). No driver-side
         collection: the key set stays a DataFrame end-to-end."""
+        return self._delete_dv(
+            zone, dataset, key_col,
+            lambda live: live.join(
+                keys.select(F.col(key_col)).distinct(), key_col, "left_semi"
+            ),
+        )
+
+    def _delete_dv(self, zone, dataset, key_col: str, doomed_rows) -> int:
+        """Write the distinct keys of ``doomed_rows(live rows)`` as a new
+        vector, at a version whose data commits are unchanged."""
         path = self.dataset_path(zone, dataset)
         manifest = self._read_manifest(path)
         if not manifest["commits"]:
@@ -153,25 +95,7 @@ class DVZoneStore(ZoneStore):
                 f"{manifest['dv_key']!r}; cannot mix with {key_col!r}"
             )
         live = self._live(path, manifest, manifest["commits"])
-        doomed = (
-            live.join(
-                keys.select(F.col(key_col)).distinct(), key_col, "left_semi"
-            )
-            .select(key_col)
-            .distinct()
-        )
-        return self._commit_dv(zone, dataset, path, manifest, doomed,
-                               key_col)
-
-    def _commit_dv(
-        self,
-        zone: DataZone,
-        dataset: str,
-        path: str,
-        manifest: dict,
-        doomed: DataFrame,
-        key_col: str,
-    ) -> int:
+        doomed = doomed_rows(live).select(key_col).distinct()
         # size the vector artifact's files (guide §6): doomed comes off a
         # distinct (one tiny file per shuffle partition otherwise — 32
         # sub-KB files per vector at sf0.1, paid back on EVERY subsequent
@@ -191,83 +115,15 @@ class DVZoneStore(ZoneStore):
             raise
         os.makedirs(os.path.join(path, self.DV_DIR), exist_ok=True)
         dv_name = f"dv{manifest['version'] + 1:06d}"
-        dv_dir = os.path.join(path, self.DV_DIR, dv_name)
+        (dv_dir,) = self._dv_dirs(path, [dv_name])
         os.rename(staging, dv_dir)
-        # data membership is UNCHANGED at this version — that is the whole
-        # point; both histories are recorded for time travel
-        self._record_version(manifest, manifest["commits"])
-        self._record_metrics(manifest, n, [dv_dir])
-        manifest.setdefault("dvs", []).append(dv_name)
         manifest["dv_key"] = key_col
-        manifest.setdefault("dv_history", {})[
-            str(manifest["version"])
-        ] = list(manifest["dvs"])
+        self._record_version(
+            manifest, manifest["commits"], manifest.get("dvs", []) + [dv_name]
+        )
+        self._record_metrics(manifest, n, [dv_dir])
         self._write_manifest(path, manifest)
         return n
-
-    # ------------------------------------------------------------ compaction
-    def purge_dv(self, zone: DataZone, dataset: str) -> int:
-        """Fold outstanding deletion vectors into the data (MoR -> CoW
-        compaction): rewrite the live rows as ONE fresh commit and clear
-        the vector list. Read results are identical before and after; the
-        read-time anti-join disappears. Returns live rows written; no-op
-        (0, no version bump) when no vectors are outstanding. Old commit
-        dirs and DV artifacts stay on disk for time travel until
-        :meth:`vacuum`."""
-        path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        if not manifest.get("dvs"):
-            return 0
-        live = self._live(path, manifest, manifest["commits"])
-        # the rewritten version holds no vectors (written with its commit)
-        manifest["dvs"] = []
-        manifest.setdefault("dv_history", {})[str(manifest["version"] + 1)] = []
-        return self._commit_frame(
-            path, manifest, live, [], f"purge_dv {zone.value}/{dataset}"
-        )
-
-    # ----------------- copy-on-write interop: fold vectors first
-    #
-    # The base class's rewrite paths (FULL/MERGE write, merge_into,
-    # delete_where, update_set, compact) reason about data FILES and the
-    # plain `history` map; run over a table with outstanding vectors they
-    # would (a) leave stale vectors that wrongly re-delete a key a
-    # MERGE just re-inserted, and (b) record new versions with no
-    # dv_history entry, so time travel at those versions would replay
-    # the data without the vectors. Folding the vectors into the data
-    # (purge) before any such path keeps every invariant trivially —
-    # the same simplification Iceberg makes when equality deletes only
-    # apply to data files with OLDER sequence numbers: after a rewrite
-    # the surviving rows ARE the table and old vectors must not touch
-    # them. APPEND needs no fold (it rewrites nothing and appends rows
-    # that, like Iceberg's, are newer than every outstanding delete —
-    # but the read-path vector would still hit matching NEW keys, so
-    # fold there too for strict newer-than semantics).
-
-    def _fold_outstanding(self, zone: DataZone, dataset: str) -> None:
-        path = self.dataset_path(zone, dataset)
-        if self._read_manifest(path).get("dvs"):
-            self.purge_dv(zone, dataset)
-
-    def write(self, zone, dataset, df, *args, **kwargs):
-        self._fold_outstanding(zone, dataset)
-        return super().write(zone, dataset, df, *args, **kwargs)
-
-    def delete_where(self, zone, dataset, predicate, *args, **kwargs):
-        self._fold_outstanding(zone, dataset)
-        return super().delete_where(zone, dataset, predicate, *args, **kwargs)
-
-    def update_set(self, zone, dataset, predicate, assignments):
-        self._fold_outstanding(zone, dataset)
-        return super().update_set(zone, dataset, predicate, assignments)
-
-    def compact(self, zone, dataset, *args, **kwargs):
-        self._fold_outstanding(zone, dataset)
-        return super().compact(zone, dataset, *args, **kwargs)
-
-    def merge_into(self, zone, dataset, source, *args, **kwargs):
-        self._fold_outstanding(zone, dataset)
-        return super().merge_into(zone, dataset, source, *args, **kwargs)
 
     # ----------------------------------------------------------------- audit
     def dv_stats(self, zone: DataZone, dataset: str) -> dict:

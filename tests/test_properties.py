@@ -744,49 +744,114 @@ def test_lsh_banding_under_high_dup_density(spark, shape):
 
 
 # ------------------------------- deletion-vector store vs set model
+_dv_args = (st.integers(min_value=0, max_value=4),
+            st.integers(min_value=1, max_value=6))
 dv_ops_st = st.lists(
+    # half the ops are vector deletes and purges, the rest rewrite paths
     st.one_of(
-        st.tuples(st.just("delete"),
-                  st.integers(min_value=0, max_value=4),
-                  st.integers(min_value=1, max_value=6)),
-        st.tuples(st.just("purge"), st.just(0), st.just(0)),
+        st.tuples(st.sampled_from(["delete", "purge"]), *_dv_args),
+        st.tuples(st.sampled_from(["append", "full", "merge", "merge_into",
+                                   "update", "cow_delete", "compact",
+                                   "restore"]), *_dv_args),
     ),
     min_size=1,
-    max_size=5,
+    max_size=6,
 )
+# ops that replace every commit, so the version retires the vectors
+DV_RETIRING = ("purge", "compact", "full", "merge", "merge_into")
 
 
 @given(ops=dv_ops_st)
-@settings(max_examples=6, deadline=None,
+@example(ops=[("delete", 0, 3), ("append", 0, 1), ("delete", 1, 4),
+              ("merge", 2, 3), ("restore", 1, 1), ("update", 1, 2),
+              ("cow_delete", 0, 5), ("merge_into", 3, 2), ("purge", 0, 1),
+              ("delete", 2, 5), ("compact", 0, 1)])
+@example(ops=[("delete", 0, 3), ("purge", 0, 1), ("delete", 1, 2),
+              ("delete", 0, 5), ("purge", 0, 1), ("full", 1, 2)])
+@example(ops=[("delete", 0, 2), ("cow_delete", 0, 1), ("append", 0, 1),
+              ("restore", 1, 1), ("compact", 0, 1)])
+@settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
 def test_dv_store_matches_set_model(spark, tmp_path_factory, ops):
-    """Any interleaving of equality deletes and purges must leave the
-    DV-applied read equal to a plain python set model, and every purge
-    must preserve the read exactly while clearing vector state."""
+    """Any interleaving of vector deletes, purges and the rewrite paths
+    (APPEND of a deleted key, FULL and MERGE writes, merge_into,
+    update_set, copy-on-write delete_where, compact, restore_version)
+    must leave the read equal to a dict model of the table, every
+    retained version must read as the model stood at that version, and
+    every op that replaces all commits must clear the vector state."""
     from healthcare_data_lakehouse_spark.zones import DataZone, LoadType
     from healthcare_data_lakehouse_spark.zones_dv import DVZoneStore
 
     root = tmp_path_factory.mktemp("dvprop")
     store = DVZoneStore(spark, str(root))
+    z, path = DataZone.SILVER, store.dataset_path(DataZone.SILVER, "t")
     ids = list(range(18))
-    df = spark.createDataFrame([(i, i % 3) for i in ids],
-                               "id long, grp long")
-    store.write(DataZone.SILVER, "t", df, LoadType.FULL)
-    live = set(ids)
+    store.write(z, "t", spark.createDataFrame([(i, i) for i in ids],
+                                              "id long, v long"),
+                LoadType.FULL)
+    model = {i: i for i in ids}
+    snapshots = {1: dict(model)}
+
+    def version():
+        return store._read_manifest(path)["version"]
+
+    def rows(df):
+        return sorted((r.id, r.v) for r in df.collect())
+
+    def frame(src):
+        return spark.createDataFrame(sorted(src.items()), "id long, v long")
+
     for op, r, m in ops:
+        before = version()
+        tag = 1000 * (before + 1)
+        pred = f"id % {m} = {r % m}"
+        hits = {i for i in model if i % m == r % m}
         if op == "delete":
-            pred = f"id % {m} = {r % m}"
-            expected_doomed = {i for i in live if i % m == r % m}
-            n = store.delete_where_dv(DataZone.SILVER, "t", pred)
-            assert n == len(expected_doomed)
-            live -= expected_doomed
+            assert store.delete_where_dv(z, "t", pred) == len(hits)
+            model = {i: v for i, v in model.items() if i not in hits}
+        elif op == "purge":
+            store.purge_dv(z, "t")
+        elif op == "compact":
+            store.compact(z, "t")
+        elif op == "append":
+            dead = (sorted(set(ids) - set(model))
+                    or sorted(set(range(200, 212)) - set(model)))
+            src = {dead[r % len(dead)]: tag}
+            assert store.write(z, "t", frame(src), LoadType.APPEND) == 1
+            model.update(src)
+        elif op == "full":
+            model = {i: tag + i for i in range(r % m, 18, m)}
+            store.write(z, "t", frame(model), LoadType.FULL)
+        elif op in ("merge", "merge_into"):
+            src = {r: tag, (5 * r + m) % 18: tag + 1, 100 + r: tag + 2}
+            if op == "merge":
+                store.write(z, "t", frame(src), LoadType.MERGE)
+            else:
+                counts = store.merge_into(z, "t", frame(src),
+                                          matched_update={"v": "src_v"})
+                matched = len(set(src) & set(model))
+                assert (counts["updated"], counts["inserted"]) == (
+                    matched, len(src) - matched)
+            model.update(src)
+        elif op == "update":
+            assert store.update_set(z, "t", pred, {"v": "v + 1"}) == len(hits)
+            model.update({i: model[i] + 1 for i in hits})
+        elif op == "cow_delete":
+            assert store.delete_where(z, "t", pred) == len(hits)
+            model = {i: v for i, v in model.items() if i not in hits}
         else:
-            before = {x.id for x in store.read(DataZone.SILVER, "t").collect()}
-            store.purge_dv(DataZone.SILVER, "t")
-            after = {x.id for x in store.read(DataZone.SILVER, "t").collect()}
-            assert after == before
-            st_ = store.dv_stats(DataZone.SILVER, "t")
-            assert st_["n_dvs"] == 0
-        got = {x.id for x in store.read(DataZone.SILVER, "t").collect()}
-        assert got == live
+            v = sorted(snapshots)[r % len(snapshots)]
+            store.restore_version(z, "t", v)
+            model = dict(snapshots[v])
+        if op in DV_RETIRING:
+            assert store.dv_stats(z, "t")["n_dvs"] == 0, op
+        after = version()
+        # a fold before APPEND is a version that reads as before the op
+        for v in range(before + 1, after):
+            snapshots[v] = snapshots[before]
+        snapshots[after] = dict(model)
+        assert rows(store.read(z, "t")) == sorted(model.items())
+        for v, snap in snapshots.items():
+            got = rows(store.read_version(z, "t", v))
+            assert got == sorted(snap.items()), (op, v)

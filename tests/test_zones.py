@@ -392,6 +392,26 @@ def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
     assert {r.id for r in store.read(DataZone.SILVER, "t").collect()} == {1, 2}
 
 
+
+def test_delete_of_every_row_leaves_a_readable_empty_version(spark, store):
+    # the emptied version keeps a (row-less) commit: it reads with its
+    # schema, diffs, and lets vacuum reclaim the commit it replaced
+    z = DataZone.SILVER
+    df = spark.createDataFrame([(i, i) for i in range(10)], "id long, v long")
+    store.write(z, "t", df, LoadType.FULL)
+    assert store.delete_where(z, "t", "id >= 0") == 10
+    assert store.read(z, "t").columns == ["id", "v"]
+    assert rows(store.read(z, "t")) == []
+    assert rows(store.read_version(z, "t", 2)) == []
+    changes = store.diff_versions(z, "t", 1, 2).collect()
+    assert {r._change_type for r in changes} == {"delete"}
+    assert len(changes) == 10
+    assert store.vacuum(z, "t", retain_last=1)["removed_commits"] == 1
+    path = store.dataset_path(z, "t")
+    assert not os.path.isdir(os.path.join(path, "c000001"))
+    store.write(z, "t", df.filter("id < 2"), LoadType.APPEND)
+    assert rows(store.read(z, "t")) == [(0, 0), (1, 1)]
+
 def test_update_set_rewrites_only_matching_commits(spark, tmp_path):
     from pyspark.sql import Row
     from healthcare_data_lakehouse_spark.zones import (

@@ -91,3 +91,43 @@ def test_merge_unknown_branch_raises(spark, tmp_path):
     store, _ = _mk(spark, tmp_path)
     with pytest.raises(ValueError, match="does not exist"):
         store.merge_branch(DataZone.SILVER, "t", "nope")
+
+
+def test_branch_carries_deletion_vectors_both_ways(spark, tmp_path):
+    from healthcare_data_lakehouse_spark.zones_dv import DVZoneStore
+
+    store, spark = _mk(spark, tmp_path)
+    dv = DVZoneStore(spark, str(tmp_path))
+    dv.delete_where_dv(DataZone.SILVER, "t", "id < 2")
+    store.create_branch(DataZone.SILVER, "t", "exp")
+    assert {
+        r.id for r in store.branch_read(DataZone.SILVER, "t", "exp").collect()
+    } == set(range(2, 10))
+    dv.delete_where_dv(DataZone.SILVER, "t__br_exp", "id = 5")
+    store.merge_branch(DataZone.SILVER, "t", "exp")
+    main_ids = {r.id for r in store.read(DataZone.SILVER, "t").collect()}
+    assert main_ids == set(range(2, 10)) - {5}
+    # a vector written on main after the cut is a divergence
+    store.create_branch(DataZone.SILVER, "t", "b2")
+    dv.delete_where_dv(DataZone.SILVER, "t", "id = 6")
+    assert store.branch_status(DataZone.SILVER, "t", "b2")["source_diverged"]
+    with pytest.raises(ConcurrentModificationError, match="advanced"):
+        store.merge_branch(DataZone.SILVER, "t", "b2")
+
+
+def test_vacuum_after_merge_keeps_the_source_dirs(spark, tmp_path):
+    # a fast-forward adopts the branch's entries; those naming the
+    # source's own commits and vectors must stay live for its vacuum
+    from healthcare_data_lakehouse_spark.zones_dv import DVZoneStore
+
+    store, spark = _mk(spark, tmp_path)
+    dv = DVZoneStore(spark, str(tmp_path))
+    dv.delete_where_dv(DataZone.SILVER, "t", "id < 2")
+    store.create_branch(DataZone.SILVER, "t", "exp")
+    dv.delete_where_dv(DataZone.SILVER, "t__br_exp", "id = 5")
+    store.merge_branch(DataZone.SILVER, "t", "exp")
+    store.vacuum(DataZone.SILVER, "t", retain_last=1)
+    want = set(range(2, 10)) - {5}
+    assert {r.id for r in store.read(DataZone.SILVER, "t").collect()} == want
+    v3 = store.read_version(DataZone.SILVER, "t", 3)
+    assert {r.id for r in v3.collect()} == want
