@@ -9,7 +9,6 @@ Spark's unified batch/stream model).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,15 +36,8 @@ __all__: list[str] = []
 def streaming_event_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_data_lakehouse_spark.streaming.ingest import run_stream_to_table
 
-    from healthcare_data_lakehouse_spark.tables import normalize_event_ts as prepare
-
     return run_stream_to_table(
-        spark,
-        f"{sf_dir}/events.parquet",
-        scratch_dir("stream_"),
-        window="1 hour",
-        prepare=prepare,
-        query_name=f"stream_result_{uuid.uuid4().hex[:8]}",
+        spark, f"{sf_dir}/events.parquet", scratch_dir("stream_"), window="1 hour"
     )
 
 
@@ -66,10 +58,7 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     return stateful_user_totals(
-        spark,
-        f"{sf_dir}/events.parquet",
-        scratch_dir("stateful_"),
-        query_name=f"stateful_result_{uuid.uuid4().hex[:8]}",
+        spark, f"{sf_dir}/events.parquet", scratch_dir("stateful_")
     )
 
 
@@ -150,10 +139,7 @@ def streaming_interval_join_clicks_purchases(
     )
 
     return run_interval_join_stream(
-        spark,
-        f"{sf_dir}/events.parquet",
-        scratch_dir("stream_ssj_"),
-        query_name=f"ssj_result_{uuid.uuid4().hex[:8]}",
+        spark, f"{sf_dir}/events.parquet", scratch_dir("stream_ssj_")
     ).select("user_id", "l_ts", "click_id", "r_ts", "purchase_id")
 
 
@@ -194,15 +180,8 @@ def streaming_interval_join_clicks_purchases(
 def streaming_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_data_lakehouse_spark.streaming.ingest import run_session_stream
 
-    from healthcare_data_lakehouse_spark.tables import normalize_event_ts as prepare
-
     return run_session_stream(
-        spark,
-        f"{sf_dir}/events.parquet",
-        scratch_dir("stream_sess_"),
-        gap="10 minutes",
-        prepare=prepare,
-        query_name=f"stream_sessions_{uuid.uuid4().hex[:8]}",
+        spark, f"{sf_dir}/events.parquet", scratch_dir("stream_sess_"), gap="10 minutes"
     )
 
 
@@ -226,33 +205,25 @@ def streaming_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_data_lakehouse_spark.streaming.ingest import (
+        _drain_to_table,
+        _file_stream,
         dedup_stream_within_watermark,
     )
     from healthcare_data_lakehouse_spark.tables import table
 
     work = scratch_dir("stream_dedupq_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
+    feed = os.path.join(work, "feed")
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     # the same feed lands twice — upstream at-least-once redelivery
-    ev.write.parquet(os.path.join(src, "f1"))
-    ev.write.parquet(os.path.join(src, "f2"))
-    stream = spark.readStream.schema(ev.schema).parquet(src + "/*")
+    for _ in range(2):
+        ev.write.mode("append").parquet(feed)
     # wide horizon: every replayed key is still inside the watermark, so
     # dedup is total regardless of how the files split into micro-batches
-    out = dedup_stream_within_watermark(stream, ["event_id"], "ts", "365 days")
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    out = dedup_stream_within_watermark(
+        _file_stream(spark, feed, work), ["event_id"], "ts", "365 days"
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_to_table(out, work, "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -324,6 +295,21 @@ def streaming_upsert_merge_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _land_in_order(src: str, *batches: DataFrame) -> str:
+    """Write each frame as one parquet file under ``src/b<i>`` with its
+    mtime pinned in list order. The file source orders micro-batches by
+    file mtime, so a one-file-per-trigger stream over the returned glob
+    drains the frames deterministically in this order."""
+    t = 1_700_000_000
+    for i, df in enumerate(batches):
+        sub = os.path.join(src, f"b{i}")
+        df.coalesce(1).write.parquet(sub)
+        for root, _, files in os.walk(sub):
+            for f in files:
+                os.utime(os.path.join(root, f), (t + 1000 * i, t + 1000 * i))
+    return src + "/*"
+
+
 def _admission_oracle() -> str:
     from healthcare_data_lakehouse_spark.queries.llm_dedup import _probe_ctes
 
@@ -371,26 +357,16 @@ def streaming_neardup_admission_gate(spark: SparkSession, sf_dir: str) -> DataFr
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     work = scratch_dir("stream_gate_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
     seed = docs.filter(F.col("doc_id") % 3 == 0)
     second = docs.filter(F.col("doc_id") % 3 == 1).unionAll(
         docs.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 5 == 0))
         .select((F.col("doc_id") + 3_000_000).alias("doc_id"), "text")
     )
-    seed.coalesce(1).write.parquet(os.path.join(src, "b0"))
-    second.coalesce(1).write.parquet(os.path.join(src, "b1"))
-    # one data file per phase + pinned mtimes: the file source orders
-    # batches by timestamp, so b0 seeds before b1 probes — deterministic
-    t = 1_700_000_000
-    for sub, ts in (("b0", t), ("b1", t + 1000)):
-        for root, _, files in os.walk(os.path.join(src, sub)):
-            for f in files:
-                os.utime(os.path.join(root, f), (ts, ts))
     store = ZoneStore(spark, os.path.join(work, "zones"))
-    q = stream_neardup_admission(
+    # the seed batch lands before the batch that probes it
+    stream_neardup_admission(
         spark,
-        src + "/*",
+        _land_in_order(os.path.join(work, "src"), seed, second),
         seed.schema,
         store,
         DataZone.BRONZE,
@@ -398,7 +374,6 @@ def streaming_neardup_admission_gate(spark: SparkSession, sf_dir: str) -> DataFr
         os.path.join(work, "chk"),
         threshold=0.5,
     )
-    q.awaitTermination()
     return store.read(DataZone.BRONZE, "corpus").select("doc_id")
 
 
@@ -452,31 +427,19 @@ def streaming_quality_admission_gate(
 
     frame = healthcare_frame(spark, sf_dir)
     work = scratch_dir("stream_qgate_")
-    src = os.path.join(work, "src")
-    os.makedirs(src)
     half = F.col("id").cast("bigint") % 2
-    frame.filter(half == 0).coalesce(1).write.parquet(
-        os.path.join(src, "b0")
-    )
-    frame.filter(half == 1).coalesce(1).write.parquet(
-        os.path.join(src, "b1")
-    )
-    t = 1_700_000_000
-    for sub, ts in (("b0", t), ("b1", t + 1000)):
-        for root, _, files in os.walk(os.path.join(src, sub)):
-            for f in files:
-                os.utime(os.path.join(root, f), (ts, ts))
     store = ZoneStore(spark, os.path.join(work, "zones"))
-    q = stream_quality_admission(
+    stream_quality_admission(
         spark,
-        src + "/*",
+        _land_in_order(
+            os.path.join(work, "src"), frame.filter(half == 0), frame.filter(half == 1)
+        ),
         frame.schema,
         store,
         DataZone.BRONZE,
         "patients_stream",
         os.path.join(work, "chk"),
     )
-    q.awaitTermination()
     return store.read(DataZone.BRONZE, "patients_stream").select(
         "id", "patient_id"
     )
@@ -519,16 +482,9 @@ def streaming_sliding_topk_event_types(
     from healthcare_data_lakehouse_spark.streaming.ingest import (
         sliding_topk_event_types,
     )
-    from healthcare_data_lakehouse_spark.tables import (
-        normalize_event_ts as prepare,
-    )
 
     return sliding_topk_event_types(
-        spark,
-        f"{sf_dir}/events.parquet",
-        scratch_dir("slidetopk_"),
-        prepare=prepare,
-        query_name=f"slide_topk_{uuid.uuid4().hex[:8]}",
+        spark, f"{sf_dir}/events.parquet", scratch_dir("slidetopk_")
     )
 
 
@@ -569,12 +525,11 @@ def streaming_static_enrichment_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from healthcare_data_lakehouse_spark.streaming.ingest import (
-        _stream_source_dir,
+        _drain_to_table,
+        _file_stream,
+        enrich_stream_with_dim,
     )
-    from healthcare_data_lakehouse_spark.tables import (
-        normalize_event_ts,
-        table,
-    )
+    from healthcare_data_lakehouse_spark.tables import table
 
     work_dir = scratch_dir("strstatic_")
     cents = F.round((F.col("value") * 100).cast("decimal(38,8)"), 0).cast(
@@ -588,30 +543,14 @@ def streaming_static_enrichment_join(
         .otherwise("low")
         .alias("tier")
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(schema).parquet(
-            _stream_source_dir(f"{sf_dir}/events.parquet", work_dir)
-        )
-    )
-    enriched = stream.withWatermark("ts", "10 minutes").join(
-        F.broadcast(static_tiers), "user_id"
+    stream = _file_stream(spark, f"{sf_dir}/events.parquet", work_dir)
+    enriched = enrich_stream_with_dim(
+        stream.withWatermark("ts", "10 minutes"), static_tiers, "user_id"
     )
     agg = enriched.groupBy(
         F.window(F.col("ts"), "1 day").alias("w"), F.col("tier")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-    name = f"strstatic_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table(name).select(
+    res = _drain_to_table(agg, work_dir, "complete").select(
         F.col("w.start").alias("window_start"), "tier", "n_events"
     )
     # exact distinct users per (window, tier) is not a streaming-supported
@@ -622,7 +561,7 @@ def streaming_static_enrichment_join(
         F.date_trunc("day", F.col("ts")).alias("window_start"), "user_id"
     )
     users = (
-        ev.join(F.broadcast(static_tiers), "user_id")
+        enrich_stream_with_dim(ev, static_tiers, "user_id")
         .groupBy("window_start", "tier")
         .agg(F.countDistinct("user_id").cast("bigint").alias("n_users"))
     )
@@ -688,11 +627,7 @@ def streaming_left_outer_interval_join(
     )
 
     return run_interval_join_stream(
-        spark,
-        f"{sf_dir}/events.parquet",
-        scratch_dir("stream_lojo_"),
-        query_name=f"lojo_result_{uuid.uuid4().hex[:8]}",
-        how="left_outer",
+        spark, f"{sf_dir}/events.parquet", scratch_dir("stream_lojo_"), how="left_outer"
     ).select("user_id", "l_ts", "click_id", "r_ts", "purchase_id")
 
 
@@ -741,32 +676,18 @@ def streaming_dv_forget_flow(
     )
     store = DVZoneStore(spark, os.path.join(work, "zones"))
     store.write(DataZone.SILVER, "events_dv", ev, LoadType.FULL)
-    # forget feed: two files -> two micro-batches -> two DV commits
+    # forget feed: two request writes side by side in one flat dir, so
+    # the one-file-per-trigger drain applies them as separate micro-batches
+    # -> at least two DV commits
     forget = ev.filter(F.col("user_id") % 13 == 0).select("user_id")
-    landing = os.path.join(work, "landing")
-    forget.filter(F.col("user_id") % 2 == 0).distinct().write.parquet(
-        os.path.join(landing, "f0")
-    )
-    forget.filter(F.col("user_id") % 2 == 1).distinct().write.parquet(
-        os.path.join(landing, "f1")
-    )
-    # the file-source reader wants ONE flat dir; lay the two request
-    # files side by side so maxFilesPerTrigger=1 drains them as two
-    # separate micro-batches
-    flat = os.path.join(work, "requests")
-    import shutil as _sh
-
-    os.makedirs(flat, exist_ok=True)
-    for sub in ("f0", "f1"):
-        for name in os.listdir(os.path.join(landing, sub)):
-            if name.endswith(".parquet"):
-                _sh.copy(
-                    os.path.join(landing, sub, name),
-                    os.path.join(flat, f"{sub}_{name}"),
-                )
+    requests = os.path.join(work, "requests")
+    for parity in (0, 1):
+        forget.filter(F.col("user_id") % 2 == parity).distinct().write.mode(
+            "append"
+        ).parquet(requests)
     remaining = stream_forget_to_zone(
         spark,
-        flat,
+        requests,
         os.path.join(work, "w"),
         store,
         DataZone.SILVER,

@@ -2,26 +2,41 @@
 
 The reference is batch-only (SURVEY.md §2.7 — no streaming exists), so this
 module is the engine's scale extension, not parity work: a landing-zone
-file watcher that incrementally ingests into Bronze, and watermarked
-event-time aggregation for streaming Gold marts.
+file watcher that incrementally ingests into Bronze, ``foreachBatch``
+sinks into the zone store (MERGE upserts, additive Gold counts, admission
+gates, right-to-erasure), and watermarked event-time operators for
+streaming Gold marts.
 
-Design for scale:
-* File-source streaming (``maxFilesPerTrigger``) gives incremental,
-  exactly-once ingestion with checkpointing — the pattern for continuous
-  100 TB feeds.
-* ``Trigger.AvailableNow`` drains the backlog then stops, which is also
-  how tests execute deterministically.
-* Watermarks bound state for late data; tumbling windows aggregate
-  event-time KPIs with state cleanup.
+Every stream runs through one harness:
+
+* ``_file_stream`` opens a parquet file or directory as a file source with
+  the schema of its files. It is the only place that sets ``nanosAsLong``
+  and normalizes the events ``ts`` (as ``tables.table`` does for batch
+  reads); ``max_files`` caps the files per micro-batch.
+* ``_drain`` runs a writer with ``Trigger.AvailableNow``: it drains the
+  backlog and stops, so every result is deterministic and equals the
+  batch answer over the same input. A continuous deployment swaps the
+  trigger; checkpointing gives exactly-once ingestion either way.
+* ``_drain_to_table`` drains into a memory sink under a generated name and
+  returns the result frame. It drops the sink's temporary view before
+  returning, so no result outlives the frame that holds it.
+
+Watermarks bound state for late data; windowed aggregates, joins and
+dedup clean their state up as the watermark passes.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.sql.window import Window
+
+from healthcare_data_lakehouse_spark.tables import normalize_event_ts
+from healthcare_data_lakehouse_spark.zones import LoadType
 
 __all__ = [
     "stream_files_to_bronze",
@@ -50,6 +65,78 @@ def _stream_source_dir(source_parquet: str, work_dir: str) -> str:
     return src_dir
 
 
+def _file_stream(
+    spark: SparkSession, source: str, work_dir: str, max_files: int | None = None
+) -> DataFrame:
+    """Open the parquet file or directory ``source`` as a file stream with
+    the schema of its files and ``ts`` normalized (a no-op on a frame
+    without ``ts``); ``max_files`` caps the files per micro-batch."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.readStream.schema(spark.read.parquet(source).schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return normalize_event_ts(reader.parquet(_stream_source_dir(source, work_dir)))
+
+
+def _drain(writer, checkpoint: str) -> None:
+    """Run the stream ``writer`` until its source is drained, then stop."""
+    (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _drain_to_table(df: DataFrame, work_dir: str, mode: str) -> DataFrame:
+    """Drain ``df`` in output ``mode`` into a memory sink and return the
+    sink's rows. The frame keeps the sink's data; its temporary view is
+    dropped, so the session's views are as they were."""
+    name = f"drain_{uuid.uuid4().hex}"
+    _drain(
+        df.writeStream.format("memory").queryName(name).outputMode(mode),
+        os.path.join(work_dir, "chk"),
+    )
+    out = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return out
+
+
+def _drain_user_state(
+    spark: SparkSession,
+    source: str,
+    work_dir: str,
+    update,
+    output: str,
+    state: str,
+) -> DataFrame:
+    """Drain ``update`` as per-user ``applyInPandasWithState`` group state
+    over the ``user_id, value`` rows of ``source`` (update output mode) and
+    keep each user's last update: the row with the largest ``n_events``,
+    which grows with every update."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    out = (
+        _file_stream(spark, source, work_dir)
+        .select("user_id", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            update,
+            outputStructType=output,
+            stateStructType=state,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    last = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        _drain_to_table(out, work_dir, "update")
+        .withColumn("rn", F.row_number().over(last))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 def stream_files_to_bronze(
     spark: SparkSession,
     source_dir: str,
@@ -58,24 +145,21 @@ def stream_files_to_bronze(
     checkpoint_dir: str,
     fmt: str = "parquet",
     max_files_per_trigger: int = 100,
-):
-    """Incrementally ingest files landing in ``source_dir`` into a Bronze
-    parquet table. Returns the started StreamingQuery (AvailableNow —
-    drains the current backlog and stops; swap the trigger for a
-    continuous deployment)."""
-    reader = (
+) -> None:
+    """Incrementally ingest the files landed in ``source_dir`` into a
+    Bronze parquet table, stamping each row with ``_ingested_at``, and
+    return once the backlog is drained."""
+    stream = (
         spark.readStream.format(fmt)
         .schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(source_dir)
     )
-    stamped = reader.withColumn("_ingested_at", F.current_timestamp())
-    return (
-        stamped.writeStream.format("parquet")
-        .option("path", bronze_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        stream.withColumn("_ingested_at", F.current_timestamp())
+        .writeStream.format("parquet")
+        .option("path", bronze_dir),
+        checkpoint_dir,
     )
 
 
@@ -116,48 +200,26 @@ def run_stream_to_table(
     source_parquet: str,
     work_dir: str,
     window: str = "1 hour",
-    prepare=None,
-    query_name: str = "stream_result",
 ) -> DataFrame:
     """Execute the windowed-count pipeline AS A STREAM over a bounded
     parquet source (AvailableNow) and return the materialized result.
 
-    Deterministic harness for tests and oracle compares: the stream drains
-    completely, so the final table equals the batch answer over the same
-    input. Complete output mode + memory sink so no window is withheld
-    behind the watermark at end-of-stream (a bounded-drain artifact; a
-    continuous deployment uses append mode + a file/Kafka sink).
-
-    ``prepare`` optionally rewrites the raw stream DataFrame (e.g. the
-    events fixture needs its nanosecond ts converted) before aggregation.
+    The stream drains completely, so the final table equals the batch
+    answer over the same input. Complete output mode, so no window is
+    withheld behind the watermark at end-of-stream (a bounded-drain
+    artifact; a continuous deployment uses append mode and a file or
+    Kafka sink).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = spark.readStream.schema(schema).parquet(
-        _stream_source_dir(source_parquet, work_dir)
+    out = windowed_event_counts(
+        _file_stream(spark, source_parquet, work_dir), window=window
     )
-    if prepare is not None:
-        stream = prepare(stream)
-    out = windowed_event_counts(stream, window=window)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option(
-            "checkpointLocation", os.path.join(work_dir, "chk")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_table(out, work_dir, "complete")
 
 
 def stateful_user_totals(
     spark: SparkSession,
     source_parquet: str,
     work_dir: str,
-    query_name: str = "stateful_result",
 ) -> DataFrame:
     """Custom stateful streaming operator: per-user running totals held in
     ``applyInPandasWithState`` group state across micro-batches.
@@ -174,18 +236,8 @@ def stateful_user_totals(
     which is what the oracle asserts.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.window import Window
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(_stream_source_dir(source_parquet, work_dir))
-        .select("user_id", "value")
-    )
-
-    def update(key, pdfs, state: GroupState):
+    def update(key, pdfs, state):
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
@@ -195,32 +247,14 @@ def stateful_user_totals(
             {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
         )
 
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    return _drain_user_state(
+        spark,
+        source_parquet,
+        work_dir,
         update,
-        outputStructType="user_id bigint, n_events bigint, sum_value double",
-        stateStructType="n bigint, total double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # last update per key = the row with the (monotone) max event count
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(query_name)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id", "n_events", F.round("sum_value", 2).alias("sum_value")
-        )
-    )
+        "user_id bigint, n_events bigint, sum_value double",
+        "n bigint, total double",
+    ).select("user_id", "n_events", F.round("sum_value", 2).alias("sum_value"))
 
 
 def enrich_stream_with_dim(
@@ -266,7 +300,6 @@ def stream_upsert_to_zone(
     zone,
     dataset: str,
     id_col: str = "event_id",
-    prepare=None,
 ):
     """Continuous MERGE: foreachBatch upsert of each micro-batch into a
     zone table keyed by ``id_col``.
@@ -277,28 +310,15 @@ def stream_upsert_to_zone(
     classic exactly-once upsert recipe (maps to ``MERGE INTO`` on Delta in
     deployment; locally the parquet ZoneStore rewrite).
     """
-    from healthcare_data_lakehouse_spark.zones import LoadType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(_stream_source_dir(source_parquet, work_dir))
-    )
-    if prepare is not None:
-        stream = prepare(stream)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         store.write(zone, dataset, batch_df, LoadType.MERGE, id_field=id_col)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _file_stream(spark, source_parquet, work_dir, max_files=1)
+        .writeStream.foreachBatch(upsert),
+        os.path.join(work_dir, "chk"),
     )
-    q.awaitTermination()
     return store.read(zone, dataset)
 
 
@@ -352,53 +372,29 @@ def run_interval_join_stream(
     spark: SparkSession,
     source_parquet: str,
     work_dir: str,
-    query_name: str = "interval_join_result",
     max_delay: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Run the click->purchase interval join AS two real streams over the
     bounded events source, drained with AvailableNow, and return the
     materialized result table."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    src_dir = _stream_source_dir(source_parquet, work_dir)
 
-    def typed_stream() -> DataFrame:
-        from healthcare_data_lakehouse_spark.tables import normalize_event_ts
-
-        return normalize_event_ts(spark.readStream.schema(schema).parquet(src_dir))
-
-    clicks = (
-        typed_stream()
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("ts").alias("l_ts"),
-            F.col("event_id").alias("click_id"),
+    # each side opens its own source: two projections of one stream make a
+    # self-join whose key columns Spark cannot tell apart (wrong outer rows)
+    def side(event_type: str, ts: str, id_col: str) -> DataFrame:
+        return (
+            _file_stream(spark, source_parquet, work_dir)
+            .filter(F.col("event_type") == event_type)
+            .select("user_id", F.col("ts").alias(ts), F.col("event_id").alias(id_col))
         )
-    )
-    purchases = (
-        typed_stream()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("ts").alias("r_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-    )
+
     joined = join_streams_within_interval(
-        clicks, purchases, max_delay=max_delay, how=how
+        side("click", "l_ts", "click_id"),
+        side("purchase", "r_ts", "purchase_id"),
+        max_delay=max_delay,
+        how=how,
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_table(joined, work_dir, "append")
 
 
 def stream_incremental_gold_counts(
@@ -419,22 +415,11 @@ def stream_incremental_gold_counts(
     from the checkpoint and the aggregate is never recomputed from
     scratch. At 100 TB this is how continuously-updated Gold marts avoid
     full-history reaggregation."""
-    from pyspark.sql import functions as FX
-
-    from healthcare_data_lakehouse_spark.zones import LoadType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(_stream_source_dir(source_parquet, work_dir))
-    )
 
     def merge_partials(batch_df: DataFrame, batch_id: int) -> None:
         partial = batch_df.groupBy(key_col).agg(
-            FX.count(FX.lit(1)).alias("n_events"),
-            FX.sum("value").alias("sum_value"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value").alias("sum_value"),
         )
         existing = store.read(zone, dataset)
         if existing is not None:
@@ -442,19 +427,17 @@ def stream_incremental_gold_counts(
                 existing.unionByName(partial)
                 .groupBy(key_col)
                 .agg(
-                    FX.sum("n_events").alias("n_events"),
-                    FX.sum("sum_value").alias("sum_value"),
+                    F.sum("n_events").alias("n_events"),
+                    F.sum("sum_value").alias("sum_value"),
                 )
             )
         store.write(zone, dataset, partial, LoadType.FULL)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_partials)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _file_stream(spark, source_parquet, work_dir, max_files=1)
+        .writeStream.foreachBatch(merge_partials),
+        os.path.join(work_dir, "chk"),
     )
-    q.awaitTermination()
     return store.read(zone, dataset)
 
 
@@ -462,7 +445,6 @@ def stream_stateful_anomaly_monitor(
     spark,
     source_parquet: str,
     work_dir: str,
-    query_name: str = "anomaly_monitor",
 ):
     """Streaming per-key anomaly detection with Welford state.
 
@@ -478,22 +460,9 @@ def stream_stateful_anomaly_monitor(
     State is O(3 doubles) per key: a 100 TB stream with 1e9 users carries
     ~24 GB of state sharded across the cluster's state stores.
     """
-    import os
-
     import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401  (parity w/ siblings)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.window import Window
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(_stream_source_dir(source_parquet, work_dir))
-        .select("user_id", "value")
-    )
-
-    def update(key, pdfs, state: GroupState):
+    def update(key, pdfs, state):
         n, mean, m2, flagged = (
             state.get if state.exists else (0, 0.0, 0.0, 0)
         )
@@ -518,31 +487,14 @@ def stream_stateful_anomaly_monitor(
             }
         )
 
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    return _drain_user_state(
+        spark,
+        source_parquet,
+        work_dir,
         update,
-        outputStructType=(
-            "user_id bigint, n_events bigint, mean_value double, "
-            "m2 double, n_flagged bigint"
-        ),
-        stateStructType="n bigint, mean double, m2 double, flagged bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(work_dir, "chk_anom"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(query_name)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "mean_value", "m2", "n_flagged")
+        "user_id bigint, n_events bigint, mean_value double, m2 double, "
+        "n_flagged bigint",
+        "n bigint, mean double, m2 double, flagged bigint",
     )
 
 
@@ -587,142 +539,27 @@ def run_session_stream(
     source_parquet: str,
     work_dir: str,
     gap: str = "10 minutes",
-    prepare=None,
-    query_name: str = "stream_sessions",
 ) -> DataFrame:
     """Drain the session-window pipeline as an AvailableNow stream over a
-    bounded parquet source; complete mode + memory sink so the final
-    table equals the batch answer (same harness as run_stream_to_table)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = spark.readStream.schema(schema).parquet(
-        _stream_source_dir(source_parquet, work_dir)
+    bounded parquet source; complete mode, so the final table equals the
+    batch answer (same harness as run_stream_to_table)."""
+    out = session_window_counts(
+        _file_stream(spark, source_parquet, work_dir), gap=gap
     )
-    if prepare is not None:
-        stream = prepare(stream)
-    out = session_window_counts(stream, gap=gap)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(work_dir, "chk_sess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_table(out, work_dir, "complete")
 
 
-def stateful_totals_tws(
-    spark: SparkSession,
-    source_parquet: str,
-    work_dir: str,
-    query_name: str = "tws_result",
-) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-state API that supersedes ``applyInPandasWithState``
-    (SPARK-46815): a ``StatefulProcessor`` object with named, composable
-    state variables (ValueState here; ListState/MapState/timers available),
-    instead of one monolithic state tuple threaded through a function.
-    Requires the RocksDB state store provider, which is also the right
-    production choice at 100 TB state (off-heap, incremental snapshots).
-
-    Same drain-and-compare contract as :func:`stateful_user_totals`: the
-    final update per key equals the batch aggregate.
-
-    ENVIRONMENT GATE: the transformWithState protocol speaks protobuf
-    between the JVM and the Python stateful-processor worker; without
-    ``google.protobuf`` installed the worker crashes at init, so this
-    raises ``NotImplementedError`` up front with the dependency named.
-    ``applyInPandasWithState`` (:func:`stateful_user_totals`) covers the
-    same semantics protobuf-free and is what the catalog verifies here.
-    """
-    import importlib.util
-
-    if importlib.util.find_spec("google") is None or importlib.util.find_spec(
-        "google.protobuf"
-    ) is None:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(google.protobuf) for the JVM<->Python state protocol; "
-            "install protobuf or use stateful_user_totals "
-            "(applyInPandasWithState) which needs no extra dependency"
-        )
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.window import Window
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                self._totals.get() if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        schema = spark.read.parquet(source_parquet).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(_stream_source_dir(source_parquet, work_dir))
-            .select("user_id", "value")
-        )
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType="user_id bigint, n_events bigint, sum_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work_dir, "chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        spark.table(query_name)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id", "n_events", F.round("sum_value", 2).alias("sum_value")
-        )
+def _drain_gate(
+    spark: SparkSession, source_dir: str, schema: StructType, checkpoint_dir: str, gate
+) -> None:
+    """Drain the files under ``source_dir`` through the ``foreachBatch``
+    function ``gate``, one file per micro-batch in file-mtime order."""
+    _drain(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(source_dir)
+        .writeStream.foreachBatch(gate),
+        checkpoint_dir,
     )
 
 
@@ -757,17 +594,10 @@ def stream_neardup_admission(
     candidate-bounded probe join — never a rescan of the corpus text.
 
     Each batch also appends one audit row (batch_id, n_in, n_admitted,
-    n_rejected) to ``<dataset>_audit``. Returns the started AvailableNow
-    StreamingQuery.
+    n_rejected) to ``<dataset>_audit``. Returns once ``source_dir`` is
+    drained.
     """
     from healthcare_data_lakehouse_spark.functions import dedup as D
-    from healthcare_data_lakehouse_spark.zones import LoadType
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         # n_in is observed by the first action over the batch (at the
@@ -806,15 +636,10 @@ def stream_neardup_admission(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drain_gate(spark, source_dir, schema, checkpoint_dir, gate)
 
 
-def quality_admission_condition() -> "Column":
+def quality_admission_condition() -> Column:
     """Row-local admission predicate for streaming quality gating: TRUE
     when the record FAILS any rule that can be decided from the row alone
     — completeness of (id, patient_id, birth_date), patient-id format
@@ -870,14 +695,8 @@ def stream_quality_admission(
     exactly what the oracle computes. At scale this is the
     bronze-admission topology: the gate is a narrow filter fused into the
     micro-batch scan, the quarantine write is the only extra sink, and no
-    state store is involved at all."""
-    from healthcare_data_lakehouse_spark.zones import LoadType
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
+    state store is involved at all. Returns once ``source_dir`` is
+    drained."""
     fail = quality_admission_condition()
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
@@ -909,12 +728,7 @@ def stream_quality_admission(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drain_gate(spark, source_dir, schema, checkpoint_dir, gate)
 
 
 def sliding_topk_event_types(
@@ -924,8 +738,6 @@ def sliding_topk_event_types(
     window: str = "1 hour",
     slide: str = "15 minutes",
     k: int = 3,
-    prepare=None,
-    query_name: str = "sliding_topk_result",
 ) -> DataFrame:
     """SLIDING-window event-type counts as a stream, then top-k per window.
 
@@ -936,34 +748,17 @@ def sliding_topk_event_types(
     a batch post-pass — exactly the two-phase shape a production job uses
     (stream maintains counts; a cheap downstream consumer ranks).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = spark.readStream.schema(schema).parquet(
-        _stream_source_dir(source_parquet, work_dir)
-    )
-    if prepare is not None:
-        stream = prepare(stream)
     agg = (
-        stream.withWatermark("ts", "10 minutes")
+        _file_stream(spark, source_parquet, work_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(
             F.window(F.col("ts"), window, slide).alias("w"),
             F.col("event_type"),
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = spark.table(query_name)
-    from pyspark.sql.window import Window as W
-
-    rank_w = W.partitionBy("w").orderBy(
+    res = _drain_to_table(agg, work_dir, "complete")
+    rank_w = Window.partitionBy("w").orderBy(
         F.col("n_events").desc(), F.col("event_type")
     )
     return (
@@ -996,22 +791,13 @@ def stream_forget_to_zone(
     exactly-once in effect. Compaction (``compact``, whose one rewrite
     retires the vectors, or ``purge_dv``) runs on the maintenance
     schedule, not in the hot erasure path."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(source_parquet).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(_stream_source_dir(source_parquet, work_dir))
-    )
 
     def forget(batch_df: DataFrame, batch_id: int) -> None:
         store.delete_keys_dv(zone, dataset, batch_df, key_col=key_col)
 
-    q = (
-        stream.writeStream.foreachBatch(forget)
-        .option("checkpointLocation", os.path.join(work_dir, "chk"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _file_stream(spark, source_parquet, work_dir, max_files=1)
+        .writeStream.foreachBatch(forget),
+        os.path.join(work_dir, "chk"),
     )
-    q.awaitTermination()
     return store.read(zone, dataset)

@@ -1021,7 +1021,12 @@ class ZoneStore:
         retention window) are reclaimed — a racing vacuum must never
         delete a healthy in-flight stage or race ``rmtree`` against a
         finishing write (which would publish a commit with missing part
-        files)."""
+        files). The same window guards unreferenced commit dirs and
+        vectors numbered above the version vacuum read: one may be a
+        concurrent publish whose manifest write is still to come, and
+        one a crashed publish left is reclaimed once it is old enough.
+        The trimmed manifest is revalidated before it is written, and
+        nothing is deleted until it is."""
         import time
 
         path = self.dataset_path(zone, dataset)
@@ -1036,33 +1041,40 @@ class ZoneStore:
         for v in keep_versions:
             live.update(history[str(v)])
             live_dvs.update(manifest.get("dv_history", {}).get(str(v), []))
-        dv_root = os.path.join(path, self.DV_DIR)
-        dead_dvs = [
-            os.path.join(dv_root, n)
-            for n in (os.listdir(dv_root) if os.path.isdir(dv_root) else [])
-            if n not in live_dvs
+
+        def young(full: str) -> bool:
+            try:
+                return time.time() - os.path.getmtime(full) < staging_retention_sec
+            except OSError:
+                return True  # concurrently published/removed
+
+        def unreferenced(root: str, prefix: str, referenced: set[str]):
+            for entry in os.listdir(root) if os.path.isdir(root) else []:
+                full, number = os.path.join(root, entry), entry[len(prefix):]
+                publishing = (
+                    number.isdigit()
+                    and int(number) > manifest["version"]
+                    and young(full)
+                )
+                if (
+                    entry.startswith(prefix)
+                    and entry not in referenced
+                    and os.path.isdir(full)
+                    and not publishing
+                ):
+                    yield full
+
+        # staging dirs orphaned by a writer that crashed mid-stage are
+        # never referenced by any manifest
+        doomed = [
+            full
+            for full in unreferenced(path, "_staging_", set())
+            if not young(full)
         ]
-        removed = 0
-        for entry in list(os.listdir(path)):
-            full = os.path.join(path, entry)
-            if not os.path.isdir(full):
-                continue
-            # also reclaim staging dirs orphaned by a writer that crashed
-            # mid-stage (they are never referenced by any manifest) — but
-            # only past the retention window: a young staging dir may be
-            # an in-flight concurrent write
-            if entry.startswith("_staging_"):
-                try:
-                    age = time.time() - os.path.getmtime(full)
-                except OSError:
-                    continue  # concurrently published/removed
-                if age < staging_retention_sec:
-                    continue
-                shutil.rmtree(full, ignore_errors=True)
-                removed += 1
-            elif entry.startswith("c") and entry not in live:
-                shutil.rmtree(full, ignore_errors=True)
-                removed += 1
+        doomed += unreferenced(path, "c", live)
+        doomed_dvs = list(
+            unreferenced(os.path.join(path, self.DV_DIR), "dv", live_dvs)
+        )
         for key in ("history", "metrics", "dv_history"):
             per_version = manifest.get(key, {})
             manifest[key] = {
@@ -1073,11 +1085,12 @@ class ZoneStore:
         manifest["schemas"] = {
             c: e for c, e in manifest.get("schemas", {}).items() if c in live
         }
+        self._check_unchanged(path, manifest["version"], "VACUUM")
         self._write_manifest(path, manifest)
-        for d in dead_dvs:
+        for d in doomed + doomed_dvs:
             shutil.rmtree(d, ignore_errors=True)
         return {
-            "removed_commits": removed,
+            "removed_commits": len(doomed),
             "retained_versions": len(keep_versions),
         }
 

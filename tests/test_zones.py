@@ -904,6 +904,55 @@ def test_vacuum_spares_young_staging_dirs(spark, tmp_path):
     assert not os.path.exists(young)
 
 
+def _ten_rows(spark, start=0, n=10):
+    return spark.range(start, start + n).select(
+        F.col("id").cast("string").alias("id"), F.lit("a").alias("v")
+    )
+
+
+def test_vacuum_keeps_a_commit_landing_during_vacuum(spark, store, monkeypatch):
+    # vacuum rewrites the manifest from the snapshot it read at entry; a
+    # commit landing in between must neither be deleted nor dropped from
+    # the manifest: vacuum revalidates and raises instead
+    from healthcare_data_lakehouse_spark.zones import ConcurrentModificationError
+
+    z = DataZone.SILVER
+    for _ in range(3):
+        store.write(z, "t", _ten_rows(spark), LoadType.FULL)  # v1..v3
+    entry_read = store._read_manifest
+
+    def read_then_append(path):
+        manifest = entry_read(path)
+        monkeypatch.setattr(store, "_read_manifest", entry_read)
+        store.write(z, "t", _ten_rows(spark, 10, 5), LoadType.APPEND)  # v4
+        return manifest
+
+    monkeypatch.setattr(store, "_read_manifest", read_then_append)
+    with pytest.raises(ConcurrentModificationError, match="VACUUM"):
+        store.vacuum(z, "t", retain_last=1)
+    path = store.dataset_path(z, "t")
+    assert store._read_manifest(path)["commits"] == ["c000003", "c000004"]
+    assert store.read(z, "t").count() == 15
+
+
+def test_vacuum_spares_a_fresh_unreferenced_commit_dir(spark, store):
+    # a c{V+1} dir the manifest does not list yet may be a publish whose
+    # manifest write is still to come; like a staging dir it is reclaimed
+    # only once it is older than the retention window
+    z = DataZone.SILVER
+    store.write(z, "t", _ten_rows(spark), LoadType.FULL)  # v1
+    store.write(z, "t", _ten_rows(spark), LoadType.FULL)  # v2
+    path = store.dataset_path(z, "t")
+    fresh = os.path.join(path, "c000003")
+    _ten_rows(spark, 10).coalesce(1).write.parquet(fresh)
+    store.vacuum(z, "t", retain_last=1)
+    assert os.path.isdir(fresh)
+    assert not os.path.exists(os.path.join(path, "c000001"))
+    store.vacuum(z, "t", retain_last=1, staging_retention_sec=0.0)
+    assert not os.path.exists(fresh)
+    assert store.read(z, "t").count() == 10
+
+
 def test_publish_commit_reraises_non_conflict_oserror(
     spark, tmp_path, monkeypatch
 ):
