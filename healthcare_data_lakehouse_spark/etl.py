@@ -140,12 +140,10 @@ class HealthcareETLManager:
         spark: SparkSession,
         warehouse_root: str,
         lineage_tracker: LineageTracker | None = None,
-        quarantine_cap: int | None = 100,
     ):
         self.spark = spark
         self.store = ZoneStore(spark, warehouse_root)
         self.lineage_tracker = lineage_tracker or LineageTracker()
-        self.quarantine_cap = quarantine_cap
         self._batch_ts = _utcnow().isoformat()
         self.transformations: TransformRegistry = standard_registry(self._batch_ts)
 
@@ -197,9 +195,7 @@ class HealthcareETLManager:
             # Quality gate: one fused aggregation pass (quality.py).
             result.status = ETLStatus.QUALITY_CHECK
             validator = DataQualityValidator(
-                dataset_name=config.source_name,
-                id_field="id",
-                quarantine_cap=self.quarantine_cap,
+                dataset_name=config.source_name, id_field="id"
             )
             report = validator.validate(
                 transformed,
@@ -211,22 +207,17 @@ class HealthcareETLManager:
 
             if not report.promotion_eligible:
                 if config.enable_quarantine:
-                    # Split: quarantined rows out, remainder promoted
-                    # WITHOUT re-validation (reference :281-309). A row
-                    # whose condition is NULL lands in neither branch.
-                    if report.quarantine_condition is not None:
-                        # Exact predicate split (scalable path, no driver ids).
-                        cond = report.quarantine_condition
-                        marked = transformed.withColumn("__q", cond).persist()
-                        cached.append(marked)
-                        quarantined = marked.filter(F.col("__q")).drop("__q")
-                        passed = marked.filter(~F.col("__q")).drop("__q")
-                    else:
-                        ids = report.quarantine_records
-                        key = F.coalesce(F.col("id").cast("string"), F.lit("None")) \
-                            if "id" in transformed.columns else F.lit("")
-                        quarantined = transformed.filter(key.isin(ids))
-                        passed = transformed.filter(~key.isin(ids))
+                    # Split: rows failing a FAILED rule out, remainder
+                    # promoted WITHOUT re-validation (reference :281-309).
+                    # The condition is never NULL, so every row lands in
+                    # exactly one branch; marking it once keeps the two
+                    # filters from evaluating it (and its window) twice.
+                    marked = transformed.withColumn(
+                        "__q", report.quarantine_condition
+                    ).persist()
+                    cached.append(marked)
+                    quarantined = marked.filter(F.col("__q")).drop("__q")
+                    passed = marked.filter(~F.col("__q")).drop("__q")
                     result.records_quarantined = self.store.write_quarantine(
                         config.job_id,
                         quarantined,

@@ -503,15 +503,6 @@ def containment_pairs(
     )
 
 
-def _signature_from_shingles(sh: DataFrame, id_col: str) -> DataFrame:
-    h = token_hash48(F.col("shingle"))
-    aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(MINHASH_PERMS)
-    ]
-    return sh.groupBy(F.col("sid").alias(id_col)).agg(*aggs)
-
-
 def minhash_signature(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
@@ -764,19 +755,6 @@ def lsh_pairs_and_signatures(
         *[F.col(f"mh_{j}") for j in range(len(MINHASH_PERMS))],
     )
     return pairs, sig
-
-
-def _signature_table(sh: DataFrame) -> DataFrame:
-    """Fused minhash-signature + shingle-set-size aggregate over a shingle
-    table (one groupBy — the corpus aggregates once, not twice)."""
-    h = token_hash48(F.col("shingle"))
-    return sh.groupBy(F.col("sid")).agg(
-        F.count(F.lit(1)).alias("sz"),
-        *[
-            F.min((F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"mh_{j}")
-            for j, (a, b) in enumerate(MINHASH_PERMS)
-        ],
-    )
 
 
 def _bucket_table(per_doc: DataFrame) -> DataFrame:

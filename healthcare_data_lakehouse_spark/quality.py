@@ -4,10 +4,9 @@ The reference evaluates each rule as its own full pass over a Python list
 (``src/quality/data_quality.py:337-346`` — up to 8 scans). Here every rule
 contributes conditional-aggregate expressions to a single ``df.agg(...)``;
 Catalyst fuses them into one WholeStageCodegen scan regardless of rule count,
-so a validation costs one table read at any scale. Failed-id samples (capped
-at 100 per rule, reference ``data_quality.py:578``) are collected in small
-follow-up ``filter → orderBy(_ingest_order) → limit(100)`` jobs only for
-rules that actually FAILED.
+so a validation costs one table read at any scale. No row ids are collected:
+the report carries the FAILED rules' row-level failure predicates, and the
+ETL split evaluates them on the batch it already holds.
 
 Reference quirks intentionally preserved (SURVEY.md §2.3/§2.4):
 
@@ -20,18 +19,24 @@ Reference quirks intentionally preserved (SURVEY.md §2.3/§2.4):
   match (``data_quality.py:637,650``).
 * Q6 skips values ``float()`` can't coerce (``data_quality.py:789-797``).
 * Q5 lists a duplicate id once per *extra* occurrence (``:736-737``).
-* The quarantine set is the union of the CAPPED failed-id lists of FAILED
-  rules (``:354-355`` + the ``[:100]`` cap) — so >100 failures per rule
-  quarantine only the first 100. ``quarantine_cap=None`` opts into the
-  scalable exact split instead (predicate-based, no driver round-trip).
 * Empty-input conventions: Q1 -> SKIPPED score 0.0; Q2/Q3/Q4/Q6 -> score
   1.0 when nothing was checked; Q5 -> 1.0; Q8 -> 0.0 (a WARNING).
+
+Deliberate divergences in the quarantine set (SURVEY.md §2.4 A5):
+
+* There is no 100-row cap. The reference quarantines the rows whose ids
+  are in the failed-id samples of FAILED rules, each sample cut at 100
+  (``:354-355``, ``:578``), so a batch with more failures promotes the
+  rest. Here every row that fails a FAILED rule is quarantined.
+* A duplicate id quarantines only its extra occurrences in ingest order
+  (``q5_fail``). Matching on the id list, as the reference does, would
+  quarantine every row that shares the id.
 """
 
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from enum import Enum
 from typing import Any, Callable
@@ -158,7 +163,6 @@ class QualityCheckResult:
     records_checked: int
     records_passed: int
     records_failed: int
-    failed_record_ids: list[str] = dc_field(default_factory=list)
     details: str = ""
     execution_time_ms: float = 0.0
 
@@ -172,7 +176,6 @@ class QualityCheckResult:
             "records_checked": self.records_checked,
             "records_passed": self.records_passed,
             "records_failed": self.records_failed,
-            "failed_record_count": len(self.failed_record_ids),
             "details": self.details,
             "execution_time_ms": self.execution_time_ms,
         }
@@ -190,10 +193,8 @@ class QualityReport:
     overall_score: float
     overall_status: QualityStatus
     promotion_eligible: bool
-    quarantine_records: list[str]
-    #: Exact quarantine predicate (set when quarantine_cap is None); the
-    #: scalable split path — avoids materializing ids on the driver.
-    quarantine_condition: Column | None = None
+    #: True on exactly the rows that fail a FAILED rule (never NULL).
+    quarantine_condition: Column
     execution_time_ms: float = 0.0
 
     def to_dict(self) -> dict[str, Any]:
@@ -206,7 +207,6 @@ class QualityReport:
             "overall_score": self.overall_score,
             "overall_status": self.overall_status.value,
             "promotion_eligible": self.promotion_eligible,
-            "quarantine_record_count": len(self.quarantine_records),
             "execution_time_ms": self.execution_time_ms,
         }
 
@@ -252,8 +252,8 @@ class SparkQualityRule:
 
     ``agg_exprs`` returns named aggregate Columns (aliased
     ``<rule_id>__<name>``); ``summarize`` turns the fused-agg row into a
-    result; ``fail_condition`` is the row-level failure predicate used both
-    for capped failed-id sampling and the exact quarantine split. Rules
+    result; ``fail_condition`` is the row-level failure predicate that the
+    quarantine split applies when the rule FAILED. Rules
     whose logic can't be a Column (custom Python) may instead set
     ``check_fn`` (DataFrame -> QualityCheckResult) — the escape hatch costs
     its own pass, mirroring the reference's arbitrary ``check_fn``
@@ -302,7 +302,6 @@ class DataQualityValidator:
         self,
         dataset_name: str,
         id_field: str = "id",
-        quarantine_cap: int | None = 100,
         fk_checks: list[tuple[str, DataFrame, str]] | None = None,
     ):
         """``fk_checks``: optional list of (fk_col, parent_df, parent_key).
@@ -311,7 +310,6 @@ class DataQualityValidator:
         behavior (``data_quality.py:821-837``) — see SURVEY.md §2.3 Q7."""
         self.dataset_name = dataset_name
         self.id_field = id_field
-        self.quarantine_cap = quarantine_cap
         self.fk_checks = fk_checks or []
         self._required_fields: list[str] = []
         self.rules: list[SparkQualityRule] = []
@@ -658,11 +656,12 @@ class DataQualityValidator:
         target_zone: DataZone,
         required_fields: list[str] | None = None,
     ) -> QualityReport:
-        """One fused aggregation scan + capped failed-id jobs.
+        """One fused aggregation scan, no other job.
 
         Mirrors reference ``validate`` (``data_quality.py:310-419``): rules
         filtered by ``enabled`` and zone, per-rule errors degrade to
-        SKIPPED, FAILED rules contribute quarantine ids.
+        SKIPPED, FAILED rules contribute their failure predicates to
+        ``quarantine_condition``.
         """
         start = datetime.now(timezone.utc)
         self._required_fields = required_fields or []
@@ -688,8 +687,7 @@ class DataQualityValidator:
         total_records = int(row["__total_records"])
 
         results: list[QualityCheckResult] = []
-        quarantine: set[str] = set()
-        quarantine_conds: list[Column] = []
+        quarantine = F.lit(False)
 
         for rule in active:
             t0 = datetime.now(timezone.utc)
@@ -708,28 +706,14 @@ class DataQualityValidator:
                         rule.rule_id, rule.name, rule.dimension,
                         parts["status"], parts["score"],
                         parts["records_checked"], parts["records_passed"],
-                        parts["records_failed"], [], parts["details"])
+                        parts["records_failed"], parts["details"])
 
-                # Failed-id sample (cap 100) only for rules that failed —
-                # that's when the reference's quarantine consumes them.
+                # Only a FAILED rule sends its failing rows to quarantine.
                 if (result.status == QualityStatus.FAILED
                         and rule.fail_condition is not None):
                     cond = rule.fail_condition(df, self)
                     if cond is not None:
-                        if self.quarantine_cap is not None:
-                            ids = [
-                                r[0] for r in df
-                                .withColumn("__fail", cond)
-                                .filter(F.col("__fail"))
-                                .orderBy(F.col(INGEST_ORDER_COL).asc())
-                                .select(self._record_id(df))
-                                .limit(self.quarantine_cap)
-                                .collect()
-                            ]
-                            result.failed_record_ids = ids
-                            quarantine.update(ids)
-                        else:
-                            quarantine_conds.append(cond)
+                        quarantine = quarantine | cond
                 result.execution_time_ms = (
                     datetime.now(timezone.utc) - t0
                 ).total_seconds() * 1000
@@ -745,10 +729,6 @@ class DataQualityValidator:
         promotion_eligible = self._check_promotion_eligibility(
             results, overall_score, target_zone)
 
-        cond: Column | None = None
-        for c in quarantine_conds:
-            cond = c if cond is None else (cond | c)
-
         return QualityReport(
             report_id=self._generate_report_id(),
             dataset_name=self.dataset_name,
@@ -758,8 +738,7 @@ class DataQualityValidator:
             overall_score=overall_score,
             overall_status=overall_status,
             promotion_eligible=promotion_eligible,
-            quarantine_records=sorted(quarantine),
-            quarantine_condition=cond,
+            quarantine_condition=F.coalesce(quarantine, F.lit(False)),
             execution_time_ms=(
                 datetime.now(timezone.utc) - start
             ).total_seconds() * 1000,

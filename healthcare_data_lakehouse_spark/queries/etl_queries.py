@@ -326,9 +326,7 @@ def etl_run_job_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     df = healthcare_frame(spark, sf_dir)
-    mgr = HealthcareETLManager(
-        spark, scratch_dir("wh_job_"), quarantine_cap=None
-    )
+    mgr = HealthcareETLManager(spark, scratch_dir("wh_job_"))
     config = ETLJobConfig(
         job_id="silver_patients",
         source_name="patients",
@@ -365,9 +363,7 @@ def etl_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     df = healthcare_frame(spark, sf_dir)
-    mgr = HealthcareETLManager(
-        spark, scratch_dir("wh_quar_"), quarantine_cap=None
-    )
+    mgr = HealthcareETLManager(spark, scratch_dir("wh_quar_"))
     config = ETLJobConfig(
         job_id="silver_patients_q",
         source_name="patients",
@@ -934,9 +930,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 def etl_promote_zone_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_data_lakehouse_spark.etl import HealthcareETLManager
 
-    mgr = HealthcareETLManager(
-        spark, scratch_dir("wh_promote_"), quarantine_cap=None
-    )
+    mgr = HealthcareETLManager(spark, scratch_dir("wh_promote_"))
     src = table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 4 == 0).select(
         F.col("c_custkey").alias("id"),
         F.col("c_name").alias("name"),

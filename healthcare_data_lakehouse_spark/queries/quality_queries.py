@@ -62,7 +62,7 @@ def _validator_rows(
     spark: SparkSession, sf_dir: str, zone: DataZone
 ) -> DataFrame:
     df = healthcare_frame(spark, sf_dir)
-    validator = DataQualityValidator("patients", id_field="id", quarantine_cap=None)
+    validator = DataQualityValidator("patients", id_field="id")
     report = validator.validate(df, zone, required_fields=REQUIRED)
     rows = [
         (
@@ -292,7 +292,7 @@ def quality_validate_bronze(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quality_promotion_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = healthcare_frame(spark, sf_dir)
-    validator = DataQualityValidator("patients", id_field="id", quarantine_cap=None)
+    validator = DataQualityValidator("patients", id_field="id")
     report = validator.validate(df, DataZone.SILVER, required_fields=REQUIRED)
     schema = StructType([
         StructField("total_records", LongType()),
@@ -352,7 +352,7 @@ def quality_custom_rule_ssn_plaintext(spark: SparkSession, sf_dir: str) -> DataF
     )
 
     df = healthcare_frame(spark, sf_dir)
-    validator = DataQualityValidator("patients", id_field="id", quarantine_cap=None)
+    validator = DataQualityValidator("patients", id_field="id")
 
     SSN_RE = "^[0-9]{3}-[0-9]{2}-[0-9]{4}$"
 
@@ -449,7 +449,6 @@ def quality_fk_integrity_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     validator = DataQualityValidator(
         "gold_orders",
         id_field="o_orderkey",
-        quarantine_cap=None,
         fk_checks=[("o_custkey", customer, "c_custkey")],
     )
     report = validator.validate(gold, DataZone.GOLD)
@@ -759,7 +758,7 @@ def quality_consistency_rule_discharge(
     from healthcare_data_lakehouse_spark.transforms import DATE_FORMATS
 
     df = healthcare_frame(spark, sf_dir)
-    validator = DataQualityValidator("patients", id_field="id", quarantine_cap=None)
+    validator = DataQualityValidator("patients", id_field="id")
 
     def parsed(col: str) -> Column:
         c = F.col(col)

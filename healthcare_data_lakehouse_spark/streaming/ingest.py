@@ -355,17 +355,24 @@ def join_streams_within_interval(
 
     The same plan runs unchanged on batch frames (no watermark applied),
     which is what the DuckDB oracle compares against.
+
+    The right key is renamed before the join and dropped by that name
+    after it: when both sides are projections of one frame, ``right[key]``
+    cannot be told apart from ``left[key]``, and dropping it could drop
+    the left key instead.
     """
     if left.isStreaming:
         left = left.withWatermark(left_ts, watermark)
     if right.isStreaming:
         right = right.withWatermark(right_ts, watermark)
+    right_key = f"__right_{key}"
+    right = right.withColumnRenamed(key, right_key)
     cond = (
-        (left[key] == right[key])
+        (left[key] == right[right_key])
         & (right[right_ts] >= left[left_ts])
         & (right[right_ts] <= left[left_ts] + F.expr(f"INTERVAL {max_delay}"))
     )
-    return left.join(right, cond, how).drop(right[key])
+    return left.join(right, cond, how).drop(right_key)
 
 
 def run_interval_join_stream(
@@ -379,8 +386,8 @@ def run_interval_join_stream(
     bounded events source, drained with AvailableNow, and return the
     materialized result table."""
 
-    # each side opens its own source: two projections of one stream make a
-    # self-join whose key columns Spark cannot tell apart (wrong outer rows)
+    # each side is its own file stream over the source; the join renames
+    # the right key, so the sides' user_id columns never collide
     def side(event_type: str, ts: str, id_col: str) -> DataFrame:
         return (
             _file_stream(spark, source_parquet, work_dir)

@@ -6,6 +6,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from healthcare_data_lakehouse_spark.etl import (
     ETLJobConfig,
@@ -13,13 +14,12 @@ from healthcare_data_lakehouse_spark.etl import (
     HealthcareETLManager,
 )
 from healthcare_data_lakehouse_spark.zones import DataZone, LoadType
+from tests.test_zones_commit import _jobs, staged_jobs  # noqa: F401
 
 
 @pytest.fixture()
 def mgr(spark):
-    return HealthcareETLManager(
-        spark, tempfile.mkdtemp(prefix="wh_test_"), quarantine_cap=None
-    )
+    return HealthcareETLManager(spark, tempfile.mkdtemp(prefix="wh_test_"))
 
 
 def clean_rows(spark):
@@ -79,6 +79,84 @@ def test_dirty_job_quarantines_and_promotes_rest(spark, mgr):
     q = mgr.get_quarantined("j2")
     assert q.count() == 5
     assert set(r._quarantine_reason for r in q.collect()) == {"failed"}
+
+
+def patient_rows(spark, n, bad):
+    """``n`` clean rows, except that the ids in ``bad`` lack ``patient_id``."""
+    return spark.createDataFrame(
+        [(str(i), None if i in bad else f"MRN{i:09d}", "1990-01-02", 40.0, 70.0)
+         for i in range(n)],
+        "id string, patient_id string, birth_date string, "
+        "age double, heart_rate double",
+    )
+
+
+def merge_config(job_id):
+    return ETLJobConfig(
+        job_id=job_id, source_name=job_id, target_zone=DataZone.SILVER,
+        load_type=LoadType.MERGE, required_fields=["patient_id"],
+    )
+
+
+def test_every_failing_row_is_quarantined_past_100(spark, mgr):
+    # more failures than the reference's 100-id sample per rule
+    batch = patient_rows(spark, 1000, {i for i in range(1000) if i % 20 < 3})
+    result = mgr.run_job(merge_config("big"), batch)
+    assert result.status == ETLStatus.COMPLETED, result.error_message
+    assert (result.records_read, result.records_quarantined,
+            result.records_written) == (1000, 150, 850)
+    assert mgr.get_quarantined("big").count() == 150
+    silver = mgr.get_zone_data(DataZone.SILVER, "big")
+    assert silver.count() == 850
+    assert silver.filter(F.col("patient_id").isNull()).count() == 0
+
+
+def test_failed_rule_starts_no_job_of_its_own(spark, mgr, staged_jobs):
+    """Outside its staged writes, run_job starts only the fused
+    validation's jobs, as many for a batch with a FAILED rule as for a
+    clean one: the failing rows leave by predicate, not by collected ids."""
+
+    def jobs_outside_writes(job_id, bad):
+        staged_jobs.update(jobs=0, writes=0)
+        first = _jobs(spark)
+        result = mgr.run_job(merge_config(job_id), patient_rows(spark, 300, bad))
+        assert result.status == ETLStatus.COMPLETED, result.error_message
+        assert result.records_quarantined == len(bad)
+        return _jobs(spark) - first - staged_jobs["jobs"]
+
+    clean = jobs_outside_writes("clean", set())
+    assert staged_jobs["writes"] == 1
+    dirty = jobs_outside_writes("dirty", set(range(0, 300, 10)))
+    assert staged_jobs["writes"] == 2
+    assert mgr.get_quarantined("dirty").count() == 30
+    assert dirty == clean
+
+
+def test_quarantine_condition_is_never_null(spark):
+    """A row on which a FAILED rule's predicate is NULL is promoted, so
+    every row lands in exactly one branch of the split."""
+    from healthcare_data_lakehouse_spark.quality import (
+        DataQualityValidator,
+        QualityDimension,
+        QualityStatus,
+        SparkQualityRule,
+    )
+
+    df = spark.createDataFrame([("1", "ok"), ("2", None), ("3", "bad")],
+                               "id string, v string")
+    v = DataQualityValidator("t")
+    v.add_rule(SparkQualityRule(
+        "C001", "v_not_bad", "", QualityDimension.VALIDITY, "critical",
+        [DataZone.SILVER],
+        agg_exprs=lambda d, _: [F.count(F.lit(1)).alias("C001__total")],
+        summarize=lambda row, _: dict(
+            status=QualityStatus.FAILED, score=0.0, records_checked=3,
+            records_passed=2, records_failed=1, details=""),
+        fail_condition=lambda d, _: F.col("v") == "bad",
+    ))
+    report = v.validate(df, DataZone.SILVER, required_fields=["id"])
+    flags = df.select("id", report.quarantine_condition.alias("q")).collect()
+    assert sorted(map(tuple, flags)) == [("1", False), ("2", False), ("3", True)]
 
 
 def test_quarantine_disabled_fails_job(spark, mgr):

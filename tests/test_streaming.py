@@ -268,11 +268,8 @@ def test_stream_upsert_merge_idempotent(spark):
     assert out2.filter(F.col("event_id") == "5").collect()[0]["val"] == "v1"
 
 
-def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
-    from healthcare_data_lakehouse_spark.streaming.ingest import (
-        join_streams_within_interval,
-        run_interval_join_stream,
-    )
+def _click_purchase_sides(spark, sf_dir):
+    """Click and purchase sides, both projections of one events frame."""
     from healthcare_data_lakehouse_spark.tables import table
 
     ev = table(spark, sf_dir, "events")
@@ -282,6 +279,16 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("r_ts"), F.col("event_id").alias("purchase_id")
     )
+    return clicks, purchases
+
+
+def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
+    from healthcare_data_lakehouse_spark.streaming.ingest import (
+        join_streams_within_interval,
+        run_interval_join_stream,
+    )
+
+    clicks, purchases = _click_purchase_sides(spark, sf_dir)
     expected = sorted(
         (r.click_id, r.purchase_id)
         for r in join_streams_within_interval(clicks, purchases).collect()
@@ -292,6 +299,22 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
     got = sorted((r.click_id, r.purchase_id) for r in got_df.collect())
     assert got == expected
     assert len(got) > 0
+
+
+def test_left_outer_interval_join_of_one_frame_keeps_the_click_user(spark, sf_dir):
+    from healthcare_data_lakehouse_spark.streaming.ingest import (
+        join_streams_within_interval,
+    )
+
+    clicks, purchases = _click_purchase_sides(spark, sf_dir)
+    user_of = {r.click_id: r.user_id for r in clicks.collect()}
+    rows = join_streams_within_interval(clicks, purchases, how="left_outer").collect()
+    assert rows[0].__fields__ == ["user_id", "l_ts", "click_id", "r_ts", "purchase_id"]
+    assert {r.click_id for r in rows} == set(user_of)
+    assert any(r.purchase_id is None for r in rows)
+    for r in rows:
+        assert r.user_id is not None, r
+        assert r.user_id == user_of[r.click_id], r
 
 
 def test_stream_incremental_gold_counts_equals_batch(spark, sf_dir):

@@ -356,7 +356,7 @@ def test_commit_starts_only_its_write_jobs(spark, tmp_path, staged_jobs, op):
 
 # ------------------------------------------------------------ run_job cache
 def test_run_job_releases_its_cached_frames(spark, tmp_path):
-    mgr = HealthcareETLManager(spark, str(tmp_path), quarantine_cap=None)
+    mgr = HealthcareETLManager(spark, str(tmp_path))
     rows = [(str(i), f"MRN{i:09d}" if i % 5 else None, "1990-01-02", 40.0, 70.0)
             for i in range(25)]
     batch = spark.createDataFrame(
