@@ -757,7 +757,7 @@ def load_zone_map_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "strings). Zero cost: the value is constant per scan split, no join.",
 )
 def source_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", F.col("_metadata.file_name").alias("source_file"))
         .groupBy("source_file")

@@ -2,14 +2,30 @@
 
 ``load`` returns a dict of DataFrames; reads stay lazy so downstream filters
 and projections push into the Parquet scan.
+
+``table`` keeps a schema memo, the fixture analog of a catalog's file-status
+cache: it holds metadata only. A plain ``spark.read.parquet(path)`` starts a
+one-task Spark job to read the footer and infer the schema, so the first read
+of each file version infers and records the schema, and every later read
+passes it to ``spark.read.schema(...)`` and starts no job. The memo is keyed
+by the session (weakly, so a stopped session's entries go with it) and the
+file's absolute path; each entry carries the file's ``os.stat`` version
+(mtime in ns, size, inode), so a file rewritten in place is inferred again.
+Only regular files are memoized: a directory's stat does not change when a
+file inside it is rewritten, so a directory fixture infers on every read.
+A ``DataFrame`` is never cached: each call builds a fresh relation, so two
+reads of one table self-join with distinct column lineage.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -26,6 +42,11 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+#: session -> {absolute path: ((st_mtime_ns, st_size, st_ino), schema)}
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple[int, int, int], StructType]]
+] = weakref.WeakKeyDictionary()
+
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events ``ts`` column to a session-tz TIMESTAMP.
@@ -36,7 +57,11 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     wall-clock value exactly, matching DuckDB's naive TIMESTAMP. Works on
     batch and streaming DataFrames alike (pure projection, no shuffle).
     """
-    dtype = dict(df.dtypes).get(col)
+    return _relabel_ts(df, col, dict(df.dtypes).get(col))
+
+
+def _relabel_ts(df: DataFrame, col: str, dtype: str | None) -> DataFrame:
+    """``normalize_event_ts`` with ``col``'s type already known."""
     if dtype == "bigint":
         df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
     elif dtype == "timestamp_ntz":
@@ -54,12 +79,41 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session-tz TIMESTAMP: the session timezone is pinned to UTC
     (``session.py``), so an NTZ→TZ cast is a pure type relabel with identical
     wall-clock semantics to DuckDB's naive TIMESTAMP.
+
+    The file's schema comes from the module's memo (metadata only): the
+    first read of a file version infers it, with one Spark job; a later read
+    of the same session, path and ``os.stat`` version starts none. The
+    returned frame is always a fresh relation, never a cached one.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+    version = _file_version(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    known = memo.get(path)
+    if known is not None and known[0] == version:
+        schema = known[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if version is not None:
+            memo[path] = (version, schema)
+    if name == "events":
+        dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
+        df = _relabel_ts(df, "ts", dtypes.get("ts"))
+    return df
+
+
+def _file_version(path: str) -> tuple[int, int, int] | None:
+    """``path``'s (mtime ns, size, inode), or None unless a regular file."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 def load(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -856,8 +856,7 @@ class ZoneStore:
         manifest = self._read_manifest(path)
         index: dict[str, list[int]] = {}
         for commit in manifest["commits"]:
-            cdir = os.path.join(path, commit)
-            df = self.spark.read.parquet(cdir)
+            df = self._read_commits(path, manifest, [commit])
             if column not in df.columns:
                 index[commit] = []
                 continue
