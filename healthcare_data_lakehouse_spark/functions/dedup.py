@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from healthcare_data_lakehouse_spark.functions.skew import in_group_pairs
+
 __all__ = [
     "token_hash48",
     "content_hash",
@@ -109,13 +111,13 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 def _dfcap_counted_pairs(
     sets: DataFrame, max_df: int, pair_cond_sql: str
 ) -> DataFrame:
-    """Count-based candidate scoring for the df-capped family (r14,
-    guide §8 "decide with small rows"): per df <= max_df shingle, fold
-    the (sid, sz) postings into an array (ONE shingle-keyed exchange —
-    replaces the r13 df-aggregate + join-back + self-join), emit the
-    in-group pairs that survive ``pair_cond`` (a lossless length bound),
-    and aggregate the SHARED-RARE COUNT ``c`` per pair instead of
-    de-duplicating pairs and intersecting full shingle arrays.
+    """Count-based candidate scoring for the df-capped family ("decide
+    with small rows"): per df <= max_df shingle, fold the (sid, sz)
+    postings into an array (ONE shingle-keyed exchange), emit the
+    in-group pairs that survive ``pair_cond`` (a lossless length bound)
+    with :func:`skew.in_group_pairs`, and aggregate the SHARED-RARE
+    COUNT ``c`` per pair instead of de-duplicating pairs and
+    intersecting full shingle arrays.
 
     ``c`` brackets the true intersection ``I``: every shared rare
     shingle is counted, and shared non-rare shingles number at most
@@ -146,19 +148,13 @@ def _dfcap_counted_pairs(
         .agg(F.collect_list(F.struct("sid", "sz")).alias("xs"))
         .persist()
     )
-    pair_sql = (
-        "explode(flatten(transform(xs, a -> "
-        f"transform(filter(xs, b -> {pair_cond_sql}), "
-        "b -> named_struct('id_a', a.sid, 'id_b', b.sid, "
-        "'sz_a', a.sz, 'sz_b', b.sz)))))"
-    )
     pc = (
-        grp.select(F.expr(pair_sql).alias("p"))
+        in_group_pairs(grp, "xs", pair_cond_sql)
         .groupBy(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.col("p.sz_a").alias("sz_a"),
-            F.col("p.sz_b").alias("sz_b"),
+            F.col("a.sid").alias("id_a"),
+            F.col("b.sid").alias("id_b"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )

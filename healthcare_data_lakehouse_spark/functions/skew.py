@@ -14,6 +14,9 @@ reducer while the fleet idles. Two remedies ship here:
   key becomes (key, salt), spreading each hot key over ``n_salts``
   reducers. Results are identical to the unsalted join — only the shuffle
   layout changes.
+
+Bounded groups need no join at all: :func:`in_group_pairs` forms a
+group's pairs from its folded postings.
 """
 
 from __future__ import annotations
@@ -30,7 +33,38 @@ __all__ = [
     "block_population_stats",
     "auto_self_pair_join",
     "co_occurrence_pairs",
+    "in_group_pairs",
 ]
+
+
+def in_group_pairs(
+    df: DataFrame, xs: str, cond: str = "b > a"
+) -> DataFrame:
+    """One row per in-group pair ``(a, b)`` of the array column ``xs``
+    whose elements satisfy the SQL predicate ``cond`` over the lambda
+    variables ``a`` and ``b``: the pair explode of a posting fold, and
+    the only place in the package that writes it.
+
+    Callers fold each group's postings into ``xs`` first (one exchange
+    on the group key); the pairs then form inside codegen, with no
+    self-join exchange or join build, and at most d*(d-1)/2 rows for a
+    group of d postings. The default ``b > a`` emits each unordered
+    pair of distinct scalars once without sorting ``xs``; struct
+    elements take a condition over their fields. It filters ``xs``
+    rather than slicing a sorted copy, which allocates a sub-array per
+    element. A group builds its d^2 pairs in one task, so hot groups
+    belong on :func:`salted_self_pair_join`; and AQE coalesces a small
+    folded frame to one or two partitions, so a caller with a large
+    pair amplification repartitions ``df`` first. Returns columns ``a``
+    and ``b`` with the element type of ``xs``."""
+    pairs = df.select(
+        F.expr(
+            f"explode(flatten(transform({xs}, a -> "
+            f"transform(filter({xs}, b -> {cond}), "
+            "b -> named_struct('a', a, 'b', b)))))"
+        ).alias("pr")
+    )
+    return pairs.select("pr.a", "pr.b")
 
 
 def co_occurrence_pairs(
@@ -40,34 +74,18 @@ def co_occurrence_pairs(
     out_a: str = "u",
     out_b: str = "v",
 ) -> DataFrame:
-    """Distinct unordered item pairs co-occurring under a group key, via
-    ONE group fold + bounded in-group pair explode (r14, guide §2.4).
-
-    Exactly the rows of ``df.a JOIN df.b ON group AND a.item < b.item``
-    + distinct, but the self-join twin pays a second exchange of the
-    whole table plus the join build and materializes sum(d^2) rows
-    before the distinct; here the postings fold once per group
-    (map-side partial collect_set also absorbs duplicate rows) and the
-    pair explode is bounded by the group population. Use when per-group
-    populations are bounded (TPC-H orders: <= 7 lineitems); for
-    unbounded or hot groups keep a join so AQE can split skew
+    """Distinct unordered item pairs co-occurring under a group key:
+    exactly the rows of ``df.a JOIN df.b ON group AND a.item < b.item``
+    + distinct, as one fold per group (map-side partial collect_set
+    also absorbs duplicate rows) and :func:`in_group_pairs`. Use when
+    per-group populations are bounded (TPC-H orders: <= 7 lineitems);
+    for unbounded or hot groups keep a join so AQE can split skew
     (:func:`auto_self_pair_join`)."""
     grouped = df.groupBy(group_col).agg(
         F.collect_set(item_col).alias("xs")
     )
-    # filter form, not sort+slice: slice copies a sub-array per element
-    # (measured allocation-heavy on the dfcap rewrite); the filter scan
-    # is the same O(d^2) comparisons without the copies, and b > a
-    # orders the pair without sorting the postings
-    pairs = grouped.select(
-        F.expr(
-            "explode(flatten(transform(xs, x -> "
-            "transform(filter(xs, y -> y > x), "
-            "y -> struct(x AS a, y AS b)))))"
-        ).alias("pr")
-    )
-    return pairs.select(
-        F.col("pr.a").alias(out_a), F.col("pr.b").alias(out_b)
+    return in_group_pairs(grouped, "xs").select(
+        F.col("a").alias(out_a), F.col("b").alias(out_b)
     ).distinct()
 
 

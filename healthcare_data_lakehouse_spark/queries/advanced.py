@@ -1761,33 +1761,27 @@ def finance_price_volume_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "copies. Positive = popular parts co-sell with popular parts "
     "(hub-hub retail pattern, basket-recommendation friendly); "
     "negative = hub-and-spoke accessories. The >= 2 support floor is "
-    "the same A-priori prefilter as assoc_part_pairs_lift — it is "
-    "what keeps the co-occurrence self-join quadratic only within "
-    "orders, not across the catalog. Degrees are one hash agg on the "
+    "an A-priori floor, as in assoc_part_pairs_lift. Pairs "
+    "come from one per-order part-set fold and an in-group pair "
+    "explode, quadratic only within orders, never across the catalog; "
+    "the floor then drops one-off pairs. Degrees are one hash agg on the "
     "edge list; the correlation is one running-moments agg over "
     "edges joined twice to the broadcast-sized degree table.",
 )
 def graph_degree_assortativity_coparts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    from healthcare_data_lakehouse_spark.functions.skew import in_group_pairs
+
     li = table(spark, sf_dir, "lineitem")
-    # r14 (guide §2.4): per-order posting fold + bounded in-group pair
-    # explode replaces the distinct + basket self-join (one order-keyed
-    # exchange; collect_set absorbs the distinct); pair co-order counts
-    # aggregate over the exploded pairs exactly as they did over the
-    # join output.
-    e = (
+    orders = (
         li.select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.collect_set("l_partkey").alias("xs"))
-        .select(
-            F.expr(
-                "explode(flatten(transform(xs, x -> "
-                "transform(filter(xs, y -> y > x), "
-                "y -> struct(x AS pa, y AS pb)))))"
-            ).alias("pr")
-        )
-        .groupBy(F.col("pr.pa").alias("pa"), F.col("pr.pb").alias("pb"))
+    )
+    e = (
+        in_group_pairs(orders, "xs")
+        .groupBy(F.col("a").alias("pa"), F.col("b").alias("pb"))
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
         .select("pa", "pb")

@@ -1254,22 +1254,22 @@ def er_fuzzy_customer_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Market-basket association rules over order baskets: "
     "co-occurrence pairs with confidence and lift. The A-priori "
-    "anti-monotonicity prefilter (items below min-support can never "
-    "form a frequent pair) shrinks the basket table BEFORE the "
-    "positional self-join — at 100 TB this is the difference between "
-    "a bounded pair space and a quadratic blow-up; the join shuffles "
-    "on orderkey so each basket's pairs form locally.",
+    "anti-monotonicity rule (items below min-support can never form "
+    "a frequent pair) becomes inner joins of the pair counts against "
+    "the frequent-item table. One orderkey exchange folds each order's "
+    "part set; item supports, the order count and the in-group pair "
+    "explode all read that fold, so each basket's pairs form locally "
+    "with no self-join, bounded by the basket size (at most 7 parts "
+    "per TPC-H order).",
 )
 def assoc_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from healthcare_data_lakehouse_spark.functions import skew as SK
+
     li = table(spark, sf_dir, "lineitem")
-    # r14 (guide §2.4): per-order posting fold replaces the distinct +
-    # basket self-join — ONE order-keyed exchange builds the sorted
-    # per-order part set; item supports, the order count, and the
-    # in-group pair counts all derive from it. The both-parts-frequent
-    # condition moves AFTER counting (inner joins against the frequent-
-    # item table below), which leaves every pair's co-order count
-    # unchanged — frequency filtering never changed n_co, only which
-    # pairs are reported.
+    # item supports, the order count and the pair counts all derive from
+    # the one per-order part set; the both-parts-frequent condition
+    # applies AFTER counting (inner joins against the frequent-item
+    # table below), which leaves every pair's co-order count unchanged
     grouped = li.select("l_orderkey", "l_partkey").groupBy(
         "l_orderkey"
     ).agg(F.collect_set("l_partkey").alias("xs"))
@@ -1283,15 +1283,8 @@ def assoc_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_item") >= 20)
     )
     pairs = (
-        grouped.select(
-            F.expr(
-                "explode(flatten(transform(xs, x -> "
-                "transform(filter(xs, y -> y > x), "
-                "y -> struct(x AS part_a, y AS part_b)))))"
-            ).alias("pr")
-        )
-        .groupBy(F.col("pr.part_a").alias("part_a"),
-                 F.col("pr.part_b").alias("part_b"))
+        SK.in_group_pairs(grouped, "xs")
+        .groupBy(F.col("a").alias("part_a"), F.col("b").alias("part_b"))
         .agg(F.count(F.lit(1)).alias("n_co"))
         .filter(F.col("n_co") >= 3)
     )
@@ -1388,16 +1381,15 @@ def fullouter_daily_orders_vs_events(spark: SparkSession, sf_dir: str) -> DataFr
     "supplier counts — bounded by the fan-out of the densest part, "
     "never |suppliers|^2. COLD parts (supplier set under a threshold) "
     "expand combinations entirely inside codegen: one groupBy(part) "
-    "collect_set, then a flatten(transform(...)) higher-order "
-    "expression emits each sorted pair exactly once — zero join, zero "
-    "replication. The tiny grouped table is explicitly repartitioned "
-    "before the explode: AQE coalesces a 20k-row aggregate to 1-2 "
-    "partitions, which would serialize the 400x pair amplification "
-    "onto 2 threads (measured 2.5x slowdown at sf0.1) — the classic "
-    "small-input/explosive-output AQE trap. HOT parts would "
-    "concentrate an n^2 array in one task, so they take the salted "
-    "self-join path instead, like hot LSH buckets: the right side "
-    "buckets suppliers into 8 salts (hash(s) mod 8), the left side "
+    "collect_set, then the in-group pair explode emits each pair "
+    "exactly once — zero join, zero replication. The tiny grouped "
+    "table is explicitly repartitioned before the explode: AQE "
+    "coalesces a 20k-row aggregate to 1-2 partitions, which would "
+    "serialize the 400x pair amplification onto 2 threads (measured "
+    "2.5x slowdown at sf0.1) — the classic small-input/explosive-output "
+    "AQE trap. HOT parts would concentrate an n^2 array in one task, so "
+    "they take the salted self-join path instead, like hot LSH buckets: "
+    "one side buckets suppliers into 8 salts (hash(s) mod 8), the other "
     "replicates across all 8, and the join keys on (part, salt), "
     "spreading each hot part's quadratic pair generation over 8 "
     "reducers while cold parts pay ZERO replication. Every pair still "
@@ -1406,49 +1398,31 @@ def fullouter_daily_orders_vs_events(spark: SparkSession, sf_dir: str) -> DataFr
     "doc-citation, and basket-affinity graphs.",
 )
 def graph_supplier_copart_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_salts = 8
+    from healthcare_data_lakehouse_spark.functions import skew as SK
+
     hot_threshold = 64
     li = table(spark, sf_dir, "lineitem")
     sp = li.select(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
     ).distinct()
-    # one shuffle: per-part sorted supplier set; repartition defeats the
-    # AQE coalesce that would otherwise serialize the explode below
+    # repartition defeats the AQE coalesce that would otherwise
+    # serialize the explode below
     grouped = (
         sp.groupBy("p")
-        .agg(F.array_sort(F.collect_set("s")).alias("ss"))
+        .agg(F.collect_set("s").alias("ss"))
         .repartition(64)
         .localCheckpoint()
     )
-    cold_pairs = (
-        grouped.filter(F.size("ss") < hot_threshold)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ss, (x, i) -> "
-                    "transform(slice(ss, i + 2, size(ss)), "
-                    "y -> struct(x AS supp_a, y AS supp_b))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.supp_a", "pr.supp_b")
-    )
+    cold_pairs = SK.in_group_pairs(
+        grouped.filter(F.size("ss") < hot_threshold), "ss"
+    ).select(F.col("a").alias("supp_a"), F.col("b").alias("supp_b"))
     # hot parts: back to (p, s) rows (linear, never n^2) and salted join
     hot_sp = grouped.filter(F.size("ss") >= hot_threshold).select(
         "p", F.explode("ss").alias("s")
     )
-    a = hot_sp.withColumn(
-        "r", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    ).alias("a")
-    b = hot_sp.withColumn(
-        "r", F.pmod(F.hash("s"), F.lit(n_salts))
-    ).alias("b")
-    hot_pairs = a.join(
-        b,
-        (F.col("a.p") == F.col("b.p"))
-        & (F.col("a.r") == F.col("b.r"))
-        & (F.col("a.s") < F.col("b.s")),
-    ).select(F.col("a.s").alias("supp_a"), F.col("b.s").alias("supp_b"))
+    hot_pairs = SK.salted_self_pair_join(hot_sp, ["p"], "s").select(
+        F.col("s_a").alias("supp_a"), F.col("s_b").alias("supp_b")
+    )
     return (
         cold_pairs.unionByName(hot_pairs)
         .groupBy("supp_a", "supp_b")
@@ -2205,9 +2179,6 @@ def graph_kcore_supplier_coorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from healthcare_data_lakehouse_spark.functions import skew as SK
 
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # r14 (guide §2.4): co-order edges via one per-order posting fold +
-    # bounded in-group pair explode instead of the lineitem self-join
-    # (orders hold few suppliers; the old join exchanged lineitem twice).
     edges = SK.co_occurrence_pairs(
         li, "l_orderkey", "l_suppkey"
     ).localCheckpoint()
@@ -2615,8 +2586,6 @@ def graph_modularity_supplier_nations(
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    # r14 (guide §2.4): co-order edges via one per-order posting fold +
-    # bounded in-group pair explode instead of the lineitem self-join
     edges = SK.co_occurrence_pairs(li, "l_orderkey", "l_suppkey").persist()
     deg = (
         edges.select(F.col("u").alias("node"))

@@ -872,8 +872,6 @@ def graph_adamic_adar_link_prediction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r14 (guide §2.4): co-order edges via one per-order posting fold +
-    # bounded in-group pair explode (see graph_khop_expansion_profile)
     edges = SK.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
     # r13 (guide §2.4): adjacency cached hash-partitioned on x — the
     # wedge join probes adj on x and the degree aggregate groups by x,
@@ -1256,11 +1254,6 @@ def graph_khop_expansion_profile(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    # r14 (guide §2.4): co-order edges via one per-order posting fold +
-    # bounded in-group pair explode — the r13 self-join exchanged
-    # lineitem twice and materialized sum(parts-per-order^2) join rows
-    # before its distinct (orders hold <= 7 parts, so the explode is
-    # bounded and skew-free).
     edges = SK.co_occurrence_pairs(li, "l_orderkey", "l_partkey")
     # r13 (guide §2.4): cache the adjacency HASH-PARTITIONED on its join
     # key x — every BFS hop joins adj on x, and a round-robin cache made

@@ -534,17 +534,6 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------- ANN quality eval
-def _cos_sql(a: str, b: str) -> str:
-    return f"""
-             list_sum(list_transform(list_zip({a}, {b}),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform({a},
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-              * sqrt(list_sum(list_transform({b},
-                      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-    """
-
-
 def _recall_oracle() -> str:
     return f"""
     WITH bucketed AS (

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from healthcare_data_lakehouse_spark.tables import normalize_event_ts
+from healthcare_data_lakehouse_spark.tables import _read_parquet, normalize_event_ts
 from healthcare_data_lakehouse_spark.zones import LoadType
 
 __all__ = [
@@ -70,9 +70,12 @@ def _file_stream(
 ) -> DataFrame:
     """Open the parquet file or directory ``source`` as a file stream with
     the schema of its files and ``ts`` normalized (a no-op on a frame
-    without ``ts``); ``max_files`` caps the files per micro-batch."""
+    without ``ts``); ``max_files`` caps the files per micro-batch. A
+    file's schema comes from ``tables.table``'s memo, so reopening an
+    unchanged file starts no Spark job; a directory is inferred anew."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.readStream.schema(spark.read.parquet(source).schema)
+    _, schema = _read_parquet(spark, source)
+    reader = spark.readStream.schema(schema)
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
     return normalize_event_ts(reader.parquet(_stream_source_dir(source, work_dir)))

@@ -14,7 +14,8 @@ file's absolute path; each entry carries the file's ``os.stat`` version
 Only regular files are memoized: a directory's stat does not change when a
 file inside it is rewritten, so a directory fixture infers on every read.
 A ``DataFrame`` is never cached: each call builds a fresh relation, so two
-reads of one table self-join with distinct column lineage.
+reads of one table self-join with distinct column lineage. The stream
+opener ``streaming/ingest.py::_file_stream`` shares the memo.
 """
 
 from __future__ import annotations
@@ -85,24 +86,32 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     of the same session, path and ``os.stat`` version starts none. The
     returned frame is always a fresh relation, never a cached one.
     """
-    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    version = _file_version(path)
-    memo = _SCHEMAS.setdefault(spark, {})
-    known = memo.get(path)
-    if known is not None and known[0] == version:
-        schema = known[1]
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        schema = df.schema
-        if version is not None:
-            memo[path] = (version, schema)
+    df, schema = _read_parquet(spark, path)
     if name == "events":
         dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
         df = _relabel_ts(df, "ts", dtypes.get("ts"))
     return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """A fresh batch relation over the parquet file or directory ``path``,
+    and its schema. The schema comes from the memo when this session has
+    seen the file's current version; otherwise the read infers it with one
+    Spark job, and a regular file's schema is memoized."""
+    path = os.path.abspath(path)
+    version = _file_version(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    known = memo.get(path)
+    if known is not None and known[0] == version:
+        return spark.read.schema(known[1]).parquet(path), known[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if version is not None:
+        memo[path] = (version, schema)
+    return df, schema
 
 
 def _file_version(path: str) -> tuple[int, int, int] | None:

@@ -193,3 +193,16 @@ def test_no_fixture_read_bypasses_the_schema_memo():
                 ):
                     found.add(f"{rel}:{n.lineno}")
     assert found == set()
+
+
+def test_second_stream_open_of_a_fixture_starts_no_job(spark, sf_dir, tmp_path):
+    """``_file_stream`` takes a fixture file's schema from the memo."""
+    from healthcare_data_lakehouse_spark.streaming.ingest import _file_stream
+
+    src = os.path.join(sf_dir, "events.parquet")
+    _file_stream(spark, src, str(tmp_path / "a"))
+    first = _jobs(spark)
+    df = _file_stream(spark, src, str(tmp_path / "b"))
+    assert _jobs(spark) == first
+    assert df.isStreaming
+    assert dict(df.dtypes)["ts"] == "timestamp"
