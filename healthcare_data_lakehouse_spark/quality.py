@@ -1,17 +1,18 @@
 """Data-quality engine: eight healthcare rules fused into ONE scan.
 
 The reference evaluates each rule as its own full pass over a Python list
-(``src/quality/data_quality.py:337-346`` — up to 8 scans). Here every rule
-contributes conditional-aggregate expressions to a single ``df.agg(...)``;
-Catalyst fuses them into one WholeStageCodegen scan regardless of rule count,
-so a validation costs one table read at any scale. No row ids are collected:
-the report carries the FAILED rules' row-level failure predicates, and the
-ETL split evaluates them on the batch it already holds.
+(``src/quality/data_quality.py:337-346`` — up to 8 scans). Here a rule is
+two row expressions, ``(checked, failed)``, plus a grade: every rule's pair
+lands in one ``select`` and one ``agg`` sums them, so a validation costs one
+table read at any scale. No row ids are collected: the report carries the
+FAILED rules' ``failed`` expressions, and the ETL split evaluates them on
+the batch it already holds — the rows counted as failures are exactly the
+rows quarantined.
 
 Reference quirks intentionally preserved (SURVEY.md §2.3/§2.4):
 
 * "populated" means *truthy* (``if field in record and record[field]``):
-  NULL, empty string, and numeric 0 are skipped by Q2/Q3/Q4/Q8.
+  NULL, empty string, numeric 0 and False are skipped by Q2/Q3/Q4/Q8.
 * Q2/Q3/Q4/Q6 count *field instances*, and a record breaks at its first
   failing field — later populated fields in that record are NOT counted
   in the denominator (``data_quality.py:600-607`` et al.).
@@ -29,20 +30,24 @@ Deliberate divergences in the quarantine set (SURVEY.md §2.4 A5):
   (``:354-355``, ``:578``), so a batch with more failures promotes the
   rest. Here every row that fails a FAILED rule is quarantined.
 * A duplicate id quarantines only its extra occurrences in ingest order
-  (``q5_fail``). Matching on the id list, as the reference does, would
-  quarantine every row that shares the id.
+  (DQ005's ``failed``). Matching on the id list, as the reference does,
+  would quarantine every row that shares the id.
 """
 
 from __future__ import annotations
 
 import hashlib
+import operator
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from enum import Enum
+from functools import reduce
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, NumericType
+from pyspark.sql.window import Window
 
 from healthcare_data_lakehouse_spark.transforms import INGEST_ORDER_COL, with_ingest_order
 from healthcare_data_lakehouse_spark.zones import DataZone
@@ -54,6 +59,7 @@ __all__ = [
     "QualityCheckResult",
     "QualityReport",
     "SparkQualityRule",
+    "threshold_grade",
     "DataQualityValidator",
     "ISO_DATE_RE",
     "PATIENT_ID_RE",
@@ -211,18 +217,27 @@ class QualityReport:
         }
 
 
+#: ``rows(df) -> (checked, failed)``, see :class:`SparkQualityRule`.
+RowExprs = Callable[[DataFrame], tuple[Column | int, Column]]
+#: ``grade(checked, failed) -> (status, score, details)``.
+Grade = Callable[[int, int], tuple[QualityStatus, float, str]]
+
+
 # --------------------------------------------------------------------- helpers
 def _truthy(df: DataFrame, name: str) -> Column:
     """Python truthiness of a field value (``if record[field]``): non-null,
-    non-empty-string, non-zero-numeric."""
+    non-empty-string, non-zero-numeric, and a boolean is itself."""
     c = F.col(name)
-    s = c.cast("string")
-    populated = c.isNotNull() & (s != "")
-    # numeric zero is falsy in Python
-    dtype = dict(df.dtypes).get(name, "string")
-    if dtype in ("int", "bigint", "smallint", "tinyint", "double", "float", "decimal"):
-        populated = populated & (c != 0)
-    return populated
+    dtype = df.schema[name].dataType
+    if isinstance(dtype, BooleanType):
+        return c.isNotNull() & c
+    if isinstance(dtype, NumericType):
+        return c.isNotNull() & (c != 0)
+    return c.isNotNull() & (c.cast("string") != "")
+
+
+def _any(exprs: list[Column]) -> Column:
+    return reduce(operator.or_, exprs, F.lit(False))
 
 
 def _instance_scan(
@@ -246,18 +261,71 @@ def _instance_scan(
     return checked, prior_fail
 
 
+def _regex_rows(
+    fields: list[str], value_of: Callable[[Column], Column], pattern: str
+) -> RowExprs:
+    """Q2/Q3/Q4: each truthy field instance must match ``pattern``."""
+    return lambda df: _instance_scan(
+        df, fields, lambda n: _truthy(df, n),
+        lambda n: ~value_of(F.col(n)).rlike(pattern),
+    )
+
+
+def _range_rows(df: DataFrame) -> tuple[Column, Column]:
+    """Q6: populated = non-null AND float-coercible (uncoercible values are
+    silently skipped, reference :789-797). NB unlike the truthy rules, value
+    0 IS checked here (only None is skipped)."""
+    def populated(n: str) -> Column:
+        return F.col(n).isNotNull() & F.col(n).cast("double").isNotNull()
+
+    def invalid(n: str) -> Column:
+        lo, hi = CLINICAL_RANGES[n]
+        v = F.col(n).cast("double")
+        return (v < F.lit(float(lo))) | (v > F.lit(float(hi)))
+
+    return _instance_scan(df, list(CLINICAL_RANGES), populated, invalid)
+
+
+def _grade(score: float, fail_below: float, warn_below: float) -> QualityStatus:
+    if score < fail_below:
+        return QualityStatus.FAILED
+    if score < warn_below:
+        return QualityStatus.WARNING
+    return QualityStatus.PASSED
+
+
+def threshold_grade(
+    fail_below: float, warn_below: float, details: str, empty_score: float = 1.0
+) -> Grade:
+    """Score = passed/checked (``empty_score`` when nothing was checked),
+    FAILED below ``fail_below``, WARNING below ``warn_below`` — the oracle's
+    ``_rule_row_sql``. ``details`` may name ``{checked}``, ``{failed}`` and
+    ``{passed}``."""
+
+    def grade(checked: int, failed: int) -> tuple[QualityStatus, float, str]:
+        passed = checked - failed
+        score = passed / checked if checked else empty_score
+        return (_grade(score, fail_below, warn_below), score,
+                details.format(checked=checked, failed=failed, passed=passed))
+
+    return grade
+
+
 @dataclass
 class SparkQualityRule:
-    """A quality rule whose aggregates fuse into the shared scan.
+    """A quality rule as two row expressions and a grade.
 
-    ``agg_exprs`` returns named aggregate Columns (aliased
-    ``<rule_id>__<name>``); ``summarize`` turns the fused-agg row into a
-    result; ``fail_condition`` is the row-level failure predicate that the
-    quarantine split applies when the rule FAILED. Rules
-    whose logic can't be a Column (custom Python) may instead set
-    ``check_fn`` (DataFrame -> QualityCheckResult) — the escape hatch costs
-    its own pass, mirroring the reference's arbitrary ``check_fn``
-    registry (``data_quality.py:67``).
+    ``rows(df)`` returns ``(checked, failed)``: ``checked`` is the number of
+    field instances the row contributes (an int, or a Column where a
+    boolean counts 0/1; 1 for a row-level rule), ``failed`` is true on a
+    row that fails the rule. The validator sums ``checked`` and counts
+    ``failed`` for every rule in one aggregation, ``grade(checked,
+    failed)`` turns the two sums into ``(status, score, details)``, and a
+    FAILED rule quarantines the rows where that same ``failed`` holds.
+    Rules whose logic can't be a Column (a join, custom Python) may
+    instead set ``check_fn`` (DataFrame -> QualityCheckResult): the escape
+    hatch costs its own pass and quarantines nothing, mirroring the
+    reference's arbitrary ``check_fn`` registry (``data_quality.py:67``).
     """
 
     rule_id: str
@@ -267,9 +335,8 @@ class SparkQualityRule:
     severity: str
     applicable_zones: list[DataZone]
     enabled: bool = True
-    agg_exprs: Callable[[DataFrame, "DataQualityValidator"], list[Column]] | None = None
-    summarize: Callable[[dict[str, Any], "DataQualityValidator"], dict[str, Any]] | None = None
-    fail_condition: Callable[[DataFrame, "DataQualityValidator"], Column | None] | None = None
+    rows: RowExprs | None = None
+    grade: Grade | None = None
     check_fn: Callable[[DataFrame], QualityCheckResult] | None = None
 
     def to_dict(self) -> dict[str, Any]:
@@ -282,14 +349,6 @@ class SparkQualityRule:
             "applicable_zones": [z.value for z in self.applicable_zones],
             "enabled": self.enabled,
         }
-
-
-def _grade(score: float, fail_below: float, warn_below: float) -> QualityStatus:
-    if score < fail_below:
-        return QualityStatus.FAILED
-    if score < warn_below:
-        return QualityStatus.WARNING
-    return QualityStatus.PASSED
 
 
 class DataQualityValidator:
@@ -324,217 +383,85 @@ class DataQualityValidator:
             return F.coalesce(F.col(self.id_field).cast("string"), F.lit("None"))
         return F.lit("")
 
-    # Q1 ---------------------------------------------------------------
-    def _q1_required(self, df: DataFrame) -> list[str]:
-        return [f for f in (self._required_fields or df.columns)]
-
-    def _q1_fail(self, df: DataFrame, _=None) -> Column:
-        exprs = []
-        for f_name in self._q1_required(df):
-            if f_name in df.columns:
-                exprs.append(F.col(f_name).isNull())
-            else:
-                exprs.append(F.lit(True))  # absent column -> every record fails
-        if not exprs:
-            return F.lit(False)
-        out = exprs[0]
-        for e in exprs[1:]:
-            out = out | e
-        return out
-
-    # Q2/Q3/Q4 ----------------------------------------------------------
-    def _regex_rule_parts(
-        self, df: DataFrame, fields: list[str], value_expr: Callable[[str], Column],
-        pattern: str
-    ) -> tuple[Column, Column]:
-        return _instance_scan(
-            df,
-            fields,
-            populated_of=lambda n: _truthy(df, n),
-            invalid_of=lambda n: ~value_expr(n).rlike(pattern),
-        )
-
-    # Q6 -----------------------------------------------------------------
-    def _q6_parts(self, df: DataFrame) -> tuple[Column, Column]:
-        # populated = present, non-null, AND float-coercible (uncoercible
-        # values are silently skipped, reference :789-797). NB unlike the
-        # truthy rules, value 0 IS checked here (only None is skipped).
-        def populated(n: str) -> Column:
-            return F.col(n).isNotNull() & F.col(n).cast("double").isNotNull()
-
-        def invalid(n: str) -> Column:
-            lo, hi = CLINICAL_RANGES[n]
-            v = F.col(n).cast("double")
-            return (v < F.lit(float(lo))) | (v > F.lit(float(hi)))
-
-        return _instance_scan(df, list(CLINICAL_RANGES), populated, invalid)
-
     def _init_healthcare_rules(self) -> None:
         """The eight standard rules (reference ``data_quality.py:214-303``)."""
         v = self
 
         # DQ001 required_fields_present ---------------------------------
-        def q1_aggs(df: DataFrame, _) -> list[Column]:
-            fail = v._q1_fail(df)
-            return [
-                F.count(F.lit(1)).alias("DQ001__total"),
-                F.sum(F.when(fail, 1).otherwise(0)).alias("DQ001__failed"),
-            ]
+        def q1_rows(df: DataFrame) -> tuple[int, Column]:
+            # an absent column fails every record
+            return 1, _any([F.col(f).isNull() if f in df.columns else F.lit(True)
+                            for f in v._required_fields])
 
-        def q1_sum(row: dict, _) -> dict:
-            total, failed = row["DQ001__total"], row["DQ001__failed"]
-            if total == 0:
-                return dict(status=QualityStatus.SKIPPED, score=0.0,
-                            records_checked=0, records_passed=0, records_failed=0,
-                            details="")
-            passed = total - failed
-            score = passed / total
-            return dict(status=_grade(score, 0.95, 0.99), score=score,
-                        records_checked=total, records_passed=passed,
-                        records_failed=failed,
-                        details=f"Checked {len(v._q1_required_last)} required fields")
+        def q1_grade(checked: int, failed: int) -> tuple[QualityStatus, float, str]:
+            if checked == 0:
+                return QualityStatus.SKIPPED, 0.0, ""
+            score = (checked - failed) / checked
+            return (_grade(score, 0.95, 0.99), score,
+                    f"Checked {len(v._required_fields)} required fields")
 
         self.add_rule(SparkQualityRule(
             "DQ001", "required_fields_present",
             "All required fields must be non-null",
             QualityDimension.COMPLETENESS, "critical",
             [DataZone.BRONZE, DataZone.SILVER, DataZone.GOLD],
-            agg_exprs=q1_aggs, summarize=q1_sum,
-            fail_condition=lambda df, _: v._q1_fail(df),
+            rows=q1_rows, grade=q1_grade,
         ))
-
-        # DQ002 valid_date_formats ---------------------------------------
-        def q2_aggs(df: DataFrame, _) -> list[Column]:
-            checked, failed = v._regex_rule_parts(
-                df, DATE_CHECK_FIELDS, lambda n: F.col(n).cast("string"), ISO_DATE_RE
-            )
-            return [
-                F.sum(checked).alias("DQ002__checked"),
-                F.sum(F.when(failed, 1).otherwise(0)).alias("DQ002__failed"),
-            ]
-
-        def q2_sum(row: dict, _) -> dict:
-            return v._instance_summary(row, "DQ002", 0.95, 0.99,
-                                       "Validated ISO 8601 date format")
 
         self.add_rule(SparkQualityRule(
             "DQ002", "valid_date_formats",
             "Date fields must follow ISO 8601 format",
             QualityDimension.VALIDITY, "major",
             [DataZone.SILVER, DataZone.GOLD],
-            agg_exprs=q2_aggs, summarize=q2_sum,
-            fail_condition=lambda df, _: v._regex_rule_parts(
-                df, DATE_CHECK_FIELDS, lambda n: F.col(n).cast("string"), ISO_DATE_RE
-            )[1],
+            rows=_regex_rows(DATE_CHECK_FIELDS, lambda c: c.cast("string"),
+                             ISO_DATE_RE),
+            grade=threshold_grade(0.95, 0.99, "Validated ISO 8601 date format"),
         ))
-
-        # DQ003 valid_patient_id_format ----------------------------------
-        def q3_value(n: str) -> Column:
-            return F.upper(F.col(n).cast("string"))
-
-        def q3_aggs(df: DataFrame, _) -> list[Column]:
-            checked, failed = v._regex_rule_parts(
-                df, PATIENT_ID_FIELDS, q3_value, PATIENT_ID_RE
-            )
-            return [
-                F.sum(checked).alias("DQ003__checked"),
-                F.sum(F.when(failed, 1).otherwise(0)).alias("DQ003__failed"),
-            ]
-
-        def q3_sum(row: dict, _) -> dict:
-            return v._instance_summary(row, "DQ003", 0.99, 1.0,
-                                       "Validated patient ID format")
 
         self.add_rule(SparkQualityRule(
             "DQ003", "valid_patient_id_format",
             "Patient IDs must match expected format",
             QualityDimension.VALIDITY, "critical",
             [DataZone.BRONZE, DataZone.SILVER, DataZone.GOLD],
-            agg_exprs=q3_aggs, summarize=q3_sum,
-            fail_condition=lambda df, _: v._regex_rule_parts(
-                df, PATIENT_ID_FIELDS, q3_value, PATIENT_ID_RE
-            )[1],
+            rows=_regex_rows(PATIENT_ID_FIELDS,
+                             lambda c: F.upper(c.cast("string")), PATIENT_ID_RE),
+            grade=threshold_grade(0.99, 1.0, "Validated patient ID format"),
         ))
-
-        # DQ004 valid_icd10_codes ----------------------------------------
-        def q4_value(n: str) -> Column:
-            return F.trim(F.upper(F.col(n).cast("string")))
-
-        def q4_aggs(df: DataFrame, _) -> list[Column]:
-            checked, failed = v._regex_rule_parts(df, ICD10_FIELDS, q4_value, ICD10_RE)
-            return [
-                F.sum(checked).alias("DQ004__checked"),
-                F.sum(F.when(failed, 1).otherwise(0)).alias("DQ004__failed"),
-            ]
-
-        def q4_sum(row: dict, _) -> dict:
-            return v._instance_summary(row, "DQ004", 0.95, 0.99,
-                                       "Validated ICD-10 diagnosis code format")
 
         self.add_rule(SparkQualityRule(
             "DQ004", "valid_icd10_codes",
             "Diagnosis codes must be valid ICD-10 format",
             QualityDimension.ACCURACY, "major",
             [DataZone.SILVER, DataZone.GOLD],
-            agg_exprs=q4_aggs, summarize=q4_sum,
-            fail_condition=lambda df, _: v._regex_rule_parts(
-                df, ICD10_FIELDS, q4_value, ICD10_RE
-            )[1],
+            rows=_regex_rows(ICD10_FIELDS,
+                             lambda c: F.trim(F.upper(c.cast("string"))), ICD10_RE),
+            grade=threshold_grade(0.95, 0.99,
+                                  "Validated ICD-10 diagnosis code format"),
         ))
 
-        # DQ005 no_duplicate_records -------------------------------------
-        def q5_aggs(df: DataFrame, _) -> list[Column]:
-            key = v._record_id(df)
-            return [
-                F.count(F.lit(1)).alias("DQ005__total"),
-                F.countDistinct(key).alias("DQ005__distinct"),
-            ]
-
-        def q5_sum(row: dict, _) -> dict:
-            total, uniq = row["DQ005__total"], row["DQ005__distinct"]
-            dups = total - uniq
-            score = (uniq / total) if total else 1.0
-            status = QualityStatus.FAILED if dups > 0 else QualityStatus.PASSED
-            return dict(status=status, score=score, records_checked=total,
-                        records_passed=uniq, records_failed=dups,
-                        details=f"Found {dups} duplicate records")
-
-        def q5_fail(df: DataFrame, _) -> Column:
-            # 2nd+ occurrence in ingest order (reference :733-739).
-            from pyspark.sql.window import Window
-
-            w = Window.partitionBy(v._record_id(df)).orderBy(
-                F.col(INGEST_ORDER_COL).asc()
-            )
-            return F.row_number().over(w) > 1
+        # DQ005 no_duplicate_records: a row fails as the 2nd+ occurrence of
+        # its id in ingest order (reference :733-739), so any duplicate
+        # scores below 1.0 and FAILS.
+        def q5_rows(df: DataFrame) -> tuple[int, Column]:
+            w = Window.partitionBy(v._record_id(df)).orderBy(F.col(INGEST_ORDER_COL))
+            return 1, F.row_number().over(w) > 1
 
         self.add_rule(SparkQualityRule(
             "DQ005", "no_duplicate_records",
             "Records must be unique by primary key",
             QualityDimension.UNIQUENESS, "critical",
             [DataZone.BRONZE, DataZone.SILVER, DataZone.GOLD],
-            agg_exprs=q5_aggs, summarize=q5_sum, fail_condition=q5_fail,
+            rows=q5_rows,
+            grade=threshold_grade(1.0, 1.0, "Found {failed} duplicate records"),
         ))
-
-        # DQ006 valid_value_ranges ---------------------------------------
-        def q6_aggs(df: DataFrame, _) -> list[Column]:
-            checked, failed = v._q6_parts(df)
-            return [
-                F.sum(checked).alias("DQ006__checked"),
-                F.sum(F.when(failed, 1).otherwise(0)).alias("DQ006__failed"),
-            ]
-
-        def q6_sum(row: dict, _) -> dict:
-            return v._instance_summary(row, "DQ006", 0.95, 0.99,
-                                       "Validated clinical value ranges")
 
         self.add_rule(SparkQualityRule(
             "DQ006", "valid_value_ranges",
             "Numeric values must be within valid clinical ranges",
             QualityDimension.ACCURACY, "major",
             [DataZone.SILVER, DataZone.GOLD],
-            agg_exprs=q6_aggs, summarize=q6_sum,
-            fail_condition=lambda df, _: v._q6_parts(df)[1],
+            rows=_range_rows,
+            grade=threshold_grade(0.95, 0.99, "Validated clinical value ranges"),
         ))
 
         # DQ007 referential_integrity -------------------------------------
@@ -543,26 +470,18 @@ class DataQualityValidator:
         # left join per FK marking orphans (can't fuse into the shared
         # scan — joins need their own pass; still one pass for ALL FKs).
         if not self.fk_checks:
-            def q7_aggs(df: DataFrame, _) -> list[Column]:
-                return [F.count(F.lit(1)).alias("DQ007__total")]
-
-            def q7_sum(row: dict, _) -> dict:
-                total = row["DQ007__total"]
-                return dict(status=QualityStatus.PASSED, score=1.0,
-                            records_checked=total, records_passed=total,
-                            records_failed=0,
-                            details="Referential integrity check "
-                                    "(stub - implement with reference tables)")
-
             self.add_rule(SparkQualityRule(
                 "DQ007", "referential_integrity",
                 "Foreign key references must be valid",
                 QualityDimension.INTEGRITY, "major",
                 [DataZone.GOLD],
-                agg_exprs=q7_aggs, summarize=q7_sum,
+                rows=lambda df: (1, F.lit(False)),
+                grade=threshold_grade(
+                    0.99, 1.0, "Referential integrity check "
+                               "(stub - implement with reference tables)"),
             ))
         else:
-            def q7_orphan_marked(df: DataFrame) -> DataFrame:
+            def q7_check(df: DataFrame) -> QualityCheckResult:
                 out = df
                 for i, (fk, parent, pkey) in enumerate(self.fk_checks):
                     keys = parent.select(F.col(pkey).alias(f"__pk_{i}")).distinct()
@@ -572,28 +491,18 @@ class DataQualityValidator:
                         f"__orphan_{i}",
                         F.col(fk).isNotNull() & F.col(f"__pk_{i}").isNull(),
                     ).drop(f"__pk_{i}")
-                orphan_any = F.lit(False)
-                for i in range(len(self.fk_checks)):
-                    orphan_any = orphan_any | F.col(f"__orphan_{i}")
-                return out.withColumn("__orphan", orphan_any)
-
-            def q7_check(df: DataFrame) -> QualityCheckResult:
-                marked = q7_orphan_marked(df)
-                agg = marked.agg(
-                    F.count(F.lit(1)).alias("total"),
-                    F.sum(F.when(F.col("__orphan"), 1).otherwise(0)).alias("bad"),
-                ).collect()[0]
-                total, bad = int(agg["total"]), int(agg["bad"] or 0)
-                score = ((total - bad) / total) if total else 1.0
-                status = (QualityStatus.PASSED if bad == 0
-                          else QualityStatus.FAILED if score < 0.99
-                          else QualityStatus.WARNING)
+                orphan = _any([F.col(f"__orphan_{i}")
+                               for i in range(len(self.fk_checks))])
+                agg = out.agg(F.count(F.lit(1)), F.count_if(orphan)).collect()[0]
+                total, bad = int(agg[0]), int(agg[1])
+                status, score, details = threshold_grade(
+                    0.99, 1.0, "{failed}/{checked} rows reference missing "
+                               f"parents across {len(self.fk_checks)} FK(s)",
+                )(total, bad)
                 return QualityCheckResult(
                     "DQ007", "referential_integrity",
                     QualityDimension.INTEGRITY, status, score,
-                    total, total - bad, bad,
-                    details=f"{bad}/{total} rows reference missing parents "
-                            f"across {len(self.fk_checks)} FK(s)")
+                    total, total - bad, bad, details=details)
 
             self.add_rule(SparkQualityRule(
                 "DQ007", "referential_integrity",
@@ -603,51 +512,17 @@ class DataQualityValidator:
                 check_fn=q7_check,
             ))
 
-        # DQ008 phi_fields_present ---------------------------------------
-        def q8_has_phi(df: DataFrame) -> Column:
-            exprs = [_truthy(df, n) for n in PHI_FIELDS if n in df.columns]
-            if not exprs:
-                return F.lit(False)
-            out = exprs[0]
-            for e in exprs[1:]:
-                out = out | e
-            return out
-
-        def q8_aggs(df: DataFrame, _) -> list[Column]:
-            return [
-                F.count(F.lit(1)).alias("DQ008__total"),
-                F.sum(F.when(q8_has_phi(df), 1).otherwise(0)).alias("DQ008__with_phi"),
-            ]
-
-        def q8_sum(row: dict, _) -> dict:
-            total, with_phi = row["DQ008__total"], row["DQ008__with_phi"]
-            score = (with_phi / total) if total else 0.0
-            status = QualityStatus.WARNING if score < 0.5 else QualityStatus.PASSED
-            return dict(status=status, score=score, records_checked=total,
-                        records_passed=with_phi, records_failed=total - with_phi,
-                        details=f"{with_phi}/{total} records have PHI fields")
-
+        # DQ008 phi_fields_present: a row without PHI fails; never FAILED.
         self.add_rule(SparkQualityRule(
             "DQ008", "phi_fields_present",
             "Required PHI fields present for de-identification",
             QualityDimension.COMPLETENESS, "warning",
             [DataZone.LANDING, DataZone.BRONZE],
-            agg_exprs=q8_aggs, summarize=q8_sum,
+            rows=lambda df: (1, ~_any([_truthy(df, n) for n in PHI_FIELDS
+                                       if n in df.columns])),
+            grade=threshold_grade(0.0, 0.5, "{passed}/{checked} records have PHI "
+                                            "fields", empty_score=0.0),
         ))
-
-    _q1_required_last: list[str] = []
-
-    def _instance_summary(
-        self, row: dict, rule_id: str, fail_below: float, warn_below: float,
-        details: str
-    ) -> dict:
-        checked = int(row[f"{rule_id}__checked"] or 0)
-        failed = int(row[f"{rule_id}__failed"] or 0)
-        passed = checked - failed
-        score = (passed / checked) if checked > 0 else 1.0
-        return dict(status=_grade(score, fail_below, warn_below), score=score,
-                    records_checked=checked, records_passed=passed,
-                    records_failed=failed, details=details)
 
     # --------------------------------------------------------------- validate
     def validate(
@@ -661,59 +536,55 @@ class DataQualityValidator:
         Mirrors reference ``validate`` (``data_quality.py:310-419``): rules
         filtered by ``enabled`` and zone, per-rule errors degrade to
         SKIPPED, FAILED rules contribute their failure predicates to
-        ``quarantine_condition``.
+        ``quarantine_condition``. Every ``rows`` rule's ``(checked,
+        failed)`` pair lands in one ``select``; one ``agg`` over it takes
+        the row count plus ``sum(checked)`` and ``count_if(failed)`` per
+        rule.
         """
         start = datetime.now(timezone.utc)
-        self._required_fields = required_fields or []
-        self._q1_required_last = self._q1_required(df)
+        self._required_fields = list(required_fields or df.columns)
         df = with_ingest_order(df)
 
         active = [r for r in self.rules
                   if r.enabled and target_zone in r.applicable_zones]
 
-        # Phase 1: ONE fused scan for every Column-expressible rule.
-        agg_cols: list[Column] = [F.count(F.lit(1)).alias("__total_records")]
-        fused: list[SparkQualityRule] = []
-        errored: dict[str, str] = {}
-        for rule in active:
-            if rule.agg_exprs is None:
+        pairs: dict[int, tuple[Column, Column]] = {}
+        errored: dict[int, Exception] = {}
+        for i, rule in enumerate(active):
+            if rule.rows is None:
                 continue
             try:
-                agg_cols.extend(rule.agg_exprs(df, self))
-                fused.append(rule)
+                checked, failed = rule.rows(df)
+                pairs[i] = (F.lit(checked).cast("long"), failed)
             except Exception as e:  # degrade to SKIPPED, reference :364-380
-                errored[rule.rule_id] = str(e)
-        row = df.agg(*agg_cols).collect()[0].asDict()
-        total_records = int(row["__total_records"])
+                errored[i] = e
+        per_row = df.select(*[
+            c.alias(f"{kind}{i}")
+            for i, pair in pairs.items() for kind, c in zip("cf", pair)
+        ])
+        row = per_row.agg(F.count(F.lit(1)).alias("total"), *[
+            agg(f"{kind}{i}").alias(f"{kind}{i}")
+            for i in pairs for kind, agg in (("c", F.sum), ("f", F.count_if))
+        ]).collect()[0]
 
         results: list[QualityCheckResult] = []
         quarantine = F.lit(False)
-
-        for rule in active:
+        for i, rule in enumerate(active):
             t0 = datetime.now(timezone.utc)
-            if rule.rule_id in errored:
-                results.append(QualityCheckResult(
-                    rule.rule_id, rule.name, rule.dimension,
-                    QualityStatus.SKIPPED, 0.0, 0, 0, 0,
-                    details=f"Error: {errored[rule.rule_id]}"))
-                continue
             try:
-                if rule.check_fn is not None and rule.agg_exprs is None:
+                if i in errored:
+                    raise errored[i]
+                if rule.rows is None:
                     result = rule.check_fn(df)  # escape hatch: own pass
                 else:
-                    parts = rule.summarize(row, self)
+                    checked, failed = int(row[f"c{i}"] or 0), int(row[f"f{i}"])
+                    status, score, details = rule.grade(checked, failed)
                     result = QualityCheckResult(
-                        rule.rule_id, rule.name, rule.dimension,
-                        parts["status"], parts["score"],
-                        parts["records_checked"], parts["records_passed"],
-                        parts["records_failed"], parts["details"])
-
-                # Only a FAILED rule sends its failing rows to quarantine.
-                if (result.status == QualityStatus.FAILED
-                        and rule.fail_condition is not None):
-                    cond = rule.fail_condition(df, self)
-                    if cond is not None:
-                        quarantine = quarantine | cond
+                        rule.rule_id, rule.name, rule.dimension, status, score,
+                        checked, checked - failed, failed, details)
+                    # Only a FAILED rule sends its failing rows to quarantine.
+                    if status == QualityStatus.FAILED:
+                        quarantine = quarantine | pairs[i][1]
                 result.execution_time_ms = (
                     datetime.now(timezone.utc) - t0
                 ).total_seconds() * 1000
@@ -733,7 +604,7 @@ class DataQualityValidator:
             report_id=self._generate_report_id(),
             dataset_name=self.dataset_name,
             zone=target_zone,
-            total_records=total_records,
+            total_records=int(row["total"]),
             check_results=results,
             overall_score=overall_score,
             overall_status=overall_status,

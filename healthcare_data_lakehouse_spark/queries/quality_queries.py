@@ -339,58 +339,32 @@ def quality_promotion_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Custom-rule escape hatch (reference add_rule, "
     "data_quality.py:305-308): a user-registered PHI-leak detector "
-    "(plaintext SSN pattern) whose aggregates FUSE into the same single "
-    "validation scan as the built-in rules — extensibility without extra "
+    "(plaintext SSN pattern) whose two row expressions FUSE into the same "
+    "single validation scan as the built-in rules — extensibility without extra "
     "passes.",
 )
 def quality_custom_rule_ssn_plaintext(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Column
     from healthcare_data_lakehouse_spark.quality import (
         QualityDimension,
-        QualityStatus,
         SparkQualityRule,
+        threshold_grade,
     )
 
     df = healthcare_frame(spark, sf_dir)
     validator = DataQualityValidator("patients", id_field="id")
 
     SSN_RE = "^[0-9]{3}-[0-9]{2}-[0-9]{4}$"
-
-    def populated(df: DataFrame) -> Column:
-        return F.col("ssn").isNotNull() & (F.col("ssn") != "")
-
-    def leaked(df: DataFrame) -> Column:
-        return populated(df) & F.trim(F.col("ssn")).rlike(SSN_RE)
-
-    def aggs(df: DataFrame, _) -> list[Column]:
-        return [
-            F.sum(F.when(populated(df), 1).otherwise(0)).alias("DQ100__checked"),
-            F.sum(F.when(leaked(df), 1).otherwise(0)).alias("DQ100__failed"),
-        ]
-
-    def summarize(row: dict, _) -> dict:
-        checked = int(row["DQ100__checked"] or 0)
-        failed = int(row["DQ100__failed"] or 0)
-        passed = checked - failed
-        score = (passed / checked) if checked > 0 else 1.0
-        status = (
-            QualityStatus.PASSED if checked == 0 or score >= 0.99
-            else QualityStatus.WARNING if score >= 0.95
-            else QualityStatus.FAILED
-        )
-        return dict(
-            status=status, score=score, records_checked=checked,
-            records_passed=passed, records_failed=failed,
-            details=f"{failed}/{checked} populated SSNs stored in plaintext",
-        )
+    populated = F.col("ssn").isNotNull() & (F.col("ssn") != "")
+    leaked = populated & F.trim(F.col("ssn")).rlike(SSN_RE)
 
     validator.add_rule(SparkQualityRule(
         "DQ100", "ssn_not_plaintext",
         "PHI leak detector: populated SSNs must not match the plaintext "
         "###-##-#### pattern (should be tokenized/encrypted upstream)",
         QualityDimension.VALIDITY, "critical",
-        [DataZone.BRONZE], agg_exprs=aggs, summarize=summarize,
-        fail_condition=lambda df, _: leaked(df),
+        [DataZone.BRONZE], rows=lambda df: (populated, leaked),
+        grade=threshold_grade(
+            0.95, 0.99, "{failed}/{checked} populated SSNs stored in plaintext"),
     ))
     report = validator.validate(df, DataZone.BRONZE, required_fields=REQUIRED)
     rows = [
@@ -744,7 +718,7 @@ _PARSE_DIS = (
     "Registered through the same add_rule surface as DQ100, fusing into "
     "the shared single validation scan — cross-FIELD checks cost no "
     "extra pass because they are row-local predicates, unlike "
-    "cross-RECORD checks (DQ005) which aggregate.",
+    "cross-RECORD checks (DQ005) which need a window over the id.",
 )
 def quality_consistency_rule_discharge(
     spark: SparkSession, sf_dir: str
@@ -752,8 +726,8 @@ def quality_consistency_rule_discharge(
     from pyspark.sql import Column
     from healthcare_data_lakehouse_spark.quality import (
         QualityDimension,
-        QualityStatus,
         SparkQualityRule,
+        threshold_grade,
     )
     from healthcare_data_lakehouse_spark.transforms import DATE_FORMATS
 
@@ -766,42 +740,17 @@ def quality_consistency_rule_discharge(
         ts = F.coalesce(*[F.try_to_timestamp(c, F.lit(f)) for f in DATE_FORMATS])
         return F.when(populated, ts)
 
-    def both(df: DataFrame) -> Column:
-        return parsed("admission_date").isNotNull() & parsed(
-            "discharge_date"
-        ).isNotNull()
-
-    def violated(df: DataFrame) -> Column:
-        return both(df) & (parsed("discharge_date") < parsed("admission_date"))
-
-    def aggs(df: DataFrame, _) -> list[Column]:
-        return [
-            F.sum(F.when(both(df), 1).otherwise(0)).alias("DQ101__checked"),
-            F.sum(F.when(violated(df), 1).otherwise(0)).alias("DQ101__failed"),
-        ]
-
-    def summarize(row: dict, _) -> dict:
-        checked = int(row["DQ101__checked"] or 0)
-        failed = int(row["DQ101__failed"] or 0)
-        score = ((checked - failed) / checked) if checked > 0 else 1.0
-        status = (
-            QualityStatus.PASSED if checked == 0 or score >= 0.99
-            else QualityStatus.WARNING if score >= 0.95
-            else QualityStatus.FAILED
-        )
-        return dict(
-            status=status, score=score, records_checked=checked,
-            records_passed=checked - failed, records_failed=failed,
-            details=f"{failed}/{checked} stays discharge before admission",
-        )
+    adm, dis = parsed("admission_date"), parsed("discharge_date")
+    both = adm.isNotNull() & dis.isNotNull()
 
     validator.add_rule(SparkQualityRule(
         "DQ101", "discharge_not_before_admission",
         "Cross-field consistency: discharge_date >= admission_date when "
         "both parse under the standard four-format chain",
         QualityDimension.CONSISTENCY, "major",
-        [DataZone.SILVER], agg_exprs=aggs, summarize=summarize,
-        fail_condition=lambda df, _: violated(df),
+        [DataZone.SILVER], rows=lambda df: (both, both & (dis < adm)),
+        grade=threshold_grade(
+            0.95, 0.99, "{failed}/{checked} stays discharge before admission"),
     ))
     report = validator.validate(df, DataZone.SILVER, required_fields=REQUIRED)
     rows = [

@@ -651,16 +651,17 @@ def stream_neardup_admission(
 
 def quality_admission_condition() -> Column:
     """Row-local admission predicate for streaming quality gating: TRUE
-    when the record FAILS any rule that can be decided from the row alone
-    — completeness of (id, patient_id, birth_date), patient-id format
-    validity, age / heart-rate range accuracy, and admission-vs-discharge
-    date consistency. Mirrors DQ001/DQ003/DQ005 plus the CONSISTENCY rule
-    from ``quality.py``; UNIQUENESS and referential INTEGRITY are
-    deliberately absent — they cannot be decided row-locally on a stream
-    and belong to the incremental index gates (``lsh_probe``, MERGE) that
-    hold materialized state. Exposed as a plain Column so the batch
-    validator, the streaming gate, and the oracle restatement stay in
-    lockstep."""
+    when the record FAILS any check that can be decided from the row alone
+    — completeness of (id, patient_id, birth_date), an ``MRN`` + nine-digit
+    patient id, age within 0-120 and heart rate within 20-250, and
+    discharge not before admission. It is a gate of its own, not a copy of
+    the batch rules: the validator in ``quality.py`` never calls it, its id
+    pattern and vital bounds are narrower than DQ003's and DQ006's, and it
+    has no uniqueness check. UNIQUENESS and referential INTEGRITY cannot be
+    decided row-locally on a stream and belong to the incremental index
+    gates (``lsh_probe``, MERGE) that hold materialized state. Its oracle is
+    the ``streaming_quality_admission_gate`` SQL restatement
+    (``_GATE_FAIL_SQL``)."""
     populated = lambda c: F.col(c).isNotNull() & (  # noqa: E731
         F.trim(F.col(c).cast("string")) != ""
     )

@@ -13,9 +13,6 @@ store's OCC writes — no silent three-way data merges). The shallow
 sharp edge is symmetric with clone's: VACUUM on either side can reclaim
 commit dirs the other still references; production deployments put
 branches under the same retention policy as their source.
-
-Subclass (like zones_dv) so the reference-parity zones.py stays
-byte-stable.
 """
 
 from __future__ import annotations

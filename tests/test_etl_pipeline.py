@@ -148,11 +148,8 @@ def test_quarantine_condition_is_never_null(spark):
     v.add_rule(SparkQualityRule(
         "C001", "v_not_bad", "", QualityDimension.VALIDITY, "critical",
         [DataZone.SILVER],
-        agg_exprs=lambda d, _: [F.count(F.lit(1)).alias("C001__total")],
-        summarize=lambda row, _: dict(
-            status=QualityStatus.FAILED, score=0.0, records_checked=3,
-            records_passed=2, records_failed=1, details=""),
-        fail_condition=lambda d, _: F.col("v") == "bad",
+        rows=lambda d: (1, F.col("v") == "bad"),
+        grade=lambda checked, failed: (QualityStatus.FAILED, 0.0, ""),
     ))
     report = v.validate(df, DataZone.SILVER, required_fields=["id"])
     flags = df.select("id", report.quarantine_condition.alias("q")).collect()
