@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, NumericType
 from pyspark.sql.window import Window
 
-from healthcare_data_lakehouse_spark.transforms import INGEST_ORDER_COL, with_ingest_order
+from healthcare_data_lakehouse_spark.transforms import INGEST_ORDER_COL
 from healthcare_data_lakehouse_spark.zones import DataZone
 
 __all__ = [
@@ -441,9 +441,13 @@ class DataQualityValidator:
 
         # DQ005 no_duplicate_records: a row fails as the 2nd+ occurrence of
         # its id in ingest order (reference :733-739), so any duplicate
-        # scores below 1.0 and FAILS.
+        # scores below 1.0 and FAILS. Ingest order is the frame's stamp, or
+        # without one the id ``with_ingest_order`` would stamp, computed
+        # inside the window: the predicate then holds on the caller's frame.
         def q5_rows(df: DataFrame) -> tuple[int, Column]:
-            w = Window.partitionBy(v._record_id(df)).orderBy(F.col(INGEST_ORDER_COL))
+            order = (F.col(INGEST_ORDER_COL) if INGEST_ORDER_COL in df.columns
+                     else F.monotonically_increasing_id())
+            w = Window.partitionBy(v._record_id(df)).orderBy(order)
             return 1, F.row_number().over(w) > 1
 
         self.add_rule(SparkQualityRule(
@@ -543,7 +547,6 @@ class DataQualityValidator:
         """
         start = datetime.now(timezone.utc)
         self._required_fields = list(required_fields or df.columns)
-        df = with_ingest_order(df)
 
         active = [r for r in self.rules
                   if r.enabled and target_zone in r.applicable_zones]

@@ -3,6 +3,38 @@
 Local testing runs ``local[N]`` single-JVM; the config block is written for
 a real multi-executor cluster (AQE, skew handling, broadcast thresholds) and
 degrades gracefully on local mode.
+
+Two defaults remove fixed costs of Spark 4.1 that do not depend on the data
+(measured on a 4-core VM):
+
+* ``spark.sql.icu.caseMappings.enabled=false``. With ICU case mappings, the
+  first ``upper``/``lower``/``initcap`` in a JVM runs the static initializer
+  of ``CollationAwareUTF8String``, which title-cases all 1,114,112 code
+  points through ICU: 1.1 s to load that class alone, and a first
+  ``upper()`` query took 1.1 s against 0.1 s with the switch off. Off,
+  UTF8_BINARY ``upper``/``lower`` use the JVM's (Java 17, Unicode 13) case
+  tables and the ICU table is never built. Those tables equal Python's
+  ``str.upper``/``str.lower``, the reference's semantics, on every code
+  point of U+0000-U+04FF and U+1E00-U+1FFF, where ICU does not (U+019B and
+  U+0264 uppercase differently). Over all code points the JVM tables differ
+  from ICU on 67 code points for ``upper`` and 67 for ``lower`` (10 of them
+  in the BMP). ``initcap`` would differ from ICU on 684 code points (617 as a
+  word's first letter, U+00DF among them, and the 67 ``lower`` ones inside
+  a word), so the package calls no ``initcap``.
+* ``spark.python.sql.dataFrameDebugging.enabled=false``. PySpark wraps
+  ``F.col`` and every method of ``Column`` in a call-site capture that
+  reads a conf, walks the Python stack and sets and clears an origin in the
+  JVM on every call: ``(F.col("x") + 1).alias("y")`` makes 35 py4j round
+  trips with it and 5 without. Across the benchmark's short catalog reads
+  it made up 62% of the round trips a query spends (486 against 183 per
+  query). Off, an error message loses PySpark's
+  DataFrame query context (the Python ``file:line`` of the failing Column
+  call). PySpark reads this switch once per process, at the first Column
+  call: a process whose first Column call ran before ``get_spark`` keeps
+  the setting PySpark cached then: off if no session was active, on if a
+  session without this default was.
+
+``extra_conf`` can override either default.
 """
 
 from __future__ import annotations
@@ -56,6 +88,13 @@ def get_spark(
         # keep stdout clean (bench.py's one-JSON-line contract)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # Skip the 1.1 s ICU case table build on the first upper()/lower();
+        # case mapping follows the JVM's Unicode tables (module docstring).
+        .config("spark.sql.icu.caseMappings.enabled", "false")
+        # Skip the call-site capture on every Column call (35 -> 5 py4j
+        # round trips for one small expression); errors lose the Python
+        # file:line query context (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -79,3 +79,37 @@ def test_records_failed_counts_the_rules_own_predicate(spark, sf_dir, zone):
     ids = df.groupBy(F.coalesce(F.col("id").cast("string"), F.lit("None")))
     extra = ids.count().agg(F.sum(F.col("count") - 1)).first()[0]
     assert results["DQ005"].records_failed == extra > 0
+
+
+def test_duplicate_condition_holds_on_the_callers_frame(spark, tmp_path):
+    """DQ005's quarantine predicate needs no column the caller lacks: on
+    the caller's own frame it flags the 2nd and later occurrences of an
+    id, and ``run_job`` quarantines exactly those rows."""
+    from healthcare_data_lakehouse_spark.etl import (
+        ETLJobConfig,
+        ETLStatus,
+        HealthcareETLManager,
+    )
+    from healthcare_data_lakehouse_spark.zones import LoadType
+
+    df = spark.createDataFrame(
+        [("1", "MRN000000001", "a"), ("2", "MRN000000002", "b"),
+         ("1", "MRN000000001", "c")],
+        "id string, patient_id string, tag string")
+    report = DataQualityValidator("patients", id_field="patient_id").validate(
+        df, DataZone.SILVER, required_fields=["id", "patient_id"])
+    dq5 = {r.rule_id: r for r in report.check_results}["DQ005"]
+    assert (dq5.status, dq5.records_failed) == (QualityStatus.FAILED, 1)
+    flagged = df.withColumn("q", report.quarantine_condition)
+    assert sorted(r.tag for r in flagged.filter("q").collect()) == ["c"]
+
+    mgr = HealthcareETLManager(spark, str(tmp_path))
+    result = mgr.run_job(ETLJobConfig(
+        job_id="dup", source_name="dup", target_zone=DataZone.SILVER,
+        load_type=LoadType.FULL, required_fields=["id", "patient_id"],
+    ), df)
+    assert result.status == ETLStatus.COMPLETED, result.error_message
+    assert result.records_quarantined == 1
+    assert [r.tag for r in mgr.get_quarantined("dup").collect()] == ["c"]
+    silver = mgr.get_zone_data(DataZone.SILVER, "dup")
+    assert sorted(r.tag for r in silver.collect()) == ["a", "b"]

@@ -7,8 +7,14 @@ transform-order sensitivity.
 
 from __future__ import annotations
 
-from pyspark.sql import Row
+import ast
+import re
+from pathlib import Path
 
+from pyspark.sql import Row
+from pyspark.sql import functions as F
+
+import healthcare_data_lakehouse_spark as pkg
 from healthcare_data_lakehouse_spark import transforms as T
 
 
@@ -117,3 +123,35 @@ def test_python_record_transform_composes_with_registry(spark):
     out = reg.apply(df, ["trim_strings", "mask_code", "unknown_is_skipped"])
     got = {r.id: r.code for r in out.collect()}
     assert got == {"1": "ab**", "2": "cd**"}
+
+
+def test_case_mapping_matches_python(spark):
+    """``upper``/``lower`` follow Python's ``str.upper``/``str.lower`` (the
+    reference's semantics) on Latin, Greek, Cyrillic and their extended
+    blocks. The session maps case with the JVM's tables, not ICU's, which
+    uppercases U+019B and U+0264 differently."""
+    cps = [*range(0x0000, 0x0500), *range(0x1E00, 0x2000)]
+    df = spark.createDataFrame([(c, chr(c)) for c in cps], "cp int, s string")
+    got = {r.cp: (r.u, r.l) for r in df.select(
+        "cp", F.upper("s").alias("u"), F.lower("s").alias("l")).collect()}
+    bad = [hex(c) for c in cps
+           if got[c] != (chr(c).upper(), chr(c).lower())]
+    assert bad == []
+
+
+def test_no_initcap_in_the_package():
+    """Under the JVM's case tables ``initcap`` differs from ICU on 684
+    code points, U+00DF among them, so no package module calls it,
+    through the Column API or in SQL text."""
+    root = Path(pkg.__file__).parent
+    sql_call = re.compile(r"\binitcap\s*\(", re.IGNORECASE)
+    found = set()
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            text = getattr(node, "value", None)
+            if name == "initcap" or (
+                isinstance(text, str) and sql_call.search(text)
+            ):
+                found.add(path.relative_to(root).as_posix())
+    assert found == set()
