@@ -649,7 +649,7 @@ def lineage_columns_from_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'v2', COUNT(*), ROUND(SUM(o_totalprice), 2)
     FROM (SELECT * FROM v1 UNION ALL SELECT * FROM v2_extra)
     """,
-    description="Time travel on the ZoneStore manifest (Delta/Iceberg "
+    description="Time travel on the ZoneStore log (Delta/Iceberg "
     "snapshot-read semantics on plain parquet): write v1, append v2, "
     "then read BOTH versions back side-by-side — the audit/debug/"
     "reproduce-yesterday's-training-set primitive. Superseded commits "
@@ -1414,7 +1414,7 @@ def events_watermark_lateness_audit(
            'CLN' AS status
     FROM orders WHERE o_orderkey % 5 = 0
     """,
-    description="SHALLOW CLONE (Delta parity): the clone's manifest "
+    description="SHALLOW CLONE (Delta parity): the clone's first log entry "
     "references the source's commit dirs by absolute path — zero bytes "
     "copied at clone time; an APPEND to the clone lands as a local "
     "commit, leaving the source untouched (copy-on-write, "
@@ -1520,7 +1520,7 @@ def load_merge_full_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="RESTORE TABLE TO VERSION (Delta parity) on the "
     "ZoneStore: after an APPEND and a DELETE mutate the table, restore "
-    "to version 1 flips the manifest back to the original commit set — "
+    "to version 1 flips the table back to the original commit set — "
     "metadata-only, data files untouched, and the restore is itself a "
     "new version (time-travelable / undoable), exactly Delta's contract.",
 )
@@ -1620,7 +1620,7 @@ def load_observed_write_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     "history made queryable). APPEND commits never rewrite history, so "
     "each version's schema is the mergeSchema union of its commit "
     "schemas at scan time; the audit itself touches only parquet "
-    "footers and the manifest — metadata-scale at any table size. "
+    "footers and the log — metadata-scale at any table size. "
     "Oracle pins the expected evolution of the deterministic "
     "three-step write sequence.",
 )
@@ -1826,7 +1826,7 @@ def load_cdf_replication_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(Delta Bloom index analog): 4 APPEND commits partition orders by "
     "key residue, build_bloom_index computes each commit's 65536-bit/"
     "3-hash filter DISTRIBUTED (distinct bit positions collapse before "
-    "reaching the driver) and persists it beside the manifest; a point "
+    "reaching the driver) and persists it beside the log; a point "
     "lookup probes the filter and opens only commits whose bloom holds "
     "all three probe bits — zone maps cannot skip here because every "
     "commit's [min,max] key range overlaps every probe. The md5 bit "
@@ -2120,7 +2120,7 @@ def load_deletion_vector_read(
     "landed, stayed isolated, and merged without copying or losing a "
     "commit. Divergent merges (main advanced since the cut) raise and "
     "re-branch — OCC, not silent three-way merges; at 100 TB the "
-    "whole cycle is manifest metadata, never a data rewrite.",
+    "whole cycle is log metadata, never a data rewrite.",
 )
 def load_branch_merge_flow(
     spark: SparkSession, sf_dir: str

@@ -1,34 +1,40 @@
-"""Medallion zones and load patterns on a manifest-based Parquet store.
+"""Medallion zones and load patterns on a log-structured Parquet store.
 
 The reference keeps zones as an in-memory nested dict
 (``src/etl/etl_manager.py:156-160`` — "In-memory storage for demo") with four
 load patterns (FULL/APPEND/MERGE/INCREMENTAL, ``src/etl/etl_manager.py:40-43,
 445-476``) and a quarantine dict (``src/etl/etl_manager.py:160, 371-393``).
 
-Here a dataset is a directory of immutable Parquet *commits* plus an atomic
-JSON manifest — the same transaction-log idea Delta Lake uses, minimal
-edition (delta-spark is not available in this environment):
+Here a dataset is a directory of immutable Parquet *commits* plus a log
+of one JSON entry per version: the put-if-absent transaction log of Delta
+Lake (VLDB 2020), minimal edition (delta-spark is not available in this
+environment):
 
     <root>/<zone>/<dataset>/
-        _manifest.json          # the table's log, below
-        c000001/*.parquet       # immutable commit directory
-        c000002/*.parquet
+        _log/000001.json            # the whole state of version 1
+        _log/000002.json            # the whole state of version 2
+        c000001_1f3a9b2c/*.parquet  # immutable commit dirs, named for the
+        c000002_77d0e4aa/*.parquet  # version that staged them
+        _dv/dv000003_5be0c1d4/      # deletion vectors (zones_dv)
 
-    _manifest.json
-        version      N, bumped by every commit
-        commits      live commit dirs, e.g. ["c000001", "c000002"]
-        history      {version: commits live at that version} (time travel)
-        schemas      {commit: read schema} — the Spark StructType JSON a
-                     parquet read of that commit returns (every field
-                     nullable); a partitioned commit also lists its
-                     "partitionColumns"
-        metrics      {version: {numOutputRows, numFiles, numOutputBytes}}
-                     for each version that wrote files
-        dvs          live deletion vectors (zones_dv), e.g. ["dv000003"]
-                     under _dv/; absent when none
-        dv_history   {version: vectors live at that version}, for each
-                     version that had any
+    _log/{V:06d}.json, the state of version V
+        commits      live commit dirs, in version order
+        schemas      {commit: read schema} for each live commit — the Spark
+                     StructType JSON a parquet read of that commit returns
+                     (every field nullable); a partitioned commit also
+                     lists its "partitionColumns"
+        metrics      {numOutputRows, numFiles, numOutputBytes} of the
+                     files this version wrote; absent when it wrote none
+        dvs          live deletion vectors under _dv/; absent when none
         dv_key, constraints, txns, cloned_from, when used
+
+The latest version is the highest entry number, and time travel to
+version v reads ``_log/{v}.json``. Every table change stages its files
+under fresh names, then publishes them by creating the next entry with
+put-if-absent (``ZoneStore._claim_version``): of two writers that read
+version V, exactly one creates V+1 and the other raises
+:class:`ConcurrentModificationError`. A dir that no entry names is
+invisible to readers; :meth:`ZoneStore.vacuum` reclaims it once it is old.
 
 A version owns its commits and its vectors together: every read of it
 anti-joins its vectors on ``dv_key``. A new version that keeps none of
@@ -37,8 +43,8 @@ read through them or is new data); any other version carries them over,
 so APPEND, INCREMENTAL and an UPDATE of ``dv_key`` fold them first
 (``purge_dv``): a vector would hide a newer row with its key.
 
-* ``FULL``        → write one commit, manifest lists only it.
-* ``APPEND``      → write one commit, manifest appends it (no data rewrite —
+* ``FULL``        → write one commit, the version lists only it.
+* ``APPEND``      → write one commit, the version appends it (no data rewrite —
                     O(new data), scales to 100 TB tables).
 * ``INCREMENTAL`` → left-anti join on the id column finds genuinely new rows;
                     only those are written as an appended commit.
@@ -52,15 +58,17 @@ so APPEND, INCREMENTAL and an UPDATE of ``dv_key`` fold them first
 A commit costs one Spark write action. Its row count is an observation on
 the written frame, read once the write has succeeded, and readers load
 ``spark.read.schema(merged).parquet(*commit_dirs)`` with the schemas the
-manifest recorded, so no read pays a footer-merging inference job. Column
+entry recorded, so no read pays a footer-merging inference job. Column
 pruning and predicate pushdown reach the Parquet scan unchanged.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import uuid
 from enum import Enum
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -220,6 +228,13 @@ def _tree_stats(dirs: list[str]) -> tuple[int, int]:
     return files, total
 
 
+def _write_metrics(rows: int, written: list[str]) -> dict:
+    """Delta-style operationMetrics of a version: rows from the write's
+    observation, files and bytes of the dirs it wrote."""
+    files, size = _tree_stats(written)
+    return {"numOutputRows": rows, "numFiles": files, "numOutputBytes": size}
+
+
 class DataZone(str, Enum):
     """Unified medallion zones.
 
@@ -273,9 +288,9 @@ class ConcurrentModificationError(RuntimeError):
 
 
 class ZoneStore:
-    """Parquet-backed zone storage with atomic manifest commits."""
+    """Parquet-backed zone storage with a put-if-absent version log."""
 
-    MANIFEST = "_manifest.json"
+    LOG_DIR = "_log"
     DV_DIR = "_dv"
 
     def __init__(self, spark: SparkSession, root: str):
@@ -290,36 +305,126 @@ class ZoneStore:
     def _quarantine_path(self, job_id: str) -> str:
         return os.path.join(self.root, "_quarantine", job_id)
 
-    def _read_manifest(self, path: str) -> dict:
-        mf = os.path.join(path, self.MANIFEST)
-        if not os.path.exists(mf):
-            return {"version": 0, "commits": []}
-        with open(mf) as f:
-            return json.load(f)
+    # -------------------------------------------------------------------- log
+    def _log_file(self, path: str, version: int) -> str:
+        return os.path.join(path, self.LOG_DIR, f"{version:06d}.json")
 
-    def _write_manifest(self, path: str, manifest: dict) -> None:
-        # Atomic replace: readers see either the old or the new manifest.
-        tmp = os.path.join(path, self.MANIFEST + ".tmp")
+    def _log_versions(self, path: str) -> list[int]:
+        """The versions whose entries are on disk, ascending."""
+        try:
+            names = os.listdir(os.path.join(path, self.LOG_DIR))
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(n[:-5]) for n in names
+            if n.endswith(".json") and n[:-5].isdigit()
+        )
+
+    def _read_entry(self, path: str, version: int) -> dict | None:
+        """Version ``version``'s entry; None when it was never written or
+        was vacuumed."""
+        try:
+            with open(self._log_file(path, version)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _read_manifest(self, path: str) -> dict:
+        """The latest version's entry, with its number as ``version``; a
+        table never written is version 0 with no commits."""
+        while True:
+            versions = self._log_versions(path)
+            if not versions:
+                return {"version": 0, "commits": []}
+            entry = self._read_entry(path, versions[-1])
+            if entry is not None:  # else vacuumed since the listing
+                return {**entry, "version": versions[-1]}
+
+    def _claim_version(
+        self,
+        path: str,
+        read_version: int,
+        entry: dict,
+        staged: list[str] = (),
+    ) -> int:
+        """Publish ``entry`` as version ``read_version + 1``: the only way
+        a version comes into being. The entry is written to a temp file
+        and hard-linked to its name, a put-if-absent (the contract of
+        Delta's LogStore): of two writers that read the same version,
+        exactly one creates the next, and no reader sees a partial entry.
+        The loser's ``staged`` dirs are removed and it raises
+        :class:`ConcurrentModificationError`. Any other OSError (ENOSPC,
+        EACCES, ...) is a real I/O failure: it propagates, and ``staged``
+        stays on disk as evidence."""
+        version = read_version + 1
+        tmp = os.path.join(path, self.LOG_DIR, f".{uuid.uuid4().hex}.tmp")
+        os.makedirs(os.path.dirname(tmp), exist_ok=True)
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(path, self.MANIFEST))
+            json.dump(entry, f)
+        try:
+            os.link(tmp, self._log_file(path, version))
+        except FileExistsError:
+            for d in staged:
+                shutil.rmtree(d, ignore_errors=True)
+            raise ConcurrentModificationError(
+                f"{path} advanced past version {read_version}: version "
+                f"{version} was claimed by a concurrent writer — re-read "
+                "and retry"
+            ) from None
+        finally:
+            os.unlink(tmp)
+        return version
+
+    @staticmethod
+    def _next_entry(
+        manifest: dict,
+        commits: list[str],
+        dvs: list[str] | None = None,
+        schemas: dict | None = None,
+    ) -> dict:
+        """The entry of a version after ``manifest`` whose live commits are
+        ``commits`` and whose deletion vectors are ``dvs``. The table's
+        properties carry over; the commits' schemas come from ``schemas``
+        (default: the manifest's). Without ``dvs``, a version that keeps
+        none of the previous live commits retires the vectors and any
+        other carries them over. Superseded commit dirs and vectors stay
+        on disk until vacuum() — the same contract as Delta's transaction
+        log + VACUUM."""
+        if dvs is None:
+            kept = set(commits) & set(manifest["commits"])
+            dvs = manifest.get("dvs", []) if kept else []
+        if schemas is None:
+            schemas = manifest.get("schemas", {})
+        entry = {
+            k: v for k, v in manifest.items()
+            if k not in ("version", "metrics", "dvs")
+        }
+        entry["commits"] = list(commits)
+        entry["schemas"] = {c: schemas[c] for c in commits if c in schemas}
+        if dvs:
+            entry["dvs"] = list(dvs)
+        return entry
+
+    # ---------------------------------------------------------------- staging
+    @staticmethod
+    def _staging_dir(root: str, prefix: str, version: int) -> str:
+        """A fresh dir under ``root`` for files that version ``version``
+        will publish. Names sort in version order, which is the order
+        reads fold schemas in, and never collide, so racing writers each
+        stage to their own dir and the entry that names it publishes it
+        with no rename."""
+        return os.path.join(
+            root, f"{prefix}{version:06d}_{uuid.uuid4().hex[:8]}"
+        )
 
     def _stage_commit(
         self,
-        path: str,
+        staging: str,
         df: DataFrame,
         partition_columns: list[str] | None,
         rebalance: bool = True,
-    ) -> str:
-        """Write commit data to a uniquely-named staging directory. Racing
-        writers each get their own staging dir, so the (long) Spark write
-        can never clobber another writer's already-published files — the
-        bug with writing straight to ``c{V+1}`` in overwrite mode was that
-        the OCC loser overwrote the winner's data before the publish-time
-        version check raised."""
-        import uuid
-
-        staging = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
+    ) -> None:
+        """Write commit data to the staging dir ``staging``."""
         # Size the commit's output files (guide §6): a df whose lineage
         # ends in a wide shuffle otherwise lands one (tiny) file per
         # shuffle partition — measured 64 sub-100KB parquet files for one
@@ -346,68 +451,24 @@ class ZoneStore:
         if partition_columns:
             writer = writer.partitionBy(*partition_columns)
         writer.parquet(staging)
-        return staging
-
-    def _publish_commit(self, path: str, staging: str, version: int) -> str:
-        """Atomically claim commit slot ``c{version}`` by renaming the
-        staging dir onto it. POSIX rename onto an existing non-empty
-        directory fails (and commit dirs are never empty), so this is an
-        effective create-if-absent: of two racers that both passed the
-        manifest check, exactly one rename succeeds — the same role
-        Delta's LogStore put-if-absent plays. A commit dir orphaned by a
-        crash between publish and manifest write is unreferenced and
-        reclaimed by :meth:`vacuum`."""
-        commit = f"c{version:06d}"
-        try:
-            os.rename(staging, os.path.join(path, commit))
-        except OSError as exc:
-            # Only the exists-style errnos mean "slot already claimed".
-            # Anything else (ENOSPC, EACCES, EXDEV, ...) is a real I/O
-            # failure: re-raise it untouched and leave the staging dir on
-            # disk as diagnostic evidence — misreporting it as a conflict
-            # (and deleting the data) hid the actual cause.
-            import errno
-
-            if exc.errno not in (errno.EEXIST, errno.ENOTEMPTY):
-                raise
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ConcurrentModificationError(
-                f"commit slot {commit} in {path} already claimed by a "
-                "concurrent writer — re-read and retry"
-            ) from None
-        return commit
-
-    def _check_unchanged(
-        self, path: str, expected_version: int, op: str
-    ) -> None:
-        """Commit-time OCC revalidation shared by every rewrite path: the
-        manifest read at operation entry must still be current immediately
-        before publish, else a commit that landed during the (long) Spark
-        rewrite would be silently dropped from the new commit list."""
-        fresh = self._read_manifest(path)
-        if fresh["version"] != expected_version:
-            raise ConcurrentModificationError(
-                f"{path} advanced to version {fresh['version']} during "
-                f"{op} (writer read {expected_version}) — re-read and retry"
-            )
 
     def _stage_counted(
         self,
-        path: str,
+        staging: str,
         df: DataFrame,
         partition_columns: list[str] | None = None,
         **stage_kw,
-    ) -> tuple[str, int, dict | None]:
-        """Stage ``df`` and count its rows in the same Spark job: the count
-        is an observation on the written frame, read only once the write
-        has succeeded. Returns (staging dir, rows, read schema). The read
-        schema is the frame's schema made nullable; a partitioned commit's
-        partition columns are typed by directory inference, so its schema
-        is inferred from the staged files instead (None when it wrote no
-        rows, leaving reads to infer as before)."""
+    ) -> tuple[int, dict | None]:
+        """Stage ``df`` to ``staging`` and count its rows in the same Spark
+        job: the count is an observation on the written frame, read only
+        once the write has succeeded. Returns (rows, read schema). The
+        read schema is the frame's schema made nullable; a partitioned
+        commit's partition columns are typed by directory inference, so
+        its schema is inferred from the staged files instead (None when
+        it wrote no rows, leaving reads to infer as before)."""
         obs = Observation()
-        staging = self._stage_commit(
-            path,
+        self._stage_commit(
+            staging,
             df.observe(obs, F.count(F.lit(1)).alias("rows")),
             partition_columns,
             **stage_kw,
@@ -420,62 +481,7 @@ class ZoneStore:
             schema["partitionColumns"] = list(partition_columns)
         else:
             schema = None
-        return staging, rows, schema
-
-    def _publish_staged(
-        self,
-        path: str,
-        manifest: dict,
-        staging: str,
-        schema: dict | None,
-        op: str,
-    ) -> str:
-        """Revalidate the manifest, claim commit slot V+1 for ``staging``
-        and record the commit's read schema. A conflict discards the
-        staging dir. The caller bumps the version."""
-        try:
-            self._check_unchanged(path, manifest["version"], op)
-        except ConcurrentModificationError:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        commit = self._publish_commit(path, staging, manifest["version"] + 1)
-        if schema is not None:
-            manifest.setdefault("schemas", {})[commit] = schema
-        return commit
-
-    @staticmethod
-    def _record_version(
-        manifest: dict, commits: list[str], dvs: list[str] | None = None
-    ) -> None:
-        """Bump the version to one whose live commits are ``commits`` and
-        whose deletion vectors are ``dvs``. Without ``dvs``, a version that
-        keeps none of the previous live commits retires the vectors and
-        any other carries them over. Every version's membership is
-        recorded and superseded commit dirs and vectors are RETAINED until
-        vacuum() — the same contract as Delta's transaction log + VACUUM."""
-        if dvs is None:
-            kept = set(commits) & set(manifest["commits"])
-            dvs = manifest.get("dvs", []) if kept else []
-        manifest["version"] += 1
-        version = str(manifest["version"])
-        manifest["commits"] = list(commits)
-        manifest.setdefault("history", {})[version] = list(commits)
-        if dvs:
-            manifest["dvs"] = list(dvs)
-            manifest.setdefault("dv_history", {})[version] = list(dvs)
-        else:
-            manifest.pop("dvs", None)
-
-    @staticmethod
-    def _record_metrics(manifest: dict, rows: int, written: list[str]) -> None:
-        """Delta-style operationMetrics of the current version: rows from
-        the write's observation, files and bytes of the dirs it wrote."""
-        files, size = _tree_stats(written)
-        manifest.setdefault("metrics", {})[str(manifest["version"])] = {
-            "numOutputRows": rows,
-            "numFiles": files,
-            "numOutputBytes": size,
-        }
+        return rows, schema
 
     def _read_commits(
         self, path: str, manifest: dict, commits: list[str]
@@ -507,34 +513,27 @@ class ZoneStore:
             .distinct()
         )
 
-    def _apply_dv(
-        self, df: DataFrame, path: str, manifest: dict, names: list[str]
-    ) -> DataFrame:
-        """Anti-join the keys of vectors ``names`` onto a scan. The join
-        side is the DISTINCT deleted-key set — typically small enough that
-        Catalyst broadcasts it; a long delete history past the broadcast
-        threshold degrades to a shuffled hash join, the merge-on-read tax
-        that a rewrite retiring the vectors resets."""
-        if not names:
+    def _live(self, path: str, manifest: dict, commits: list[str]) -> DataFrame:
+        """The rows of ``commits`` that are live at the version ``manifest``
+        holds: the scan anti-joins the keys of that version's deletion
+        vectors. The join side is the DISTINCT deleted-key set — typically
+        small enough that Catalyst broadcasts it; a long delete history
+        past the broadcast threshold degrades to a shuffled hash join, the
+        merge-on-read tax that a rewrite retiring the vectors resets."""
+        df = self._read_commits(path, manifest, commits)
+        if not manifest.get("dvs"):
             return df
         key_col = manifest.get("dv_key", "id")
-        keys = self._dv_keys(path, names, df.schema[key_col])
+        keys = self._dv_keys(path, manifest["dvs"], df.schema[key_col])
         return df.join(keys, on=key_col, how="left_anti")
-
-    def _live(self, path: str, manifest: dict, commits: list[str]) -> DataFrame:
-        """The rows of ``commits`` that are live at the manifest's current
-        version: every scan of live rows applies its deletion vectors."""
-        return self._apply_dv(
-            self._read_commits(path, manifest, commits),
-            path, manifest, manifest.get("dvs", []),
-        )
 
     def with_retry(self, op, max_attempts: int = 3):
         """Bounded OCC retry loop (Delta parity: conflicting txns re-read
         the log and re-attempt). ``op`` is a zero-argument callable that
-        performs ONE ZoneStore operation end-to-end; every ZoneStore
-        rewrite path re-reads the manifest at its own entry, so simply
-        re-invoking ``op`` gives each attempt a fresh snapshot. Returns
+        performs ONE ZoneStore operation end-to-end. Every table change
+        reads the latest log entry when it starts and claims the next
+        version with put-if-absent, so a loser changed nothing and simply
+        re-invoking ``op`` gives the next attempt a fresh snapshot. Returns
         ``op()``'s result on the first attempt that commits; re-raises the
         last :class:`ConcurrentModificationError` after ``max_attempts``
         losses. Non-conflict exceptions propagate immediately — retrying
@@ -571,7 +570,7 @@ class ZoneStore:
             return []
         return sorted(
             d for d in os.listdir(zdir)
-            if os.path.exists(os.path.join(zdir, d, self.MANIFEST))
+            if os.path.isdir(os.path.join(zdir, d, self.LOG_DIR))
         )
 
     # ------------------------------------------------------------------ write
@@ -651,7 +650,7 @@ class ZoneStore:
 
         return self._commit_frame(
             path, manifest, out, [] if replace else manifest["commits"],
-            f"write {zone.value}/{dataset}", skip_empty=not replace,
+            skip_empty=not replace,
             partition_columns=partition_columns, txn_id=txn_id,
         )
 
@@ -661,7 +660,6 @@ class ZoneStore:
         manifest: dict,
         out: DataFrame,
         keep: list[str],
-        op: str,
         skip_empty: bool = False,
         partition_columns: list[str] | None = None,
         txn_id: str | None = None,
@@ -674,16 +672,13 @@ class ZoneStore:
         ``before_publish`` runs after the write job, and an exception from
         it discards the staged commit.
 
-        Stage to a unique dir, revalidate the manifest, THEN claim the
-        commit slot by atomic rename. The caller's entry check is
-        check-then-act; a writer that committed while our Spark write was
-        in flight would otherwise be silently overwritten by the stale
-        manifest below. The rename itself is create-if-absent (see
-        _publish_commit), so even two writers that both pass this
-        revalidation cannot clobber each other's data — at most one
-        publishes c{V+1}."""
-        staging, n, schema = self._stage_counted(
-            path, out, partition_columns, **stage_kw
+        The frame is staged to a fresh dir while the table may move on;
+        the claim of V+1 then fails if any change landed since
+        ``manifest`` was read, so a commit that landed during the (long)
+        Spark write is never dropped from the new commit list."""
+        staging = self._staging_dir(path, "c", manifest["version"] + 1)
+        n, schema = self._stage_counted(
+            staging, out, partition_columns, **stage_kw
         )
         if n == 0 and skip_empty:
             shutil.rmtree(staging, ignore_errors=True)
@@ -694,12 +689,14 @@ class ZoneStore:
             except BaseException:
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
-        commit = self._publish_staged(path, manifest, staging, schema, op)
-        self._record_version(manifest, keep + [commit])
-        self._record_metrics(manifest, n, [os.path.join(path, commit)])
+        commit = os.path.basename(staging)
+        entry = self._next_entry(manifest, keep + [commit])
+        if schema is not None:
+            entry["schemas"][commit] = schema
+        entry["metrics"] = _write_metrics(n, [staging])
         if txn_id is not None:
-            manifest.setdefault("txns", []).append(txn_id)
-        self._write_manifest(path, manifest)
+            entry["txns"] = entry.get("txns", []) + [txn_id]
+        self._claim_version(path, manifest["version"], entry, [staging])
         return n
 
     # ------------------------------------------------------------ time travel
@@ -712,22 +709,20 @@ class ZoneStore:
         :meth:`vacuum` — the Delta/Iceberg time-travel contract on the
         parquet ZoneStore."""
         path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        membership = manifest.get("history", {}).get(str(version))
-        if membership is None:
+        entry = self._read_entry(path, version)
+        if entry is None:
             raise ValueError(
                 f"version {version} not available for {zone.value}/{dataset} "
-                f"(current: {manifest['version']}; vacuumed or never written)"
+                f"(current: {self._read_manifest(path)['version']}; "
+                "vacuumed or never written)"
             )
-        dvs = manifest.get("dv_history", {}).get(str(version), [])
-        dirs = [os.path.join(path, c) for c in membership]
-        if not all(os.path.isdir(d) for d in dirs + self._dv_dirs(path, dvs)):
+        dirs = [os.path.join(path, c) for c in entry["commits"]]
+        dv_dirs = self._dv_dirs(path, entry.get("dvs", []))
+        if not all(os.path.isdir(d) for d in dirs + dv_dirs):
             raise ValueError(
                 f"version {version} of {zone.value}/{dataset} was vacuumed"
             )
-        return self._apply_dv(
-            self._read_commits(path, manifest, membership), path, manifest, dvs
-        )
+        return self._live(path, entry, entry["commits"])
 
     def read_changes(
         self,
@@ -746,15 +741,13 @@ class ZoneStore:
         only replaced commits — use :meth:`diff_versions` for row-level
         classification of rewrites)."""
         path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        history = manifest.get("history", {})
-        for v in (from_version, to_version):
-            if str(v) not in history:
+        old, new = (self._read_entry(path, v) for v in (from_version, to_version))
+        for v, entry in ((from_version, old), (to_version, new)):
+            if entry is None:
                 raise ValueError(
                     f"version {v} not available for {zone.value}/{dataset}"
                 )
-        old = set(history[str(from_version)])
-        added = [c for c in history[str(to_version)] if c not in old]
+        added = [c for c in new["commits"] if c not in set(old["commits"])]
         if not added:
             return None
         dirs = [os.path.join(path, c) for c in added]
@@ -763,7 +756,7 @@ class ZoneStore:
                 f"changes {from_version}->{to_version} of "
                 f"{zone.value}/{dataset} were vacuumed"
             )
-        return self._read_commits(path, manifest, added)
+        return self._read_commits(path, new, added)
 
     # ------------------------------------------------- stats-based pruning
     def commit_stats(
@@ -771,7 +764,7 @@ class ZoneStore:
     ) -> list[dict]:
         """Per-commit (min, max, null-only) zone maps for ``column``, read
         from parquet FOOTERS only (pyarrow metadata — no data pages touched).
-        The manifest-level analog of Delta/Iceberg file statistics: O(commits)
+        The log-level analog of Delta/Iceberg file statistics: O(commits)
         metadata reads regardless of table size."""
         import pyarrow.parquet as pq
 
@@ -849,7 +842,7 @@ class ZoneStore:
         bit positions are computed DISTRIBUTED (one column scan per
         commit, k md5 positions per value, distinct-collapsed before
         they reach the driver — at most ``m_bits`` ints per commit) and
-        persisted as a side JSON next to the manifest. Zone maps skip
+        persisted as a side JSON next to the log. Zone maps skip
         commits for RANGE predicates; the bloom index skips them for
         POINT lookups, where min/max ranges almost always overlap."""
         path = self.dataset_path(zone, dataset)
@@ -1009,89 +1002,64 @@ class ZoneStore:
         retain_last: int = 2,
         staging_retention_sec: float = 3600.0,
     ) -> dict:
-        """Reclaim commit directories and deletion vectors referenced only
-        by versions older than the newest ``retain_last`` — bounding
+        """Delete the log entries older than the newest ``retain_last``
+        (the latest entry always stays) and reclaim the commit dirs and
+        deletion vectors that only those entries name — bounding
         time-travel storage the way Delta's ``VACUUM`` bounds tombstoned
         files. Returns stats.
 
-        Staging dirs (``_staging_*``) are live for the full duration of a
-        concurrent writer's Spark parquet write, so only those older than
-        ``staging_retention_sec`` (mtime-based, like Delta VACUUM's
-        retention window) are reclaimed — a racing vacuum must never
-        delete a healthy in-flight stage or race ``rmtree`` against a
-        finishing write (which would publish a commit with missing part
-        files). The same window guards unreferenced commit dirs and
-        vectors numbered above the version vacuum read: one may be a
-        concurrent publish whose manifest write is still to come, and
-        one a crashed publish left is reclaimed once it is old enough.
-        The trimmed manifest is revalidated before it is written, and
-        nothing is deleted until it is."""
+        Vacuum claims no version, so it never conflicts with a writer. A
+        dir that no entry names is being staged by a concurrent writer or
+        was left by one that crashed, so it is reclaimed only once older
+        than ``staging_retention_sec`` (mtime-based, like Delta VACUUM's
+        retention window): a racing vacuum never deletes a healthy
+        in-flight stage. A data commit claimed while vacuum runs keeps
+        only commits of the latest entry, which vacuum retains, plus the
+        dir it staged, which is young."""
         import time
 
         path = self.dataset_path(zone, dataset)
-        manifest = self._read_manifest(path)
-        history: dict = manifest.get("history", {})
-        if not manifest["commits"]:
-            return {"removed_commits": 0, "retained_versions": 0}
-        versions = sorted(int(v) for v in history)
-        keep_versions = versions[-retain_last:] if retain_last > 0 else []
-        live: set[str] = set(manifest["commits"])
-        live_dvs: set[str] = set(manifest.get("dvs", []))
-        for v in keep_versions:
-            live.update(history[str(v)])
-            live_dvs.update(manifest.get("dv_history", {}).get(str(v), []))
+        versions = self._log_versions(path)
+        keep = max(retain_last, 1)
+        retained, dropped = versions[-keep:], versions[:-keep]
 
-        def young(full: str) -> bool:
+        def named(vs: list[int]) -> set[str]:
+            out: set[str] = set()
+            for v in vs:
+                entry = self._read_entry(path, v) or {"commits": []}
+                out.update(entry["commits"])
+                out.update(self._dv_dirs("", entry.get("dvs", [])))
+            return out
+
+        live, retired = named(retained), named(dropped)
+        for v in dropped:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(self._log_file(path, v))
+
+        def old(full: str) -> bool:
             try:
-                return time.time() - os.path.getmtime(full) < staging_retention_sec
-            except OSError:
-                return True  # concurrently published/removed
+                age = time.time() - os.path.getmtime(full)
+            except OSError:  # concurrently removed
+                return False
+            return age >= staging_retention_sec
 
-        def unreferenced(root: str, prefix: str, referenced: set[str]):
-            for entry in os.listdir(root) if os.path.isdir(root) else []:
-                full, number = os.path.join(root, entry), entry[len(prefix):]
-                publishing = (
-                    number.isdigit()
-                    and int(number) > manifest["version"]
-                    and young(full)
-                )
-                if (
-                    entry.startswith(prefix)
-                    and entry not in referenced
-                    and os.path.isdir(full)
-                    and not publishing
-                ):
-                    yield full
+        def dirs(rel: str) -> list[str]:
+            root = os.path.join(path, rel)
+            names = os.listdir(root) if os.path.isdir(root) else []
+            return [os.path.join(rel, n) for n in names]
 
-        # staging dirs orphaned by a writer that crashed mid-stage are
-        # never referenced by any manifest
-        doomed = [
-            full
-            for full in unreferenced(path, "_staging_", set())
-            if not young(full)
-        ]
-        doomed += unreferenced(path, "c", live)
-        doomed_dvs = list(
-            unreferenced(os.path.join(path, self.DV_DIR), "dv", live_dvs)
-        )
-        for key in ("history", "metrics", "dv_history"):
-            per_version = manifest.get(key, {})
-            manifest[key] = {
-                str(v): per_version[str(v)]
-                for v in keep_versions
-                if str(v) in per_version
-            }
-        manifest["schemas"] = {
-            c: e for c, e in manifest.get("schemas", {}).items() if c in live
-        }
-        self._check_unchanged(path, manifest["version"], "VACUUM")
-        self._write_manifest(path, manifest)
-        for d in doomed + doomed_dvs:
-            shutil.rmtree(d, ignore_errors=True)
-        return {
-            "removed_commits": len(doomed),
-            "retained_versions": len(keep_versions),
-        }
+        removed = 0
+        for name in dirs("") + dirs(self.DV_DIR):
+            full = os.path.join(path, name)
+            if (
+                name not in (self.LOG_DIR, self.DV_DIR)
+                and name not in live
+                and os.path.isdir(full)
+                and (name in retired or old(full))
+            ):
+                shutil.rmtree(full, ignore_errors=True)
+                removed += not name.startswith(self.DV_DIR + os.sep)
+        return {"removed_commits": removed, "retained_versions": len(retained)}
 
     # ------------------------------------------------------------- compaction
     def restore_version(
@@ -1100,29 +1068,25 @@ class ZoneStore:
         """RESTORE TABLE ... TO VERSION (Delta parity): a NEW version whose
         commit set is the historical version's — data files untouched, so
         restore is metadata-only and itself time-travelable/undoable. The
-        target version must still be in retained history (vacuum() trims
+        target version's entry must still be in the log (vacuum() deletes
         it, same as Delta RESTORE after VACUUM). Returns commits restored.
         """
         path = self.dataset_path(zone, dataset)
         manifest = self._read_manifest(path)
-        history: dict = manifest.get("history", {})
-        if str(version) not in history:
+        target = self._read_entry(path, version)
+        if target is None:
             raise ValueError(
                 f"version {version} not in retained history for "
-                f"{zone.value}/{dataset} (have: {sorted(history)})"
+                f"{zone.value}/{dataset} (have: {self._log_versions(path)})"
             )
-        commits = list(history[str(version)])
-        # Metadata-only, but still a rewrite of the commit list — a commit
-        # landing between the entry read and this publish would be lost.
-        # The restored commits and vectors are live in retained history,
-        # so vacuum() has kept them and their schema entries.
-        self._check_unchanged(path, manifest["version"], "RESTORE")
-        self._record_version(
-            manifest, commits,
-            manifest.get("dv_history", {}).get(str(version), []),
+        entry = self._next_entry(
+            manifest, target["commits"], target.get("dvs", []),
+            target.get("schemas", {}),
         )
-        self._write_manifest(path, manifest)
-        return len(commits)
+        if "dv_key" in target:
+            entry["dv_key"] = target["dv_key"]
+        self._claim_version(path, manifest["version"], entry)
+        return len(target["commits"])
 
     def merge_into(
         self,
@@ -1254,7 +1218,7 @@ class ZoneStore:
         if sized:
             out = right_size_for_write(out, est_bytes=sum(sizes))
         self._commit_frame(
-            path, manifest, out, [], f"MERGE {zone.value}/{dataset}",
+            path, manifest, out, [],
             before_publish=reject_duplicate_matches, rebalance=not sized,
         )
         counts = {"updated": 0, "deleted_matched": 0,
@@ -1271,9 +1235,10 @@ class ZoneStore:
         dst_zone: DataZone,
         dst_dataset: str,
     ) -> int:
-        """SHALLOW CLONE (Delta parity): the clone's manifest references the
-        source's commit directories and deletion vectors by absolute path
-        — zero data copied.
+        """SHALLOW CLONE (Delta parity): version 1 of the clone references
+        the source's commit directories and deletion vectors by absolute
+        path — zero data copied. The clone claims that version, so cloning
+        onto an existing table raises ValueError and leaves it as it was.
         Subsequent writes/DELETEs on the clone create commits in the
         clone's own directory (copy-on-write), so the source is never
         mutated through the clone. Faithful to Delta's contract, including
@@ -1284,26 +1249,29 @@ class ZoneStore:
         src = self._read_manifest(src_path)
         if not src["commits"]:
             raise ValueError(f"nothing to clone: {zone.value}/{dataset}")
-        dst_path = self.dataset_path(dst_zone, dst_dataset)
-        os.makedirs(dst_path, exist_ok=True)
         abs_commits = [os.path.join(src_path, c) for c in src["commits"]]
         schemas = src.get("schemas", {})
-        manifest = {
-            "version": 0,
-            "commits": [],
-            "schemas": {
-                a: schemas[c]
-                for c, a in zip(src["commits"], abs_commits)
-                if c in schemas
+        entry = self._next_entry(
+            {
+                "commits": [],
+                "cloned_from": src_path,
+                "constraints": dict(src.get("constraints", {})),
+                "dv_key": src.get("dv_key", "id"),
             },
-            "cloned_from": src_path,
-            "constraints": dict(src.get("constraints", {})),
-            "dv_key": src.get("dv_key", "id"),
-        }
-        self._record_version(
-            manifest, abs_commits, self._dv_dirs(src_path, src.get("dvs", []))
+            abs_commits,
+            self._dv_dirs(src_path, src.get("dvs", [])),
+            {a: schemas[c] for c, a in zip(src["commits"], abs_commits)
+             if c in schemas},
         )
-        self._write_manifest(dst_path, manifest)
+        try:
+            self._claim_version(
+                self.dataset_path(dst_zone, dst_dataset), 0, entry
+            )
+        except ConcurrentModificationError:
+            raise ValueError(
+                f"cannot clone onto {dst_zone.value}/{dst_dataset}: "
+                "that table already exists"
+            ) from None
         return len(abs_commits)
 
     def set_constraint(
@@ -1311,13 +1279,14 @@ class ZoneStore:
     ) -> None:
         """Register a table-level CHECK constraint (Delta
         ``delta.constraints.*`` parity): a SQL boolean expression every row
-        of every subsequent write must satisfy. Stored in the manifest, so
-        it travels with the table, not the caller."""
+        of every subsequent write must satisfy. Like Delta's metadata
+        commit, it is a new version of the table, so it travels with the
+        table, not the caller."""
         path = self.dataset_path(zone, dataset)
-        os.makedirs(path, exist_ok=True)
         manifest = self._read_manifest(path)
-        manifest.setdefault("constraints", {})[name] = expr
-        self._write_manifest(path, manifest)
+        entry = self._next_entry(manifest, manifest["commits"])
+        entry["constraints"] = {**manifest.get("constraints", {}), name: expr}
+        self._claim_version(path, manifest["version"], entry)
 
     def constraints(self, zone: DataZone, dataset: str) -> dict[str, str]:
         return dict(
@@ -1431,7 +1400,7 @@ class ZoneStore:
         if not changed:
             return 0
         kept = self._live(path, manifest, changed).filter(~match)
-        self._commit_frame(path, manifest, kept, untouched, "DELETE")
+        self._commit_frame(path, manifest, kept, untouched)
         return deleted
 
     def update_set(
@@ -1470,10 +1439,10 @@ class ZoneStore:
         )
         # CHECK constraints gate UPDATE like every other write path (Delta
         # enforces CHECK on UPDATE): audit the rewritten commit before any
-        # file or manifest is touched. Untouched commits already passed at
+        # file is written. Untouched commits already passed at
         # their own write time.
         self._enforce_constraints(zone, dataset, out, "UPDATE on")
-        self._commit_frame(path, manifest, out, untouched, "UPDATE")
+        self._commit_frame(path, manifest, out, untouched)
         return updated
 
     def compact(
@@ -1488,10 +1457,9 @@ class ZoneStore:
         small files) per batch; reads then pay per-file open cost and lose
         row-group-level locality. Compaction rewrites the dataset as ONE
         fresh commit with ``ceil(total_bytes / target_file_bytes)`` files,
-        swapped in atomically via the manifest — readers see the old or the
-        new file set, never a mix. Maps to Delta/Iceberg ``OPTIMIZE``
-        (bin-packing) in a cluster deployment; there the table format's
-        transaction log plays the manifest's role.
+        swapped in atomically by the version's log entry — readers see the
+        old or the new file set, never a mix. Maps to Delta/Iceberg
+        ``OPTIMIZE`` (bin-packing) in a cluster deployment.
 
         File/byte accounting walks only this dataset's commit directories
         (driver-side metadata, not data). Returns before/after stats.
@@ -1511,8 +1479,8 @@ class ZoneStore:
         df = self._live(path, manifest, stale).repartition(n_files)
         # like Delta OPTIMIZE: the rewrite is a new version; superseded
         # commits stay readable via read_version until vacuum()
-        self._commit_frame(path, manifest, df, [], "OPTIMIZE", rebalance=False)
-        after = manifest["metrics"][str(manifest["version"])]
+        self._commit_frame(path, manifest, df, [], rebalance=False)
+        after = self._read_entry(path, manifest["version"] + 1)["metrics"]
         return {
             "files_before": files_before,
             "files_after": after["numFiles"],
@@ -1534,9 +1502,7 @@ class ZoneStore:
         if not manifest.get("dvs"):
             return 0
         live = self._live(path, manifest, manifest["commits"])
-        return self._commit_frame(
-            path, manifest, live, [], f"purge_dv {zone.value}/{dataset}"
-        )
+        return self._commit_frame(path, manifest, live, [])
 
     # -------------------------------------------------------------- quarantine
     def write_quarantine(
@@ -1558,9 +1524,7 @@ class ZoneStore:
             .withColumn("_quarantine_reason", F.lit(reason))
             .withColumn("_quality_score", F.lit(float(quality_score)))
         )
-        return self._commit_frame(
-            path, manifest, stamped, manifest["commits"], f"quarantine {job_id}"
-        )
+        return self._commit_frame(path, manifest, stamped, manifest["commits"])
 
     def read_quarantine(self, job_id: str) -> DataFrame | None:
         """L7 quarantine read (reference ``src/etl/etl_manager.py:590-595``)."""

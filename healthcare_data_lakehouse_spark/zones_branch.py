@@ -6,10 +6,12 @@ shallow clone that remembers its base commit list, writes to the branch
 land as copy-on-write commits in the branch's own directory (the source
 is never mutated through it), and MERGE adopts the branch's commit list
 back into the source by reference — zero data copied in either
-direction. Merge is FAST-FORWARD-ONLY: if the source advanced since the
-branch was cut, the merge raises ``ConcurrentModificationError`` and
-the resolution is to re-branch and replay (the same discipline as the
-store's OCC writes — no silent three-way data merges). The shallow
+direction. The branch's ``_log/000001.json`` is its merge base. Merge is
+FAST-FORWARD-ONLY: if the source advanced since the branch was cut, or
+advances before the merge claims its version, the merge raises
+``ConcurrentModificationError`` and the resolution is to re-branch and
+replay (the same discipline as the store's OCC writes — no silent
+three-way data merges). The shallow
 sharp edge is symmetric with clone's: VACUUM on either side can reclaim
 commit dirs the other still references; production deployments put
 branches under the same retention policy as their source.
@@ -37,8 +39,9 @@ class BranchingZoneStore(ZoneStore):
         self, zone: DataZone, dataset: str, branch: str
     ) -> int:
         """Cut a branch at the source's current state (zero-copy). The
-        clone's version-1 history entry IS the recorded merge base.
-        Returns the number of referenced commits."""
+        clone's version-1 entry IS the recorded merge base, so a branch
+        of an existing name raises ValueError. Returns the number of
+        referenced commits."""
         return self.clone(
             zone, dataset, zone, self._branch_dataset(dataset, branch)
         )
@@ -62,27 +65,25 @@ class BranchingZoneStore(ZoneStore):
             zone, self._branch_dataset(dataset, branch)
         )
         br = self._read_manifest(br_path)
-        base = br.get("history", {}).get("1", [])
+        base = self._read_entry(br_path, 1) or {"commits": []}
         return {
-            "base_commits": len(base),
-            "branch_version": br.get("version", 0),
-            "branch_ahead": br.get("commits", []) != base,
+            "base_commits": len(base["commits"]),
+            "branch_version": br["version"],
+            "branch_ahead": br["commits"] != base["commits"],
             "source_diverged": self._diverged(
-                src_path, self._read_manifest(src_path), br
+                src_path, self._read_manifest(src_path), br_path
             ),
         }
 
-    def _diverged(self, src_path: str, src: dict, br: dict) -> bool:
+    def _diverged(self, src_path: str, src: dict, br_path: str) -> bool:
         """True when the source's commits or deletion vectors are no
         longer the ones the branch was cut at (its version 1)."""
+        base = self._read_entry(br_path, 1) or {"commits": []}
         now = (
             [os.path.join(src_path, c) for c in src["commits"]],
             self._dv_dirs(src_path, src.get("dvs", [])),
         )
-        return now != (
-            br.get("history", {}).get("1", []),
-            br.get("dv_history", {}).get("1", []),
-        )
+        return now != (base["commits"], base.get("dvs", []))
 
     # ----------------------------------------------------------------- merge
     def merge_branch(
@@ -95,7 +96,7 @@ class BranchingZoneStore(ZoneStore):
         the merge raises (re-branch and replay to resolve; with_retry
         applies the same way it does to writes). Adoption is by REFERENCE: the
         branch's commit dirs (living under the branch's directory) enter
-        the source manifest as absolute paths, the same zero-copy
+        the source's next entry as absolute paths, the same zero-copy
         mechanism clone uses in the other direction, and so do its
         deletion vectors. The source's own dirs keep their plain names,
         so its vacuum still sees them as live. Returns the number of
@@ -110,7 +111,7 @@ class BranchingZoneStore(ZoneStore):
                 f"branch {branch!r} of {zone.value}/{dataset} does not exist"
             )
         src = self._read_manifest(src_path)
-        if self._diverged(src_path, src, br):
+        if self._diverged(src_path, src, br_path):
             raise ConcurrentModificationError(
                 f"{zone.value}/{dataset} advanced since branch {branch!r} "
                 "was cut — re-branch and replay to merge"
@@ -125,17 +126,16 @@ class BranchingZoneStore(ZoneStore):
         new_commits = adopt(
             [os.path.join(br_path, c) for c in br["commits"]], src_path
         )
-        schemas = src.setdefault("schemas", {})
-        for c, a in zip(br["commits"], new_commits):
-            if c in br.get("schemas", {}):
-                schemas[a] = br["schemas"][c]
-        src["dv_key"] = br.get("dv_key", "id")
-        self._record_version(
+        schemas = br.get("schemas", {})
+        entry = self._next_entry(
             src, new_commits,
             adopt(
                 self._dv_dirs(br_path, br.get("dvs", [])),
                 os.path.join(src_path, self.DV_DIR),
             ),
+            {a: schemas[c] for c, a in zip(br["commits"], new_commits)
+             if c in schemas},
         )
-        self._write_manifest(src_path, src)
+        entry["dv_key"] = br.get("dv_key", "id")
+        self._claim_version(src_path, src["version"], entry)
         return len(new_commits)

@@ -16,12 +16,13 @@ trade every production lakehouse tunes.
 This emulation uses EQUALITY deletes on a declared key column (Iceberg
 v2 equality-delete semantics; per-file positional bitmaps à la Delta
 need file-physical row indexes parquet alone does not expose — the
-manifest/anti-join plumbing would be identical). Everything rides the
-existing ZoneStore commit protocol: DV artifacts stage to a unique dir
-and publish by atomic rename, the manifest version advances under the
-same OCC revalidation as data writes, and each version records its
-vectors next to its commits, so every ZoneStore reads, time-travels,
-restores, clones, vacuums and folds them. This subclass only writes them.
+log/anti-join plumbing would be identical). Everything rides the
+existing ZoneStore commit protocol: a vector stages to a fresh dir under
+``_dv/`` and is published by the log entry of its version, which claims
+that version with the same put-if-absent as a data write, and each
+version records its vectors next to its commits, so every ZoneStore
+reads, time-travels, restores, clones, vacuums and folds them. This
+subclass only writes them.
 """
 
 from __future__ import annotations
@@ -33,9 +34,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from healthcare_data_lakehouse_spark.zones import (
-    ConcurrentModificationError,
     DataZone,
     ZoneStore,
+    _write_metrics,
 )
 
 
@@ -100,29 +101,20 @@ class DVZoneStore(ZoneStore):
         # distinct (one tiny file per shuffle partition otherwise — 32
         # sub-KB files per vector at sf0.1, paid back on EVERY subsequent
         # read's DV scan)
-        staging, n, _ = self._stage_counted(path, doomed)
+        staging = self._staging_dir(
+            os.path.join(path, self.DV_DIR), "dv", manifest["version"] + 1
+        )
+        n, _ = self._stage_counted(staging, doomed)
         if n == 0:
             shutil.rmtree(staging, ignore_errors=True)
             return 0
-        try:
-            self._check_unchanged(
-                path,
-                manifest["version"],
-                f"dv delete {zone.value}/{dataset}",
-            )
-        except ConcurrentModificationError:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        os.makedirs(os.path.join(path, self.DV_DIR), exist_ok=True)
-        dv_name = f"dv{manifest['version'] + 1:06d}"
-        (dv_dir,) = self._dv_dirs(path, [dv_name])
-        os.rename(staging, dv_dir)
-        manifest["dv_key"] = key_col
-        self._record_version(
-            manifest, manifest["commits"], manifest.get("dvs", []) + [dv_name]
+        entry = self._next_entry(
+            manifest, manifest["commits"],
+            manifest.get("dvs", []) + [os.path.basename(staging)],
         )
-        self._record_metrics(manifest, n, [dv_dir])
-        self._write_manifest(path, manifest)
+        entry["dv_key"] = key_col
+        entry["metrics"] = _write_metrics(n, [staging])
+        self._claim_version(path, manifest["version"], entry, [staging])
         return n
 
     # ----------------------------------------------------------------- audit

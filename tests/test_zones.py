@@ -399,6 +399,8 @@ def test_delete_of_every_row_leaves_a_readable_empty_version(spark, store):
     z = DataZone.SILVER
     df = spark.createDataFrame([(i, i) for i in range(10)], "id long, v long")
     store.write(z, "t", df, LoadType.FULL)
+    path = store.dataset_path(z, "t")
+    (v1_commit,) = store._read_entry(path, 1)["commits"]
     assert store.delete_where(z, "t", "id >= 0") == 10
     assert store.read(z, "t").columns == ["id", "v"]
     assert rows(store.read(z, "t")) == []
@@ -407,8 +409,7 @@ def test_delete_of_every_row_leaves_a_readable_empty_version(spark, store):
     assert {r._change_type for r in changes} == {"delete"}
     assert len(changes) == 10
     assert store.vacuum(z, "t", retain_last=1)["removed_commits"] == 1
-    path = store.dataset_path(z, "t")
-    assert not os.path.isdir(os.path.join(path, "c000001"))
+    assert not os.path.isdir(os.path.join(path, v1_commit))
     store.write(z, "t", df.filter("id < 2"), LoadType.APPEND)
     assert rows(store.read(z, "t")) == [(0, 0), (1, 1)]
 
@@ -619,13 +620,14 @@ def test_update_set_enforces_check_constraints(spark, tmp_path):
     store.set_constraint(DataZone.SILVER, "t", "v_positive", "v > 0")
     df = spark.createDataFrame([Row(id=1, v=5), Row(id=2, v=7)])
     store.write(DataZone.SILVER, "t", df, LoadType.FULL)
+    path = store.dataset_path(DataZone.SILVER, "t")
+    version = store._read_manifest(path)["version"]
     with _pytest.raises(ConstraintViolationError, match="v_positive"):
         store.update_set(DataZone.SILVER, "t", "id = 2", {"v": "-1"})
     # nothing committed: values and version unchanged
     got = {r.id: r.v for r in store.read(DataZone.SILVER, "t").collect()}
     assert got == {1: 5, 2: 7}
-    assert store._read_manifest(store.dataset_path(DataZone.SILVER, "t"))[
-        "version"] == 1
+    assert store._read_manifest(path)["version"] == version
     # a legal UPDATE still lands
     assert store.update_set(DataZone.SILVER, "t", "id = 2", {"v": "99"}) == 1
     got = {r.id: r.v for r in store.read(DataZone.SILVER, "t").collect()}
@@ -648,25 +650,16 @@ def test_write_detects_conflict_landing_during_spark_write(
     df = spark.createDataFrame([Row(id=1, v=1)])
     store.write(DataZone.SILVER, "t", df, LoadType.FULL)  # -> v1
 
+    racer = ZoneStore(spark, str(tmp_path))
     racer_df = spark.createDataFrame([Row(id=99, v=99)])
     orig = ZoneStore._stage_commit
 
-    def racing_stage(self, path, d, pc, rebalance=True):
-        staging = orig(self, path, d, pc)
-        # a REAL concurrent commit (data files + manifest bump) landing
-        # while our parquet write is in flight — ADVICE r5: the earlier
-        # simulation bumped only the version, which missed the loser
-        # overwriting the winner's already-committed c{V+1} files
-        m = self._read_manifest(path)
-        v = m["version"] + 1
-        racer_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"c{v:06d}")
-        )
-        m["version"] = v
-        m["commits"].append(f"c{v:06d}")
-        m.setdefault("history", {})[str(v)] = list(m["commits"])
-        self._write_manifest(path, m)
-        return staging
+    def racing_stage(self, *args, **kwargs):
+        orig(self, *args, **kwargs)
+        # a REAL concurrent commit (data files + log entry) by a second
+        # store landing while our parquet write is in flight
+        if self is store:
+            racer.write(DataZone.SILVER, "t", racer_df, LoadType.APPEND)
 
     monkeypatch.setattr(ZoneStore, "_stage_commit", racing_stage)
     with _pytest.raises(ConcurrentModificationError, match="advanced"):
@@ -675,18 +668,19 @@ def test_write_detects_conflict_landing_during_spark_write(
         )
     monkeypatch.setattr(ZoneStore, "_stage_commit", orig)
     # the WINNER's commit survives byte-for-byte: the loser staged to its
-    # own unique dir, so c000002 was never overwritten
+    # own unique dir, so the winner's files were never overwritten
     got = {r.id: r.v for r in store.read(DataZone.SILVER, "t").collect()}
     assert got == {1: 1, 99: 99}
     # the loser's staging dir was cleaned up on abort
     path = store.dataset_path(DataZone.SILVER, "t")
-    assert not [e for e in os.listdir(path) if e.startswith("_staging_")]
+    live = store._read_manifest(path)["commits"]
+    assert sorted(os.listdir(path)) == sorted(["_log", *live])
 
 
-def test_publish_commit_is_create_if_absent(spark, tmp_path):
-    # Two writers can both pass the manifest revalidation inside the race
-    # window; the directory rename must then act as a put-if-absent so at
-    # most one claims c{V+1} and the winner's files are never clobbered.
+def test_claim_version_is_put_if_absent(spark, tmp_path):
+    # Two writers can both read version V and stage; creating the entry
+    # of V+1 must then act as a put-if-absent so at most one claims it and
+    # the winner's version is never clobbered.
     import pytest as _pytest
     from pyspark.sql import Row
     from healthcare_data_lakehouse_spark.zones import (
@@ -699,20 +693,21 @@ def test_publish_commit_is_create_if_absent(spark, tmp_path):
         LoadType.FULL,
     )
     path = store.dataset_path(DataZone.SILVER, "t")
-    # winner already claimed c000002
-    spark.createDataFrame([Row(id=2)]).write.parquet(
-        os.path.join(path, "c000002")
+    read = store._read_manifest(path)
+    staging = store._staging_dir(path, "c", read["version"] + 1)
+    store._stage_commit(staging, spark.createDataFrame([Row(id=3)]), None)
+    # the winner claims version 2 first
+    store.write(
+        DataZone.SILVER, "t", spark.createDataFrame([Row(id=2)]),
+        LoadType.APPEND,
     )
-    staging = store._stage_commit(
-        path, spark.createDataFrame([Row(id=3)]), None
+    entry = store._next_entry(
+        read, read["commits"] + [os.path.basename(staging)]
     )
     with _pytest.raises(ConcurrentModificationError, match="claimed"):
-        store._publish_commit(path, staging, 2)
-    # winner's files intact, loser's staging removed
-    assert {
-        r.id
-        for r in spark.read.parquet(os.path.join(path, "c000002")).collect()
-    } == {2}
+        store._claim_version(path, read["version"], entry, [staging])
+    # winner's rows intact, loser's staging removed
+    assert {r.id for r in store.read(DataZone.SILVER, "t").collect()} == {1, 2}
     assert not os.path.exists(staging)
 
 
@@ -735,21 +730,14 @@ def test_rewrite_paths_detect_concurrent_commit(
         spark.createDataFrame([Row(id=1, v=5), Row(id=2, v=7)]),
         LoadType.FULL,
     )
+    racer = ZoneStore(spark, str(tmp_path))
     racer_df = spark.createDataFrame([Row(id=99, v=99)])
     orig = ZoneStore._stage_commit
 
-    def racing_stage(self, path, d, pc, rebalance=True):
-        staging = orig(self, path, d, pc)
-        m = self._read_manifest(path)
-        v = m["version"] + 1
-        racer_df.write.mode("overwrite").parquet(
-            os.path.join(path, f"c{v:06d}")
-        )
-        m["version"] = v
-        m["commits"].append(f"c{v:06d}")
-        m.setdefault("history", {})[str(v)] = list(m["commits"])
-        self._write_manifest(path, m)
-        return staging
+    def racing_stage(self, *args, **kwargs):
+        orig(self, *args, **kwargs)
+        if self is store:
+            racer.write(DataZone.SILVER, "t", racer_df, LoadType.APPEND)
 
     monkeypatch.setattr(ZoneStore, "_stage_commit", racing_stage)
     with _pytest.raises(ConcurrentModificationError, match="advanced"):
@@ -831,24 +819,17 @@ def test_with_retry_loser_retries_and_both_commits_land(
         DataZone.SILVER, "t", spark.createDataFrame([Row(id=1, v=1)]),
         LoadType.FULL,
     )
+    racer = ZoneStore(spark, str(tmp_path))
     racer_df = spark.createDataFrame([Row(id=99, v=99)])
     orig = ZoneStore._stage_commit
     raced = {"n": 0}
 
-    def racing_stage_once(self, path, d, pc, rebalance=True):
-        staging = orig(self, path, d, pc)
-        if raced["n"] == 0:  # racer lands only during the FIRST attempt
+    def racing_stage_once(self, *args, **kwargs):
+        orig(self, *args, **kwargs)
+        if self is store and raced["n"] == 0:
+            # racer lands only during the FIRST attempt
             raced["n"] += 1
-            m = self._read_manifest(path)
-            v = m["version"] + 1
-            racer_df.write.mode("overwrite").parquet(
-                os.path.join(path, f"c{v:06d}")
-            )
-            m["version"] = v
-            m["commits"].append(f"c{v:06d}")
-            m.setdefault("history", {})[str(v)] = list(m["commits"])
-            self._write_manifest(path, m)
-        return staging
+            racer.write(DataZone.SILVER, "t", racer_df, LoadType.APPEND)
 
     monkeypatch.setattr(ZoneStore, "_stage_commit", racing_stage_once)
     mine = spark.createDataFrame([Row(id=2, v=2)])
@@ -860,12 +841,10 @@ def test_with_retry_loser_retries_and_both_commits_land(
     assert got == {1: 1, 2: 2, 99: 99}  # both commits landed
     # exhausted retries re-raise the conflict
 
-    def always_racing_stage(self, path, d, pc):
-        staging = orig(self, path, d, pc)
-        m = self._read_manifest(path)
-        m["version"] += 1
-        self._write_manifest(path, m)
-        return staging
+    def always_racing_stage(self, *args, **kwargs):
+        orig(self, *args, **kwargs)
+        if self is store:
+            racer.write(DataZone.SILVER, "t", racer_df, LoadType.APPEND)
 
     monkeypatch.setattr(ZoneStore, "_stage_commit", always_racing_stage)
     with pytest.raises(ConcurrentModificationError):
@@ -911,54 +890,56 @@ def _ten_rows(spark, start=0, n=10):
 
 
 def test_vacuum_keeps_a_commit_landing_during_vacuum(spark, store, monkeypatch):
-    # vacuum rewrites the manifest from the snapshot it read at entry; a
-    # commit landing in between must neither be deleted nor dropped from
-    # the manifest: vacuum revalidates and raises instead
-    from healthcare_data_lakehouse_spark.zones import ConcurrentModificationError
-
+    # vacuum lists the log, then deletes; a commit landing in between
+    # must be neither deleted nor dropped from the table. Vacuum claims
+    # no version, so it completes and both live commits stay
     z = DataZone.SILVER
     for _ in range(3):
         store.write(z, "t", _ten_rows(spark), LoadType.FULL)  # v1..v3
-    entry_read = store._read_manifest
-
-    def read_then_append(path):
-        manifest = entry_read(path)
-        monkeypatch.setattr(store, "_read_manifest", entry_read)
-        store.write(z, "t", _ten_rows(spark, 10, 5), LoadType.APPEND)  # v4
-        return manifest
-
-    monkeypatch.setattr(store, "_read_manifest", read_then_append)
-    with pytest.raises(ConcurrentModificationError, match="VACUUM"):
-        store.vacuum(z, "t", retain_last=1)
     path = store.dataset_path(z, "t")
-    assert store._read_manifest(path)["commits"] == ["c000003", "c000004"]
+    (v3_commit,) = store._read_manifest(path)["commits"]
+    listing = store._log_versions
+
+    def list_then_append(path):
+        versions = listing(path)
+        monkeypatch.setattr(store, "_log_versions", listing)
+        store.write(z, "t", _ten_rows(spark, 10, 5), LoadType.APPEND)  # v4
+        return versions
+
+    monkeypatch.setattr(store, "_log_versions", list_then_append)
+    store.vacuum(z, "t", retain_last=1)
+    m = store._read_manifest(path)
+    assert m["version"] == 4
+    assert len(m["commits"]) == 2 and m["commits"][0] == v3_commit
+    assert all(os.path.isdir(os.path.join(path, c)) for c in m["commits"])
     assert store.read(z, "t").count() == 15
 
 
 def test_vacuum_spares_a_fresh_unreferenced_commit_dir(spark, store):
-    # a c{V+1} dir the manifest does not list yet may be a publish whose
-    # manifest write is still to come; like a staging dir it is reclaimed
-    # only once it is older than the retention window
+    # a dir no entry names may be a stage whose claim is still to come;
+    # like a staging dir it is reclaimed only once it is older than the
+    # retention window
     z = DataZone.SILVER
     store.write(z, "t", _ten_rows(spark), LoadType.FULL)  # v1
     store.write(z, "t", _ten_rows(spark), LoadType.FULL)  # v2
     path = store.dataset_path(z, "t")
-    fresh = os.path.join(path, "c000003")
+    (v1_commit,) = store._read_entry(path, 1)["commits"]
+    fresh = store._staging_dir(path, "c", 3)
     _ten_rows(spark, 10).coalesce(1).write.parquet(fresh)
     store.vacuum(z, "t", retain_last=1)
     assert os.path.isdir(fresh)
-    assert not os.path.exists(os.path.join(path, "c000001"))
+    assert not os.path.exists(os.path.join(path, v1_commit))
     store.vacuum(z, "t", retain_last=1, staging_retention_sec=0.0)
     assert not os.path.exists(fresh)
     assert store.read(z, "t").count() == 10
 
 
-def test_publish_commit_reraises_non_conflict_oserror(
+def test_claim_version_reraises_non_conflict_oserror(
     spark, tmp_path, monkeypatch
 ):
     # ADVICE r6 (low): a bare OSError catch misreported ENOSPC/EACCES as
-    # "slot already claimed" and deleted the staged data — destroying the
-    # evidence. Non-conflict errnos must propagate with staging intact.
+    # "version already claimed" and deleted the staged data — destroying
+    # the evidence. Non-conflict errnos must propagate with staging intact.
     import errno as _errno
     from pyspark.sql import Row
     from healthcare_data_lakehouse_spark.zones import DataZone, LoadType, ZoneStore
@@ -969,19 +950,23 @@ def test_publish_commit_reraises_non_conflict_oserror(
         LoadType.FULL,
     )
     path = store.dataset_path(DataZone.SILVER, "t")
-    staging = store._stage_commit(
-        path, spark.createDataFrame([Row(id=2)]), None
+    read = store._read_manifest(path)
+    staging = store._staging_dir(path, "c", read["version"] + 1)
+    store._stage_commit(staging, spark.createDataFrame([Row(id=2)]), None)
+    entry = store._next_entry(
+        read, read["commits"] + [os.path.basename(staging)]
     )
 
-    def enospc_rename(src, dst):
+    def enospc_link(src, dst):
         raise OSError(_errno.ENOSPC, "No space left on device", dst)
 
-    monkeypatch.setattr(os, "rename", enospc_rename)
+    monkeypatch.setattr(os, "link", enospc_link)
     with pytest.raises(OSError) as exc_info:
-        store._publish_commit(path, staging, 2)
+        store._claim_version(path, read["version"], entry, [staging])
     monkeypatch.undo()
     assert exc_info.value.errno == _errno.ENOSPC
     assert os.path.isdir(staging)  # evidence preserved, not deleted
+    assert store._read_manifest(path)["version"] == read["version"]
 
 
 def test_cdf_replication_apply_reaches_source_state(spark, sf_dir):

@@ -1,6 +1,7 @@
-"""Zone-store commit protocol: reads use the schemas the manifest records,
-commit row counts come from the write job itself, and the manifest keeps
-per-version operation metrics.
+"""Zone-store commit protocol: reads use the schemas the log records,
+commit row counts come from the write job itself, each version's log
+entry keeps its operation metrics, and every table change claims its
+version with one put-if-absent.
 
 Schema parity: every read path must return exactly what parquet
 ``mergeSchema`` inference over the same commit dirs returns — names,
@@ -78,6 +79,13 @@ def _manifest(store, dataset, zone=Z):
     return store._read_manifest(store.dataset_path(zone, dataset))
 
 
+def _commits(store, version, dataset="t", zone=Z):
+    """The live commits of ``version``, read from its log entry."""
+    return store._read_entry(store.dataset_path(zone, dataset), version)[
+        "commits"
+    ]
+
+
 def _jobs(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
@@ -92,7 +100,7 @@ def test_read_matches_inference_after_widening_append(spark, tmp_path):
     path = store.dataset_path(Z, "t")
     _assert_parity(store.read(Z, "t"), _inferred(spark, path, m["commits"]))
     _assert_parity(
-        store.read_version(Z, "t", 1), _inferred(spark, path, m["history"]["1"])
+        store.read_version(Z, "t", 1), _inferred(spark, path, _commits(store, 1))
     )
     _assert_parity(
         store.read_changes(Z, "t", 1, 2), _inferred(spark, path, m["commits"][1:])
@@ -110,7 +118,7 @@ def test_read_version_across_full_replace_with_new_schema(spark, tmp_path):
     for v in ("1", "2"):
         _assert_parity(
             store.read_version(Z, "t", int(v)),
-            _inferred(spark, path, m["history"][v]),
+            _inferred(spark, path, _commits(store, int(v))),
         )
 
 
@@ -133,7 +141,7 @@ def test_partitioned_commits_read_like_inference(spark, tmp_path):
     _assert_parity(got, _inferred(spark, path, m["commits"]))
     assert got.columns[-1] == "p"  # partition column last, as inferred
     _assert_parity(
-        store.read_version(Z, "t", 1), _inferred(spark, path, m["history"]["1"])
+        store.read_version(Z, "t", 1), _inferred(spark, path, _commits(store, 1))
     )
 
 
@@ -167,7 +175,7 @@ def test_restore_version_reads_like_inference(spark, tmp_path):
     store.restore_version(Z, "t", 2)
     m = _manifest(store, "t")
     path = store.dataset_path(Z, "t")
-    assert m["commits"] == m["history"]["2"]
+    assert m["commits"] == _commits(store, 2)
     _assert_parity(store.read(Z, "t"), _inferred(spark, path, m["commits"]))
     store.vacuum(Z, "t", retain_last=1)
     m = _manifest(store, "t")
@@ -206,12 +214,13 @@ def test_commits_without_recorded_schema_fall_back_to_inference(
     store = ZoneStore(spark, str(tmp_path))
     store.write(Z, "t", _nested(spark, range(3)), LoadType.FULL)
     path = store.dataset_path(Z, "t")
-    _widened(spark, [9]).write.parquet(os.path.join(path, "c000002"))
     m = _manifest(store, "t")
-    m["version"] = 2
-    m["commits"].append("c000002")
-    store._write_manifest(path, m)
-    _assert_parity(store.read(Z, "t"), _inferred(spark, path, m["commits"]))
+    staged = store._staging_dir(path, "c", m["version"] + 1)
+    _widened(spark, [9]).write.parquet(staged)
+    commits = m["commits"] + [os.path.basename(staged)]
+    store._claim_version(path, m["version"], store._next_entry(m, commits))
+    assert set(_manifest(store, "t")["schemas"]) == set(m["commits"])
+    _assert_parity(store.read(Z, "t"), _inferred(spark, path, commits))
 
 
 # ---------------------------------------------------------- merge counts
@@ -240,7 +249,7 @@ def test_merge_into_clause_counts_with_all_clauses(spark, tmp_path):
     want.update({i: float(i * 10) for i in range(6, 15)})
     assert got == want
     m = _manifest(store, "t")
-    assert m["metrics"][str(m["version"])]["numOutputRows"] == len(want)
+    assert m["metrics"]["numOutputRows"] == len(want)
 
 
 def test_duplicate_source_merge_raises_and_publishes_nothing(spark, tmp_path):
@@ -266,21 +275,21 @@ def test_manifest_records_operation_metrics_and_vacuum_trims_them(
     store.delete_where_dv(Z, "t", "id < 2")
     m = _manifest(store, "t")
     path = store.dataset_path(Z, "t")
-    for version, rows, where in [(1, 5, m["history"]["1"][0]),
+    (dv,) = m["dvs"]
+    for version, rows, where in [(1, 5, _commits(store, 1)[0]),
                                  (2, 3, m["commits"][1]),
-                                 (3, 2, os.path.join("_dv", "dv000003"))]:
+                                 (3, 2, os.path.join("_dv", dv))]:
         files = [f for f in os.listdir(os.path.join(path, where))
                  if f.endswith(".parquet")]
         size = sum(os.path.getsize(os.path.join(path, where, f)) for f in files)
-        assert m["metrics"][str(version)] == {
+        assert store._read_entry(path, version)["metrics"] == {
             "numOutputRows": rows, "numFiles": len(files), "numOutputBytes": size,
         }
     store.compact(Z, "t")  # retires the vector in its own rewrite (v4)
     store.vacuum(Z, "t", retain_last=1)
     m = _manifest(store, "t")
-    assert list(m["history"]) == ["4"]
-    assert list(m["metrics"]) == ["4"]
-    assert m["metrics"]["4"]["numOutputRows"] == 6
+    assert store._log_versions(path) == [4]
+    assert m["metrics"]["numOutputRows"] == 6
     assert list(m["schemas"]) == m["commits"]
 
 
@@ -301,6 +310,179 @@ def test_pruned_reads_apply_deletion_vectors(spark, tmp_path):
     for key, n in [(5, 0), (11, 0), (2, 1), (17, 1)]:
         point, _ = store.read_bloom_pruned(Z, "t", "id", key)
         assert point.count() == n
+
+
+# ---------------------------------------------------------- version claims
+#: ids a second store APPENDs while the victim holds a stale read
+RACED = set(range(500, 505))
+
+
+def _ids_rows(spark, start, n):
+    return spark.createDataFrame(
+        [(i, float(i)) for i in range(start, start + n)], "id long, v double"
+    )
+
+
+def _ids(df):
+    return {r.id for r in df.collect()}
+
+
+def _race_once(monkeypatch, victim, hook, racer):
+    """Have ``racer`` APPEND the RACED rows to table t inside the victim's
+    first call of ``hook`` on t, before that call runs."""
+    orig = getattr(victim, hook)
+    path = victim.dataset_path(Z, "t")
+    fired = []
+
+    def hooked(p, *args, **kwargs):
+        if p == path and not fired:
+            fired.append(p)
+            racer.write(Z, "t", _ids_rows(racer.spark, 500, 5), LoadType.APPEND)
+        return orig(p, *args, **kwargs)
+
+    monkeypatch.setattr(victim, hook, hooked)
+    return fired
+
+
+@pytest.mark.parametrize(
+    "op", ["delete_where_dv", "restore_version", "set_constraint",
+           "merge_branch", "vacuum"],
+)
+def test_table_change_keeps_an_append_landing_before_its_claim(
+    spark, tmp_path, monkeypatch, op
+):
+    # the racer APPENDs after the victim read the table and right before it
+    # claims its version (vacuum claims none: right after it listed the log)
+    from healthcare_data_lakehouse_spark.zones import ConcurrentModificationError
+
+    store = DVZoneStore if op == "delete_where_dv" else BranchingZoneStore
+    victim = store(spark, str(tmp_path))
+    victim.write(Z, "t", _ids_rows(spark, 0, 10), LoadType.FULL)
+    victim.write(Z, "t", _ids_rows(spark, 10, 10), LoadType.APPEND)
+    if op == "merge_branch":
+        victim.create_branch(Z, "t", "exp")
+        victim.branch_write(Z, "t", "exp", _ids_rows(spark, 100, 2),
+                            LoadType.APPEND)
+    run = {
+        "delete_where_dv": lambda: victim.delete_where_dv(Z, "t", "id < 3"),
+        "restore_version": lambda: victim.restore_version(Z, "t", 1),
+        "set_constraint": lambda: victim.set_constraint(Z, "t", "pos", "v >= 0"),
+        "merge_branch": lambda: victim.merge_branch(Z, "t", "exp"),
+        "vacuum": lambda: victim.vacuum(Z, "t", retain_last=1),
+    }[op]
+    hook = "_read_entry" if op == "vacuum" else "_claim_version"
+    fired = _race_once(
+        monkeypatch, victim, hook, ZoneStore(spark, str(tmp_path))
+    )
+    path = victim.dataset_path(Z, "t")
+    before = set(os.listdir(path))
+    if op == "vacuum":
+        run()
+    else:
+        with pytest.raises(ConcurrentModificationError, match="version 3"):
+            run()
+    assert fired
+    plain = ZoneStore(spark, str(tmp_path))
+    m = plain._read_manifest(path)
+    assert m["version"] == 3  # the racer's APPEND, and nothing after it
+    assert "constraints" not in m and "dvs" not in m
+    assert _ids(plain.read(Z, "t")) == set(range(20)) | RACED
+    # the loser's staged files are gone; the racer's commit is the one new dir
+    assert len(set(os.listdir(path)) - before - {plain.DV_DIR}) == 1
+    dv_root = os.path.join(path, plain.DV_DIR)
+    assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
+
+
+def test_recutting_a_branch_raises_and_keeps_the_branch(spark, tmp_path):
+    store = BranchingZoneStore(spark, str(tmp_path))
+    store.write(Z, "t", _ids_rows(spark, 0, 10), LoadType.FULL)
+    store.create_branch(Z, "t", "exp")
+    store.branch_write(Z, "t", "exp", _ids_rows(spark, 100, 2), LoadType.APPEND)
+    with pytest.raises(ValueError, match="silver/t__br_exp"):
+        store.create_branch(Z, "t", "exp")
+    assert _ids(store.branch_read(Z, "t", "exp")) == set(range(10)) | {100, 101}
+    assert store.branch_write(
+        Z, "t", "exp", _ids_rows(spark, 200, 2), LoadType.APPEND
+    ) == 2
+    assert _ids(store.branch_read(Z, "t", "exp")) == (
+        set(range(10)) | {100, 101, 200, 201}
+    )
+    assert store.merge_branch(Z, "t", "exp") == 3
+
+
+def test_orphan_commit_dir_blocks_no_write(spark, tmp_path):
+    # a crash between staging a commit and claiming its version leaves a
+    # dir no entry names; it is invisible, and the next write stages
+    # beside it
+    store = ZoneStore(spark, str(tmp_path))
+    store.write(Z, "t", _ids_rows(spark, 0, 10), LoadType.FULL)
+    path = store.dataset_path(Z, "t")
+    orphan = os.path.join(path, "c000002")
+    _ids_rows(spark, 50, 3).coalesce(1).write.parquet(orphan)
+    assert store.write(Z, "t", _ids_rows(spark, 10, 5), LoadType.APPEND) == 5
+    assert _ids(store.read(Z, "t")) == set(range(15))
+    assert store.vacuum(Z, "t", staging_retention_sec=0)["removed_commits"] == 1
+    assert not os.path.exists(orphan)
+    assert _ids(store.read(Z, "t")) == set(range(15))
+
+
+def test_only_the_version_claim_writes_the_log():
+    """No package function other than ``ZoneStore._claim_version`` both
+    names the log and creates, renames or links a file."""
+    import ast
+    from pathlib import Path
+
+    import healthcare_data_lakehouse_spark as pkg
+
+    creates = {"open", "link", "symlink", "rename", "replace", "dump",
+               "write_text", "write_bytes", "copy", "copyfile", "copy2",
+               "copytree", "move"}
+
+    def call_name(call):
+        f = call.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+    def reads_only(call):
+        mode = call.args[1] if len(call.args) > 1 else next(
+            (k.value for k in call.keywords if k.arg == "mode"), None)
+        return mode is None or (
+            isinstance(mode, ast.Constant) and set(mode.value) <= set("rbt"))
+
+    found = set()
+    root = Path(pkg.__file__).parent
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nodes = list(ast.walk(fn))
+            names_log = any(
+                (isinstance(n, ast.Attribute) and n.attr in ("LOG_DIR", "_log_file"))
+                or (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and n.value.strip("/") == "_log")
+                for n in nodes
+            )
+            writes = any(
+                isinstance(n, ast.Call) and call_name(n) in creates
+                and not (call_name(n) == "open" and reads_only(n))
+                for n in nodes
+            )
+            if names_log and writes:
+                found.add(f"{path.relative_to(root).as_posix()}::{fn.name}")
+    assert found == {"zones.py::_claim_version"}
+
+
+def test_log_entry_size_does_not_grow_with_versions(spark, tmp_path):
+    # each entry holds one version's state, so a commit's metadata write
+    # is O(1) in the number of versions
+    store = ZoneStore(spark, str(tmp_path))
+    df = _ids_rows(spark, 0, 3)
+    for _ in range(30):
+        store.write(Z, "t", df, LoadType.FULL)
+    path = store.dataset_path(Z, "t")
+    assert store._log_versions(path) == list(range(1, 31))
+    size = {v: os.path.getsize(store._log_file(path, v)) for v in (2, 30)}
+    assert size[30] <= size[2] + 4
 
 
 # ------------------------------------------------------------ job budget
