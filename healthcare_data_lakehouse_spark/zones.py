@@ -11,7 +11,7 @@ Lake (VLDB 2020), minimal edition (delta-spark is not available in this
 environment):
 
     <root>/<zone>/<dataset>/
-        _log/000001.json            # the whole state of version 1
+        _log/000001.json            # empty: version 1 was vacuumed
         _log/000002.json            # the whole state of version 2
         c000001_1f3a9b2c/*.parquet  # immutable commit dirs, named for the
         c000002_77d0e4aa/*.parquet  # version that staged them
@@ -26,15 +26,18 @@ environment):
         metrics      {numOutputRows, numFiles, numOutputBytes} of the
                      files this version wrote; absent when it wrote none
         dvs          live deletion vectors under _dv/; absent when none
-        dv_key, constraints, txns, cloned_from, when used
+        dv_key, constraints, txns, when used
+        cloned_from  a clone's source: its path, commits and vectors
 
 The latest version is the highest entry number, and time travel to
 version v reads ``_log/{v}.json``. Every table change stages its files
 under fresh names, then publishes them by creating the next entry with
 put-if-absent (``ZoneStore._claim_version``): of two writers that read
 version V, exactly one creates V+1 and the other raises
-:class:`ConcurrentModificationError`. A dir that no entry names is
-invisible to readers; :meth:`ZoneStore.vacuum` reclaims it once it is old.
+:class:`ConcurrentModificationError`. :meth:`ZoneStore.vacuum` retires
+an old entry by emptying it in place, so a version number, once claimed,
+is never claimed again. A dir that no entry names is invisible to
+readers; vacuum reclaims it once it is old.
 
 A version owns its commits and its vectors together: every read of it
 anti-joins its vectors on ``dv_key``. A new version that keeps none of
@@ -309,8 +312,10 @@ class ZoneStore:
     def _log_file(self, path: str, version: int) -> str:
         return os.path.join(path, self.LOG_DIR, f"{version:06d}.json")
 
-    def _log_versions(self, path: str) -> list[int]:
-        """The versions whose entries are on disk, ascending."""
+    def _log_slots(self, path: str) -> list[int]:
+        """The version numbers ever claimed, ascending: the readable
+        entries and the empty tombstones vacuum() leaves in place of the
+        ones it drops."""
         try:
             names = os.listdir(os.path.join(path, self.LOG_DIR))
         except FileNotFoundError:
@@ -320,25 +325,31 @@ class ZoneStore:
             if n.endswith(".json") and n[:-5].isdigit()
         )
 
+    def _log_versions(self, path: str) -> list[int]:
+        """The versions whose entries are still readable, ascending."""
+        return [
+            v for v in self._log_slots(path)
+            if os.path.getsize(self._log_file(path, v))
+        ]
+
     def _read_entry(self, path: str, version: int) -> dict | None:
-        """Version ``version``'s entry; None when it was never written or
-        was vacuumed."""
+        """Version ``version``'s entry; None when it was never claimed or
+        was vacuumed (its slot then holds an empty tombstone)."""
         try:
             with open(self._log_file(path, version)) as f:
-                return json.load(f)
+                text = f.read()
         except FileNotFoundError:
             return None
+        return json.loads(text) if text else None
 
     def _read_manifest(self, path: str) -> dict:
         """The latest version's entry, with its number as ``version``; a
-        table never written is version 0 with no commits."""
-        while True:
-            versions = self._log_versions(path)
-            if not versions:
-                return {"version": 0, "commits": []}
-            entry = self._read_entry(path, versions[-1])
-            if entry is not None:  # else vacuumed since the listing
-                return {**entry, "version": versions[-1]}
+        table never written is version 0 with no commits. The highest
+        slot is always readable: vacuum() keeps the newest entry."""
+        slots = self._log_slots(path)
+        if not slots:
+            return {"version": 0, "commits": []}
+        return {**self._read_entry(path, slots[-1]), "version": slots[-1]}
 
     def _claim_version(
         self,
@@ -355,7 +366,9 @@ class ZoneStore:
         The loser's ``staged`` dirs are removed and it raises
         :class:`ConcurrentModificationError`. Any other OSError (ENOSPC,
         EACCES, ...) is a real I/O failure: it propagates, and ``staged``
-        stays on disk as evidence."""
+        stays on disk as evidence. A claimed slot is never freed (vacuum
+        leaves a tombstone), so a writer whose read went stale can never
+        link into a number below the latest."""
         version = read_version + 1
         tmp = os.path.join(path, self.LOG_DIR, f".{uuid.uuid4().hex}.tmp")
         os.makedirs(os.path.dirname(tmp), exist_ok=True)
@@ -374,6 +387,15 @@ class ZoneStore:
         finally:
             os.unlink(tmp)
         return version
+
+    def _retire_entry(self, path: str, version: int) -> None:
+        """Replace version ``version``'s entry with an empty tombstone:
+        time travel to it ends, and its slot stays taken, so no stale
+        claim can publish a version below the latest there. Atomic, so a
+        reader sees the whole entry or the tombstone."""
+        tmp = os.path.join(path, self.LOG_DIR, f".{uuid.uuid4().hex}.tmp")
+        open(tmp, "w").close()
+        os.replace(tmp, self._log_file(path, version))
 
     @staticmethod
     def _next_entry(
@@ -1002,20 +1024,21 @@ class ZoneStore:
         retain_last: int = 2,
         staging_retention_sec: float = 3600.0,
     ) -> dict:
-        """Delete the log entries older than the newest ``retain_last``
+        """Retire the log entries older than the newest ``retain_last``
         (the latest entry always stays) and reclaim the commit dirs and
         deletion vectors that only those entries name — bounding
         time-travel storage the way Delta's ``VACUUM`` bounds tombstoned
-        files. Returns stats.
+        files. A retired entry becomes an empty tombstone, so its version
+        number is never claimed again. Returns stats.
 
         Vacuum claims no version, so it never conflicts with a writer. A
         dir that no entry names is being staged by a concurrent writer or
         was left by one that crashed, so it is reclaimed only once older
         than ``staging_retention_sec`` (mtime-based, like Delta VACUUM's
         retention window): a racing vacuum never deletes a healthy
-        in-flight stage. A data commit claimed while vacuum runs keeps
-        only commits of the latest entry, which vacuum retains, plus the
-        dir it staged, which is young."""
+        in-flight stage. A version claimed after vacuum listed the log
+        (a data commit, or a restore of a version vacuum retires) keeps
+        its dirs: vacuum reads the log again before it deletes any."""
         import time
 
         path = self.dataset_path(zone, dataset)
@@ -1023,7 +1046,7 @@ class ZoneStore:
         keep = max(retain_last, 1)
         retained, dropped = versions[-keep:], versions[:-keep]
 
-        def named(vs: list[int]) -> set[str]:
+        def named(vs) -> set[str]:
             out: set[str] = set()
             for v in vs:
                 entry = self._read_entry(path, v) or {"commits": []}
@@ -1033,8 +1056,9 @@ class ZoneStore:
 
         live, retired = named(retained), named(dropped)
         for v in dropped:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(self._log_file(path, v))
+            self._retire_entry(path, v)
+        newest = versions[-1] if versions else 0
+        live |= named(v for v in self._log_slots(path) if v > newest)
 
         def old(full: str) -> bool:
             try:
@@ -1068,7 +1092,7 @@ class ZoneStore:
         """RESTORE TABLE ... TO VERSION (Delta parity): a NEW version whose
         commit set is the historical version's — data files untouched, so
         restore is metadata-only and itself time-travelable/undoable. The
-        target version's entry must still be in the log (vacuum() deletes
+        target version's entry must still be readable (vacuum() retires
         it, same as Delta RESTORE after VACUUM). Returns commits restored.
         """
         path = self.dataset_path(zone, dataset)
@@ -1243,23 +1267,28 @@ class ZoneStore:
         clone's own directory (copy-on-write), so the source is never
         mutated through the clone. Faithful to Delta's contract, including
         the sharp edge: VACUUM on the SOURCE can reclaim commits a shallow
-        clone still references. Returns the number of referenced commits.
+        clone still references. Every version of the clone carries
+        ``cloned_from``: the source's path and the commits and vectors it
+        was cloned at. Returns the number of referenced commits.
         """
         src_path = self.dataset_path(zone, dataset)
         src = self._read_manifest(src_path)
         if not src["commits"]:
             raise ValueError(f"nothing to clone: {zone.value}/{dataset}")
         abs_commits = [os.path.join(src_path, c) for c in src["commits"]]
+        abs_dvs = self._dv_dirs(src_path, src.get("dvs", []))
         schemas = src.get("schemas", {})
         entry = self._next_entry(
             {
                 "commits": [],
-                "cloned_from": src_path,
+                "cloned_from": {
+                    "path": src_path, "commits": abs_commits, "dvs": abs_dvs,
+                },
                 "constraints": dict(src.get("constraints", {})),
                 "dv_key": src.get("dv_key", "id"),
             },
             abs_commits,
-            self._dv_dirs(src_path, src.get("dvs", [])),
+            abs_dvs,
             {a: schemas[c] for c, a in zip(src["commits"], abs_commits)
              if c in schemas},
         )

@@ -6,7 +6,8 @@ shallow clone that remembers its base commit list, writes to the branch
 land as copy-on-write commits in the branch's own directory (the source
 is never mutated through it), and MERGE adopts the branch's commit list
 back into the source by reference — zero data copied in either
-direction. The branch's ``_log/000001.json`` is its merge base. Merge is
+direction. The ``cloned_from`` state every branch entry carries is its
+merge base, so vacuuming the branch keeps it. Merge is
 FAST-FORWARD-ONLY: if the source advanced since the branch was cut, or
 advances before the merge claims its version, the merge raises
 ``ConcurrentModificationError`` and the resolution is to re-branch and
@@ -38,10 +39,10 @@ class BranchingZoneStore(ZoneStore):
     def create_branch(
         self, zone: DataZone, dataset: str, branch: str
     ) -> int:
-        """Cut a branch at the source's current state (zero-copy). The
-        clone's version-1 entry IS the recorded merge base, so a branch
-        of an existing name raises ValueError. Returns the number of
-        referenced commits."""
+        """Cut a branch at the source's current state (zero-copy): the
+        clone's ``cloned_from`` is the recorded merge base. The clone
+        claims the branch's version 1, so a branch of an existing name
+        raises ValueError. Returns the number of referenced commits."""
         return self.clone(
             zone, dataset, zone, self._branch_dataset(dataset, branch)
         )
@@ -65,20 +66,20 @@ class BranchingZoneStore(ZoneStore):
             zone, self._branch_dataset(dataset, branch)
         )
         br = self._read_manifest(br_path)
-        base = self._read_entry(br_path, 1) or {"commits": []}
+        base = br.get("cloned_from", {"commits": []})
         return {
             "base_commits": len(base["commits"]),
             "branch_version": br["version"],
             "branch_ahead": br["commits"] != base["commits"],
             "source_diverged": self._diverged(
-                src_path, self._read_manifest(src_path), br_path
+                src_path, self._read_manifest(src_path), br
             ),
         }
 
-    def _diverged(self, src_path: str, src: dict, br_path: str) -> bool:
+    def _diverged(self, src_path: str, src: dict, br: dict) -> bool:
         """True when the source's commits or deletion vectors are no
-        longer the ones the branch was cut at (its version 1)."""
-        base = self._read_entry(br_path, 1) or {"commits": []}
+        longer the ones the branch ``br`` was cut at."""
+        base = br.get("cloned_from", {"commits": []})
         now = (
             [os.path.join(src_path, c) for c in src["commits"]],
             self._dv_dirs(src_path, src.get("dvs", [])),
@@ -111,7 +112,7 @@ class BranchingZoneStore(ZoneStore):
                 f"branch {branch!r} of {zone.value}/{dataset} does not exist"
             )
         src = self._read_manifest(src_path)
-        if self._diverged(src_path, src, br_path):
+        if self._diverged(src_path, src, br):
             raise ConcurrentModificationError(
                 f"{zone.value}/{dataset} advanced since branch {branch!r} "
                 "was cut — re-branch and replay to merge"

@@ -327,9 +327,15 @@ def _ids(df):
     return {r.id for r in df.collect()}
 
 
-def _race_once(monkeypatch, victim, hook, racer):
-    """Have ``racer`` APPEND the RACED rows to table t inside the victim's
-    first call of ``hook`` on t, before that call runs."""
+def _append_raced(racer):
+    return lambda: racer.write(
+        Z, "t", _ids_rows(racer.spark, 500, 5), LoadType.APPEND
+    )
+
+
+def _race_once(monkeypatch, victim, hook, race):
+    """Run ``race`` inside the victim's first call of ``hook`` on table t,
+    before that call runs."""
     orig = getattr(victim, hook)
     path = victim.dataset_path(Z, "t")
     fired = []
@@ -337,7 +343,7 @@ def _race_once(monkeypatch, victim, hook, racer):
     def hooked(p, *args, **kwargs):
         if p == path and not fired:
             fired.append(p)
-            racer.write(Z, "t", _ids_rows(racer.spark, 500, 5), LoadType.APPEND)
+            race()
         return orig(p, *args, **kwargs)
 
     monkeypatch.setattr(victim, hook, hooked)
@@ -372,7 +378,7 @@ def test_table_change_keeps_an_append_landing_before_its_claim(
     }[op]
     hook = "_read_entry" if op == "vacuum" else "_claim_version"
     fired = _race_once(
-        monkeypatch, victim, hook, ZoneStore(spark, str(tmp_path))
+        monkeypatch, victim, hook, _append_raced(ZoneStore(spark, str(tmp_path)))
     )
     path = victim.dataset_path(Z, "t")
     before = set(os.listdir(path))
@@ -393,21 +399,83 @@ def test_table_change_keeps_an_append_landing_before_its_claim(
     assert not os.path.isdir(dv_root) or os.listdir(dv_root) == []
 
 
+def test_stale_write_raises_after_vacuum_retires_its_slot(
+    spark, tmp_path, monkeypatch
+):
+    # the victim reads version 1 and stages; meanwhile a racer commits
+    # versions 2 and 3 and vacuums down to version 3. Version 2's number
+    # stays taken, so the victim's claim of it fails instead of publishing
+    # a version below the latest that no read would ever see
+    from healthcare_data_lakehouse_spark.zones import ConcurrentModificationError
+
+    victim = ZoneStore(spark, str(tmp_path))
+    victim.write(Z, "t", _ids_rows(spark, 0, 10), LoadType.FULL)
+    racer = ZoneStore(spark, str(tmp_path))
+
+    def race():
+        _append_raced(racer)()
+        racer.write(Z, "t", _ids_rows(spark, 600, 5), LoadType.APPEND)
+        racer.vacuum(Z, "t", retain_last=1)
+
+    fired = _race_once(monkeypatch, victim, "_claim_version", race)
+    path = victim.dataset_path(Z, "t")
+    with pytest.raises(ConcurrentModificationError, match="version 2"):
+        victim.write(Z, "t", _ids_rows(spark, 10, 10), LoadType.APPEND)
+    assert fired
+    assert racer._log_versions(path) == [3]
+    assert racer._read_manifest(path)["version"] == 3
+    m = racer._read_manifest(path)
+    assert sorted(os.listdir(path)) == sorted([racer.LOG_DIR, *m["commits"]])
+    assert _ids(racer.read(Z, "t")) == set(range(10)) | RACED | set(
+        range(600, 605)
+    )
+
+
+def test_vacuum_keeps_the_dirs_of_a_restore_claimed_during_it(
+    spark, tmp_path, monkeypatch
+):
+    # vacuum lists the log and reads its entries; a restore of a version
+    # it then retires claims in between. The restored version names the
+    # retired version's commit, which must survive the vacuum
+    victim = ZoneStore(spark, str(tmp_path))
+    for start in (0, 10, 20):
+        victim.write(Z, "t", _ids_rows(spark, start, 10), LoadType.FULL)
+    racer = ZoneStore(spark, str(tmp_path))
+    fired = _race_once(
+        monkeypatch, victim, "_read_entry",
+        lambda: racer.restore_version(Z, "t", 1),
+    )
+    path = victim.dataset_path(Z, "t")
+    victim.vacuum(Z, "t", retain_last=1)
+    assert fired
+    m = racer._read_manifest(path)
+    assert m["version"] == 4
+    assert all(os.path.isdir(os.path.join(path, c)) for c in m["commits"])
+    assert _ids(racer.read(Z, "t")) == set(range(10))
+
+
 def test_recutting_a_branch_raises_and_keeps_the_branch(spark, tmp_path):
+    # the branch is vacuumed first: its retired version 1 keeps its
+    # number, so the re-cut still finds the branch there, and the merge
+    # base survives the vacuum
     store = BranchingZoneStore(spark, str(tmp_path))
     store.write(Z, "t", _ids_rows(spark, 0, 10), LoadType.FULL)
     store.create_branch(Z, "t", "exp")
     store.branch_write(Z, "t", "exp", _ids_rows(spark, 100, 2), LoadType.APPEND)
+    store.branch_write(Z, "t", "exp", _ids_rows(spark, 102, 2), LoadType.APPEND)
+    store.vacuum(Z, "t__br_exp", retain_last=1)
     with pytest.raises(ValueError, match="silver/t__br_exp"):
         store.create_branch(Z, "t", "exp")
-    assert _ids(store.branch_read(Z, "t", "exp")) == set(range(10)) | {100, 101}
+    branched = set(range(10)) | set(range(100, 104))
+    assert _ids(store.branch_read(Z, "t", "exp")) == branched
     assert store.branch_write(
         Z, "t", "exp", _ids_rows(spark, 200, 2), LoadType.APPEND
     ) == 2
-    assert _ids(store.branch_read(Z, "t", "exp")) == (
-        set(range(10)) | {100, 101, 200, 201}
-    )
-    assert store.merge_branch(Z, "t", "exp") == 3
+    assert _ids(store.branch_read(Z, "t", "exp")) == branched | {200, 201}
+    status = store.branch_status(Z, "t", "exp")
+    assert status["base_commits"] == 1 and not status["source_diverged"]
+    assert store.merge_branch(Z, "t", "exp") == 4
+    assert _ids(store.read(Z, "t")) == branched | {200, 201}
 
 
 def test_orphan_commit_dir_blocks_no_write(spark, tmp_path):
@@ -428,7 +496,9 @@ def test_orphan_commit_dir_blocks_no_write(spark, tmp_path):
 
 def test_only_the_version_claim_writes_the_log():
     """No package function other than ``ZoneStore._claim_version`` both
-    names the log and creates, renames or links a file."""
+    names the log and creates, renames or links a file, except the
+    tombstone of ``ZoneStore._retire_entry``, which only replaces an
+    entry (it links nothing)."""
     import ast
     from pathlib import Path
 
@@ -448,7 +518,7 @@ def test_only_the_version_claim_writes_the_log():
         return mode is None or (
             isinstance(mode, ast.Constant) and set(mode.value) <= set("rbt"))
 
-    found = set()
+    found = {}
     root = Path(pkg.__file__).parent
     for path in root.rglob("*.py"):
         tree = ast.parse(path.read_text())
@@ -462,14 +532,16 @@ def test_only_the_version_claim_writes_the_log():
                     and n.value.strip("/") == "_log")
                 for n in nodes
             )
-            writes = any(
-                isinstance(n, ast.Call) and call_name(n) in creates
+            writes = {
+                call_name(n) for n in nodes
+                if isinstance(n, ast.Call) and call_name(n) in creates
                 and not (call_name(n) == "open" and reads_only(n))
-                for n in nodes
-            )
+            }
             if names_log and writes:
-                found.add(f"{path.relative_to(root).as_posix()}::{fn.name}")
-    assert found == {"zones.py::_claim_version"}
+                found[f"{path.relative_to(root).as_posix()}::{fn.name}"] = writes
+    assert set(found) == {"zones.py::_claim_version", "zones.py::_retire_entry"}
+    assert "link" in found["zones.py::_claim_version"]
+    assert found["zones.py::_retire_entry"] == {"open", "replace"}
 
 
 def test_log_entry_size_does_not_grow_with_versions(spark, tmp_path):
